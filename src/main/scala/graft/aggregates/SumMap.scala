@@ -33,18 +33,11 @@ class SumMap extends Aggregator[SumMapInput, java.util.HashMap[String, Long], Ma
     with Serializable {
   def zero: java.util.HashMap[String, Long] = new java.util.HashMap
   def reduce(b: java.util.HashMap[String, Long], e: SumMapInput): java.util.HashMap[String, Long] = {
-    val add = math.rint(e.value * 1e6).toLong
-    val old = b.get(e.key) // absent key unboxes to 0L (BoxesRunTime), guarded below anyway
-    b.put(e.key, if (b.containsKey(e.key)) old + add else add)
+    b.put(e.key, b.getOrDefault(e.key, 0L) + math.rint(e.value * 1e6).toLong)
     b
   }
   def merge(a: java.util.HashMap[String, Long], b: java.util.HashMap[String, Long]): java.util.HashMap[String, Long] = {
-    val it = b.entrySet().iterator()
-    while (it.hasNext) {
-      val kv = it.next()
-      val k = kv.getKey
-      if (a.containsKey(k)) a.put(k, a.get(k) + kv.getValue) else a.put(k, kv.getValue)
-    }
+    b.forEach((k, v) => a.merge(k, v, _ + _))
     a
   }
   def finish(b: java.util.HashMap[String, Long]): Map[String, Double] =
@@ -70,16 +63,11 @@ class MinMaxMap(isMin: Boolean)
     if (isMin) math.min(a, b) else math.max(a, b)
   def zero: java.util.HashMap[String, Double] = new java.util.HashMap
   def reduce(b: java.util.HashMap[String, Double], e: SumMapInput): java.util.HashMap[String, Double] = {
-    b.put(e.key, if (b.containsKey(e.key)) pick(b.get(e.key), e.value) else e.value)
+    b.merge(e.key, e.value, pick)
     b
   }
   def merge(a: java.util.HashMap[String, Double], b: java.util.HashMap[String, Double]): java.util.HashMap[String, Double] = {
-    val it = b.entrySet().iterator()
-    while (it.hasNext) {
-      val kv = it.next()
-      val k = kv.getKey
-      if (a.containsKey(k)) a.put(k, pick(a.get(k), kv.getValue)) else a.put(k, kv.getValue)
-    }
+    b.forEach((k, v) => a.merge(k, v, pick))
     a
   }
   def finish(b: java.util.HashMap[String, Double]): Map[String, Double] =

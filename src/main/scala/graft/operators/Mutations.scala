@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,7 +54,7 @@ object Mutations {
     * losing the table.
     */
   def rewrite(spark: SparkSession, path: String, mutate: DataFrame => DataFrame): Unit = {
-    mutate(spark.read.parquet(path)).write
+    mutate(Tables.readParquet(spark, path)).write
       .mode(SaveMode.Overwrite).parquet(path + ".mutating")
     swapInto(spark, path + ".mutating", path)
   }
@@ -79,7 +80,7 @@ object Mutations {
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(path)
+    Tables.readParquet(spark, path)
       .repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(path + ".compacting")
     swapInto(spark, path + ".compacting", path)

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.Tables
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -86,7 +87,7 @@ object MaterializedViews {
       .write.mode("overwrite").parquet(mvPath)
     val basePaths = rootPaths(base.queryExecution.analyzed)
     require(basePaths.nonEmpty, s"MV $name: base plan has no file scan")
-    val rel = spark.read.parquet(mvPath).queryExecution.analyzed.collectFirst {
+    val rel = Tables.readParquet(spark, mvPath).queryExecution.analyzed.collectFirst {
       case lr: LogicalRelation => lr
     }.getOrElse(sys.error(s"MV $name: parquet read did not analyze to a relation"))
     registry.put(name, MvDef(name, basePaths, mvPath, groupCols, measureCols, rel))

@@ -564,7 +564,7 @@ object CoverageWave9 {
           "CAST(l_extendedprice AS DECIMAL(18,2)) AS price_d",
           "l_linenumber")
           .write.mode("overwrite").parquet(basePath)
-        val base = s.read.parquet(basePath)
+        val base = Tables.readParquet(s, basePath)
         base.createOrReplaceTempView("lineitem_dec")
         graft.plans.MaterializedViews.create(s, "gate_li_mv", base,
           Seq("l_returnflag", "l_linestatus", "l_shipyear"),

@@ -52,7 +52,7 @@ object StreamingPipeline {
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     normalizeParquetTs(spark)
     val path = s"$dir/events.parquet"
-    val batchSchema = spark.read.parquet(path).schema
+    val batchSchema = Tables.parquetSchema(spark, path)
     val reader = spark.readStream.schema(batchSchema)
     val stream =
       if (new java.io.File(path).isDirectory) reader.parquet(path)
@@ -204,7 +204,7 @@ object StreamingPipeline {
       sinkDir: String,
       checkpointDir: String)(transform: DataFrame => DataFrame): Unit = {
     normalizeParquetTs(spark)
-    val batchSchema = spark.read.parquet(srcDir).schema
+    val batchSchema = Tables.parquetSchema(spark, srcDir)
     val stream = spark.readStream
       .schema(batchSchema)
       .option("pathGlobFilter", "*.parquet")

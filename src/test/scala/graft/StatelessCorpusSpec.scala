@@ -69,11 +69,15 @@ class StatelessCorpusSpec extends SparkSpec {
     // the active session per thread, and job content/row order per file
     // is untouched (same confs, same partition counts — concurrency
     // changes WHEN jobs run, not what they compute).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    // Daemon workers: a timed-out file stuck in a loop that ignores the
+    // interrupt must not keep the test JVM alive.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8, { (r: Runnable) =>
+      val t = new Thread(r, "corpus-runner"); t.setDaemon(true); t
+    })
     val failures =
       try {
         val futs = allowlist.map { name =>
-          pool.submit(new java.util.concurrent.Callable[Option[String]] {
+          name -> pool.submit(new java.util.concurrent.Callable[Option[String]] {
             def call(): Option[String] = {
               val sqlText = new String(
                 Files.readAllBytes(Paths.get(corpusDir, name)), "UTF-8")
@@ -93,7 +97,19 @@ class StatelessCorpusSpec extends SparkSpec {
             }
           })
         }
-        futs.flatMap(_.get())
+        // Each file fails on its own: a worker exception or a file past
+        // StatelessSweep's 240 s watchdog is reported by name, and the
+        // rest are still collected.
+        futs.flatMap { case (name, fut) =>
+          try fut.get(240, java.util.concurrent.TimeUnit.SECONDS)
+          catch {
+            case _: java.util.concurrent.TimeoutException =>
+              fut.cancel(true)
+              Some(s"$name: timed out")
+            case e: java.util.concurrent.ExecutionException =>
+              Some(s"$name: ${e.getCause}")
+          }
+        }
       } finally {
         pool.shutdown()
         // a corpus session (Moscow tz, CH coercions) must not linger as
@@ -103,6 +119,6 @@ class StatelessCorpusSpec extends SparkSpec {
         org.apache.spark.sql.SparkSession.setActiveSession(spark)
       }
     assert(failures.isEmpty,
-      s"${failures.size} stateless tests regressed:\n${failures.take(10).mkString("\n")}")
+      s"${failures.size} stateless tests regressed:\n${failures.mkString("\n")}")
   }
 }
