@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftbench.ShuffleReset
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced end-to-end through the
@@ -26,40 +28,68 @@ object Bench {
     // round 6: full sessionization tuples — the heaviest new operator
     "session_analysis_tuples")
 
+  /** The bench session: [[Engine.session]] at `cpus` cores, plus the
+    * settings a repeated-run bench needs.
+    */
+  def session(cpus: Int): SparkSession = {
+    // The warmup pass exists to pre-compile every query's whole-stage
+    // codegen, but the compiled-class cache defaults to 100 entries —
+    // a 25-query workload evicts the early queries before their timed
+    // run, silently re-charging ~3s of Janino compilation to the most
+    // complex plans. Size the cache to the workload.
+    val spark = Engine.session(s"local[$cpus]", cpus, codegenCacheEntries = 2000)
+    // r16 (guide §2.2): AQE's coalescing floor. parallelismFirst=true
+    // (default) sizes post-shuffle partitions at totalBytes/parallelism
+    // — but never below minPartitionSize, whose 1 MB default collapses
+    // every sub-32 MB shuffle to a handful of partitions (at sf0.1 the
+    // per-user window stages ran as ONE task on one core). 64 KB keeps
+    // reduce stages ~core-wide on small inputs and is inert at scale:
+    // the floor only binds when a shuffle totals < cores × 1 MB, i.e.
+    // when the data is tiny anyway. Env-overridable for cluster tuning.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "65536"))
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Full consumption of a prepared plan: iterate every InternalRow of
+    * the cached QueryExecution RDD — same all-rows forcing as the noop
+    * sink, minus the per-rep re-planning of a fresh write command.
+    * Returns the row count.
+    */
+  def consume(df: DataFrame): Long =
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd, { (it: Iterator[InternalRow]) =>
+      var n = 0L
+      while (it.hasNext) { it.next(); n += 1 }
+      n
+    }).sum
+
+  /** One timed rep of a prepared query: (seconds, rows). */
+  def rep(df: DataFrame): (Double, Long) = {
+    val spark = df.sparkSession
+    // Per-rep cache drop so every rep is a clean cold-cache run. Must go
+    // through the catalog: raw RDD unpersist would leave stale
+    // CacheManager entries, making the reps' persist() calls no-ops
+    // against dead cache entries (every reuse would silently recompute).
+    spark.catalog.clearCache()
+    // r16 MEASUREMENT FIX (disclosed in OPTIMIZATION_r16.md): drop every
+    // registered shuffle's map outputs before the rep. Re-executing the
+    // same cached RDD lets the DAGScheduler SKIP any stage whose shuffle
+    // output is still registered, so since r10 the timed reps re-ran only
+    // the stages downstream of the last exchange (a 10× input moved q1 by
+    // ~0 ms; 8-core ≈ 32-core for every query). With the reset, each rep
+    // recomputes the full prepared plan — scans, shuffles, final stages —
+    // while the plan itself and the broadcast futures stay warm, which is
+    // what "re-execute the prepared query" was always meant to time.
+    ShuffleReset.resetAll(spark.sparkContext)
+    val t0 = System.nanoTime()
+    val rows = consume(df)
+    ((System.nanoTime() - t0) / 1e9, rows)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Tz-less parquet timestamps (one observed testdata regeneration)
-      // must surface as TimestampType, not NTZ — see Tables.apply.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // The warmup pass exists to pre-compile every query's whole-stage
-      // codegen, but the compiled-class cache defaults to 100 entries —
-      // a 25-query workload evicts the early queries before their timed
-      // run, silently re-charging ~3s of Janino compilation to the most
-      // complex plans. Size the cache to the workload.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // r16 (guide §2.2): AQE's coalescing floor. parallelismFirst=true
-      // (default) sizes post-shuffle partitions at totalBytes/parallelism
-      // — but never below minPartitionSize, whose 1 MB default collapses
-      // every sub-32 MB shuffle to a handful of partitions (at sf0.1 the
-      // per-user window stages ran as ONE task on one core). 64 KB keeps
-      // reduce stages ~core-wide on small inputs and is inert at scale:
-      // the floor only binds when a shuffle totals < cores × 1 MB, i.e.
-      // when the data is tiny anyway. Env-overridable for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "65536"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Untimed warmup: parquet footers, codegen compiler, shuffle machinery.
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
     val queries = SparkEntry.queries
@@ -67,10 +97,11 @@ object Bench {
     // queries the same way): build each DataFrame and force its physical
     // plan ONCE — that cost is PLANNING, reported separately — then the
     // timed reps re-execute the already-planned query via its cached
-    // QueryExecution RDD. FloorProfile showed ~2.6 s/run of repeated
-    // re-planning when every rep rebuilt the frame; at 100 TB planning
-    // amortizes to nothing, so the headline number should be execution.
-    val prepared = scala.collection.mutable.LinkedHashMap[String, org.apache.spark.sql.DataFrame]()
+    // QueryExecution RDD. A plan/run split of the headline set showed
+    // ~2.6 s/run of repeated re-planning when every rep rebuilt the
+    // frame; at 100 TB planning amortizes to nothing, so the headline
+    // number should be execution.
+    val prepared = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
     val planSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
     headline.filter(queries.contains).foreach { name =>
       val t0 = System.nanoTime()
@@ -84,13 +115,6 @@ object Bench {
           System.err.println(s"[bench] $name failed to plan: ${e.getMessage}")
       }
     }
-    // Full consumption of the prepared plan: iterate every InternalRow of
-    // the cached QueryExecution RDD — same all-rows forcing as the noop
-    // sink, minus the per-rep re-planning of a fresh write command.
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.toRdd.foreachPartition { it =>
-        while (it.hasNext) it.next()
-      }
     // Untimed warmup of the PREPARED plans (twice): whole-stage-codegen
     // classes, AQE finalization (first execution picks the runtime plan,
     // which then stays cached on the QueryExecution), and JIT are all
@@ -127,28 +151,8 @@ object Bench {
     val perRep = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     def timeQuery(name: String): (Double, Double, Double) = {
       val times = (1 to heavyReps.getOrElse(name, reps)).flatMap { _ =>
-        // Per-rep cache drop so every rep is a clean cold-cache run. Must
-        // go through the catalog: raw RDD unpersist would leave stale
-        // CacheManager entries, making the reps' persist() calls no-ops
-        // against dead cache entries (every reuse would silently
-        // recompute).
-        spark.catalog.clearCache()
-        // r16 MEASUREMENT FIX (disclosed in OPTIMIZATION_r16.md): drop
-        // every registered shuffle's map outputs before the rep.
-        // Re-executing the same cached RDD lets the DAGScheduler SKIP any
-        // stage whose shuffle output is still registered, so since r10
-        // the timed reps re-ran only the stages downstream of the last
-        // exchange (a 10× input moved q1 by ~0 ms; 8-core ≈ 32-core for
-        // every query). With the reset, each rep recomputes the full
-        // prepared plan — scans, shuffles, final stages — while the plan
-        // itself and the broadcast futures stay warm, which is what
-        // "re-execute the prepared query" was always meant to time.
-        org.apache.spark.graftbench.ShuffleReset.resetAll(spark.sparkContext)
-        val t0 = System.nanoTime()
-        try {
-          consume(prepared(name))
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
+        try Some(rep(prepared(name))._1)
+        catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             None

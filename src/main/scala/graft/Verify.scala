@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,23 +6,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Tz-less parquet timestamps (one observed testdata regeneration)
-      // must surface as TimestampType, not NTZ — see Tables.apply.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // 148 queries compile far more codegen classes than the default
-      // 100-entry cache holds; keep them warm across the run.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The inventory compiles far more codegen classes than the default
+    // 100-entry cache holds; keep them warm across the run.
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt, codegenCacheEntries = 2000)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

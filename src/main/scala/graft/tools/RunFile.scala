@@ -34,21 +34,7 @@ object RunFile {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "Europe/Moscow")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.groupByOrdinal", "false")
-      .config("spark.sql.orderByOrdinal", "false")
-      .config(graft.sql.ChJoinDefaults.Flag, "true")
-      .config(graft.sql.ChRollupDefaults.Flag, "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-      .config(graft.sql.ChCoercions.IeeeDivFlag, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Engine.registerFunctions(spark)
-    graft.sql.ClickHouseAliases.injectStrict(spark)
+    val spark = StatelessSweep.session(StatelessSweep.corpusTz)
     val session = new graft.sql.ChSession(spark)
     val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(0))), "UTF-8")
     graft.sql.ChTranspiler.statementsRawAll(text).foreach { case (raw, clean) =>

@@ -85,16 +85,7 @@ object ScaleSoak {
     val factor = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2) else s"target/soak/x$factor"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(s"local[$cpus]", cpus.toInt, codegenCacheEntries = 2000)
     spark.sparkContext.setLogLevel("WARN")
 
     generate(spark, base, factor, out)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: deterministically scale an existing SF directory by K× for
@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * corpus by unioning K key-shifted copies of every table:
   *
   *  - fact/entity keys are offset per copy by a round power of ten above
-  *    the table's max key, so copies never collide and join fan-outs
+  *    the max key of their key DOMAIN (every column holding custkeys,
+  *    orderkeys, …), so copies never collide, every foreign key shifts
+  *    with the key it references, and join fan-outs
   *    (customer↔orders↔lineitem, events.user_id, embeddings.vec_id)
   *    replicate per copy → every query's work scales ~linearly;
   *  - nation/region (shared dimensions) are NOT replicated — foreign
@@ -29,56 +31,69 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.ScaleUp <srcDir> <dstDir> <copies>
   */
 object ScaleUp {
+
+  /** Key domains: the (table, column) pairs that hold keys of one
+    * domain. Every column of a domain shifts by the same per-copy offset,
+    * so a foreign key in copy i still finds its parent in copy i.
+    */
+  val keyDomains: Seq[Seq[(String, String)]] = Seq(
+    Seq("customer" -> "c_custkey", "orders" -> "o_custkey"),
+    Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey"),
+    Seq("supplier" -> "s_suppkey", "lineitem" -> "l_suppkey"),
+    Seq("part" -> "p_partkey", "lineitem" -> "l_partkey"),
+    Seq("events" -> "user_id"),
+    Seq("documents" -> "doc_id"),
+    Seq("embeddings" -> "vec_id"))
+
+  /** Per-copy offset of every key column, by table: the next power of
+    * ten above the max over every column of the column's domain, so
+    * shifted ids stay readable and mod-k blocking predicates
+    * (doc_id % 5) keep their selectivity per copy.
+    */
+  def offsets(tables: String => DataFrame,
+              domains: Seq[Seq[(String, String)]]): Map[String, Map[String, Long]] =
+    domains.flatMap { domain =>
+      val mx = domain.map { case (t, c) =>
+        tables(t).agg(max(col(c))).head().getAs[Number](0).longValue()
+      }.max
+      var p = 10L
+      while (p <= mx) p *= 10
+      domain.map { case (t, c) => (t, c, p) }
+    }.groupBy(_._1).map { case (t, cs) => t -> cs.map(x => x._2 -> x._3).toMap }
+
+  /** `copies` key-shifted copies of `df` (copy 0 is `df` itself); with
+    * `salt`, every token of that text column gets a per-copy suffix.
+    */
+  def replicate(df: DataFrame, offs: Map[String, Long], copies: Int,
+                salt: Option[String] = None): DataFrame =
+    (0 until copies).map { i =>
+      val withKeys = offs.foldLeft(df) { case (d, (k, off)) =>
+        // cast back so the scaled table's schema is byte-identical
+        d.withColumn(k, (col(k) + lit(off * i)).cast(df.schema(k).dataType))
+      }
+      salt match {
+        case Some(textCol) if i > 0 =>
+          withKeys.withColumn(textCol,
+            array_join(transform(split(col(textCol), " "),
+              t => concat(t, lit(s"_c$i"))), " "))
+        case _ => withKeys
+      }
+    }.reduce(_ unionByName _)
+
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val dst = args(1)
     val copies = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
 
-    // next power of ten ≥ max+1, so shifted ids stay readable and mod-k
-    // blocking predicates (doc_id % 5) keep their selectivity per copy
-    def offsetFor(df: DataFrame, key: String): Long = {
-      val mx = df.agg(max(col(key))).head().getAs[Number](0).longValue()
-      var p = 10L
-      while (p <= mx) p *= 10
-      p
-    }
-
-    def shifted(table: String, keys: Seq[String], salt: Option[String] = None): DataFrame = {
-      val df = Tables(spark, src, table)
-      val offs = keys.map(k => k -> offsetFor(df, k)).toMap
-      (0 until copies).map { i =>
-        val withKeys = keys.foldLeft(df)((d, k) =>
-          // cast back so the scaled table's schema is byte-identical
-          d.withColumn(k, (col(k) + lit(offs(k) * i)).cast(df.schema(k).dataType)))
-        salt match {
-          case Some(textCol) if i > 0 =>
-            withKeys.withColumn(textCol,
-              array_join(transform(split(col(textCol), " "),
-                t => concat(t, lit(s"_c$i"))), " "))
-          case _ => withKeys
-        }
-      }.reduce(_ unionByName _)
-    }
-
-    val plan: Seq[(String, DataFrame)] = Seq(
-      "customer" -> shifted("customer", Seq("c_custkey")),
-      "orders" -> shifted("orders", Seq("o_orderkey", "o_custkey")),
-      "lineitem" -> shifted("lineitem", Seq("l_orderkey", "l_suppkey", "l_partkey")),
-      "supplier" -> shifted("supplier", Seq("s_suppkey")),
-      "part" -> shifted("part", Seq("p_partkey")),
-      "nation" -> Tables(spark, src, "nation"),
-      "region" -> Tables(spark, src, "region"),
-      "events" -> shifted("events", Seq("user_id")),
-      "documents" -> shifted("documents", Seq("doc_id"), salt = Some("text")),
-      "embeddings" -> shifted("embeddings", Seq("vec_id")))
+    val load = (t: String) => Tables(spark, src, t)
+    val offs = offsets(load, keyDomains)
+    // nation/region are shared dimensions, not replicated
+    val plan = Seq("nation", "region").map(t => t -> load(t)) ++
+      offs.toSeq.sortBy(_._1).map { case (t, o) =>
+        t -> replicate(load(t), o, copies, salt = if (t == "documents") Some("text") else None)
+      }
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     plan.foreach { case (name, df) =>

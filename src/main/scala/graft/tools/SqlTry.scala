@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.sql.{ChFormat, ChTranspiler}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only scratch runner: transpile + execute one ClickHouse SQL
   * statement (args mkString) and print the transpiled text, the result
@@ -9,16 +8,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SqlTry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.Engine.registerFunctions(spark)
     graft.sql.ClickHouseAliases.injectStrict(spark)
     val sql = args.mkString(" ")
     ChTranspiler.statements(sql).foreach { stmt =>

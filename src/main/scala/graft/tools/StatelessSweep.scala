@@ -635,40 +635,7 @@ object StatelessSweep {
     val dir = args.headOption
       .getOrElse("/root/reference/tests/queries/4_cnch_stateless")
     val outList = if (args.length > 1) args(1) else "target/stateless_pass.txt"
-    // the reference corpus's golden outputs are generated with the
-    // server timezone pinned to Europe/Moscow (clickhouse-test TZ);
-    // match it for both computation and DateTime text
-    val tz = sys.env.getOrElse("SPARK_GRAFT_SWEEP_TZ", "Europe/Moscow")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", tz)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // ClickHouse has NO ordinal GROUP BY / ORDER BY — `GROUP BY 1`
-      // groups by the constant 1 (one group), matching these off
-      .config("spark.sql.groupByOrdinal", "false")
-      .config("spark.sql.orderByOrdinal", "false")
-      // CH default join_use_nulls=0: outer joins pad with type defaults
-      .config(graft.sql.ChJoinDefaults.Flag, "true")
-      // CH ROLLUP/CUBE sub-total keys are type defaults, not NULLs
-      .config(graft.sql.ChRollupDefaults.Flag, "true")
-      // CH map columns tolerate duplicate keys (last write wins)
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // CH double-quoted tokens are IDENTIFIERS ("col" = `col`)
-      .config("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-      // CH `/` is IEEE Float64 division (1/0 = inf), never an ANSI error
-      .config(graft.sql.ChCoercions.IeeeDivFlag, "true")
-      // CH INTERSECT/EXCEPT ALL = semi/anti filters (ChCoercions)
-      .config(graft.sql.ChCoercions.SetOpsAllFlag, "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // The UDAF layer (sumForEach, retention, topK, …) registers per
-    // session, not through SparkSessionExtensions — same as Engine.session.
-    graft.Engine.registerFunctions(spark)
-    graft.sql.ClickHouseAliases.injectStrict(spark)
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_SWEEP_TZ", corpusTz))
     var pass = 0; var diff = 0; var err = 0
     val passed = Seq.newBuilder[String]
     // Dev subset filter: regex over file names (unset = all candidates).
@@ -738,4 +705,60 @@ object StatelessSweep {
     pool.shutdownNow()
     spark.stop()
   }
+
+  /** The corpus's ClickHouse semantics as runtime confs, each a shim a
+    * library session must never carry (SessionIsolationSpec).
+    */
+  val corpusConfs: Seq[(String, String)] = Seq(
+    // set-operation row order is partition-order-deterministic, so the
+    // banked goldens assume 8 shuffle partitions
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    // ClickHouse has NO ordinal GROUP BY / ORDER BY — `GROUP BY 1`
+    // groups by the constant 1 (one group), matching these off
+    "spark.sql.groupByOrdinal" -> "false",
+    "spark.sql.orderByOrdinal" -> "false",
+    // CH default join_use_nulls=0: outer joins pad with type defaults
+    graft.sql.ChJoinDefaults.Flag -> "true",
+    // CH ROLLUP/CUBE sub-total keys are type defaults, not NULLs
+    graft.sql.ChRollupDefaults.Flag -> "true",
+    // CH map columns tolerate duplicate keys (last write wins)
+    "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
+    // CH double-quoted tokens are IDENTIFIERS ("col" = `col`)
+    "spark.sql.ansi.doubleQuotedIdentifiers" -> "true",
+    // CH `/` is IEEE Float64 division (1/0 = inf), never an ANSI error
+    graft.sql.ChCoercions.IeeeDivFlag -> "true",
+    // CH INTERSECT/EXCEPT ALL = semi/anti filters (ChCoercions)
+    graft.sql.ChCoercions.SetOpsAllFlag -> "true")
+
+  /** Give `spark` the corpus semantics: [[corpusConfs]], session zone
+    * `tz`, the engine's functions and the strict dialect registry.
+    */
+  def configure(spark: SparkSession, tz: String): SparkSession = {
+    corpusConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    // The UDAF layer (sumForEach, retention, topK, …) registers per
+    // session, not through SparkSessionExtensions — same as Engine.session.
+    graft.Engine.registerFunctions(spark)
+    graft.sql.ClickHouseAliases.injectStrict(spark)
+    spark
+  }
+
+  /** A session that runs corpus files exactly as the sweep does. */
+  def session(tz: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master("local[8]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    configure(spark, tz)
+  }
+
+  /** The reference corpus's golden outputs are generated with the server
+    * timezone pinned to Europe/Moscow (clickhouse-test TZ); match it for
+    * both computation and DateTime text.
+    */
+  val corpusTz = "Europe/Moscow"
 }

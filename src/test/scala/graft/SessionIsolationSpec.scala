@@ -29,17 +29,21 @@ class SessionIsolationSpec extends SparkSpec {
   }
 
   test("a corpus-configured child session does not leak flags back") {
-    val corpus = spark.newSession()
-    corpus.conf.set(graft.sql.ChJoinDefaults.Flag, "true")
-    corpus.conf.set(graft.sql.ChCoercions.IeeeDivFlag, "true")
-    corpus.conf.set("spark.sql.groupByOrdinal", "false")
-    corpus.conf.set("spark.sql.orderByOrdinal", "false")
-    // sibling/parent sessions observe none of it
+    val parentBefore = spark.conf.getAll
+    val corpus = graft.tools.StatelessSweep.configure(spark.newSession(), "Europe/Moscow")
+    // every corpus setting lands on the child
+    graft.tools.StatelessSweep.corpusConfs.foreach { case (k, v) =>
+      assert(corpus.conf.get(k) == v, k)
+    }
+    assert(corpus.conf.get("spark.sql.session.timeZone") == "Europe/Moscow")
+    // the parent observes none of it
+    assert(spark.conf.getAll == parentBefore)
     assert(spark.conf.getOption(graft.sql.ChJoinDefaults.Flag)
       .forall(_ != "true"))
     assert(spark.conf.getOption(graft.sql.ChCoercions.IeeeDivFlag)
       .forall(_ != "true"))
     assert(spark.conf.get("spark.sql.groupByOrdinal") == "true")
+    // nor does a sibling session
     val fresh = spark.newSession()
     assert(fresh.conf.getOption(graft.sql.ChJoinDefaults.Flag)
       .forall(_ != "true"))

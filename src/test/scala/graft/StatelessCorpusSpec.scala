@@ -38,26 +38,8 @@ class StatelessCorpusSpec extends SparkSpec {
     * banked goldens see exactly the sequential runner's environment:
     * same master, same 8 shuffle partitions, same Moscow tz.
     */
-  private def mkCorpusSession(): org.apache.spark.sql.SparkSession = {
-    val session = spark.newSession()
-    Engine.registerFunctions(session)
-    graft.sql.ClickHouseAliases.injectStrict(session)
-    // the corpus's golden outputs assume server tz Europe/Moscow
-    session.conf.set("spark.sql.session.timeZone", "Europe/Moscow")
-    // CH has no ordinal GROUP BY / ORDER BY (same as StatelessSweep)
-    // match the sweep runner's partition count: set-operation row order
-    // is partition-order-deterministic, so the banked goldens assume it
-    session.conf.set("spark.sql.shuffle.partitions", "8")
-    session.conf.set("spark.sql.groupByOrdinal", "false")
-    session.conf.set("spark.sql.orderByOrdinal", "false")
-    session.conf.set(graft.sql.ChJoinDefaults.Flag, "true")
-    session.conf.set(graft.sql.ChRollupDefaults.Flag, "true")
-    session.conf.set(graft.sql.ChCoercions.IeeeDivFlag, "true")
-    session.conf.set(graft.sql.ChCoercions.SetOpsAllFlag, "true")
-    session.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    session.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    session
-  }
+  private def mkCorpusSession(): org.apache.spark.sql.SparkSession =
+    StatelessSweep.configure(spark.newSession(), StatelessSweep.corpusTz)
 
   test("every allowlisted reference stateless test passes verbatim") {
     assume(Files.isDirectory(Paths.get(corpusDir)), "reference corpus absent")
