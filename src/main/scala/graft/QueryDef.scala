@@ -13,6 +13,30 @@ final case class QueryDef(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+object QueryDef {
+
+  /** A query written as SQL text over the named tables, each registered
+    * as a temp view under its own name, in the listed order. The oracle
+    * is the same text: one ANSI SQL statement that runs verbatim on both
+    * engines. Only the named tables are registered — `Tables.registerAll`
+    * would read the footer of every table on each run.
+    */
+  def sql(name: String, tables: Seq[String], text: String): QueryDef =
+    sql(name, tables, text, Some(text))
+
+  /** Same, with an oracle text of its own (a builtin whose spelling or
+    * semantics differ between the engines) or none (rows-only check).
+    */
+  def sql(name: String, tables: Seq[String], text: String, oracle: Option[String]): QueryDef =
+    QueryDef(
+      name,
+      (s, dir) => {
+        tables.foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
+        s.sql(text)
+      },
+      oracle)
+}
+
 /** Numeric conventions shared by every query and its oracle.
   *
   * Spark aggregates doubles in nondeterministic partition order, so a raw

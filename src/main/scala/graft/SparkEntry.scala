@@ -4,53 +4,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Aggregates the engine's capability inventory from the per-area query
-  * modules under `graft.queries`. Every entry pairs a Spark-native
+  * Aggregates the engine's capability inventory from the per-capability
+  * query modules under `graft.queries`. Every entry pairs a Spark-native
   * implementation with (where SQL-expressible) a DuckDB oracle.
   */
 object SparkEntry {
 
-  private def modules: Seq[QueryDef] =
-    _root_.graft.queries.RelationalCore.defs ++
-      _root_.graft.queries.Aggregates.defs ++
-      _root_.graft.queries.WindowQueries.defs ++
-      _root_.graft.queries.SetOpsSubqueries.defs ++
-      _root_.graft.queries.Behavioral.defs ++
-      _root_.graft.queries.TextPipeline.defs ++
-      _root_.graft.queries.Similarity.defs ++
-      _root_.graft.queries.SketchesAndStreams.defs ++
-      _root_.graft.queries.DialectExtensions.defs ++
-      _root_.graft.queries.TpchExtra.defs ++
-      _root_.graft.queries.TpchRound2.defs ++
-      _root_.graft.queries.AnalyticsExtensions.defs ++
-      _root_.graft.queries.CoverageWave3.defs ++
-      _root_.graft.queries.TpcdsShapes.defs ++
-      _root_.graft.queries.StorageSemantics.defs ++
-      _root_.graft.queries.CoverageWave4.defs ++
-      _root_.graft.queries.SequenceQueries.defs ++
-      _root_.graft.queries.TpcdsShapes2.defs ++
-      _root_.graft.queries.CoverageWave5.defs ++
-      _root_.graft.queries.CoverageWave6.defs ++
-      _root_.graft.queries.FunnelFamily.defs ++
-      _root_.graft.queries.SegmentAlgebra.defs ++
-      _root_.graft.queries.BitmapLifecycle.defs ++
-      _root_.graft.queries.RetentionCohorts.defs ++
-      _root_.graft.queries.FunnelFamily2.defs ++
-      _root_.graft.queries.CoverageWave7.defs ++
-      _root_.graft.queries.TpcdsShapes3.defs ++
-      _root_.graft.queries.CoverageWave8.defs ++
-      _root_.graft.queries.TpcdsShapes4.defs ++
-      _root_.graft.queries.AucFamily.defs ++
-      _root_.graft.queries.CoverageWave9.defs ++
-      _root_.graft.queries.TpcdsShapes5.defs ++
-      _root_.graft.queries.TpcdsShapes6.defs ++
-      _root_.graft.queries.TpcdsShapes7.defs ++
-      _root_.graft.queries.SsbCorpus.defs ++
-      _root_.graft.queries.TpcdsShapes8.defs ++
-      _root_.graft.queries.TpcdsShapes9.defs ++
-      _root_.graft.queries.TpcdsShapes10.defs ++
-      _root_.graft.queries.TpcdsShapes11.defs ++
-      _root_.graft.queries.TpcdsShapes12.defs
+  private lazy val modules: Seq[QueryDef] = {
+    import _root_.graft.queries._
+    unique(
+      Tpch.defs ++
+        Tpcds.defs ++
+        SsbCorpus.defs ++
+        Aggregation.defs ++
+        Windows.defs ++
+        SetOpsSubqueries.defs ++
+        Behavioral.defs ++
+        BitmapsSketches.defs ++
+        Statistics.defs ++
+        TextSimilarity.defs ++
+        Dialect.defs ++
+        StreamingStorage.defs)
+  }
+
+  /** `defs` unchanged, or an error naming every query name defined more
+    * than once: a name maps to one query, and `toMap` would silently keep
+    * the last definition.
+    */
+  private[graft] def unique(defs: Seq[QueryDef]): Seq[QueryDef] = {
+    val clashes = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(clashes.isEmpty,
+      s"query names defined more than once: ${clashes.toSeq.sorted.mkString(", ")}")
+    defs
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {

@@ -25,11 +25,11 @@ object TimeOrderedAggregates {
 
   /** xirr: annualized IRR of the cashflow series, reference algorithm
     * verbatim — initial guess from the annualized-return heuristic
-    * (AggregateFunctionXirr.h:165) unless given, then ≤50 Newton steps
+    * (AggregateFunctionXirr.h:165), then ≤50 Newton steps
     * with ε = 1e-10 on a 365-day year; NaN when not converged. Times are
     * day numbers (the reference's Date columns are days too).
     */
-  class Xirr(guess: Option[Double] = None)
+  class Xirr
       extends Aggregator[TimedValue, ArrayBuffer[TimedValue], Double]
       with Serializable {
     private val MaxLoops = 50
@@ -43,8 +43,7 @@ object TimeOrderedAggregates {
     def finish(items0: ArrayBuffer[TimedValue]): Double = {
       if (items0.isEmpty) return Double.NaN
       val items = items0.sortBy(x => (x.t, x.v))
-      val g = guess.getOrElse(annualizedReturn(items))
-      newton(items, g)
+      newton(items, annualizedReturn(items))
     }
 
     /** pow(1 + endValue/debit, ±daysPerYear/span) − 1 (reference
@@ -132,9 +131,7 @@ object TimeOrderedAggregates {
   }
 
   def xirr: UserDefinedFunction =
-    udaf(new Xirr(None), Encoders.product[TimedValue])
-  def xirrWithGuess(g: Double): UserDefinedFunction =
-    udaf(new Xirr(Some(g)), Encoders.product[TimedValue])
+    udaf(new Xirr, Encoders.product[TimedValue])
   def deltaSumTimestamp: UserDefinedFunction =
     udaf(new DeltaSumTimestamp, Encoders.product[TimedValue])
 }

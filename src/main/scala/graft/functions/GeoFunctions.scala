@@ -227,14 +227,9 @@ object GeoFunctions {
   private val encodeUdf = udf(encode _)
   private val decodeLatUdf = udf((h: String) => decode(h)._1)
   private val decodeLonUdf = udf((h: String) => decode(h)._2)
-  private val inBoxUdf = udf(geohashesInBox _)
 
   def geohashEncode(lat: Column, lon: Column, precision: Column): Column =
     encodeUdf(lat, lon, precision)
   def geohashDecodeLat(h: Column): Column = decodeLatUdf(h)
   def geohashDecodeLon(h: Column): Column = decodeLonUdf(h)
-  def geohashesInBoxCol(
-      lonMin: Column, latMin: Column, lonMax: Column, latMax: Column,
-      precision: Column): Column =
-    inBoxUdf(lonMin, latMin, lonMax, latMax, precision)
 }

@@ -596,12 +596,6 @@ object HashOps {
     h.toLong & 0xffffffffL
   }
 
-  def xxh64Multi(a: ArrayData): Decimal = {
-    if (isEmpty(a)) return unsigned64(EmptyArgs64)
-    val h = args(a).map(xxh64).reduceLeft(hash128to64)
-    unsigned64(h)
-  }
-
   private def unsigned64(h: Long): Decimal =
     Decimal(new java.math.BigDecimal(java.lang.Long.toUnsignedString(h)), 20, 0)
 }

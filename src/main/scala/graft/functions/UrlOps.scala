@@ -82,13 +82,4 @@ object UrlOps {
     }
     url
   }
-
-  def paramNames(url: UTF8String): ArrayData = {
-    val a = params(url)
-    new GenericArrayData((0 until a.numElements()).map { k =>
-      val t = a.getUTF8String(k).toString
-      val eq = t.indexOf('=')
-      UTF8String.fromString(if (eq < 0) t else t.substring(0, eq)): Any
-    }.toArray)
-  }
 }

@@ -1,9 +1,9 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 
 /** Star Schema Benchmark — the reference's second optimizer plan-gate
-  * corpus (/root/reference/tests/optimizers/ssb/queries/ q1–q13, i.e.
+  * corpus (reference tests/optimizers/ssb/queries/ q1–q13, i.e.
   * SSB flights 1.1–4.3; stats profiles ssb100/ssb1000). SSB's lineorder
   * fact is TPC-H lineitem⋈orders denormalized, so the corpus maps onto
   * the driver's tables with a shared CTE prelude:
@@ -68,16 +68,8 @@ object SsbCorpus {
   private val allTables =
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation", "region")
 
-  private def ssb(name: String, body: String): QueryDef = {
-    val sql = prelude + body
-    QueryDef(
-      name,
-      (s, dir) => {
-        allTables.foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
-        s.sql(sql)
-      },
-      Some(sql))
-  }
+  private def ssb(name: String, body: String): QueryDef =
+    QueryDef.sql(name, allTables, prelude + body)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,22 +1,27 @@
 package graft.queries
 
 import graft.{Num, QueryDef, Tables}
+import graft.operators.RowOrder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Window-function surface (reference WindowTransform,
-  * /root/reference/src/Processors/Transforms/WindowTransform.cpp:2445-2546:
+  * src/Processors/Transforms/WindowTransform.cpp:2445-2546:
   * rank/dense_rank/row_number/percent_rank/cume_dist/ntile/nth_value/
-  * lag/lead + any aggregate over ROWS/RANGE frames) and the derived
-  * operators LIMIT n BY (LimitByStep.h:23) and partition top-N
-  * (PartitionTopNStep.h:27), which in Spark are window + filter —
-  * Spark ≥3.5 rewrites that shape into WindowGroupLimit, pruning
-  * per-partition before the shuffle-heavy full sort.
+  * lag/lead + any aggregate over ROWS/RANGE frames), the row-order
+  * functions runningDifference / neighbor / runningAccumulate /
+  * runningConcurrency as deterministic window forms, LIMIT/OFFSET and
+  * WITH TIES, and partition top-N (PartitionTopNStep.h:27), which in
+  * Spark is window + filter — Spark ≥3.5 rewrites that shape into
+  * WindowGroupLimit, pruning per-partition before the shuffle-heavy full
+  * sort. (LIMIT n BY, the same shape as a named surface, is in Dialect.)
   */
-object WindowQueries {
+object Windows {
+
   import Num._
 
   val defs: Seq[QueryDef] = Seq(
+
     // LIMIT n BY group ≡ top-N per group.
     QueryDef(
       "win_topn_per_group",
@@ -173,23 +178,15 @@ object WindowQueries {
         ORDER BY s_nationkey""")),
 
     // RANGE frame with a numeric offset (WindowDescription.h:54 frame specs).
-    QueryDef(
+    QueryDef.sql(
       "win_range_frame",
-      (s, dir) => {
-        Tables(s, dir, "supplier").createOrReplaceTempView("supplier")
-        s.sql("""
-          SELECT s_suppkey, s_nationkey, s_acctbal,
-            COUNT(*) OVER (PARTITION BY s_nationkey ORDER BY s_acctbal
-              RANGE BETWEEN 500.0 PRECEDING AND CURRENT ROW) AS n_within_500
-          FROM supplier
-          ORDER BY s_nationkey, s_acctbal, s_suppkey""")
-      },
-      Some("""
+      Seq("supplier"),
+      """
         SELECT s_suppkey, s_nationkey, s_acctbal,
           COUNT(*) OVER (PARTITION BY s_nationkey ORDER BY s_acctbal
             RANGE BETWEEN 500.0 PRECEDING AND CURRENT ROW) AS n_within_500
         FROM supplier
-        ORDER BY s_nationkey, s_acctbal, s_suppkey""")),
+        ORDER BY s_nationkey, s_acctbal, s_suppkey"""),
 
     // GROUPS frame (WindowDescription.h:127-131 FrameType::Groups) —
     // Spark has no GROUPS frames, but dense_rank + a RANGE frame over the
@@ -257,6 +254,97 @@ object WindowQueries {
             RANK() OVER (ORDER BY l_quantity DESC) AS rnk
           FROM lineitem) t
         WHERE rnk <= 100
-        ORDER BY l_quantity DESC, l_orderkey, l_linenumber"""))
-  )
+        ORDER BY l_quantity DESC, l_orderkey, l_linenumber""")),
+
+    // runningDifference + neighbor over the per-user event stream. Both
+    // functions share one (partition, order) → a single Window node, one
+    // shuffle on user_id.
+    QueryDef(
+      "running_difference_neighbor",
+      (s, dir) => {
+        val part = Seq(col("user_id"))
+        val ord = Seq(col("us"), col("event_id"))
+        Tables(s, dir, "events")
+          .withColumn("us", Tables.tsUs(col("ts")))
+          .select(col("user_id"), col("event_id"),
+            RowOrder.runningDifference(col("value"), part, ord).as("val_diff"),
+            RowOrder.neighbor(col("event_type"), -1, lit("none"), part, ord)
+              .as("prev_type"),
+            RowOrder.neighbor(col("event_type"), 2, lit("END"), part, ord)
+              .as("next2_type"))
+          .orderBy(col("user_id"), col("event_id"))
+      },
+      Some("""
+        WITH b AS (SELECT user_id, event_id, EPOCH_US(ts) AS us, value, event_type
+                   FROM events)
+        SELECT user_id, event_id,
+          CASE WHEN LAG(value) OVER w IS NULL THEN 0.0
+               ELSE value - LAG(value) OVER w END AS val_diff,
+          COALESCE(LAG(event_type) OVER w, 'none') AS prev_type,
+          COALESCE(LEAD(event_type, 2) OVER w, 'END') AS next2_type
+        FROM b
+        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+        ORDER BY user_id, event_id""")),
+
+    // runningAccumulate (reference runningAccumulate.cpp) as the
+    // deterministic cumulative window over an explicit order: running
+    // yearly revenue per order priority. Exact decimal all the way so
+    // the cumulative sums hash identically.
+    QueryDef(
+      "running_accumulate_revenue",
+      (s, dir) => {
+        val yearly = Tables(s, dir, "orders")
+          .groupBy(col("o_orderpriority").as("prio"),
+            year(col("o_orderdate")).cast("int").as("yr"))
+          .agg(sum(col("o_totalprice").cast(Num.D2)).as("rev0"))
+        yearly.select(
+            col("prio"), col("yr"),
+            col("rev0").cast(Num.D2).cast("double").as("rev"),
+            RowOrder.runningAccumulate(sum(col("rev0")),
+              Seq(col("prio")), Seq(col("yr"))).cast(Num.D2).cast("double").as("cum_rev"))
+          .orderBy(col("prio"), col("yr"))
+      },
+      Some("""
+        WITH y AS (
+          SELECT o_orderpriority AS prio, CAST(YEAR(o_orderdate) AS INT) AS yr,
+            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS rev
+          FROM orders GROUP BY 1, 2)
+        SELECT prio, yr, CAST(rev AS DOUBLE) AS rev,
+          CAST(CAST(SUM(rev) OVER (PARTITION BY prio ORDER BY yr) AS DECIMAL(18,2)) AS DOUBLE) AS cum_rev
+        FROM y ORDER BY prio, yr""")),
+
+    // runningConcurrency (reference runningConcurrency.cpp) as the
+    // deterministic interval sweep (operators/RowOrder.scala): view
+    // events become [ts, ts + (1..5) min) intervals; per distinct begin
+    // instant, how many intervals are open. The window's input is the
+    // per-instant net-delta aggregate (cardinality = distinct instants,
+    // not rows), so the global prefix sum is over the already-reduced
+    // set. Oracle: the identical sweep in plain SQL.
+    QueryDef(
+      "running_concurrency",
+      (s, dir) => {
+        import org.apache.spark.sql.functions.{col, expr}
+        val iv = Tables(s, dir, "events")
+          .filter(col("event_type") === "view")
+          .select(col("ts").as("b"),
+            expr("ts + make_interval(0, 0, 0, 0, 0, CAST(user_id % 5 AS INT) + 1, 0)")
+              .as("e"))
+        graft.operators.RowOrder.runningConcurrency(iv, col("b"), col("e"))
+          .orderBy(col("t"))
+      },
+      Some("""
+        WITH iv AS (
+          SELECT ts AS b, ts + to_minutes(CAST(user_id % 5 AS BIGINT) + 1) AS e
+          FROM events WHERE event_type = 'view'),
+        pts AS (
+          SELECT b AS t, 1 AS d FROM iv
+          UNION ALL
+          SELECT e AS t, -1 AS d FROM iv),
+        net AS (SELECT t, SUM(d) AS nd FROM pts GROUP BY t),
+        sweep AS (SELECT t, SUM(nd) OVER (ORDER BY t
+          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS conc FROM net)
+        SELECT s.t, CAST(s.conc AS BIGINT) AS conc
+        FROM sweep s
+        JOIN (SELECT DISTINCT b FROM iv) g ON s.t = g.b
+        ORDER BY s.t""")))
 }

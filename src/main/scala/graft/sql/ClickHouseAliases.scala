@@ -6411,7 +6411,7 @@ object ClickHouseAliases {
 
   /** CH-strict overrides whose semantics would surprise Spark users
     * session-wide — registered ONLY into the stateless-corpus runner's
-    * session (StatelessSweep / StatelessCorpusSpec / SqlTry), never via
+    * sessions (`StatelessSweep.configure`), never via
     * GraftExtensions: `length` is BYTES in ClickHouse (lengthUTF8 is
     * the char count) and counts elements on arrays/maps.
     */

@@ -40,12 +40,4 @@ object LiveView {
     * so it composes with any downstream query).
     */
   def watch(spark: SparkSession, name: String): DataFrame = spark.table(name)
-
-  /** Block until in-flight data is folded into the snapshot, then return
-    * it (the synchronous WATCH round-trip).
-    */
-  def refreshAndWatch(spark: SparkSession, name: String, q: StreamingQuery): DataFrame = {
-    q.processAllAvailable()
-    watch(spark, name)
-  }
 }

@@ -70,7 +70,7 @@ class GoldenPlanSpec extends SparkSpec {
     test(s"$q optimized plan matches golden snapshot") { check(q) }
   }
 
-  // Round-4 TPC-DS shape corpus (TpcdsShapes + TpcdsShapes2) — the
+  // Round-4 TPC-DS shapes (graft.queries.Tpcds) — the
   // reference gates its optimizer on 100 golden TPC-DS plans; these 13
   // snapshots are the Catalyst equivalent for the shapes we carry.
   Seq("tpcds_multi_count_scalars", "tpcds_rollup_rank", "tpcds_cumulative_compare",

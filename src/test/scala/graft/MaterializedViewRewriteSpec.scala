@@ -12,7 +12,7 @@ import graft.plans.MaterializedViews
   * MV parquet (not the base table), and every guardrail case must keep
   * the original plan. Double sums are compared with an ulp-scale
   * tolerance — the MV path re-associates double addition (the gate query
-  * in CoverageWave9 uses decimal measures instead, where both paths are
+  * `mv_rewrite_rollup` uses decimal measures instead, where both paths are
   * exact).
   */
 class MaterializedViewRewriteSpec extends SparkSpec {

@@ -36,6 +36,19 @@ class SessionIsolationSpec extends SparkSpec {
       assert(corpus.conf.get(k) == v, k)
     }
     assert(corpus.conf.get("spark.sql.session.timeZone") == "Europe/Moscow")
+    // and so do the corpus-only strict overrides of
+    // ClickHouseAliases.injectStrict: length counts bytes, position takes
+    // the haystack first and returns a byte offset, dateDiff counts unit
+    // boundaries crossed, and flatten is recursive
+    def scalar(s: org.apache.spark.sql.SparkSession, q: String): Any = s.sql(q).head.get(0)
+    assert(scalar(corpus, "SELECT length('ü')") == 2)
+    assert(scalar(corpus, "SELECT position('äbc', 'b')") == 3)
+    // (Spark's parser claims dateDiff(unit, …) before the registry; the
+    // corpus transpiler routes CH's dateDiff to chDateDiff)
+    assert(scalar(corpus,
+      "SELECT chDateDiff('year', DATE'2017-12-31', DATE'2018-01-01')") == 1)
+    assert(corpus.sql("SELECT flatten(array(array(array(1), array(2)), array(array(3))))")
+      .head.getSeq[Int](0) == Seq(1, 2, 3))
     // the parent observes none of it
     assert(spark.conf.getAll == parentBefore)
     assert(spark.conf.getOption(graft.sql.ChJoinDefaults.Flag)
@@ -43,6 +56,7 @@ class SessionIsolationSpec extends SparkSpec {
     assert(spark.conf.getOption(graft.sql.ChCoercions.IeeeDivFlag)
       .forall(_ != "true"))
     assert(spark.conf.get("spark.sql.groupByOrdinal") == "true")
+    assert(scalar(spark, "SELECT length('ü')") == 1)
     // nor does a sibling session
     val fresh = spark.newSession()
     assert(fresh.conf.getOption(graft.sql.ChJoinDefaults.Flag)
