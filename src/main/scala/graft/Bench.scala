@@ -72,7 +72,7 @@ object Bench {
     // CacheManager entries, making the reps' persist() calls no-ops
     // against dead cache entries (every reuse would silently recompute).
     spark.catalog.clearCache()
-    // r16 MEASUREMENT FIX (disclosed in OPTIMIZATION_r16.md): drop every
+    // Measurement fix: drop every
     // registered shuffle's map outputs before the rep. Re-executing the
     // same cached RDD lets the DAGScheduler SKIP any stage whose shuffle
     // output is still registered, so since r10 the timed reps re-ran only

@@ -44,11 +44,12 @@ object Engine {
     spark
   }
 
-  /** Register the custom aggregate library for SQL texts. */
+  /** Register the custom aggregate library for SQL texts. windowFunnel,
+    * retention, bitmapMaxLevel and the bitmap-expression family are not
+    * registered here: [[GraftExtensions]] injects their ClickHouse
+    * spellings into every session.
+    */
   def registerFunctions(spark: SparkSession): Unit = {
-    spark.udf.register("window_funnel_7d_3",
-      aggregates.WindowFunnel(7L * 86400 * 1000000, 3))
-    spark.udf.register("retention3", aggregates.Retention())
     spark.udf.register("top_k_10", aggregates.TopK(10))
     spark.udf.register("top_k_weighted_10", aggregates.TopKWeighted(10))
     spark.udf.register("minMap", aggregates.MinMap())

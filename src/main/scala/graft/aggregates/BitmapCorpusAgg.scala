@@ -2,27 +2,32 @@ package graft.aggregates
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
-/** Catalyst forms of the reference's bitmap-expression aggregate family
-  * (reference /root/reference/src/AggregateFunctions/
+/** The reference's bitmap-expression aggregate family (reference
+  * /root/reference/src/AggregateFunctions/
   * AggregateFunctionBitmapExpressionCalculation.h — bitmapCount /
   * bitmapExtract / bitmapMultiCount / bitmapMultiExtract and the
   * WithDate + V2 spellings, which Cnch documents as behaviourally
-  * identical) and AggregateFunctionBitmapMaxLevel.h:49 (bitmapMaxLevel).
+  * identical) and AggregateFunctionBitmapMaxLevel.h:49 (bitmapMaxLevel),
+  * as Catalyst aggregates. The SQL dialect's parametric-call spellings and
+  * the Column forms in the companions ([[BitmapExprCalcAgg.count]],
+  * [[BitmapMaxLevelAgg.maxLevel]], ...) build the same aggregates.
   *
-  * The DataFrame-API equivalents live in [[BitmapExpr]]/[[BitmapLevels]];
-  * these Catalyst versions exist so the SQL dialect can run the
-  * reference's own parametric-call spellings. Same scale shape: the
-  * partial state is a pruned tag→Roaring-bitmap map (only tags the
-  * expression mentions are kept at update time), merged by per-key OR,
-  * so partial aggregation combines map-side and the shuffle carries
-  * compressed bitmaps, not raw ids.
+  * Expression syntax (BitMapExpressionAnalyzerImpl in
+  * AggregateBitmapExpressionCommon.h:343): keys with the operators `&`
+  * (and), `|`/`,` (or), `~` (andnot) and parentheses, all one precedence
+  * level, left-associative. Scale shape: the partial state is a pruned
+  * tag→Roaring-bitmap map (only tags the expression mentions are kept at
+  * update time), merged by per-key OR, so partial aggregation combines
+  * map-side and the shuffle carries compressed bitmaps, not raw ids.
   */
 object BitmapCorpusExpr {
 
@@ -157,6 +162,8 @@ object BitmapCorpusExpr {
 /** tag→bitmap buffer shared by the expression-calculation family. */
 final class BitmapTagBuf {
   val m = new mutable.HashMap[String, Roaring64NavigableMap]()
+  def add(key: String, id: Long): Unit =
+    m.getOrElseUpdate(key, new Roaring64NavigableMap()).addLong(id)
   def or(key: String, bm: Roaring64NavigableMap): Unit =
     m.get(key) match {
       case Some(acc) => acc.or(bm)
@@ -167,7 +174,9 @@ final class BitmapTagBuf {
     }
 }
 
-/** @param dateExpr present for the WithDate spellings: the lookup key is
+/** @param bmExpr   a serialized bitmap state (BinaryType), OR'd into the
+  *                 tag's bitmap, or a raw LongType id, added to it.
+  * @param dateExpr present for the WithDate spellings: the lookup key is
   *                 `<date>_<tag>`.
   * @param multi    Multi spellings return one element per expression;
   *                 plain ones return the single expression's value.
@@ -199,6 +208,8 @@ case class BitmapExprCalcAgg(
   @transient private lazy val wanted: Set[String] =
     asts.flatMap(BitmapCorpusExpr.keys).toSet
 
+  @transient private lazy val rawIds: Boolean = bmExpr.dataType == LongType
+
   override def children: Seq[Expression] =
     dateExpr.toSeq ++ Seq(tagExpr, bmExpr)
   override def nullable: Boolean = false
@@ -213,8 +224,8 @@ case class BitmapExprCalcAgg(
 
   override def update(b: BitmapTagBuf, input: InternalRow): BitmapTagBuf = {
     val tag = tagExpr.eval(input)
-    val bytes = bmExpr.eval(input)
-    if (tag == null || bytes == null) return b
+    val value = bmExpr.eval(input)
+    if (tag == null || value == null) return b
     // WithDate rows are addressable BOTH as `<date>_<tag>` and as the
     // bare tag (a date-less key unions the tag across all dates —
     // 20022's `'2'` over a date-keyed table counts every date)
@@ -226,11 +237,16 @@ case class BitmapExprCalcAgg(
         Seq(s"${d.toString}_${tag.toString}", tag.toString)
     }
     val hit = keys.filter(wanted.contains)
-    if (hit.nonEmpty) {
-      val bm = BitmapAggregates.deserialize(bytes.asInstanceOf[Array[Byte]])
+    if (hit.isEmpty) b
+    else if (rawIds) {
+      val id = value.asInstanceOf[Long]
+      hit.foreach(b.add(_, id))
+      b
+    } else {
+      val bm = BitmapAggregates.deserialize(value.asInstanceOf[Array[Byte]])
       hit.foreach(b.or(_, bm))
+      b
     }
-    b
   }
 
   override def merge(b: BitmapTagBuf, other: BitmapTagBuf): BitmapTagBuf = {
@@ -287,6 +303,31 @@ case class BitmapExprCalcAgg(
       copy(dateExpr = Some(newChildren(0)), tagExpr = newChildren(1),
         bmExpr = newChildren(2))
     else copy(tagExpr = newChildren(0), bmExpr = newChildren(1))
+}
+
+object BitmapExprCalcAgg {
+  private def agg(expressions: Seq[String], multi: Boolean, extract: Boolean)(
+      tag: Column, value: Column): Column =
+    ColumnBridge.column(BitmapExprCalcAgg(ColumnBridge.expression(tag),
+      ColumnBridge.expression(value), None, expressions, multi, extract)
+      .toAggregateExpression())
+
+  /** Column form of bitmapCount('expr')(tag, value): the segment's
+    * cardinality. `value` is a raw LongType id or a bitmap state.
+    */
+  def count(expression: String)(tag: Column, value: Column): Column =
+    agg(Seq(expression), multi = false, extract = false)(tag, value)
+
+  /** bitmapMultiCount: one shared tag→bitmap state, one cardinality per
+    * expression (later expressions may reference earlier ones as `_N`).
+    */
+  def multiCount(expressions: String*)(tag: Column, value: Column): Column =
+    agg(expressions, multi = true, extract = false)(tag, value)
+
+  /** bitmapExtract: the segment's members, ascending, as array<bigint>. */
+  def extract(expression: String)(tag: Column, value: Column): Column =
+    agg(Seq(expression), multi = false, extract = true)(tag, value)
+      .getField("__bitmap")
 }
 
 /** level→bitmap buffer for bitmapMaxLevel. */
@@ -410,4 +451,13 @@ case class BitmapMaxLevelAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BitmapMaxLevelAgg =
     copy(levelExpr = newChildren(0), bmExpr = newChildren(1))
+}
+
+object BitmapMaxLevelAgg {
+  /** Column form of bitmapMaxLevel(level, bitmap) (return_type 0):
+    * array<struct<col1: level, col2: users>> ascending by level.
+    */
+  def maxLevel(level: Column, bm: Column): Column =
+    ColumnBridge.column(BitmapMaxLevelAgg(ColumnBridge.expression(level),
+      ColumnBridge.expression(bm), mode = 0).toAggregateExpression())
 }

@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions.udaf
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 import scala.collection.mutable
 
-/** Keyed-bitmap lifecycle aggregates (reference
-  * AggregateFunctionBitmapMaxLevel.h:49 `bitmapMaxLevel`,
-  * AggregateFunctionBitmapColumnDiff.h:154 `bitmapColumnDiff`).
+/** Keyed-bitmap lifecycle aggregate (reference
+  * AggregateFunctionBitmapColumnDiff.h:154 `bitmapColumnDiff`;
+  * `bitmapMaxLevel` is [[BitmapMaxLevelAgg]]).
   *
-  * Both consume (key, bitmap-state) rows — the output of a per-key
+  * It consumes (key, bitmap-state) rows — the output of a per-key
   * [[BitmapAggregates.groupBitmap]] — so the expensive part (building
   * per-key user sets from raw events) is an ordinary distributed hash
   * aggregate whose shuffle payload is compressed bitmaps, and this final
@@ -21,9 +21,6 @@ object BitmapLevels {
 
   /** (key, serialized roaring bitmap) input row. */
   final case class KeyedBitmap(key: Long, bm: Array[Byte])
-
-  /** bitmapMaxLevel output element: one funnel level and its user count. */
-  final case class LevelUsers(level: Long, users: Long)
 
   /** bitmapColumnDiff output element: key plus per-direction lost counts
     * (length 1 for forward/backward, 2 — [forward, backward] — for
@@ -51,34 +48,6 @@ object BitmapLevels {
     }
     a
   }
-
-  /** bitmapMaxLevel: deduplicate ids across levels so each id counts only
-    * at the highest level it reached, then emit (level, cardinality)
-    * ascending — the reference's return_type=0 summary form
-    * (AggregateFunctionBitmapMaxLevel.h:117-152: descending sweep XORs the
-    * intersection out of every lower level).
-    */
-  class BitmapMaxLevel extends Aggregator[KeyedBitmap, BmMap, Seq[LevelUsers]] with Serializable {
-    def zero: BmMap = mutable.HashMap.empty
-    def reduce(b: BmMap, in: KeyedBitmap): BmMap = orInto(b, in.key, in.bm)
-    def merge(a: BmMap, b: BmMap): BmMap = mergeMaps(a, b)
-    def finish(b: BmMap): Seq[LevelUsers] = {
-      val desc = b.keys.toArray.sorted(Ordering.Long.reverse)
-      // Running union of all higher levels, removed from each lower level.
-      val seen = new Roaring64NavigableMap()
-      desc.map { level =>
-        val bm = b(level)
-        bm.andNot(seen)
-        seen.or(bm)
-        LevelUsers(level, bm.getLongCardinality)
-      }.reverse.toSeq
-    }
-    def bufferEncoder: Encoder[BmMap] = Encoders.kryo
-    def outputEncoder: Encoder[Seq[LevelUsers]] = ExpressionEncoder[Seq[LevelUsers]]()
-  }
-
-  val maxLevel: UserDefinedFunction =
-    udaf(new BitmapMaxLevel, Encoders.product[KeyedBitmap])
 
   /** bitmapColumnDiff(direction, step): per key, how many ids are present
     * at that key but absent `step` positions away in key order. Positional

@@ -87,12 +87,20 @@ final class FunnelBuf(var arr: Array[Long], var n: Int) {
   }
 }
 
-/** windowFunnel as a TypedImperativeAggregate: the partial-aggregate
-  * buffer is a raw long array that merges by concatenation and serializes
-  * to its packed binary form — the exchange-friendly shape for a
-  * behavioral aggregate running over billions of users (the udaf()
-  * Aggregator form re-encodes a kryo object per buffer touch; here update
-  * is an array append and serialize is one memcopy).
+/** windowFunnel(window, steps)(ts_us, step): the max funnel level reached
+  * (0..nSteps), by [[FunnelCore.eventLevel]]. Events sort by (ts, step); a
+  * level-0 slot re-anchors on EVERY step-1 event; a step-k event extends
+  * the chain when the (k-1) slot is set and its ts is within `windowUs` of
+  * that chain's own step-1 anchor (windowUs <= 0 → unbounded). Equal
+  * timestamps count by default; the flags mirror the reference's
+  * `strict_deduplication`, `strict_order` and `strict_increase`
+  * parameters (for strict_order, feed non-funnel events as step 0).
+  *
+  * A TypedImperativeAggregate: the partial-aggregate buffer is a raw long
+  * array that merges by concatenation and serializes to its packed binary
+  * form, so update is an array append and serialize is one memcopy. The
+  * SQL spelling (`ClickHouseAliases` "windowFunnel") and the Column form
+  * [[WindowFunnelAgg.funnel]] both build this aggregate.
   */
 case class WindowFunnelAgg(
     tsExpr: Expression,
@@ -168,9 +176,7 @@ case class WindowFunnelAgg(
 }
 
 object WindowFunnelAgg {
-  /** Column form mirroring [[WindowFunnel.apply]] but on the
-    * TypedImperativeAggregate implementation.
-    */
+  /** Column form: funnel(windowUs, nSteps[, strict flags])(ts_us, step). */
   def funnel(windowUs: Long, nSteps: Int,
              strictDeduplication: Boolean = false,
              strictOrder: Boolean = false,

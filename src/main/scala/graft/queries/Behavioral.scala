@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Num, QueryDef, Tables}
 import graft.aggregates.SequenceMatchAgg.{sequenceCount, sequenceMatch}
-import graft.aggregates.{Retention, RetentionMatrix}
+import graft.aggregates.{RetentionAgg, RetentionMatrix}
 import graft.operators.{AsofJoin, SessionAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -176,10 +176,9 @@ object Behavioral {
     QueryDef(
       "retention_cohort",
       (s, dir) => {
-        val ret = Retention()
         Tables(s, dir, "events")
           .groupBy(col("user_id"))
-          .agg(ret(col("event_type") === "signup",
+          .agg(RetentionAgg.retention(col("event_type") === "signup",
                    col("event_type") === "purchase",
                    col("event_type") === "error").as("r"))
           .agg(sum(col("r").getItem(0)).as("n_signup"),

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.{Num, QueryDef, Tables}
 import graft.aggregates.{BitmapAggregates => B}
-import graft.aggregates.{BitmapAggregates, BitmapExpr, BitmapLevels, SumMap, TopK}
+import graft.aggregates.{BitmapAggregates, BitmapExprCalcAgg, BitmapLevels, BitmapMaxLevelAgg,
+  SumMap, TopK}
 import org.apache.spark.sql.functions._
 
 /** Bitmaps and sketches (SURVEY §2.4 sketch/bitmap groups): user-set
@@ -41,9 +42,9 @@ object BitmapsSketches {
               .otherwise(3L))
         ev.groupBy("level")
           .agg(BitmapAggregates.groupBitmap(col("user_id")).as("bm"))
-          .agg(BitmapLevels.maxLevel(col("level"), col("bm")).as("r"))
+          .agg(BitmapMaxLevelAgg.maxLevel(col("level"), col("bm")).as("r"))
           .select(explode(col("r")).as("lu"))
-          .select(col("lu.level").as("level"), col("lu.users").as("users"))
+          .select(col("lu.col1").as("level"), col("lu.col2").as("users"))
           .orderBy("level")
       },
       Some("""
@@ -137,11 +138,11 @@ object BitmapsSketches {
     QueryDef(
       "bitmap_count_expression",
       (s, dir) => {
-        val mc = BitmapExpr.multiCount(
+        val mc = BitmapExprCalcAgg.multiCount(
           "click & purchase",
           "click | view",
           "( click & purchase ) ~ error",
-          "signup , view")
+          "signup , view") _
         Tables(s, dir, "events")
           .agg(mc(col("event_type"), col("user_id")).as("c"))
           .select(col("c")(0).as("n_click_and_purchase"),
@@ -176,7 +177,7 @@ object BitmapsSketches {
     QueryDef(
       "bitmap_extract_expression",
       (s, dir) => {
-        val ex = BitmapExpr.extract("( purchase_d3 & signup_d3 ) ~ click_d3")
+        val ex = BitmapExprCalcAgg.extract("( purchase_d3 & signup_d3 ) ~ click_d3") _
         Tables(s, dir, "events")
           .withColumn("tag",
             concat(col("event_type"), lit("_d"),

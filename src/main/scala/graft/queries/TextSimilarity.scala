@@ -244,8 +244,9 @@ object TextSimilarity {
       // GOLDEN VECTOR oracle: the seeded-xxhash signature has no SQL
       // counterpart, so the pair/doc counts are pinned from the seed-42
       // sf0.01 run. Candidate QUALITY is independently gated by
-      // DedupSpec's recall assertion vs exact token Jaccard (the
-      // SQL-checkable jaccard_token_pairs query covers the exact side);
+      // OperatorsSpec's "minhash LSH recall vs exact shingle-Jaccard"
+      // test (the SQL-checkable jaccard_token_pairs query covers the
+      // exact side);
       // this pin freezes the integration output so any signature or
       // banding regression hash-fails. sf0.01 ONLY.
       Some("""
@@ -263,9 +264,10 @@ object TextSimilarity {
                countDistinct(col("id_a")).as("n_docs_with_candidates"))
       },
       // GOLDEN VECTOR oracle: pinned from the seed-42 sf0.01 run (the
-      // 64-bit shingle-hash SimHash has no SQL counterpart); Hamming
-      // proximity of emitted candidates is gated by DedupSpec. Freezes
-      // the integration output against regression. sf0.01 ONLY.
+      // 64-bit shingle-hash SimHash has no SQL counterpart); that
+      // near-identical token sets collide is gated by OperatorsSpec's
+      // "simhash candidates collide" test. Freezes the integration
+      // output against regression. sf0.01 ONLY.
       Some("""
         SELECT CAST(n_candidate_pairs AS BIGINT) AS n_candidate_pairs,
                CAST(n_docs_with_candidates AS BIGINT) AS n_docs_with_candidates

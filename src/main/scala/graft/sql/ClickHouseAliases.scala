@@ -3745,17 +3745,8 @@ object ClickHouseAliases {
         Literal(Double.NaN))
     }
     Seq(
-      // retention(c1..cN) (reference AggregateFunctionRetention.h: state
-      // is the bitmask of conditions that EVER fired; r[0] = c1 fired,
-      // r[i] = c1 fired AND c(i) fired) — lowers to bool_or aggregates
-      // combined in one CreateArray, a single hash-aggregate pass
-      "retention" -> (cs => {
-        val evs = cs.map(c =>
-          BoolOr(Cast(c, BooleanType)).toAggregateExpression())
-        CreateArray(
-          Cast(evs.head, IntegerType) +:
-            evs.tail.map(e => Cast(And(evs.head, e), IntegerType)))
-      }),
+      // retention(c1..cN): bool_or per condition in one CreateArray
+      "retention" -> (cs => graft.aggregates.RetentionAgg.lower(cs)),
       "corrStable" -> (cs => Corr(d(cs.head), d(cs(1)))),
       "covarPopStable" -> (cs => CovPopulation(d(cs.head), d(cs(1)))),
       "covarSampStable" -> (cs => CovSample(d(cs.head), d(cs(1)))),

@@ -85,7 +85,7 @@ class AggregatorsSpec extends SparkSpec {
       (3L, 10L, 1), (3L, 200L, 2),
       (4L, 10L, 1), (4L, 10L, 2)
     ).toDF("u", "us", "step")
-    val funnel = WindowFunnel(100L, 3)
+    val funnel = WindowFunnelAgg.funnel(100L, 3) _
     val res = df.repartition(4) // force partial/final merge paths
       .groupBy($"u").agg(funnel($"us", $"step").as("d"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -96,7 +96,7 @@ class AggregatorsSpec extends SparkSpec {
     // ADVICE r1 example: window=50, step1@0, step1@90, step2@100 — the
     // level-0 slot is re-anchored at 90, so 100 <= 90+50 matches → depth 2.
     val df = Seq((1L, 0L, 1), (1L, 90L, 1), (1L, 100L, 2)).toDF("u", "us", "step")
-    val funnel = WindowFunnel(50L, 2)
+    val funnel = WindowFunnelAgg.funnel(50L, 2) _
     val d = df.groupBy($"u").agg(funnel($"us", $"step").as("d")).collect()(0).getInt(1)
     assert(d === 2)
 
@@ -110,8 +110,8 @@ class AggregatorsSpec extends SparkSpec {
   test("windowFunnel: strict_increase rejects equal timestamps") {
     val df = Seq((1L, 10L, 1), (1L, 10L, 2), (2L, 10L, 1), (2L, 11L, 2))
       .toDF("u", "us", "step")
-    val funnel = WindowFunnel(100L, 2, strictDeduplication = false,
-      strictOrder = false, strictIncrease = true)
+    val funnel = WindowFunnelAgg.funnel(100L, 2, strictDeduplication = false,
+      strictOrder = false, strictIncrease = true) _
     val res = df.groupBy($"u").agg(funnel($"us", $"step").as("d"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(res === Map(1L -> 1, 2L -> 2))
@@ -171,19 +171,21 @@ class AggregatorsSpec extends SparkSpec {
     }
   }
 
-  test("WindowFunnelAgg (TypedImperativeAggregate) matches the udaf form") {
-    import graft.aggregates.WindowFunnelAgg
+  test("WindowFunnelAgg (TypedImperativeAggregate) matches a driver-side FunnelCore.eventLevel") {
     val rnd = new scala.util.Random(7)
     val rows = (1 to 60).flatMap { u =>
       (1 to 20).map(_ => (u.toLong, rnd.nextInt(1000).toLong, rnd.nextInt(4)))
-    }
-    val df = rows.toDF("u", "us", "step").filter($"step" > 0).repartition(8)
+    }.filter(_._3 > 0)
+    val df = rows.toDF("u", "us", "step").repartition(8)
     val native = WindowFunnelAgg.funnel(100L, 3) _
-    val udafForm = WindowFunnel(100L, 3)
-    val merged = df.groupBy($"u")
-      .agg(native($"us", $"step").as("a"), udafForm($"us", $"step").as("b"))
-      .filter($"a" =!= $"b").count()
-    assert(merged === 0)
+    val got = df.groupBy($"u").agg(native($"us", $"step").as("d"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val want = rows.groupBy(_._1).map { case (u, evs) =>
+      val packed = evs.map { case (_, us, st) => FunnelCore.pack(us, st) }.toArray.sorted
+      u -> FunnelCore.eventLevel(packed, packed.length, 100L, 3, false, false, false)
+    }
+    assert(want.values.toSet.size > 1) // the sample reaches several depths
+    assert(got === want)
   }
 
   test("theta sketch distinct: near-exact at small NDV, merges across partitions") {
@@ -235,9 +237,9 @@ class AggregatorsSpec extends SparkSpec {
       (2L, "purchase"),
       (3L, "signup"), (3L, "error")
     ).toDF("u", "et")
-    val ret = Retention()
     val res = df.repartition(3).groupBy($"u")
-      .agg(ret($"et" === "signup", $"et" === "purchase", $"et" === "error").as("r"))
+      .agg(RetentionAgg.retention($"et" === "signup", $"et" === "purchase",
+        $"et" === "error").as("r"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(res(1L) === Seq(1, 1, 0))
     assert(res(2L) === Seq(0, 0, 0)) // no signup → all zero

@@ -1,12 +1,12 @@
 package graft
 
-import graft.aggregates.{BitmapExpr, BitmapExprParser}
+import graft.aggregates.{BitmapCorpusExpr, BitmapExprCalcAgg}
 import org.apache.spark.sql.functions._
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Parser + evaluator gates for the bitmap expression calculation. */
 class BitmapExprSpec extends SparkSpec {
-  import BitmapExprParser._
+  import BitmapCorpusExpr.{eval, parse}
   import spark.implicits._
 
   private def bm(xs: Long*): Roaring64NavigableMap = {
@@ -19,7 +19,7 @@ class BitmapExprSpec extends SparkSpec {
     "A" -> bm(1, 2, 3, 4), "B" -> bm(3, 4, 5), "C" -> bm(4, 6), "7" -> bm(7))
 
   private def ids(e: String): Seq[Long] = {
-    val r = eval(parse(e), env)
+    val r = eval(parse(e, maxRef = 0), env, IndexedSeq.empty)
     val out = Seq.newBuilder[Long]
     val it = r.getLongIterator
     while (it.hasNext) out += it.next()
@@ -44,18 +44,18 @@ class BitmapExprSpec extends SparkSpec {
   }
 
   test("malformed expressions are rejected loudly") {
-    intercept[IllegalArgumentException](parse("A &"))
-    intercept[IllegalArgumentException](parse("( A | B"))
-    intercept[IllegalArgumentException](parse("A B"))
+    intercept[IllegalArgumentException](parse("A &", maxRef = 0))
+    intercept[IllegalArgumentException](parse("( A | B", maxRef = 0))
+    intercept[IllegalArgumentException](parse("A B", maxRef = 0))
   }
 
   test("aggregate prunes tags outside the expression and merges across partitions") {
     val df = Seq(
       ("a", 1L), ("a", 2L), ("b", 2L), ("b", 9L), ("junk", 5L), ("junk", 6L))
       .toDF("tag", "v").repartition(4)
-    val cnt = BitmapExpr.count("a & b")
+    val cnt = BitmapExprCalcAgg.count("a & b") _
     assert(df.agg(cnt(col("tag"), col("v"))).as[Long].head() === 1L)
-    val ex = BitmapExpr.extract("a | b")
+    val ex = BitmapExprCalcAgg.extract("a | b") _
     assert(df.agg(ex(col("tag"), col("v"))).as[Seq[Long]].head() === Seq(1L, 2L, 9L))
   }
 }

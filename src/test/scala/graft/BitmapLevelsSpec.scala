@@ -1,6 +1,6 @@
 package graft
 
-import graft.aggregates.{BitmapAggregates, BitmapLevels}
+import graft.aggregates.{BitmapAggregates, BitmapLevels, BitmapMaxLevelAgg}
 import org.apache.spark.sql.functions._
 
 /** bitmapMaxLevel / bitmapColumnDiff vs a naive set-based model. */
@@ -21,9 +21,9 @@ class BitmapLevelsSpec extends SparkSpec {
       (2L, 1L), (2L, 2L),
       (3L, 1L))
     val out = keyed(rows)
-      .agg(BitmapLevels.maxLevel(col("k"), col("bm")).as("r"))
+      .agg(BitmapMaxLevelAgg.maxLevel(col("k"), col("bm")).as("r"))
       .select(explode($"r").as("lu"))
-      .select($"lu.level", $"lu.users")
+      .select($"lu.col1", $"lu.col2")
       .as[(Long, Long)].collect().toSeq
     assert(out === Seq((1L, 2L), (2L, 1L), (3L, 1L)))
   }
@@ -32,9 +32,9 @@ class BitmapLevelsSpec extends SparkSpec {
     // Every level-1 member also appears at level 2.
     val rows = Seq((1L, 7L), (1L, 8L), (2L, 7L), (2L, 8L))
     val out = keyed(rows)
-      .agg(BitmapLevels.maxLevel(col("k"), col("bm")).as("r"))
+      .agg(BitmapMaxLevelAgg.maxLevel(col("k"), col("bm")).as("r"))
       .select(explode($"r").as("lu"))
-      .select($"lu.level", $"lu.users")
+      .select($"lu.col1", $"lu.col2")
       .as[(Long, Long)].collect().toSeq
     assert(out === Seq((1L, 0L), (2L, 2L)))
   }

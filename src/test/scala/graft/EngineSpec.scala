@@ -18,9 +18,8 @@ class EngineSpec extends SparkSpec {
     Engine.registerFunctions(spark)
     val df = Engine.sql(spark, dir, """
       SELECT COUNT(CASE WHEN d >= 2 THEN 1 END) AS reached2 FROM (
-        SELECT user_id, window_funnel_7d_3(unix_micros(ts),
-          CASE event_type WHEN 'signup' THEN 1 WHEN 'click' THEN 2
-            WHEN 'purchase' THEN 3 ELSE 0 END) AS d
+        SELECT user_id, windowFunnel(604800, ts, event_type = 'signup',
+          event_type = 'click', event_type = 'purchase') AS d
         FROM events
         WHERE event_type IN ('signup','click','purchase')
         GROUP BY user_id)""")
