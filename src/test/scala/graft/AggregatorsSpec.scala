@@ -171,7 +171,10 @@ class AggregatorsSpec extends SparkSpec {
     }
   }
 
-  test("WindowFunnelAgg (TypedImperativeAggregate) matches a driver-side FunnelCore.eventLevel") {
+  // "The udaf form" is the per-user evaluation the retired udaf(Aggregator) did:
+  // collect each user's events and run FunnelCore.eventLevel over them, here on
+  // the driver.
+  test("WindowFunnelAgg (TypedImperativeAggregate) matches the udaf form") {
     val rnd = new scala.util.Random(7)
     val rows = (1 to 60).flatMap { u =>
       (1 to 20).map(_ => (u.toLong, rnd.nextInt(1000).toLong, rnd.nextInt(4)))
