@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Public entry point of the library: a tuned SparkSession factory, the
   * TESTDATA catalog, and a SQL front door with the engine's custom
@@ -19,8 +20,20 @@ object Engine {
     * static conf): a session that runs the same queries again, like a
     * bench or an oracle dump, needs it above the whole workload's class
     * count, or a query's classes are evicted before its next run. The
-    * default keeps Spark's 100: 2000 entries cost an ad-hoc workload 25%
+    * default keeps Spark's 100: 2000 entries cost an ad-hoc workload 21%
     * more retained heap for fewer compiles.
+    *
+    * Per-session artifact isolation is off ([[sharedCodegenConf]]). The
+    * engine adds no session jars or files, so isolation only gave every
+    * session — each `newSession()` child, i.e. every ad-hoc client and
+    * every corpus file — its own executor class loader, and with it its
+    * own copy of every compiled class. Turning it back on would cost
+    * about 9% of the ad-hoc workload's median query latency (perfbench
+    * `adhoc_inventory`, 4 vCPUs): each new session recompiles what the
+    * JVM already holds, its copies crowd the codegen cache, and Janino's
+    * missed class lookups on task threads go through an RPC class fetch
+    * from the driver. The price of sharing: a jar or file added to one
+    * session (`addArtifact`, `ADD JAR`) would be seen by all of them.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
               codegenCacheEntries: Int = 100): SparkSession = {
@@ -38,11 +51,26 @@ object Engine {
       // must surface as TimestampType, not NTZ — see Tables.apply.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+      .config(sharedCodegenConf)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     registerFunctions(spark)
     spark
   }
+
+  /** Spark's per-session artifact isolation, off, so every session of the
+    * JVM shares one compiled class per generated source. Spark keys its
+    * compiled-class cache (`CodeGenerator.compile`) on the thread's
+    * context class loader as well as the source; with isolation on (the
+    * default), each session's jobs carry its own `JobArtifactState`, so
+    * their tasks run under a per-session executor class loader and miss
+    * every class another session compiled. Child sessions (`newSession()`)
+    * inherit the setting from the factory's SparkContext. The one
+    * compiled-expression cache per server process, shared by every
+    * session, is the reference's behaviour too.
+    */
+  val sharedCodegenConf: Map[String, String] =
+    Map(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
 
   /** Register the custom aggregate library for SQL texts. windowFunnel,
     * retention, bitmapMaxLevel and the bitmap-expression family are not

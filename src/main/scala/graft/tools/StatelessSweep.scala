@@ -750,6 +750,7 @@ object StatelessSweep {
       .master("local[8]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config(graft.Engine.sharedCodegenConf)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
