@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Public entry point of the library: a tuned SparkSession factory, the
-  * TESTDATA catalog, and a SQL front door with the engine's custom
-  * aggregates registered for SQL use — the Spark-native analogue of the
-  * reference's session + function-factory bootstrap
-  * (/root/reference/src/Functions/registerFunctions.cpp:31,
-  * /root/reference/src/AggregateFunctions/AggregateFunctionFactory.h:52).
+  * TESTDATA catalog, and a SQL front door. The factory's sessions carry
+  * [[GraftExtensions]], which injects every engine SQL function and
+  * rewrite rule into them and into each of their `newSession()`
+  * children — the Spark-native analogue of the reference's session +
+  * function-factory bootstrap.
   */
 object Engine {
 
@@ -37,7 +37,7 @@ object Engine {
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
               codegenCacheEntries: Int = 100): SparkSession = {
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -54,8 +54,6 @@ object Engine {
       .config(sharedCodegenConf)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    registerFunctions(spark)
-    spark
   }
 
   /** Spark's per-session artifact isolation, off, so every session of the
@@ -72,110 +70,19 @@ object Engine {
   val sharedCodegenConf: Map[String, String] =
     Map(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
 
-  /** Register the custom aggregate library for SQL texts. windowFunnel,
-    * retention, bitmapMaxLevel and the bitmap-expression family are not
-    * registered here: [[GraftExtensions]] injects their ClickHouse
-    * spellings into every session.
+  /** Install the engine's udfs ([[GraftExtensions.udfs]]) into a session
+    * that was built without [[GraftExtensions]], skipping every name the
+    * session already resolves. Every session [[session]] builds, and
+    * every `newSession()` child of one, already has them (the extension
+    * injects them), so on those this does nothing and replaces nothing.
+    * Library code never needs it; it stays for callers written against
+    * the older per-session registration.
     */
   def registerFunctions(spark: SparkSession): Unit = {
-    spark.udf.register("top_k_10", aggregates.TopK(10))
-    spark.udf.register("top_k_weighted_10", aggregates.TopKWeighted(10))
-    spark.udf.register("minMap", aggregates.MinMap())
-    spark.udf.register("maxMap", aggregates.MaxMap())
-    spark.udf.register("sumForEach", aggregates.ForEachAgg.sumForEach)
-    spark.udf.register("avgForEach", aggregates.ForEachAgg.avgForEach)
-    spark.udf.register("minForEach", aggregates.ForEachAgg.minForEach)
-    spark.udf.register("maxForEach", aggregates.ForEachAgg.maxForEach)
-    spark.udf.register("countForEach", aggregates.ForEachAgg.countForEach)
-    spark.udf.register("group_bitmap", aggregates.BitmapAggregates.groupBitmap)
-    spark.udf.register("bitmap_cardinality", aggregates.BitmapAggregates.bitmapCardinality)
-    spark.udf.register("bitmap_and_cardinality", aggregates.BitmapAggregates.bitmapAndCardinality)
-    spark.udf.register("bitmap_or_cardinality", aggregates.BitmapAggregates.bitmapOrCardinality)
-    // bitmapFromColumn (AggregateFunctionBitmapFromColumn.cpp) is the
-    // reference's name for the int-column → BitMap64 build; same
-    // aggregate as group_bitmap.
-    spark.udf.register("bitmapFromColumn", aggregates.BitmapAggregates.groupBitmap)
-    // camelCase spellings (reference FunctionsBitmap.h registrations) —
-    // the corpus tests use these names directly
-    spark.udf.register("bitmapCardinality",
-      aggregates.BitmapAggregates.bitmapCardinality)
-    spark.udf.register("bitmapAndCardinality",
-      aggregates.BitmapAggregates.bitmapAndCardinality)
-    spark.udf.register("bitmapOrCardinality",
-      aggregates.BitmapAggregates.bitmapOrCardinality)
-    spark.udf.register("bitmapAndnotCardinality",
-      aggregates.BitmapAggregates.bitmapAndnotCardinality)
-    spark.udf.register("bitmapColumnOr", aggregates.BitmapAggregates.bitmapColumnOr)
-    spark.udf.register("bitmapColumnAnd", aggregates.BitmapAggregates.bitmapColumnAnd)
-    spark.udf.register("bitmapColumnXor", aggregates.BitmapAggregates.bitmapColumnXor)
-    spark.udf.register("bitmapColumnCardinality",
-      aggregates.BitmapAggregates.bitmapColumnCardinality)
-    spark.udf.register("bitmapColumnHas", aggregates.BitmapAggregates.bitmapColumnHas)
-    // bitmap value algebra (FunctionsBitmap.h scalar surface)
-    spark.udf.register("bitmapContains", aggregates.BitmapAggregates.bitmapContains)
-    spark.udf.register("bitmapHasAll", aggregates.BitmapAggregates.bitmapHasAll)
-    spark.udf.register("bitmapHasAny", aggregates.BitmapAggregates.bitmapHasAny)
-    spark.udf.register("subBitmap", aggregates.BitmapAggregates.subBitmap)
-    spark.udf.register("bitmapMin", aggregates.BitmapAggregates.bitmapMin)
-    spark.udf.register("bitmapMax", aggregates.BitmapAggregates.bitmapMax)
-    spark.udf.register("bitmapSubsetInRange",
-      aggregates.BitmapAggregates.bitmapSubsetInRange)
-    spark.udf.register("bitmapSubsetLimit",
-      aggregates.BitmapAggregates.bitmapSubsetLimit)
-    spark.udf.register("bitmapTransform", aggregates.BitmapAggregates.bitmapTransform)
-    spark.udf.register("bitmapAnd", aggregates.BitmapAggregates.bitmapAnd)
-    spark.udf.register("bitmapOr", aggregates.BitmapAggregates.bitmapOr)
-    spark.udf.register("bitmapXor", aggregates.BitmapAggregates.bitmapXor)
-    spark.udf.register("bitmapAndnot", aggregates.BitmapAggregates.bitmapAndnot)
-    spark.udf.register("bitmapXorCardinality",
-      aggregates.BitmapAggregates.bitmapXorCardinality)
-    spark.udf.register("bitmapBuild", aggregates.BitmapAggregates.bitmapBuild)
-    spark.udf.register("bitmapToArray", aggregates.BitmapAggregates.bitmapToArray)
-    // scalar array → bitmap bytes: BitMap64 column INSERT path (the
-    // reference's BitMap64 accepts Array literals on ingest)
-    spark.udf.register("arrayToBitmap", (xs: Seq[Long]) => {
-      val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
-      if (xs != null) xs.foreach(bm.addLong)
-      aggregates.BitmapAggregates.serialize(bm)
-    })
-    // geohash SQL spellings (reference GeoHash.cpp argument order is
-    // longitude FIRST; decode returns the (lon, lat) tuple — field
-    // names col1/col2 so CH `.1`/`.2` access resolves)
-    spark.udf.register("geohashEncode",
-      (lon: Double, lat: Double, p: Int) =>
-        // reference GeoHash.cpp geohashPrecision clamps BOTH directions:
-        // out-of-range precision (≤0 or >12) falls back to 12
-        functions.GeoFunctions.encode(lat, lon, if (p <= 0 || p > 12) 12 else p))
-    spark.udf.register("geohashDecode", (h: String) => {
-      val (lat, lon) = functions.GeoFunctions.decode(h)
-      GeoPoint(lon, lat)
-    })
-    spark.udf.register("geohashesInBox", functions.GeoFunctions.geohashesInBox _)
-    // H3 hex-grid index family (public H3 index spec bit math —
-    // functions/H3Functions.scala; corpus 01070_h3_*)
-    spark.udf.register("h3GetResolution",
-      (h: Long) => functions.H3Functions.resolution(h))
-    spark.udf.register("h3GetBaseCell",
-      (h: Long) => functions.H3Functions.baseCell(h))
-    spark.udf.register("h3ToParent", functions.H3Functions.toParent _)
-    spark.udf.register("h3ToChildren", functions.H3Functions.toChildren _)
-    spark.udf.register("h3HexAreaM2", functions.H3Functions.hexAreaM2 _)
-    spark.udf.register("h3IndexesAreNeighbors",
-      functions.H3Functions.indexesAreNeighbors _)
-    spark.udf.register("h3ToString", functions.H3Functions.toHexString _)
-    spark.udf.register("stringToH3", functions.H3Functions.fromHexString _)
-    spark.udf.register("h3EdgeLengthM", functions.H3Functions.edgeLengthM _)
-    spark.udf.register("h3EdgeAngle", functions.H3Functions.edgeAngle _)
-    spark.udf.register("h3IsValid", functions.H3Functions.isValid _)
-    spark.udf.register("h3kRing",
-      (h: Long, k: Int) => functions.H3Functions.kRing(h, k))
-    // uniqTheta set-op scalars (FunctionsUniqTheta.h)
-    spark.udf.register("uniqThetaUnion", aggregates.SketchAggregates.uniqThetaUnion)
-    spark.udf.register("uniqThetaIntersect",
-      aggregates.SketchAggregates.uniqThetaIntersect)
-    spark.udf.register("uniqThetaNot", aggregates.SketchAggregates.uniqThetaNot)
-    spark.udf.register("thetaSketchToEstimate",
-      aggregates.SketchAggregates.thetaEstimate)
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.udfs.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 
   /** SQL front door over an sf directory: registers the catalog and runs

@@ -34,29 +34,13 @@ object BitmapAggregates {
 
   /** groupBitmapState(x): build a roaring bitmap of the grouped int64s,
     * returned serialized (the reference's AggregateFunction-State column,
-    * DataTypeAggregateFunction.h:14 — mergeable downstream).
+    * DataTypeAggregateFunction.h:14 — mergeable downstream). NULL inputs
+    * contribute nothing, like the reference's -If combinator on
+    * groupBitmap, so `groupBitmap(when(cond, x))` is a conditional build:
+    * k of them in one aggregate replace k filtered scans and a cross join
+    * with one scan and k map-side-combined bitmap states.
     */
-  class GroupBitmap extends Aggregator[Long, Roaring64NavigableMap, Array[Byte]] with Serializable {
-    def zero: Roaring64NavigableMap = new Roaring64NavigableMap()
-    def reduce(b: Roaring64NavigableMap, x: Long): Roaring64NavigableMap = { b.addLong(x); b }
-    def merge(a: Roaring64NavigableMap, b: Roaring64NavigableMap): Roaring64NavigableMap = {
-      a.or(b); a
-    }
-    def finish(b: Roaring64NavigableMap): Array[Byte] = serialize(b)
-    def bufferEncoder: Encoder[Roaring64NavigableMap] = Encoders.kryo
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  val groupBitmap: UserDefinedFunction = udaf(new GroupBitmap, Encoders.scalaLong)
-
-  /** Null-skipping [[GroupBitmap]] over boxed longs: the input form for
-    * conditional single-pass aggregation (`groupBitmapIf(when(cond, x))`),
-    * which collapses k filtered scans + a cross join into ONE scan with k
-    * map-side-combined bitmap states (r15, guide §2.3 "aggregate before
-    * you shuffle"). NULL input rows contribute nothing, exactly like the
-    * reference's -If combinator on groupBitmap.
-    */
-  class GroupBitmapOpt extends Aggregator[java.lang.Long, Roaring64NavigableMap, Array[Byte]] with Serializable {
+  class GroupBitmap extends Aggregator[java.lang.Long, Roaring64NavigableMap, Array[Byte]] with Serializable {
     def zero: Roaring64NavigableMap = new Roaring64NavigableMap()
     def reduce(b: Roaring64NavigableMap, x: java.lang.Long): Roaring64NavigableMap = {
       if (x != null) b.addLong(x.longValue()); b
@@ -69,7 +53,7 @@ object BitmapAggregates {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  val groupBitmapIf: UserDefinedFunction = udaf(new GroupBitmapOpt, Encoders.LONG)
+  val groupBitmap: UserDefinedFunction = udaf(new GroupBitmap, Encoders.LONG)
 
   /** bitmapCardinality(state). */
   val bitmapCardinality: UserDefinedFunction =

@@ -60,8 +60,7 @@ case class FinderFunnelAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "finder_funnel"
 
-  override def createAggregationBuffer(): FunnelBuf =
-    new FunnelBuf(new Array[Long](8), 0)
+  override def createAggregationBuffer(): FunnelBuf = new FunnelBuf()
 
   override def update(b: FunnelBuf, input: InternalRow): FunnelBuf = {
     val ts = tsExpr.eval(input)
@@ -75,11 +74,7 @@ case class FinderFunnelAgg(
     b
   }
 
-  override def merge(b: FunnelBuf, other: FunnelBuf): FunnelBuf = {
-    var i = 0
-    while (i < other.n) { b.add(other.arr(i)); i += 1 }
-    b
-  }
+  override def merge(b: FunnelBuf, other: FunnelBuf): FunnelBuf = b.addAll(other)
 
   override def eval(b: FunnelBuf): Any = {
     java.util.Arrays.sort(b.arr, 0, b.n)
@@ -161,22 +156,8 @@ case class FinderFunnelAgg(
     new GenericArrayData(levels)
   }
 
-  override def serialize(b: FunnelBuf): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * b.n)
-    bb.putInt(b.n)
-    var i = 0
-    while (i < b.n) { bb.putLong(b.arr(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): FunnelBuf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val arr = new Array[Long](math.max(8, n))
-    var i = 0
-    while (i < n) { arr(i) = bb.getLong; i += 1 }
-    new FunnelBuf(arr, n)
-  }
+  override def serialize(b: FunnelBuf): Array[Byte] = b.serialize()
+  override def deserialize(bytes: Array[Byte]): FunnelBuf = FunnelBuf.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): FinderFunnelAgg =
     copy(mutableAggBufferOffset = n)

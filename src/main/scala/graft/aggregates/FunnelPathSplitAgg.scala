@@ -76,11 +76,7 @@ case class FunnelPathSplitAgg(
     b
   }
 
-  override def merge(b: PathBuf, other: PathBuf): PathBuf = {
-    var i = 0
-    while (i < other.n) { b.add(other.packed(i), other.params(i)); i += 1 }
-    b
-  }
+  override def merge(b: PathBuf, other: PathBuf): PathBuf = b.addAll(other)
 
   override def eval(b: PathBuf): Any = {
     val n = b.n
@@ -132,41 +128,8 @@ case class FunnelPathSplitAgg(
     }
   }
 
-  override def serialize(b: PathBuf): Array[Byte] = {
-    var bytes = 4
-    var i = 0
-    while (i < b.n) {
-      bytes += 12 + b.params(i).getBytes(StandardCharsets.UTF_8).length
-      i += 1
-    }
-    val bb = java.nio.ByteBuffer.allocate(bytes)
-    bb.putInt(b.n)
-    i = 0
-    while (i < b.n) {
-      bb.putLong(b.packed(i))
-      val pb = b.params(i).getBytes(StandardCharsets.UTF_8)
-      bb.putInt(pb.length)
-      bb.put(pb)
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): PathBuf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val b = new PathBuf()
-    var i = 0
-    while (i < n) {
-      val packed = bb.getLong
-      val len = bb.getInt
-      val pb = new Array[Byte](len)
-      bb.get(pb)
-      b.add(packed, new String(pb, StandardCharsets.UTF_8))
-      i += 1
-    }
-    b
-  }
+  override def serialize(b: PathBuf): Array[Byte] = b.serialize()
+  override def deserialize(bytes: Array[Byte]): PathBuf = PathBuf.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): FunnelPathSplitAgg =
     copy(mutableAggBufferOffset = n)
@@ -177,7 +140,11 @@ case class FunnelPathSplitAgg(
     copy(tsExpr = f, indexExpr = s, paramExpr = t)
 }
 
-/** Growable (packed ts+index, param) pair buffer. */
+/** Growable (packed ts+index, param) pair buffer of the funnelPathSplit
+  * aggregates: partial buffers merge by concatenation, and serialize as
+  * the count then, per pair, the packed long, the param's UTF-8 length
+  * and its bytes (big-endian).
+  */
 final class PathBuf {
   var packed: Array[Long] = new Array[Long](8)
   var params: Array[String] = new Array[String](8)
@@ -194,6 +161,50 @@ final class PathBuf {
     packed(n) = p
     params(n) = s
     n += 1
+  }
+
+  def addAll(other: PathBuf): PathBuf = {
+    var i = 0
+    while (i < other.n) { add(other.packed(i), other.params(i)); i += 1 }
+    this
+  }
+
+  def serialize(): Array[Byte] = {
+    var bytes = 4
+    var i = 0
+    while (i < n) {
+      bytes += 12 + params(i).getBytes(StandardCharsets.UTF_8).length
+      i += 1
+    }
+    val bb = java.nio.ByteBuffer.allocate(bytes)
+    bb.putInt(n)
+    i = 0
+    while (i < n) {
+      bb.putLong(packed(i))
+      val pb = params(i).getBytes(StandardCharsets.UTF_8)
+      bb.putInt(pb.length)
+      bb.put(pb)
+      i += 1
+    }
+    bb.array()
+  }
+}
+
+object PathBuf {
+  def deserialize(bytes: Array[Byte]): PathBuf = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val b = new PathBuf()
+    var i = 0
+    while (i < n) {
+      val packed = bb.getLong
+      val len = bb.getInt
+      val pb = new Array[Byte](len)
+      bb.get(pb)
+      b.add(packed, new String(pb, StandardCharsets.UTF_8))
+      i += 1
+    }
+    b
   }
 }
 

@@ -1,7 +1,5 @@
 package graft.aggregates
 
-import java.nio.charset.StandardCharsets
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
@@ -84,11 +82,7 @@ case class FunnelPathSplitByTimesAgg(
     b
   }
 
-  override def merge(b: PathBuf, other: PathBuf): PathBuf = {
-    var i = 0
-    while (i < other.n) { b.add(other.packed(i), other.params(i)); i += 1 }
-    b
-  }
+  override def merge(b: PathBuf, other: PathBuf): PathBuf = b.addAll(other)
 
   private final class Bucket(val begin: Long) {
     var level: Int = 1
@@ -153,41 +147,8 @@ case class FunnelPathSplitByTimesAgg(
     }.toArray[Any])
   }
 
-  override def serialize(b: PathBuf): Array[Byte] = {
-    var bytes = 4
-    var i = 0
-    while (i < b.n) {
-      bytes += 12 + b.params(i).getBytes(StandardCharsets.UTF_8).length
-      i += 1
-    }
-    val bb = java.nio.ByteBuffer.allocate(bytes)
-    bb.putInt(b.n)
-    i = 0
-    while (i < b.n) {
-      bb.putLong(b.packed(i))
-      val pb = b.params(i).getBytes(StandardCharsets.UTF_8)
-      bb.putInt(pb.length)
-      bb.put(pb)
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): PathBuf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val cnt = bb.getInt
-    val b = new PathBuf()
-    var i = 0
-    while (i < cnt) {
-      val packed = bb.getLong
-      val len = bb.getInt
-      val pb = new Array[Byte](len)
-      bb.get(pb)
-      b.add(packed, new String(pb, StandardCharsets.UTF_8))
-      i += 1
-    }
-    b
-  }
+  override def serialize(b: PathBuf): Array[Byte] = b.serialize()
+  override def deserialize(bytes: Array[Byte]): PathBuf = PathBuf.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): FunnelPathSplitByTimesAgg =
     copy(mutableAggBufferOffset = n)

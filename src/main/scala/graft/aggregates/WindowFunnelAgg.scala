@@ -73,9 +73,14 @@ object FunnelCore {
 }
 
 /** Growable packed-event buffer: plain long array + length, serialized as
-  * raw little-endian longs — no object headers, no kryo.
+  * its count then raw big-endian longs — no object headers, no kryo. The
+  * buffer of every packed-event funnel aggregate (windowFunnel,
+  * finderFunnel, finderFunnelByTimes): partial buffers merge by
+  * concatenation, and `eval` sorts.
   */
 final class FunnelBuf(var arr: Array[Long], var n: Int) {
+  def this() = this(new Array[Long](8), 0)
+
   def add(v: Long): Unit = {
     if (n == arr.length) {
       val next = new Array[Long](math.max(8, arr.length * 2))
@@ -84,6 +89,31 @@ final class FunnelBuf(var arr: Array[Long], var n: Int) {
     }
     arr(n) = v
     n += 1
+  }
+
+  def addAll(other: FunnelBuf): FunnelBuf = {
+    var i = 0
+    while (i < other.n) { add(other.arr(i)); i += 1 }
+    this
+  }
+
+  def serialize(): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 + 8 * n)
+    bb.putInt(n)
+    var i = 0
+    while (i < n) { bb.putLong(arr(i)); i += 1 }
+    bb.array()
+  }
+}
+
+object FunnelBuf {
+  def deserialize(bytes: Array[Byte]): FunnelBuf = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val arr = new Array[Long](math.max(8, n))
+    var i = 0
+    while (i < n) { arr(i) = bb.getLong; i += 1 }
+    new FunnelBuf(arr, n)
   }
 }
 
@@ -122,8 +152,7 @@ case class WindowFunnelAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "window_funnel"
 
-  override def createAggregationBuffer(): FunnelBuf =
-    new FunnelBuf(new Array[Long](8), 0)
+  override def createAggregationBuffer(): FunnelBuf = new FunnelBuf()
 
   override def update(b: FunnelBuf, input: InternalRow): FunnelBuf = {
     val ts = tsExpr.eval(input)
@@ -137,11 +166,7 @@ case class WindowFunnelAgg(
     b
   }
 
-  override def merge(b: FunnelBuf, other: FunnelBuf): FunnelBuf = {
-    var i = 0
-    while (i < other.n) { b.add(other.arr(i)); i += 1 }
-    b
-  }
+  override def merge(b: FunnelBuf, other: FunnelBuf): FunnelBuf = b.addAll(other)
 
   override def eval(b: FunnelBuf): Any = {
     java.util.Arrays.sort(b.arr, 0, b.n)
@@ -149,22 +174,8 @@ case class WindowFunnelAgg(
       strictDeduplication, strictOrder, strictIncrease)
   }
 
-  override def serialize(b: FunnelBuf): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * b.n)
-    bb.putInt(b.n)
-    var i = 0
-    while (i < b.n) { bb.putLong(b.arr(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): FunnelBuf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val arr = new Array[Long](math.max(8, n))
-    var i = 0
-    while (i < n) { arr(i) = bb.getLong; i += 1 }
-    new FunnelBuf(arr, n)
-  }
+  override def serialize(b: FunnelBuf): Array[Byte] = b.serialize()
+  override def deserialize(bytes: Array[Byte]): FunnelBuf = FunnelBuf.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): WindowFunnelAgg =
     copy(mutableAggBufferOffset = n)

@@ -298,18 +298,17 @@ object BitmapsSketches {
     QueryDef(
       "bitmap_user_overlap",
       (s, dir) => {
-        // r15 (guide §2.3/§2.4): single-pass conditional bitmaps — one
-        // events scan with two map-side-combined bitmap states replaces
-        // two filtered scans + two global aggs + a crossJoin (2 scans /
-        // 2 exchanges → 1 scan / 1 exchange). groupBitmapIf skips NULLs,
-        // so `when(cond, user_id)` reproduces the filtered semantics
-        // exactly.
+        // Single-pass conditional bitmaps: one events scan with two
+        // map-side-combined bitmap states replaces two filtered scans +
+        // two global aggs + a crossJoin (2 scans / 2 exchanges → 1 scan /
+        // 1 exchange). groupBitmap skips NULLs, so `when(cond, user_id)`
+        // reproduces the filtered semantics exactly.
         val ev = Tables(s, dir, "events")
           .filter(col("event_type").isin("click", "purchase"))
         ev.agg(
-            B.groupBitmapIf(when(col("event_type") === "click", col("user_id")))
+            B.groupBitmap(when(col("event_type") === "click", col("user_id")))
               .as("bm_click"),
-            B.groupBitmapIf(when(col("event_type") === "purchase", col("user_id")))
+            B.groupBitmap(when(col("event_type") === "purchase", col("user_id")))
               .as("bm_purchase"))
           .select(
           B.bitmapCardinality(col("bm_click")).as("n_click"),

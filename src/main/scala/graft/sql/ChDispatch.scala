@@ -14,28 +14,6 @@ import org.apache.spark.sql.internal.SQLConf
   * concrete replacement, which the optimizer's ReplaceExpressions rule
   * swaps in — zero runtime overhead, full codegen on the replacement.
   */
-/** ClickHouse `materialize(x)`: turns a constant into a "full column" —
-  * its one observable semantic is DEFEATING constant folding (isConstant
-  * then reports 0). Identity at runtime, non-foldable at plan time.
-  */
-case class MaterializeBarrier(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: org.apache.spark.sql.types.DataType = child.dataType
-  override def foldable: Boolean = false
-  override def nullable: Boolean = child.nullable
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    child.eval(input)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = c.code, isNull = c.isNull, value = c.value)
-  }
-  override protected def withNewChildInternal(newChild: Expression)
-      : Expression = copy(child = newChild)
-}
-
 case class ChDispatch(name: String, children: Seq[Expression])(
     build: Seq[Expression] => Expression)
   extends Expression with RuntimeReplaceable {

@@ -355,9 +355,6 @@ object ClickHouseAliases {
       }
     })
 
-  /** Alias names, exposed for the DialectSpec collision guard. */
-  private[graft] def aliasNames: Seq[String] = aliases.map(_._1)
-
   /** CH HOFs are variadic over PARALLEL arrays: f((x, y) -> …, a, b)
     * applies the lambda positionally (reference FunctionArrayMapped.h).
     * Lower to a zip: single-param lambda over arrays_zip with positional
@@ -1750,11 +1747,11 @@ object ClickHouseAliases {
   }
 
   /** Time-rounding family, relative-epoch counters, dateName,
-    * formatReadableSize, bitwise group aggregates, timing-quantile
-    * spellings (reference src/Functions/toStartOfInterval.cpp /
+    * formatReadableSize, bitwise group aggregates, medianTiming
+    * (reference src/Functions/toStartOfInterval.cpp /
     * dateName.cpp / formatReadable.cpp / timeSlot via
     * DateTimeTransforms.h; AggregateFunctionBitwise.cpp;
-    * AggregateFunctionQuantile.cpp quantileTiming registration).
+    * AggregateFunctionQuantile.cpp timing registrations).
     */
   private def wave3: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "toStartOfFiveMinutes" -> (cs => {
@@ -1869,11 +1866,6 @@ object ClickHouseAliases {
     "groupBitAnd" -> (cs => BitAndAgg(cs.head)),
     "groupBitOr" -> (cs => BitOrAgg(cs.head)),
     "groupBitXor" -> (cs => BitXorAgg(cs.head)),
-    // timing-quantile spellings: the reference's fixed-precision timing
-    // sketch is an approximation structure; the Spark lowering is the
-    // t-digest approximate percentile (same contract: approximate
-    // quantile of a non-negative duration column).
-    "quantileTiming" -> (cs => new ApproximatePercentile(cs(1), cs.head)),
     "medianTiming" -> (cs =>
       ChCombinators.timingAgg(Nil, cs.head, None, many = false))
   )
@@ -2317,12 +2309,6 @@ object ClickHouseAliases {
     "base64Encode" -> (cs => Base64(Cast(cs.head, BinaryType))),
     "base64Decode" -> (cs => Cast(new UnBase64(cs.head), StringType)),
     "countMatches" -> (cs => Cast(RegExpCount(cs.head, cs(1)), IntegerType)),
-    // Modified Julian Day epoch is 1858-11-17 (reference
-    // fromModifiedJulianDay.cpp)
-    "fromModifiedJulianDay" -> (cs =>
-      DateAdd(Cast(Literal("1858-11-17"), DateType), Cast(cs.head, IntegerType))),
-    "toModifiedJulianDay" -> (cs =>
-      DateDiff(Cast(cs.head, DateType), Cast(Literal("1858-11-17"), DateType))),
     "formatReadableQuantity" -> (cs => {
       val x = Cast(cs.head, DoubleType)
       val units = Seq(1e3 -> "", 1e6 -> " thousand", 1e9 -> " million",
@@ -2880,15 +2866,12 @@ object ClickHouseAliases {
   }
 
   /** Round-6 third wave: the multiSearch family, UTF8/case-insensitive
-    * string spellings, engine-compat shims (materialize/identity/
-    * ignore — const-column machinery that is meaningless on Spark but
+    * string spellings, engine-compat shims (identity/ignore —
+    * const-column machinery that is meaningless on Spark but
     * appears throughout reference queries), DateTime64 epoch
     * conversions, and the two-argument min2/max2.
     */
   private def wave8: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    // const→full column: identity at runtime, but non-foldable so
-    // isConstant(materialize(x)) = 0 like the reference
-    "materialize" -> (cs => MaterializeBarrier(cs.head)),
     "identity" -> (cs => cs.head),
     "toLowCardinality" -> (cs => cs.head), // LowCardinality is storage-side
     "ignore" -> (_ => Literal(0)),
@@ -4003,6 +3986,7 @@ object ClickHouseAliases {
             LessThanOrEqual(l, hi)), l, Literal.create(null, LongType)), t)
         case _ => Cast(cs.head, t, None, EvalMode.TRY)
       }
+      // toDateTime64 takes a scale and a zone: stateMergeWave builds it
       Seq(
         s"to$n" -> ((cs: Seq[Expression]) => plain(cs)),
         s"to${n}OrNull" -> ((cs: Seq[Expression]) => tryCast(cs)),
@@ -4011,6 +3995,7 @@ object ClickHouseAliases {
         s"to${n}OrDefault" -> ((cs: Seq[Expression]) =>
           Coalesce(Seq(tryCast(cs),
             if (cs.size > 1) Cast(cs(1), t) else zero))))
+        .filterNot(_._1 == "toDateTime64")
     }
   }
 
@@ -5486,7 +5471,6 @@ object ClickHouseAliases {
       "isConstant" -> (cs => ChDispatch("isConstant", cs.take(1)) { c =>
         Literal(if (c.head.foldable) 1 else 0)
       }),
-      "hostName" -> (_ => Literal(localHostName)),
       "hostname" -> (_ => Literal(localHostName)),
       "parseTimeDelta" -> (cs => StaticInvoke(mathOps, DoubleType,
         "parseTimeDelta", Seq(Cast(cs.head, StringType)), Seq(StringType),
@@ -6005,7 +5989,6 @@ object ClickHouseAliases {
         (cs => funnelPathSplitAgg(cs, byTimes = true, rev = false, dedup = true)),
       "funnelPathSplitByTimesRD" ->
         (cs => funnelPathSplitAgg(cs, byTimes = true, rev = true, dedup = true)),
-      "timezone" -> (_ => CurrentTimeZone()),
       "timeZone" -> (_ => CurrentTimeZone()),
       // truncate(x[, n]): toward zero at 10^n (reference
       // FunctionsRound.h TruncateImpl; n may be negative)
@@ -6741,13 +6724,14 @@ object ClickHouseAliases {
         ElementAt(arr, n, None, failOnError = false))
     }))
 
-  def inject(ext: SparkSessionExtensions): Unit = {
-    aliases.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.sql.ClickHouseAliases", name),
-        builder))
+  /** The dialect spellings as injectable functions ([[graft.GraftExtensions]]). */
+  def functions: Seq[graft.GraftExtensions.FunctionDescription] =
+    aliases.map { case (name, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo("graft.sql.ClickHouseAliases", name),
+        builder)
     }
+
+  def injectTableFunctions(ext: SparkSessionExtensions): Unit = {
     // numbers(N) / numbers(lo, hi) table function (reference
     // registerTableFunctions.cpp:34) — `SELECT number FROM numbers(10)`
     // plans onto the native Range node (codegen'd, splittable).

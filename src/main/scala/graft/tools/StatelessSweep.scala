@@ -732,14 +732,13 @@ object StatelessSweep {
     graft.sql.ChCoercions.SetOpsAllFlag -> "true")
 
   /** Give `spark` the corpus semantics: [[corpusConfs]], session zone
-    * `tz`, the engine's functions and the strict dialect registry.
+    * `tz` and the strict dialect registry, whose overrides replace the
+    * same-named functions [[graft.GraftExtensions]] injected (e.g. the
+    * strict `geohashEncode`).
     */
   def configure(spark: SparkSession, tz: String): SparkSession = {
     corpusConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.conf.set("spark.sql.session.timeZone", tz)
-    // The UDAF layer (sumForEach, retention, topK, …) registers per
-    // session, not through SparkSessionExtensions — same as Engine.session.
-    graft.Engine.registerFunctions(spark)
     graft.sql.ClickHouseAliases.injectStrict(spark)
     spark
   }

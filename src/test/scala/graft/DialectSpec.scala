@@ -487,11 +487,11 @@ class DialectSpec extends SparkSpec {
     // pipelines depend on Spark's seed-42 xxhash64.
     val allowed = Set[String]("monthName", "hex", "unhex", "substr",
       "substring", "date_format", "now", "FROM_UNIXTIME", "if")
-    val collisions = graft.sql.ClickHouseAliases.aliasNames
+    val collisions = GraftExtensions.functions.map(_._1.funcName)
       .filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n.toLowerCase)))
       .filterNot(allowed)
     assert(collisions.isEmpty,
-      s"dialect aliases shadow Spark builtins: $collisions")
+      s"injected functions shadow Spark builtins: $collisions")
   }
 
   test("wave5: rounding buckets, transform, trailing char, unicode bar") {

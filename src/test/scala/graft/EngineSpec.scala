@@ -5,7 +5,6 @@ class EngineSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("sql front door: catalog + custom aggregates available in SQL") {
-    Engine.registerFunctions(spark)
     val df = Engine.sql(spark, dir, """
       SELECT event_type, bitmap_cardinality(group_bitmap(user_id)) AS users
       FROM events GROUP BY event_type ORDER BY event_type""")
@@ -15,7 +14,6 @@ class EngineSpec extends SparkSpec {
   }
 
   test("sql front door: funnel aggregate usable from SQL") {
-    Engine.registerFunctions(spark)
     val df = Engine.sql(spark, dir, """
       SELECT COUNT(CASE WHEN d >= 2 THEN 1 END) AS reached2 FROM (
         SELECT user_id, windowFunnel(604800, ts, event_type = 'signup',

@@ -13,11 +13,7 @@ import org.apache.spark.sql.Row
   */
 class PathSplitSpec extends SparkSpec {
 
-  private lazy val s = {
-    val ns = spark.newSession()
-    Engine.registerFunctions(ns)
-    ns
-  }
+  private lazy val s = spark.newSession()
 
   private def rows(sql: String): Seq[String] =
     s.sql(ChTranspiler.transpile(sql)).collect().toSeq.map(
