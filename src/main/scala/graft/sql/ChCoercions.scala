@@ -24,8 +24,20 @@ import org.apache.spark.sql.types._
   */
 object ChCoercions extends Rule[LogicalPlan] {
 
-  /** Session flag for the IEEE `/` rewrite (corpus runner only). */
-  val IeeeDivFlag = "spark.graft.chIeeeDivision"
+  /** Session flag for the stateless corpus's ClickHouse semantics, set
+    * only by `StatelessSweep.corpusConfs` (a library session never
+    * carries it): IEEE Float64 `/` and CH decimal division here, the
+    * decimal-constant overflow guard ([[ChDecimalCompareGuard]]),
+    * INTERSECT/EXCEPT ALL as semi/anti filters, type-default outer-join
+    * padding ([[ChJoinDefaults]]) and type-default ROLLUP/CUBE
+    * sub-total keys ([[ChRollupDefaults]]).
+    */
+  val CorpusFlag = "spark.graft.chCorpusSemantics"
+
+  /** True in a session configured with [[CorpusFlag]]. */
+  def corpusSemantics: Boolean =
+    org.apache.spark.sql.internal.SQLConf.get
+      .getConfString(CorpusFlag, "false") == "true"
 
   private def ok(es: Expression*): Boolean = es.forall(_.resolved)
   private def integral(e: Expression): Boolean = e.dataType match {
@@ -261,14 +273,6 @@ object ChCoercions extends Rule[LogicalPlan] {
     }
   }
 
-  /** Corpus flag: CH INTERSECT/EXCEPT ALL are hash-set FILTERS over the
-    * left stream (every left row kept/dropped by membership, duplicates
-    * and order preserved — 02004_intersect_except_all_operators pins 20
-    * '5's from a const intersect), not SQL-standard multiplicity
-    * matching. Lower them to LEFT SEMI / LEFT ANTI joins.
-    */
-  val SetOpsAllFlag = "spark.graft.chSetOpsAll"
-
   /** Broadcast the membership side: a BroadcastHashJoin streams the
     * LEFT side in place, preserving the reference's row order (a
     * shuffled semi join would interleave partitions). */
@@ -279,9 +283,12 @@ object ChCoercions extends Rule[LogicalPlan] {
           org.apache.spark.sql.catalyst.plans.logical.BROADCAST))))
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val setOpsOn =
-      try plan.conf.getConfString(SetOpsAllFlag, "false") == "true"
-      catch { case _: Throwable => false }
+    // CH INTERSECT/EXCEPT ALL are hash-set FILTERS over the left stream
+    // (every left row kept/dropped by membership, duplicates and order
+    // preserved — 02004_intersect_except_all_operators pins 20 '5's
+    // from a const intersect), not SQL-standard multiplicity matching:
+    // under the corpus flag they lower to LEFT SEMI / LEFT ANTI joins
+    val setOpsOn = corpusSemantics
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin,
       Project => LProject, Filter => LFilter, Sort => LSort,
       Window => LWindow, Intersect => LIntersect, Except => LExcept}
@@ -386,8 +393,7 @@ object ChCoercions extends Rule[LogicalPlan] {
           // cleaner plans for library users).
           case d: Divide
               if d.evalMode == EvalMode.ANSI && ok(d.left, d.right) &&
-                org.apache.spark.sql.internal.SQLConf.get
-                  .getConfString(IeeeDivFlag, "false") == "true" &&
+                corpusSemantics &&
                 !d.left.dataType.isInstanceOf[DecimalType] &&
                 !d.right.dataType.isInstanceOf[DecimalType] &&
                 d.left.dataType.isInstanceOf[NumericType] &&
@@ -406,9 +412,7 @@ object ChCoercions extends Rule[LogicalPlan] {
           // dividend must be an ORIGINAL decimal (not coercion's cast
           // of an integer, whose CH semantics differ).
           case dv: Divide
-              if ok(dv.left, dv.right) &&
-                org.apache.spark.sql.internal.SQLConf.get
-                  .getConfString(IeeeDivFlag, "false") == "true" &&
+              if ok(dv.left, dv.right) && corpusSemantics &&
                 origDecimal(dv.left).isDefined &&
                 (integralBase(dv.right).isDefined ||
                   origDecimal(dv.right).isDefined) => {
@@ -505,13 +509,12 @@ object ChCoercions extends Rule[LogicalPlan] {
   * well-defined (00700_decimal_compare: `g = 30000` with g
   * Decimal32(5)). An OPTIMIZER rule, not a resolution rule: the corpus
   * writes the constant behind a lateral select alias, which only folds
-  * to a literal after CollapseProject + ConstantFolding. Corpus-gated
-  * by the CH-strict flag.
+  * to a literal after CollapseProject + ConstantFolding. Gated by
+  * [[ChCoercions.CorpusFlag]].
   */
 object ChDecimalCompareGuard extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(ChCoercions.IeeeDivFlag, "false") != "true") return plan
+    if (!ChCoercions.corpusSemantics) return plan
     plan.transformAllExpressions {
       case c: BinaryComparison
           if c.left.resolved && c.right.resolved &&

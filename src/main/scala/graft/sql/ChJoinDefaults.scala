@@ -18,13 +18,10 @@ import org.apache.spark.sql.internal.SQLConf
   * genuine NULL VALUE inside a matched row survives, which a blanket
   * coalesce would destroy.
   *
-  * Gated by the session conf `spark.graft.chJoinDefaults` (set only by
-  * the stateless-corpus runner) so library users keep standard SQL NULL
-  * semantics.
+  * Gated by [[ChCoercions.CorpusFlag]] (set only by the stateless-corpus
+  * runner) so library users keep standard SQL NULL semantics.
   */
 object ChJoinDefaults extends Rule[LogicalPlan] {
-
-  val Flag = "spark.graft.chJoinDefaults"
   private val MarkL = "__ch_matched_l"
   private val MarkR = "__ch_matched_r"
 
@@ -37,7 +34,7 @@ object ChJoinDefaults extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (SQLConf.get.getConfString(Flag, "false") != "true") return plan
+    if (!ChCoercions.corpusSemantics) return plan
     // ByConity DEFAULTS join_use_nulls to 1 (reference Settings.h:461 —
     // standard SQL NULL padding; upstream ClickHouse defaults 0).
     // Type-default padding applies only after an explicit
@@ -86,16 +83,14 @@ object ChJoinDefaults extends Rule[LogicalPlan] {
   * to defaults, BEFORE any ORDER BY so sub-total rows also sort as
   * their default values, matching the goldens.
   *
-  * Gated by `spark.graft.chRollupDefaults` (corpus sessions only): a
+  * Gated by [[ChCoercions.CorpusFlag]] (corpus sessions only): a
   * grouping key that is genuinely NULL (Nullable source column) would
   * also collapse, which standard-SQL users must not see.
   */
 object ChRollupDefaults extends Rule[LogicalPlan] {
 
-  val Flag = "spark.graft.chRollupDefaults"
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (SQLConf.get.getConfString(Flag, "false") != "true") return plan
+    if (!ChCoercions.corpusSemantics) return plan
     // SET dialect_type='ANSI' keeps standard NULL sub-total keys
     // (10720_cube_ansi golden) — only the CLICKHOUSE dialect defaults
     if (SQLConf.get.getConfString("graft.ch.dialect", "CLICKHOUSE") == "ANSI")

@@ -23,58 +23,7 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ChTranspiler {
 
-  /** Split a test file's text into top-level statements, comments
-    * stripped. Semicolons inside string literals do not split.
-    */
-  def statements(sqlText: String): Seq[String] = statementsRaw(sqlText).map(_._2)
-
-  /** Like [[statements]], but each statement is paired with its RAW text
-    * (comments preserved, trailing `;` included, leading comments since
-    * the previous statement attached) — the text `clickhouse-test`
-    * echoes verbatim when a `-- {{ echo }}` directive is active
-    * (reference tests/clickhouse-test query echo mode).
-    */
-  def statementsRaw(sqlText: String): Seq[(String, String)] = {
-    val out = ArrayBuffer[(String, String)]()
-    val cur = new StringBuilder
-    var segStart = 0
-    var i = 0
-    val n = sqlText.length
-    while (i < n) {
-      val c = sqlText.charAt(i)
-      if (c == '\'' ) { // string literal: copy verbatim incl. escapes
-        cur.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sqlText.charAt(i)
-          cur.append(d)
-          if (d == '\\' && i + 1 < n) { cur.append(sqlText.charAt(i + 1)); i += 2 }
-          else { if (d == '\'') done = true; i += 1 }
-        }
-      } else if (c == '-' && i + 1 < n && sqlText.charAt(i + 1) == '-') {
-        while (i < n && sqlText.charAt(i) != '\n') i += 1
-      } else if (c == '#') {
-        // CH lexer comments `#` to end-of-line (Lexer.cpp)
-        while (i < n && sqlText.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && sqlText.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < n && !(sqlText.charAt(i) == '*' && sqlText.charAt(i + 1) == '/')) i += 1
-        i = math.min(i + 2, n)
-        cur.append(' ') // a comment is a token boundary: `SELECT/*x*/1`
-      } else if (c == ';') {
-        out += ((sqlText.substring(segStart, i + 1).trim, cur.toString.trim))
-        cur.clear(); i += 1; segStart = i
-      } else { cur.append(c); i += 1 }
-    }
-    out += ((sqlText.substring(segStart, n).trim, cur.toString.trim))
-    out.filter(_._2.nonEmpty).toSeq
-  }
-
-  /** Like [[statementsRaw]] but KEEPS comment-only segments (empty clean
-    * text): the corpus's trailing `-- {{ serverError }}` marker after the
-    * file's last `;` lives in such a segment, and the sweep's
-    * expected-error attribution needs to see it.
-    */
+  /** True when `t`'s parens balance outside single-quoted literals. */
   private def balancedParens(t: String): Boolean = {
     var d = 0
     var i = 0
@@ -93,6 +42,18 @@ object ChTranspiler {
     d == 0
   }
 
+  /** Split a test file's text into top-level statements, each paired
+    * with its RAW text: (raw, clean). Semicolons inside string literals
+    * do not split. The clean text has `--`, `#` and `/* */` comments
+    * stripped; the raw text keeps them, with the trailing `;` and the
+    * comments since the previous statement — the text `clickhouse-test`
+    * echoes verbatim when a `-- {{ echo }}` directive is active
+    * (reference tests/clickhouse-test query echo mode). Comment-only
+    * segments are KEPT (empty clean text): the corpus's trailing
+    * `-- {{ serverError }}` marker after the file's last `;` lives in
+    * such a segment, and the sweep's expected-error attribution needs
+    * to see it.
+    */
   def statementsRawAll(sqlText: String): Seq[(String, String)] = {
     val out = ArrayBuffer[(String, String)]()
     val cur = new StringBuilder
@@ -197,6 +158,99 @@ object ChTranspiler {
     out.result()
   }
 
+  // ---- lexical toolkit: the one copy of each token cursor every pass
+  // uses. Free functions on the vector, not a view bound to one: several
+  // passes re-tokenize and reassign their `toks` mid-pass.
+
+  /** Index of the first non-whitespace token at or after `j`
+    * (`ts.length` when there is none).
+    */
+  private def nextSig(ts: Vector[Tok], j: Int): Int = {
+    var k = j
+    while (k < ts.length && ts(k).isInstanceOf[Ws]) k += 1
+    k
+  }
+
+  /** Index of the last non-whitespace token at or before `j` (-1 when
+    * there is none).
+    */
+  private def prevSig(ts: Vector[Tok], j: Int): Int = {
+    var k = j
+    while (k >= 0 && ts(k).isInstanceOf[Ws]) k -= 1
+    k
+  }
+
+  /** Index of the `)` that closes the `(` at `open`, or -1 when the
+    * parens never balance.
+    */
+  private def balancedClose(ts: Vector[Tok], open: Int): Int = {
+    var d = 0
+    var j = open
+    while (j < ts.length) {
+      ts(j) match {
+        case Punct("(") => d += 1
+        case Punct(")") => d -= 1; if (d == 0) return j
+        case _ => ()
+      }
+      j += 1
+    }
+    -1
+  }
+
+  /** Index of the `(` that the `)` at `close` closes, or -1 when the
+    * parens never balance.
+    */
+  private def balancedOpen(ts: Vector[Tok], close: Int): Int = {
+    var d = 0
+    var j = close
+    while (j >= 0) {
+      ts(j) match {
+        case Punct(")") => d += 1
+        case Punct("(") => d -= 1; if (d == 0) return j
+        case _ => ()
+      }
+      j -= 1
+    }
+    -1
+  }
+
+  /** [[balancedClose]] for passes that treat an unclosed `(` as running
+    * to the end: the LAST index (`ts.length - 1`) when the parens never
+    * balance.
+    */
+  private def matchClose(ts: Vector[Tok], open: Int): Int = {
+    val close = balancedClose(ts, open)
+    if (close < 0) ts.length - 1 else close
+  }
+
+  /** Paren depth of every token; a `(` and its `)` both sit at the depth
+    * outside them.
+    */
+  private def depths(ts: Vector[Tok]): Array[Int] = {
+    val depth = new Array[Int](ts.length)
+    var d = 0
+    for (k <- ts.indices) ts(k) match {
+      case Punct("(") => depth(k) = d; d += 1
+      case Punct(")") => d -= 1; depth(k) = d
+      case _ => depth(k) = d
+    }
+    depth
+  }
+
+  /** Index of every token's enclosing `(` (-1 at top level); a `(` and
+    * its `)` both map to the paren enclosing them.
+    */
+  private def parents(ts: Vector[Tok]): Array[Int] = {
+    val parent = new Array[Int](ts.length)
+    var stack = List(-1)
+    for (k <- ts.indices) ts(k) match {
+      case Punct("(") => parent(k) = stack.head; stack = k :: stack
+      case Punct(")") => stack = stack.drop(1); parent(k) = stack.head
+      case _ => parent(k) = stack.head
+    }
+    parent
+  }
+
   /** True when a `[` following `prev` opens an array LITERAL (otherwise
     * it is element access on the preceding value).
     */
@@ -243,14 +297,11 @@ object ChTranspiler {
     "DateTime64")
 
   private def rewriteNullableCast(toks: Vector[Tok]): Vector[Tok] = {
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     var i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "CAST") &&
-          toks.lift(nextSig(i + 1)).contains(Punct("("))) {
-        val open = nextSig(i + 1)
+          toks.lift(nextSig(toks, i + 1)).contains(Punct("("))) {
+        val open = nextSig(toks, i + 1)
         // walk to the matching close, remembering the depth-1 AS
         var d = 0; var j = open; var asIdx = -1; var close = -1
         while (j < toks.length && close < 0) {
@@ -263,17 +314,17 @@ object ChTranspiler {
           j += 1
         }
         if (close > 0 && asIdx > 0) {
-          val tIdx = nextSig(asIdx + 1)
-          val tOpen = nextSig(tIdx + 1)
+          val tIdx = nextSig(toks, asIdx + 1)
+          val tOpen = nextSig(toks, tIdx + 1)
           (toks.lift(tIdx), toks.lift(tOpen)) match {
             case (Some(Word(nw)), Some(Punct("(")))
                 if nw.equalsIgnoreCase("Nullable") =>
-              val inIdx = nextSig(tOpen + 1)
-              val inClose = nextSig(inIdx + 1)
+              val inIdx = nextSig(toks, tOpen + 1)
+              val inClose = nextSig(toks, inIdx + 1)
               (toks.lift(inIdx), toks.lift(inClose)) match {
                 case (Some(Word(t)), Some(Punct(")")))
                     if nullableCastTypes.contains(t) &&
-                      nextSig(inClose + 1) == close =>
+                      nextSig(toks, inClose + 1) == close =>
                   val rewritten = toks.take(i) ++
                     Vector(Word(s"to${t}OrNull")) ++
                     toks.slice(open, asIdx) ++
@@ -299,40 +350,37 @@ object ChTranspiler {
     val out = Vector.newBuilder[Tok]
     var depth = 0
     var closeAs = Map[Int, String]() // depth → replacement text for its ")"
-    def nextNonWs(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     var i = 0
     while (i < toks.length) {
       toks(i) match {
         case Word(w) if (w == "Nullable" || w == "LowCardinality") && {
-            val k = nextNonWs(i + 1)
+            val k = nextSig(toks, i + 1)
             k < toks.length && toks(k) == Punct("(") } =>
           depth += 1; closeAs += depth -> ""
-          i = nextNonWs(i + 1) + 1
+          i = nextSig(toks, i + 1) + 1
         case Word("Array") if {
-            val k = nextNonWs(i + 1)
+            val k = nextSig(toks, i + 1)
             k < toks.length && toks(k) == Punct("(") } =>
           out += Word("ARRAY"); out += Punct("<")
           depth += 1; closeAs += depth -> ">"
-          i = nextNonWs(i + 1) + 1
+          i = nextSig(toks, i + 1) + 1
         case Word(w) if (w == "Decimal32" || w == "Decimal64" || w == "Decimal128") && {
-            val k = nextNonWs(i + 1)
+            val k = nextSig(toks, i + 1)
             k < toks.length && toks(k) == Punct("(") } =>
           val p = w match {
             case "Decimal32" => "9"; case "Decimal64" => "18"; case _ => "38"
           }
           out += Word("DECIMAL"); out += Punct("("); out += Num(p); out += Punct(",")
           depth += 1 // its ")" closes normally
-          i = nextNonWs(i + 1) + 1
+          i = nextSig(toks, i + 1) + 1
         case Word(w) if (w == "Enum8" || w == "Enum16" || w == "Enum" ||
             w == "FixedString") && {
-            val k = nextNonWs(i + 1)
+            val k = nextSig(toks, i + 1)
             k < toks.length && toks(k) == Punct("(") } =>
           // Enum values surface as their names; FixedString as String
           // (no \0 padding — the tests that observe padding are skipped)
           out += Word("STRING")
-          var k = nextNonWs(i + 1) + 1
+          var k = nextSig(toks, i + 1) + 1
           var d = 1
           while (k < toks.length && d > 0) {
             toks(k) match {
@@ -347,14 +395,13 @@ object ChTranspiler {
         // `CAST(x AS …)` position, so a column named `signed` survives)
         case Word(w) if (w.equalsIgnoreCase("unsigned") ||
             w.equalsIgnoreCase("signed")) && {
-            var k = i - 1
-            while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1
+            val k = prevSig(toks, i - 1)
             k >= 0 && (toks(k) match {
               case Word(a) => a.equalsIgnoreCase("AS")
               case _ => false
             }) } =>
           out += Word("BIGINT")
-          val k = nextNonWs(i + 1)
+          val k = nextSig(toks, i + 1)
           i = if (k < toks.length && (toks(k) match {
             case Word(n) => n.equalsIgnoreCase("integer") ||
               n.equalsIgnoreCase("int")
@@ -366,16 +413,16 @@ object ChTranspiler {
           // (n) after DateTime64(6)/DATETIME(4) spellings, but only for
           // n <= 6: Spark's micros cannot hold DateTime64(7+), and the
           // corpus EXPECTS errors there (02010)
-          val p1 = nextNonWs(i + 1)
+          val p1 = nextSig(toks, i + 1)
           i = if (chType(w).contains("TIMESTAMP") && p1 < toks.length &&
               toks(p1) == Punct("(") && {
-                val nn = nextNonWs(p1 + 1)
-                val cc = nextNonWs(nn + 1)
+                val nn = nextSig(toks, p1 + 1)
+                val cc = nextSig(toks, nn + 1)
                 nn < toks.length && (toks(nn) match {
                   case Num(v) => v.forall(_.isDigit) && v.toInt <= 6
                   case _ => false
                 }) && cc < toks.length && toks(cc) == Punct(")")
-              }) nextNonWs(nextNonWs(p1 + 1) + 1) + 1
+              }) nextSig(toks, nextSig(toks, p1 + 1) + 1) + 1
             else i + 1
         case p @ Punct("(") => depth += 1; out += p; i += 1
         case p @ Punct(")") =>
@@ -406,15 +453,10 @@ object ChTranspiler {
     if (!toks0.exists(isEnumWord)) return toks0
     val out = Vector.newBuilder[Tok]
     var i = 0
-    def nonWs(k0: Int): Int = {
-      var k = k0
-      while (k < toks0.length && toks0(k).isInstanceOf[Ws]) k += 1
-      k
-    }
     while (i < toks0.length) {
       val rewritten: Option[Int] = toks0(i) match {
         case Word(w) if w.equalsIgnoreCase("CAST") =>
-          val open = nonWs(i + 1)
+          val open = nextSig(toks0, i + 1)
           if (open < toks0.length && toks0(open) == Punct("(")) {
             var k = open + 1
             var depth = 1
@@ -429,11 +471,11 @@ object ChTranspiler {
               }
               k += 1
             }
-            val ew = if (asPos < 0) -1 else nonWs(asPos + 1)
+            val ew = if (asPos < 0) -1 else nextSig(toks0, asPos + 1)
             if (ew >= 0 && ew < toks0.length && isEnumWord(toks0(ew)) && {
-                val p = nonWs(ew + 1)
+                val p = nextSig(toks0, ew + 1)
                 p < toks0.length && toks0(p) == Punct("(") }) {
-              val mOpen = nonWs(ew + 1)
+              val mOpen = nextSig(toks0, ew + 1)
               var m = mOpen + 1
               var d = 1
               val members = Vector.newBuilder[Tok]
@@ -445,7 +487,7 @@ object ChTranspiler {
                 }
                 m += 1
               }
-              val castClose = nonWs(m)
+              val castClose = nextSig(toks0, m)
               if (d == 0 && castClose < toks0.length &&
                   toks0(castClose) == Punct(")")) {
                 out += Word("chEnum"); out += Punct("(")
@@ -483,17 +525,12 @@ object ChTranspiler {
         case _ => false }) return toks0
     val out = Vector.newBuilder[Tok]
     var i = 0
-    def nonWs(k0: Int): Int = {
-      var k = k0
-      while (k < toks0.length && toks0(k).isInstanceOf[Ws]) k += 1
-      k
-    }
     while (i < toks0.length) {
       val rewritten: Option[Int] = toks0(i) match {
         case Word(w) if w.equalsIgnoreCase("convert") &&
-            nonWs(i + 1) < toks0.length &&
-            toks0(nonWs(i + 1)) == Punct("(") =>
-          val open = nonWs(i + 1)
+            nextSig(toks0, i + 1) < toks0.length &&
+            toks0(nextSig(toks0, i + 1)) == Punct("(") =>
+          val open = nextSig(toks0, i + 1)
           var k = open + 1
           var depth = 1
           var lastComma = -1
@@ -537,17 +574,12 @@ object ChTranspiler {
         case _ => false }) return toks0
     val out = Vector.newBuilder[Tok]
     var i = 0
-    def nonWs(k0: Int): Int = {
-      var k = k0
-      while (k < toks0.length && toks0(k).isInstanceOf[Ws]) k += 1
-      k
-    }
     while (i < toks0.length) {
       val rewritten: Option[Int] = toks0(i) match {
         case Word(w) if w.equalsIgnoreCase("CAST") &&
-            nonWs(i + 1) < toks0.length &&
-            toks0(nonWs(i + 1)) == Punct("(") =>
-          val open = nonWs(i + 1)
+            nextSig(toks0, i + 1) < toks0.length &&
+            toks0(nextSig(toks0, i + 1)) == Punct("(") =>
+          val open = nextSig(toks0, i + 1)
           var k = open + 1
           var depth = 1
           var asPos = -1
@@ -561,7 +593,7 @@ object ChTranspiler {
             }
             k += 1
           }
-          val dw = if (asPos < 0) -1 else nonWs(asPos + 1)
+          val dw = if (asPos < 0) -1 else nextSig(toks0, asPos + 1)
           val isDec = dw >= 0 && dw < toks0.length && (toks0(dw) match {
             case Word(d) => d.equalsIgnoreCase("DECIMAL")
             case _ => false
@@ -570,23 +602,23 @@ object ChTranspiler {
             // collect optional (p[, s]) then expect the CAST's ')'
             var p = "10"; var s = "0"
             var after = dw + 1
-            val mOpen = nonWs(dw + 1)
+            val mOpen = nextSig(toks0, dw + 1)
             if (mOpen < toks0.length && toks0(mOpen) == Punct("(")) {
-              val pPos = nonWs(mOpen + 1)
-              (toks0.lift(pPos), toks0.lift(nonWs(pPos + 1))) match {
+              val pPos = nextSig(toks0, mOpen + 1)
+              (toks0.lift(pPos), toks0.lift(nextSig(toks0, pPos + 1))) match {
                 case (Some(Num(pp)), Some(Punct(","))) =>
-                  val sPos = nonWs(nonWs(pPos + 1) + 1)
-                  (toks0.lift(sPos), toks0.lift(nonWs(sPos + 1))) match {
+                  val sPos = nextSig(toks0, nextSig(toks0, pPos + 1) + 1)
+                  (toks0.lift(sPos), toks0.lift(nextSig(toks0, sPos + 1))) match {
                     case (Some(Num(ss)), Some(Punct(")"))) =>
-                      p = pp; s = ss; after = nonWs(sPos + 1) + 1
+                      p = pp; s = ss; after = nextSig(toks0, sPos + 1) + 1
                     case _ => after = -1
                   }
                 case (Some(Num(pp)), Some(Punct(")"))) =>
-                  p = pp; after = nonWs(pPos + 1) + 1
+                  p = pp; after = nextSig(toks0, pPos + 1) + 1
                 case _ => after = -1
               }
             }
-            val castClose = if (after < 0) -1 else nonWs(after)
+            val castClose = if (after < 0) -1 else nextSig(toks0, after)
             if (castClose >= 0 && castClose < toks0.length &&
                 toks0(castClose) == Punct(")")) {
               out += Word("chDecimal"); out += Punct("(")
@@ -624,17 +656,12 @@ object ChTranspiler {
         case _ => false
       }) return toks0
     var toks = toks0
-    def nonWs(ts: Vector[Tok], k0: Int, dir: Int = 1): Int = {
-      var k = k0
-      while (k >= 0 && k < ts.length && ts(k).isInstanceOf[Ws]) k += dir
-      k
-    }
     // optional (n) after the Time word: returns (scaleText, indexAfter)
     def scaleAfter(ts: Vector[Tok], tw: Int): (String, Int) = {
-      val p = nonWs(ts, tw + 1)
+      val p = nextSig(ts, tw + 1)
       if (p < ts.length && ts(p) == Punct("(")) {
-        val num = nonWs(ts, p + 1)
-        val close = nonWs(ts, num + 1)
+        val num = nextSig(ts, p + 1)
+        val close = nextSig(ts, num + 1)
         (ts.lift(num), ts.lift(close)) match {
           case (Some(Num(n)), Some(Punct(")"))) => (n, close + 1)
           case _ => ("3", tw + 1)
@@ -686,27 +713,19 @@ object ChTranspiler {
     run(ts => {
       val i = ts.indices.find(k => ts(k) == Punct(":") &&
         k + 1 < ts.length && ts(k + 1) == Punct(":") && {
-        val w = nonWs(ts, k + 2)
+        val w = nextSig(ts, k + 2)
         w < ts.length && isTimeWord(ts(w))
       })
       i.map { k =>
-        val w = nonWs(ts, k + 2)
+        val w = nextSig(ts, k + 2)
         val (scale, after) = scaleAfter(ts, w)
         // left primary: token or balanced paren group (with optional
         // non-keyword call head)
-        var ls = nonWs(ts, k - 1, -1)
+        var ls = prevSig(ts, k - 1)
         ts(ls) match {
           case Punct(")") =>
-            var d = 1; var j = ls - 1
-            while (j >= 0 && d > 0) {
-              ts(j) match {
-                case Punct(")") => d += 1
-                case Punct("(") => d -= 1
-                case _ => ()
-              }
-              if (d > 0) j -= 1
-            }
-            val head = nonWs(ts, j - 1, -1)
+            val j = balancedOpen(ts, ls)
+            val head = prevSig(ts, j - 1)
             ts.lift(head) match {
               case Some(Word(hw)) if !Set("SELECT", "WHERE", "AND", "OR",
                   "NOT", "WHEN", "THEN", "ELSE", "BY", "AS", "ON", "IN",
@@ -730,7 +749,7 @@ object ChTranspiler {
           case Word(w) => w.equalsIgnoreCase("CAST")
           case _ => false
         }) && {
-          val open = nonWs(ts, k + 1)
+          val open = nextSig(ts, k + 1)
           open < ts.length && ts(open) == Punct("(") && {
             // scan to AS/, at depth 1, then Time
             var j = open + 1
@@ -741,10 +760,10 @@ object ChTranspiler {
                 case Punct("(") => d += 1
                 case Punct(")") => d -= 1
                 case Word(a) if d == 1 && a.equalsIgnoreCase("AS") =>
-                  val w = nonWs(ts, j + 1)
+                  val w = nextSig(ts, j + 1)
                   hit = w < ts.length && isTimeWord(ts(w))
                 case Punct(",") if d == 1 =>
-                  val w = nonWs(ts, j + 1)
+                  val w = nextSig(ts, j + 1)
                   hit = w < ts.length && (ts(w) match {
                     case Str(sv) => sv.length > 2 &&
                       sv.substring(1, sv.length - 1).trim
@@ -760,7 +779,7 @@ object ChTranspiler {
         }
       }
       i.map { k =>
-        val open = nonWs(ts, k + 1)
+        val open = nextSig(ts, k + 1)
         var j = open + 1
         var d = 1
         var sep = -1
@@ -785,12 +804,12 @@ object ChTranspiler {
             case _ => ()
           }
         }
-        val scale = ts(nonWs(ts, sep + 1)) match {
+        val scale = ts(nextSig(ts, sep + 1)) match {
           case Str(sv) =>
             val inner = sv.substring(1, sv.length - 1).trim
             """\((\d+)\)""".r.findFirstMatchIn(inner)
               .map(_.group(1)).getOrElse("3")
-          case _ => scaleAfter(ts, nonWs(ts, sep + 1))._1
+          case _ => scaleAfter(ts, nextSig(ts, sep + 1))._1
         }
         ts.take(k) ++
           (Vector[Tok](Word("chTime"), Punct("(")) ++
@@ -816,12 +835,9 @@ object ChTranspiler {
       var i = 0
       while (i < toks.length) {
         toks(i) match {
-          case Word(w) if w.equalsIgnoreCase("AS") && {
-              var k = i + 1
-              while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
-              k < toks.length && toks(k).isInstanceOf[Str] } =>
-            var k = i + 1
-            while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+          case Word(w) if w.equalsIgnoreCase("AS") &&
+              toks.lift(nextSig(toks, i + 1)).exists(_.isInstanceOf[Str]) =>
+            var k = nextSig(toks, i + 1)
             def unq(t: String): String =
               t.substring(1, t.length - 1).replace("\\'", "'")
             // `'offset''s'` lexes as two adjacent Str tokens — the
@@ -844,32 +860,14 @@ object ChTranspiler {
     var guard = 0
     while (xorPos >= 0 && guard < 64) {
       guard += 1
-      def prevNonWs(k0: Int): Int = {
-        var k = k0
-        while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1
-        k
-      }
-      def nextNonWs(k0: Int): Int = {
-        var k = k0
-        while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
-        k
-      }
       // left primary: [start, xorPos); walks back over `)`-groups with
       // an optional call head, `::` cast chains, and single tokens
       def leftStart(endTok: Int): Int = {
-        var s = prevNonWs(endTok)
+        var s = prevSig(toks, endTok)
         toks(s) match {
           case Punct(")") =>
-            var d = 1; var k = s - 1
-            while (k >= 0 && d > 0) {
-              toks(k) match {
-                case Punct(")") => d += 1
-                case Punct("(") => d -= 1
-                case _ => ()
-              }
-              if (d > 0) k -= 1
-            }
-            val head = prevNonWs(k - 1)
+            val k = balancedOpen(toks, s)
+            val head = prevSig(toks, k - 1)
             val kw = Set("SELECT", "WHERE", "AND", "OR", "NOT", "WHEN",
               "THEN", "ELSE", "END", "BY", "AS", "ON", "FROM", "IN",
               "CASE", "HAVING", "LIMIT", "OFFSET", "UNION", "ALL",
@@ -883,21 +881,21 @@ object ChTranspiler {
       }
       var ls = leftStart(xorPos - 1)
       // absorb `::Type` chains to the LEFT of the primary
-      var p = prevNonWs(ls - 1)
+      var p = prevSig(toks, ls - 1)
       while (p >= 1 && toks(p) == Punct("::")) {
         ls = leftStart(p - 1)
-        p = prevNonWs(ls - 1)
+        p = prevSig(toks, ls - 1)
       }
       // right primary from xorPos+1
-      var re = nextNonWs(xorPos + 1)
+      var re = nextSig(toks, xorPos + 1)
       toks(re) match {
-        case Punct("-") | Punct("+") => re = nextNonWs(re + 1)
+        case Punct("-") | Punct("+") => re = nextSig(toks, re + 1)
         case _ => ()
       }
       toks(re) match {
-        case Word(_) if nextNonWs(re + 1) < toks.length &&
-            toks(nextNonWs(re + 1)) == Punct("(") =>
-          var k = nextNonWs(re + 1) + 1
+        case Word(_) if nextSig(toks, re + 1) < toks.length &&
+            toks(nextSig(toks, re + 1)) == Punct("(") =>
+          var k = nextSig(toks, re + 1) + 1
           var d = 1
           while (k < toks.length && d > 0) {
             toks(k) match {
@@ -923,10 +921,10 @@ object ChTranspiler {
         case _ => ()
       }
       // absorb `::Type` chains to the RIGHT
-      var q = nextNonWs(re + 1)
+      var q = nextSig(toks, re + 1)
       while (q < toks.length && toks(q) == Punct("::")) {
-        re = nextNonWs(q + 1)
-        q = nextNonWs(re + 1)
+        re = nextSig(toks, q + 1)
+        q = nextSig(toks, re + 1)
       }
       val left = toks.slice(ls, xorPos)
         .filterNot(_.isInstanceOf[Ws])
@@ -1104,32 +1102,21 @@ object ChTranspiler {
       .r.findFirstMatchIn(errMsg).getOrElse(return None)
     val col = em.group(1)
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    val depthAt = new Array[Int](toks.length)
-    var d0 = 0
-    for (k <- toks.indices) {
-      toks(k) match {
-        case Punct("(") => depthAt(k) = d0; d0 += 1
-        case Punct(")") => d0 -= 1; depthAt(k) = d0
-        case _ => depthAt(k) = d0
-      }
-    }
+    val depthAt = depths(toks)
     val joinKws = Set("ANY", "ALL", "GLOBAL", "LEFT", "RIGHT", "INNER",
       "FULL", "CROSS", "SEMI", "ANTI", "ASOF", "JOIN")
     // every USING whose column list contains `col`
     val usingIdxs = toks.indices.filter { u =>
       isWordI(toks(u), "USING") && {
-        var k = nextSig(u + 1)
+        var k = nextSig(toks, u + 1)
         val paren = k < toks.length && toks(k) == Punct("(")
-        if (paren) k = nextSig(k + 1)
+        if (paren) k = nextSig(toks, k + 1)
         var found = false
         var stop = false
         while (!stop && k < toks.length) {
           toks(k) match {
             case Word(w) if w == col || w == s"`$col`" => found = true; stop = true
-            case Word(_) | Punct(",") => k = nextSig(k + 1)
+            case Word(_) | Punct(",") => k = nextSig(toks, k + 1)
             case _ => stop = true
           }
         }
@@ -1147,7 +1134,7 @@ object ChTranspiler {
         case (Some(si), Some(fi)) =>
           // find `expr AS col` (or CH implicit `expr col`) in the list
           val items = ArrayBuffer[(Int, Int)]() // token ranges [a, b)
-          var a = nextSig(si + 1)
+          var a = nextSig(toks, si + 1)
           var k = a
           while (k < fi) {
             toks(k) match {
@@ -1175,7 +1162,7 @@ object ChTranspiler {
             val exprText = (s0 until cut).map(toks(_).text).mkString.trim
             if (exprText.nonEmpty && exprText != col) {
               // left relation = FROM+1 .. first join keyword at depth d
-              val relStart = nextSig(fi + 1)
+              val relStart = nextSig(toks, fi + 1)
               val joinStart = (relStart until u).find(k2 =>
                 depthAt(k2) == d && (toks(k2) match {
                   case Word(w) => joinKws.contains(w.toUpperCase)
@@ -1204,11 +1191,6 @@ object ChTranspiler {
       case None => return None
     }
     val toks = tokenize(stripComments(stmt))
-    def nonWs(k0: Int, dir: Int): Int = {
-      var k = k0
-      while (k >= 0 && k < toks.length && toks(k).isInstanceOf[Ws]) k += dir
-      k
-    }
     // subquery-paren stack: '(' immediately followed by SELECT/WITH
     val out = Vector.newBuilder[Tok]
     var subqDepth = 0
@@ -1217,7 +1199,7 @@ object ChTranspiler {
     toks.zipWithIndex.foreach { case (t, i) =>
       t match {
         case Punct("(") =>
-          val nxt = nonWs(i + 1, 1)
+          val nxt = nextSig(toks, i + 1)
           val isSubq = nxt < toks.length && (toks(nxt) match {
             case Word(w) => w.equalsIgnoreCase("SELECT") || w.equalsIgnoreCase("WITH")
             case _ => false
@@ -1229,8 +1211,8 @@ object ChTranspiler {
           if (stack.nonEmpty && stack.pop()) subqDepth -= 1
           out += t
         case Word(w) if subqDepth == 0 && (w == col || w == s"`$col`") =>
-          val prev = nonWs(i - 1, -1)
-          val next = nonWs(i + 1, 1)
+          val prev = prevSig(toks, i - 1)
+          val next = nextSig(toks, i + 1)
           val prevDot = prev >= 0 && toks(prev) == Punct(".")
           val prevAs = prev >= 0 && (toks(prev) match {
             case Word(a) => a.equalsIgnoreCase("AS")
@@ -1299,8 +1281,7 @@ object ChTranspiler {
           val w = w0.stripPrefix("`").stripSuffix("`")
           pairs.contains(w) && w0 != w
         } && !last.exists(_.text == ".") && {
-          var k = i + 1
-          while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+          val k = nextSig(toks, i + 1)
           !(k < toks.length && (toks(k).text == "(" ||
             toks(k).text.equalsIgnoreCase("AS")))
         } =>
@@ -1310,12 +1291,10 @@ object ChTranspiler {
         case Word(w) if pairs.contains(w) &&
             // not qualified (a.b) and not a call name `w(`
             !last.exists(_.text == ".") && {
-              var k = i + 1
-              while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+              val k = nextSig(toks, i + 1)
               !(k < toks.length && toks(k).text == "(")
             } && {
-              var k = i + 1
-              while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+              val k = nextSig(toks, i + 1)
               // `alias AS x` rebinding spot: leave the definition intact
               !(k < toks.length && toks(k).text.equalsIgnoreCase("AS"))
             } =>
@@ -1341,24 +1320,6 @@ object ChTranspiler {
 
   private def stripRankFrames(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSig(i: Int): Int = {
-      var j = i + 1
-      while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
-      j
-    }
-    def matchClose(open: Int): Int = {
-      var d = 0
-      var j = open
-      while (j < toks.length) {
-        toks(j) match {
-          case Punct("(") => d += 1
-          case Punct(")") => d -= 1; if (d == 0) return j
-          case _ => ()
-        }
-        j += 1
-      }
-      toks.length - 1
-    }
     val drop = scala.collection.mutable.BitSet.empty
     // index → replacement text (a ROWS-framed rank() degrades to
     // row_number(): with a ROWS frame each row is its own peer group,
@@ -1368,14 +1329,14 @@ object ChTranspiler {
     while (i < toks.length) {
       toks(i) match {
         case Word(w) if rankLikeFns(w.toLowerCase) =>
-          val o = nextSig(i)
+          val o = nextSig(toks, i + 1)
           if (o < toks.length && toks(o) == Punct("(")) {
-            val c = matchClose(o)
-            val ov = nextSig(c)
+            val c = matchClose(toks, o)
+            val ov = nextSig(toks, c + 1)
             val isOver = ov < toks.length && isWordI(toks(ov), "OVER")
-            val wo = if (isOver) nextSig(ov) else toks.length
+            val wo = if (isOver) nextSig(toks, ov + 1) else toks.length
             if (isOver && wo < toks.length && toks(wo) == Punct("(")) {
-              val wc = matchClose(wo)
+              val wc = matchClose(toks, wo)
               // frame keyword at the OVER clause's own depth
               var d = 0
               var k = wo + 1
@@ -1420,19 +1381,6 @@ object ChTranspiler {
   private def fixOrderlessRange(sql: String): String = {
     if (!sql.toUpperCase.contains("RANGE")) return sql
     val toks = tokenize(sql)
-    def matchClose(open: Int): Int = {
-      var d = 0
-      var j = open
-      while (j < toks.length) {
-        toks(j) match {
-          case Punct("(") => d += 1
-          case Punct(")") => d -= 1; if (d == 0) return j
-          case _ => ()
-        }
-        j += 1
-      }
-      toks.length - 1
-    }
     var i = 0
     // locate OVER ( … ) clauses
     val replaceRanges = scala.collection.mutable.ArrayBuffer
@@ -1440,10 +1388,9 @@ object ChTranspiler {
     i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "OVER")) {
-        var j = i + 1
-        while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
+        val j = nextSig(toks, i + 1)
         if (j < toks.length && toks(j) == Punct("(")) {
-          val close = matchClose(j)
+          val close = matchClose(toks, j)
           var d = 0
           var hasOrder = false
           var rangeAt = -1
@@ -1490,41 +1437,23 @@ object ChTranspiler {
     */
   private def wrapWindowSums(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSig(i: Int): Int = {
-      var j = i + 1
-      while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
-      j
-    }
-    def matchClose(open: Int): Int = {
-      var d = 0
-      var j = open
-      while (j < toks.length) {
-        toks(j) match {
-          case Punct("(") => d += 1
-          case Punct(")") => d -= 1; if (d == 0) return j
-          case _ => ()
-        }
-        j += 1
-      }
-      toks.length - 1
-    }
     val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
       toks(i) match {
         case Word(w) if w.equalsIgnoreCase("sum") => {
-          val o = nextSig(i)
+          val o = nextSig(toks, i + 1)
           val isCall = o < toks.length && toks(o) == Punct("(")
-          val c = if (isCall) matchClose(o) else -1
-          val ov = if (isCall) nextSig(c) else -1
+          val c = if (isCall) matchClose(toks, o) else -1
+          val ov = if (isCall) nextSig(toks, c + 1) else -1
           val isOver = ov > 0 && ov < toks.length && (toks(ov) match {
             case Word(x) => x.equalsIgnoreCase("over")
             case _ => false
           })
           if (isOver) {
-            val wEnd = nextSig(ov)
+            val wEnd = nextSig(toks, ov + 1)
             val end = toks(wEnd) match {
-              case Punct("(") => matchClose(wEnd)
+              case Punct("(") => matchClose(toks, wEnd)
               case Word(_) => wEnd // named window: OVER w
               case _ => -1
             }
@@ -1557,21 +1486,16 @@ object ChTranspiler {
     * keep their INT type.
     */
   private def widenIntLiterals(toks: Vector[Tok]): Vector[Tok] = {
-    def sig(from: Int, step: Int): Option[Tok] = {
-      var j = from + step
-      while (j >= 0 && j < toks.length && toks(j).isInstanceOf[Ws]) j += step
-      if (j >= 0 && j < toks.length) Some(toks(j)) else None
-    }
     val arith = Set("*", "+", "-", "/", "%")
     toks.zipWithIndex.map {
       case (Num(t), i) if t.forall(_.isDigit) &&
           scala.util.Try(t.toLong).isSuccess =>
         val big = t.toLong > Int.MaxValue
-        val nextOp = sig(i, 1).exists {
+        val nextOp = toks.lift(nextSig(toks, i + 1)).exists {
           case Punct(p) => arith(p); case _ => false }
         // previous `-`/`+` may be unary sign; widening `-5` to `-5L`
         // is still correct, so no need to disambiguate
-        val prevOp = sig(i, -1).exists {
+        val prevOp = toks.lift(prevSig(toks, i - 1)).exists {
           case Punct(p) => arith(p); case _ => false }
         if (big || nextOp || prevOp) Num(t + "L") else Num(t)
       case (tok, _) => tok
@@ -1656,11 +1580,9 @@ object ChTranspiler {
             // subquery-level `(SELECT … SETTINGS k = v, …)` (00266):
             // confirmed by the `name =` shape so a column named
             // `settings` survives
-            var k = i + 1
-            while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+            val k = nextSig(toks, i + 1)
             val isName = k < toks.length && toks(k).isInstanceOf[Word]
-            var k2 = k + 1
-            while (k2 < toks.length && toks(k2).isInstanceOf[Ws]) k2 += 1
+            val k2 = nextSig(toks, k + 1)
             isName && k2 < toks.length && toks(k2) == Punct("=")
           } =>
           // drop the settings list up to (not including) the paren that
@@ -1772,35 +1694,24 @@ object ChTranspiler {
           val segs = t.drop(1).split('.')
           segs.foreach(s => out.append(".col").append(s))
           lastSig = Some(Word("col" + segs.last))
-        case w0 @ Word(w) if w.equalsIgnoreCase("datetime") && {
-            var k = i + 1
-            while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
-            k < toks.length && toks(k).isInstanceOf[Str]
-          } =>
+        case w0 @ Word(w) if w.equalsIgnoreCase("datetime") &&
+            toks.lift(nextSig(toks, i + 1)).exists(_.isInstanceOf[Str]) =>
           // MySQL-dialect typed literal `DATETIME '2020-01-01 00:00:00'`
           // (corpus 015xx/13002): Spark's spelling is TIMESTAMP
           out.append("TIMESTAMP")
           lastSig = Some(w0)
         case w0 @ Word(w) if (w.equalsIgnoreCase("semi") ||
-            w.equalsIgnoreCase("anti")) && {
-            var k = i + 1
-            while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
-            k < toks.length && (toks(k) match {
-              case Word(j) => j.equalsIgnoreCase("LEFT")
-              case _ => false
-            }) } =>
+            w.equalsIgnoreCase("anti")) &&
+            toks.lift(nextSig(toks, i + 1)).exists(isWordI(_, "LEFT")) =>
           // CH `SEMI LEFT JOIN` = Spark `LEFT SEMI JOIN` (and ANTI):
           // swap the qualifier order; RIGHT SEMI/ANTI have no Spark
           // equivalent and keep failing loudly
-          var k = i + 1
-          while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
           out.append("LEFT ").append(w.toUpperCase)
-          i = k // skip the LEFT we just emitted in front
+          i = nextSig(toks, i + 1) // skip the LEFT we just emitted in front
           lastSig = Some(w0)
         case w0 @ Word(w) if (w.equalsIgnoreCase("all") ||
             w.equalsIgnoreCase("any") || w.equalsIgnoreCase("global")) && {
-            var k = i + 1
-            while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+            val k = nextSig(toks, i + 1)
             k < toks.length && (toks(k) match {
               case Word(j) =>
                 Seq("INNER", "LEFT", "RIGHT", "FULL", "JOIN", "ANY", "ALL")
@@ -1822,8 +1733,7 @@ object ChTranspiler {
           // DIFF in the sweep gate, never as silent passes.
           // (ASOF is NOT dropped — different semantics, fails loudly.)
           if (w.equalsIgnoreCase("any") && {
-            var k = i + 1
-            while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1
+            val k = nextSig(toks, i + 1)
             k < toks.length && (toks(k) match {
               case Word(j) =>
                 Seq("INNER", "LEFT", "JOIN").contains(j.toUpperCase)
@@ -1908,9 +1818,6 @@ object ChTranspiler {
     }
 
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val out = new StringBuilder
     var i = 0
     var depth = 0
@@ -1927,7 +1834,7 @@ object ChTranspiler {
             w.equalsIgnoreCase("LIMIT")) => hasTail = true
         case Word(w) if w.equalsIgnoreCase("INTERSECT") ||
             w.equalsIgnoreCase("EXCEPT") =>
-          val a = nextSig(i + 1)
+          val a = nextSig(toks, i + 1)
           val branchy = toks.lift(a) match {
             case Some(Word(x)) if x.equalsIgnoreCase("ALL") ||
                 x.equalsIgnoreCase("DISTINCT") =>
@@ -1935,7 +1842,7 @@ object ChTranspiler {
               false
             case Some(Word(x)) if x.equalsIgnoreCase("SELECT") => true
             case Some(Punct("(")) =>
-              val b = nextSig(a + 1)
+              val b = nextSig(toks, a + 1)
               toks.lift(b) match {
                 case Some(Word(x)) if x.equalsIgnoreCase("SELECT") => true
                 case Some(Punct("(")) => true
@@ -1955,7 +1862,7 @@ object ChTranspiler {
       i += 1
     }
     // left-stream order is preserved by the semi/anti lowering
-    // (ChCoercions.SetOpsAllFlag), no explicit sort needed
+    // (under ChCoercions.CorpusFlag), no explicit sort needed
     val _ = (sawSetOp, hasTail)
     out.toString
   }
@@ -1982,24 +1889,12 @@ object ChTranspiler {
 
   private def rewriteOneGroupsFrame(sql: String): Option[String] = {
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    def prevSig(j: Int): Int = {
-      var k = j; while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1; k
-    }
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) toks(k) match {
-      case Punct("(") => depthAt(k) = d; d += 1
-      case Punct(")") => d -= 1; depthAt(k) = d
-      case _ => depthAt(k) = d
-    }
+    val depthAt = depths(toks)
     def text(a: Int, b: Int): String = toks.slice(a, b).map(_.text).mkString
     var i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "GROUPS") && {
-        val nx = nextSig(i + 1)
+        val nx = nextSig(toks, i + 1)
         nx < toks.length && (toks(nx) match {
           case Word(w) => Seq("BETWEEN", "UNBOUNDED", "CURRENT")
             .contains(w.toUpperCase)
@@ -2012,7 +1907,7 @@ object ChTranspiler {
         val openIdx = (0 until i).reverse
           .find(k => toks(k) == Punct("(") && depthAt(k) == lvl - 1)
           .getOrElse(return None)
-        if (!isWordI(toks(prevSig(openIdx - 1)), "OVER")) return None
+        if (!isWordI(toks(prevSig(toks, openIdx - 1)), "OVER")) return None
         var closeIdx = i
         while (closeIdx < toks.length &&
           !(toks(closeIdx) == Punct(")") && depthAt(closeIdx) == lvl - 1))
@@ -2022,10 +1917,10 @@ object ChTranspiler {
         val orderIdx = (openIdx + 1 until i)
           .find(k => depthAt(k) == lvl && isWordI(toks(k), "ORDER"))
           .getOrElse(return None)
-        val byIdx = nextSig(orderIdx + 1)
+        val byIdx = nextSig(toks, orderIdx + 1)
         val partText = text(openIdx + 1, orderIdx).trim // PARTITION BY … or ""
         val orderText = text(byIdx + 1, i).trim
-        val frameText = text(nextSig(i + 1), closeIdx).trim
+        val frameText = text(nextSig(toks, i + 1), closeIdx).trim
         val outerLvl = depthAt(openIdx)
         // this level's FROM + source (through WHERE; bail on GROUP BY)
         val fromIdx = (closeIdx until toks.length)
@@ -2063,9 +1958,6 @@ object ChTranspiler {
   private def rewritePositionIn(sql: String): String = {
     if (!sql.toLowerCase.contains("position")) return sql
     val toks = tokenize(sql)
-    def sig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val sb = new StringBuilder
     var i = 0
     while (i < toks.length) {
@@ -2073,7 +1965,7 @@ object ChTranspiler {
         case Word(w) => w.toLowerCase.startsWith("position")
         case _ => false
       }
-      val p = sig(i + 1)
+      val p = nextSig(toks, i + 1)
       if (isPos && p < toks.length && toks(p) == Punct("(")) {
         // scan for a top-level IN inside these parens
         var depth = 1
@@ -2174,39 +2066,18 @@ object ChTranspiler {
     if (!"""(?is)\)\s*(?:AS\s+\w+\s+|\w+\s+)?(?:ANY\s+|ALL\s+|GLOBAL\s+)?(?:LEFT\s+|RIGHT\s+|FULL\s+|INNER\s+)?(?:OUTER\s+)?JOIN"""
         .r.findFirstIn(stmt).isDefined) return None
     val toks = tokenize(stripComments(stmt))
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) toks(k) match {
-      case Punct("(") => depthAt(k) = d; d += 1
-      case Punct(")") => d -= 1; depthAt(k) = d
-      case _ => depthAt(k) = d
-    }
+    val depthAt = depths(toks)
     // top-level WITH TOTALS → the splitTotals path owns the statement
     if (toks.indices.exists(k => depthAt(k) == 0 && isWordI(toks(k), "WITH") &&
-        isWordI(toks(nextSig(k + 1)), "TOTALS"))) return None
+        isWordI(toks(nextSig(toks, k + 1)), "TOTALS"))) return None
     // paren-subquery operands of the top-level FROM/JOIN chain
     val fromIdx = toks.indices.find(k =>
       depthAt(k) == 0 && isWordI(toks(k), "FROM")).getOrElse(return None)
     case class Operand(open: Int, close: Int, isLeft: Boolean)
     val ops = ArrayBuffer[Operand]()
-    var k = nextSig(fromIdx + 1)
+    var k = nextSig(toks, fromIdx + 1)
     if (k >= toks.length || toks(k) != Punct("(")) return None
-    def closeOf(open: Int): Int = {
-      var bal = 0; var j = open
-      while (j < toks.length) {
-        toks(j) match {
-          case Punct("(") => bal += 1
-          case Punct(")") => bal -= 1; if (bal == 0) return j
-          case _ => ()
-        }
-        j += 1
-      }
-      -1
-    }
-    val c0 = closeOf(k)
+    val c0 = balancedClose(toks, k)
     if (c0 < 0) return None
     ops += Operand(k, c0, isLeft = true)
     var j = c0 + 1
@@ -2214,9 +2085,9 @@ object ChTranspiler {
     while (j < toks.length && expectJoin) {
       toks(j) match {
         case Word(w) if w.equalsIgnoreCase("JOIN") =>
-          val o = nextSig(j + 1)
+          val o = nextSig(toks, j + 1)
           if (o < toks.length && toks(o) == Punct("(")) {
-            val c = closeOf(o)
+            val c = balancedClose(toks, o)
             if (c < 0) return None
             ops += Operand(o, c, isLeft = false)
             j = c + 1
@@ -2230,7 +2101,7 @@ object ChTranspiler {
     }
     def hasTotals(o: Operand): Boolean =
       (o.open until o.close).exists(k2 => isWordI(toks(k2), "WITH") &&
-        isWordI(toks(nextSig(k2 + 1)), "TOTALS"))
+        isWordI(toks(nextSig(toks, k2 + 1)), "TOTALS"))
     if (!ops.exists(hasTotals)) return None
     val stripTot = (s: String) =>
       """(?i)\bWITH\s+TOTALS\b""".r.replaceAllIn(s, " ")
@@ -2242,13 +2113,7 @@ object ChTranspiler {
     def totalsBody(o: Operand): Option[String] = {
       val body = toks.slice(o.open + 1, o.close).map(_.text).mkString
       val inner = tokenize(body)
-      val dep = new Array[Int](inner.length)
-      var dd = 0
-      for (k2 <- inner.indices) inner(k2) match {
-        case Punct("(") => dep(k2) = dd; dd += 1
-        case Punct(")") => dd -= 1; dep(k2) = dd
-        case _ => dep(k2) = dd
-      }
+      val dep = depths(inner)
       val sel = inner.indices.find(k2 => dep(k2) == 0 &&
         isWordI(inner(k2), "SELECT")).getOrElse(return None)
       val from = inner.indices.find(k2 => dep(k2) == 0 &&
@@ -2289,7 +2154,7 @@ object ChTranspiler {
         if (dep(k3) == 0 && (isWordI(inner(k3), "GROUP") ||
             isWordI(inner(k3), "ORDER") || isWordI(inner(k3), "LIMIT") ||
             (isWordI(inner(k3), "WITH") &&
-              isWordI(inner(nextSig(k3 + 1)), "TOTALS"))))
+              isWordI(inner(nextSig(toks, k3 + 1)), "TOTALS"))))
           tailEnd = k3
         k3 += 1
       }
@@ -2304,13 +2169,7 @@ object ChTranspiler {
       // one all-defaults row with the operand's column names
       val body = toks.slice(o.open + 1, o.close).map(_.text).mkString
       val inner = tokenize(body)
-      val dep = new Array[Int](inner.length)
-      var dd = 0
-      for (k2 <- inner.indices) inner(k2) match {
-        case Punct("(") => dep(k2) = dd; dd += 1
-        case Punct(")") => dd -= 1; dep(k2) = dd
-        case _ => dep(k2) = dd
-      }
+      val dep = depths(inner)
       val sel = inner.indices.find(k2 => dep(k2) == 0 &&
         isWordI(inner(k2), "SELECT")).getOrElse(return None)
       val from = inner.indices.find(k2 => dep(k2) == 0 &&
@@ -2357,19 +2216,7 @@ object ChTranspiler {
 
   def splitTotals(stmt: String): Option[(String, String, Seq[String])] = {
     val toks = tokenize(stmt)
-    def sig(j: Int, dir: Int): Int = {
-      var k = j + dir
-      while (k >= 0 && k < toks.length && toks(k).isInstanceOf[Ws]) k += dir
-      k
-    }
-    // depth of each token
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) toks(k) match {
-      case Punct("(") => depthAt(k) = d; d += 1
-      case Punct(")") => d -= 1; depthAt(k) = d
-      case _ => depthAt(k) = d
-    }
+    val depthAt = depths(toks)
     // first WITH TOTALS, preferring the top level; a nested one only
     // qualifies when the outer query is a bare pass-through
     // (`SELECT * FROM ( … )`) — anything else consumes the totals
@@ -2382,7 +2229,7 @@ object ChTranspiler {
       while (withIdx < 0 && k < toks.length) {
         if ((if (pass) depthAt(k) == 0 else depthAt(k) > 0) &&
             isWordI(toks(k), "WITH")) {
-          val nx = sig(k, 1)
+          val nx = nextSig(toks, k + 1)
           if (nx < toks.length && isWordI(toks(nx), "TOTALS")) {
             withIdx = k; totalsIdx = nx
           }
@@ -2432,7 +2279,7 @@ object ChTranspiler {
     var groupIdx = -1
     for (j <- (math.max(openIdx, 0) until withIdx).reverse if groupIdx < 0)
       if (depthAt(j) == td && isWordI(toks(j), "GROUP") &&
-          isWordI(toks(sig(j, 1)), "BY")) groupIdx = j
+          isWordI(toks(nextSig(toks, j + 1)), "BY")) groupIdx = j
     // `SELECT 1 WITH TOTALS` with neither GROUP BY nor aggregation is
     // NOT_IMPLEMENTED in the reference (error 48,
     // 01013_totals_without_aggregation)
@@ -2470,7 +2317,7 @@ object ChTranspiler {
     while (j2 < closeIdx) {
       if (depthAt(j2) == td && (isWordI(toks(j2), "ORDER") ||
           isWordI(toks(j2), "LIMIT") || isWordI(toks(j2), "OFFSET"))) {
-        val end = clauseEnd(sig(j2, 1))
+        val end = clauseEnd(nextSig(toks, j2 + 1))
         totRanges :+= ((j2, end))
         j2 = end
       } else j2 += 1
@@ -2481,7 +2328,7 @@ object ChTranspiler {
     val groupItems: Seq[String] =
       if (groupIdx < 0) Nil
       else {
-        val byIdx = sig(groupIdx, 1)
+        val byIdx = nextSig(toks, groupIdx + 1)
         var itemsText = toks.slice(byIdx + 1, withIdx).map(_.text).mkString
           .replaceAll("(?i)\\bWITH\\s+(ROLLUP|CUBE)\\b", "").trim
         val wrap = """(?is)^(?:ROLLUP|CUBE)\s*\((.*)\)\s*$""".r
@@ -2503,22 +2350,13 @@ object ChTranspiler {
   def stripWithFill(stmt: String): Option[(String, Seq[FillSpec])] = {
     if (!"""(?i)\bWITH\s+FILL\b""".r.findFirstIn(stmt).isDefined) return None
     val toks = tokenize(stmt)
-    def sig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) toks(k) match {
-      case Punct("(") => depthAt(k) = d; d += 1
-      case Punct(")") => d -= 1; depthAt(k) = d
-      case _ => depthAt(k) = d
-    }
+    val depthAt = depths(toks)
     val specs = ArrayBuffer[FillSpec]()
     val drop = ArrayBuffer[(Int, Int)]()
     var i = 0
     while (i < toks.length) {
       if (depthAt(i) == 0 && isWordI(toks(i), "WITH") &&
-          isWordI(toks(sig(i + 1)), "FILL")) {
+          isWordI(toks(nextSig(toks, i + 1)), "FILL")) {
         // walk back to the item start (comma / BY at depth 0)
         var s = i - 1
         var itemStart = 0
@@ -2539,7 +2377,7 @@ object ChTranspiler {
         val desc = """(?i)\s+DESC(ENDING)?$""".r.findFirstIn(itemText).isDefined
         itemText = itemText.replaceAll("(?i)\\s+(ASC|DESC)(ENDING)?$", "")
         // consume FROM/TO/STEP operands
-        var j = sig(sig(i + 1) + 1)
+        var j = nextSig(toks, nextSig(toks, i + 1) + 1)
         var from: Option[String] = None
         var to: Option[String] = None
         var step: Option[String] = None
@@ -2549,7 +2387,7 @@ object ChTranspiler {
             case w: Word if isWordI(w, "FROM") || isWordI(w, "TO") ||
                 isWordI(w, "STEP") =>
               val kw = w.text.toUpperCase
-              var e = sig(j + 1)
+              var e = nextSig(toks, j + 1)
               val start = e
               // operand: signed literal / function call until next kw
               var dd2 = 0
@@ -2568,7 +2406,7 @@ object ChTranspiler {
                 }
                 if (!done) e += 1
               }
-              val v = toks.slice(sig(j + 1), e).map(_.text).mkString.trim
+              val v = toks.slice(nextSig(toks, j + 1), e).map(_.text).mkString.trim
               kw match {
                 case "FROM" => from = Some(v)
                 case "TO" => to = Some(v)
@@ -2598,24 +2436,12 @@ object ChTranspiler {
     */
   private def rewriteScalarWithDeep(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     var i = 0
     while (i < toks.length) {
       if (toks(i) == Punct("(") &&
-          { val n = nextSig(i + 1); n < toks.length && isWordI(toks(n), "WITH") }) {
-        var d = 1
-        var j = i + 1
-        while (d > 0 && j < toks.length) {
-          toks(j) match {
-            case Punct("(") => d += 1
-            case Punct(")") => d -= 1
-            case _ => ()
-          }
-          if (d > 0) j += 1
-        }
-        if (d == 0) {
+          toks.lift(nextSig(toks, i + 1)).exists(isWordI(_, "WITH"))) {
+        val j = balancedClose(toks, i)
+        if (j >= 0) {
           val inner = toks.slice(i + 1, j).map(_.text).mkString
           val rewritten = rewriteScalarWith(rewriteScalarWithDeep(inner))
           if (rewritten != inner) {
@@ -2632,10 +2458,7 @@ object ChTranspiler {
 
   private def rewriteScalarWith(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSigIdx(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    val w0 = nextSigIdx(0)
+    val w0 = nextSig(toks, 0)
     if (w0 >= toks.length || !isWordI(toks(w0), "WITH")) return sql
     // parse items up to the depth-0 SELECT
     case class Item(tokens: Vector[Tok])
@@ -2704,16 +2527,7 @@ object ChTranspiler {
   private def addImplicitFromOne(sql: String): String = {
     if (!"""(?i)\bdummy\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) toks(k) match {
-      case Punct("(") => depthAt(k) = d; d += 1
-      case Punct(")") => d -= 1; depthAt(k) = d
-      case _ => depthAt(k) = d
-    }
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
+    val depthAt = depths(toks)
     val clauseKw = Set("WHERE", "PREWHERE", "GROUP", "HAVING", "ORDER",
       "LIMIT", "OFFSET", "SETTINGS", "UNION", "INTERSECT", "EXCEPT",
       "FORMAT", "INTO")
@@ -2744,7 +2558,7 @@ object ChTranspiler {
               case _ => ()
             }
             // a nested `( SELECT …` resolves its own dummy — skip it
-            if (t == Punct("(") && isWordI(toks(nextSig(j + 1)), "SELECT")) {
+            if (t == Punct("(") && isWordI(toks(nextSig(toks, j + 1)), "SELECT")) {
               var bal = 1
               j += 1
               while (bal > 0 && j < toks.length) {
@@ -2784,31 +2598,18 @@ object ChTranspiler {
   private def rewriteValuesTable(sql: String): String = {
     if (!"""(?i)\bvalues\s*\(\s*'""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     var i = 0
     while (i < toks.length) {
-      val op = nextSig(i + 1)
-      lazy val firstArg = nextSig(op + 1)
+      val op = nextSig(toks, i + 1)
+      lazy val firstArg = nextSig(toks, op + 1)
       if (isWordI(toks(i), "VALUES") && op < toks.length &&
           toks(op) == Punct("(") && firstArg < toks.length &&
           toks(firstArg).isInstanceOf[Str]) {
-        // balanced call range
-        var d = 1
-        var j = op + 1
-        while (d > 0 && j < toks.length) {
-          toks(j) match {
-            case Punct("(") => d += 1
-            case Punct(")") => d -= 1
-            case _ => ()
-          }
-          if (d > 0) j += 1
-        }
-        if (d == 0) {
+        val j = balancedClose(toks, op) // balanced call range
+        if (j >= 0) {
           val specLit = toks(firstArg).text
           val spec = unquote(specLit)
-          val restArgs = toks.slice(nextSig(firstArg + 1), j)
+          val restArgs = toks.slice(nextSig(toks, firstArg + 1), j)
           val tuples = restArgs.map(_.text).mkString
             .replaceAll("^\\s*,", "").trim
           val defs = ChSession.splitTop(spec).map(_.trim).filter(_.nonEmpty)
@@ -2864,21 +2665,12 @@ object ChTranspiler {
   private def rewriteLimitBy(sql: String): String = {
     if (!"""(?i)\blimit\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) toks(k) match {
-      case Punct("(") => depthAt(k) = d; d += 1
-      case Punct(")") => d -= 1; depthAt(k) = d
-      case _ => depthAt(k) = d
-    }
+    val depthAt = depths(toks)
     for (i <- toks.indices) {
       if (isWordI(toks(i), "LIMIT")) {
         val td = depthAt(i)
-        val nIdx = nextSig(i + 1)
-        val byIdx = if (nIdx < toks.length) nextSig(nIdx + 1) else toks.length
+        val nIdx = nextSig(toks, i + 1)
+        val byIdx = if (nIdx < toks.length) nextSig(toks, nIdx + 1) else toks.length
         val isLimitBy = nIdx < toks.length && toks(nIdx).isInstanceOf[Num] &&
           byIdx < toks.length && isWordI(toks(byIdx), "BY")
         if (isLimitBy) {
@@ -2914,18 +2706,7 @@ object ChTranspiler {
           if (end < 0) end = toks.length
           val items = toks.slice(byIdx + 1, end).map(_.text).mkString.trim
           val body = toks.slice(openIdx + 1, i).map(_.text).mkString.trim
-          val tail = toks.slice(end,
-            if (td > 0) { // up to the enclosing close paren
-              var bal = 0; var k = end
-              while (k < toks.length && (toks(k) match {
-                case Punct("(") => bal += 1; true
-                case Punct(")") => bal -= 1; bal >= 0
-                case _ => true
-              })) k += 1
-              k
-            } else toks.length).map(_.text).mkString.trim
-          val pre = toks.take(openIdx + 1).map(_.text).mkString
-          val postStart = if (td > 0) {
+          val postStart = if (td > 0) { // the enclosing close paren
             var bal = 0; var k = end
             while (k < toks.length && (toks(k) match {
               case Punct("(") => bal += 1; true
@@ -2934,6 +2715,8 @@ object ChTranspiler {
             })) k += 1
             k
           } else toks.length
+          val tail = toks.slice(end, postStart).map(_.text).mkString.trim
+          val pre = toks.take(openIdx + 1).map(_.text).mkString
           val post = toks.drop(postStart).map(_.text).mkString
           val rewritten =
             s"SELECT * EXCEPT (__lby_rn, __lby_id) FROM (" +
@@ -2960,14 +2743,11 @@ object ChTranspiler {
     */
   private def guardSelectStringHead(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val wrapAt = scala.collection.mutable.Set[Int]()
     for (k <- toks.indices if toks(k) == Punct("(")) {
-      val s = nextSig(k + 1)
+      val s = nextSig(toks, k + 1)
       if (s < toks.length && isWordI(toks(s), "SELECT")) {
-        val lit = nextSig(s + 1)
+        val lit = nextSig(toks, s + 1)
         if (lit < toks.length && toks(lit).isInstanceOf[Str]) wrapAt += lit
       }
     }
@@ -3056,9 +2836,6 @@ object ChTranspiler {
   private def parenthesizeUsing(sql: String): String = {
     if (!"""(?i)\busing\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val stop = Set("SELECT", "FROM", "WHERE", "GROUP", "ORDER", "HAVING",
       "LIMIT", "SETTINGS", "UNION", "FORMAT", "INTO", "JOIN", "INNER",
       "LEFT", "RIGHT", "FULL", "CROSS", "ANY", "ALL", "ASOF", "SEMI",
@@ -3074,18 +2851,18 @@ object ChTranspiler {
       out.append(t.text)
       i += 1
       if (isWordI(t, "USING")) {
-        val first = nextSig(i)
+        val first = nextSig(toks, i)
         if (isIdent(first)) {
           // collect name (, name)*
           val names = ArrayBuffer(first)
           var j = first + 1
           var cont = true
           while (cont) {
-            val c = nextSig(j)
+            val c = nextSig(toks, j)
             if (c < toks.length && toks(c) == Punct(",") &&
-                isIdent(nextSig(c + 1))) {
-              names += nextSig(c + 1)
-              j = nextSig(c + 1) + 1
+                isIdent(nextSig(toks, c + 1))) {
+              names += nextSig(toks, c + 1)
+              j = nextSig(toks, c + 1) + 1
             } else cont = false
           }
           out.append(" (")
@@ -3115,37 +2892,19 @@ object ChTranspiler {
   private def rewriteAnyJoin(sql: String): String = {
     if (!"""(?i)\bany\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    def prevSig(j: Int): Int = {
-      var k = j - 1; while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1; k
-    }
     def wordAt(k: Int): String = if (k >= 0 && k < toks.length) (toks(k) match {
       case Word(x) => x.toUpperCase
       case _ => ""
     }) else ""
-    def balancedClose(open: Int): Int = {
-      var d = 0; var j = open
-      while (j < toks.length) {
-        toks(j) match {
-          case Punct("(") => d += 1
-          case Punct(")") => d -= 1; if (d == 0) return j
-          case _ => ()
-        }
-        j += 1
-      }
-      -1
-    }
     def text(a: Int, b: Int): String =
       toks.slice(a, b + 1).map(_.text).mkString
     var i = 0
     while (i < toks.length) {
       toks(i) match {
         case Word(w) if w.equalsIgnoreCase("any") =>
-          val nxt = nextSig(i + 1)
+          val nxt = nextSig(toks, i + 1)
           val nw = wordAt(nxt)
-          val pw = wordAt(prevSig(i))
+          val pw = wordAt(prevSig(toks, i - 1))
           // shape A: ANY [LEFT|INNER] JOIN; shape B: LEFT|INNER ANY JOIN.
           // RIGHT/FULL ANY (either order): the dedup side is the left
           // join tree / both sides — fall back to dropping the
@@ -3154,7 +2913,7 @@ object ChTranspiler {
             if (pw == "RIGHT" || pw == "FULL") -2
             else if (nw == "JOIN") nxt // bare/any-after-type = dedup right
             else if (nw == "LEFT" || nw == "INNER") {
-              val j2 = nextSig(nxt + 1)
+              val j2 = nextSig(toks, nxt + 1)
               if (wordAt(j2) == "JOIN") j2 else -1
             } else if (nw == "RIGHT" || nw == "FULL") -2
             else -1
@@ -3166,12 +2925,12 @@ object ChTranspiler {
           else if (joinIdx < 0) { i += 1 }
           else {
             // relation after JOIN: (subquery) | [db.]table, then alias
-            val r0 = nextSig(joinIdx + 1)
+            val r0 = nextSig(toks, joinIdx + 1)
             var relEnd = -1
             var isSub = false
             toks.lift(r0) match {
               case Some(Punct("(")) =>
-                relEnd = balancedClose(r0); isSub = true
+                relEnd = balancedClose(toks, r0); isSub = true
               case Some(Word(_)) =>
                 relEnd = r0
                 var k = r0 + 1
@@ -3186,9 +2945,9 @@ object ChTranspiler {
               "ANY", "GLOBAL", "PREWHERE", "FORMAT")
             var aliasEnd = relEnd
             var alias = ""
-            val a0 = nextSig(relEnd + 1)
+            val a0 = nextSig(toks, relEnd + 1)
             if (wordAt(a0) == "AS") {
-              val a1 = nextSig(a0 + 1)
+              val a1 = nextSig(toks, a0 + 1)
               toks.lift(a1) match {
                 case Some(Word(x)) => alias = x; aliasEnd = a1
                 case _ => ()
@@ -3198,7 +2957,7 @@ object ChTranspiler {
                 alias = x; aliasEnd = a0
               case _ => ()
             }
-            val cIdx = nextSig(aliasEnd + 1)
+            val cIdx = nextSig(toks, aliasEnd + 1)
             val relName = if (isSub) "" else (toks(relEnd) match {
               case Word(x) => x
               case _ => ""
@@ -3207,9 +2966,9 @@ object ChTranspiler {
             // join keys
             var keys = Seq.empty[String]
             if (wordAt(cIdx) == "USING") {
-              val p0 = nextSig(cIdx + 1)
+              val p0 = nextSig(toks, cIdx + 1)
               if (toks.lift(p0).contains(Punct("("))) {
-                val pc = balancedClose(p0)
+                val pc = balancedClose(toks, p0)
                 if (pc > p0) {
                   val parts = ChSession.splitTop(text(p0 + 1, pc - 1))
                     .map(_.trim).filter(_.nonEmpty)
@@ -3242,7 +3001,7 @@ object ChTranspiler {
                 }
                 if (!done) e += 1
               }
-              val condTxt = text(nextSig(cIdx + 1), end)
+              val condTxt = text(nextSig(toks, cIdx + 1), end)
               val eqRe = """^\s*(`?[\w.]+`?)\s*=\s*(`?[\w.]+`?)\s*$""".r
               val conj = condTxt.split("""(?i)\bAND\b""").map(_.trim)
               val picked = conj.map {
@@ -3312,47 +3071,35 @@ object ChTranspiler {
   private def rewriteCollate(sql: String): String = {
     if (!"""(?i)\bcollate\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    def prevSig(j: Int): Int = {
-      var k = j - 1; while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1; k
-    }
     var i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "COLLATE")) {
-        val locIdx = nextSig(i + 1)
+        val locIdx = nextSig(toks, i + 1)
         toks.lift(locIdx) match {
           case Some(Str(loc)) =>
             // walk back over the primary: ident chains a.b / calls f(…)
-            var start = prevSig(i)
+            var start = prevSig(toks, i - 1)
             toks.lift(start) match {
               case Some(Punct(")")) =>
-                var d = 0; var j = start; var open = -1
-                while (j >= 0 && open < 0) {
-                  toks(j) match {
-                    case Punct(")") => d += 1
-                    case Punct("(") => d -= 1; if (d == 0) open = j
-                    case _ => ()
-                  }
-                  j -= 1
-                }
-                start = open
-                val fn = prevSig(start)
+                start = balancedOpen(toks, start)
+                val fn = prevSig(toks, start - 1)
                 if (toks.lift(fn).exists(_.isInstanceOf[Word])) start = fn
               case Some(_: Word) | Some(_: Num) =>
                 // dotted chain t.c
                 var s2 = start
-                while (prevSig(s2) >= 0 && toks(prevSig(s2)) == Punct(".") &&
-                    prevSig(prevSig(s2)) >= 0 &&
-                    toks(prevSig(prevSig(s2))).isInstanceOf[Word])
-                  s2 = prevSig(prevSig(s2))
+                var dot = prevSig(toks, s2 - 1)
+                while (dot >= 0 && toks(dot) == Punct(".") &&
+                    toks.lift(prevSig(toks, dot - 1)).exists(_.isInstanceOf[Word])) {
+                  s2 = prevSig(toks, dot - 1)
+                  dot = prevSig(toks, s2 - 1)
+                }
                 start = s2
               case _ => start = -1
             }
             if (start >= 0) {
               val pre = toks.take(start).map(_.text).mkString
-              val primary = toks.slice(start, prevSig(i) + 1).map(_.text).mkString
+              val primary = toks.slice(start, prevSig(toks, i - 1) + 1)
+                .map(_.text).mkString
               val post = toks.drop(locIdx + 1).map(_.text).mkString
               return rewriteCollate(
                 s"$pre chCollateKey($primary, $loc) $post")
@@ -3374,19 +3121,8 @@ object ChTranspiler {
   private def rewriteUnionBranches(sql: String): String = {
     if (!"""(?i)\bunion\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     // region id = index of enclosing '(' (-1 = top level)
-    val parent = new Array[Int](toks.length)
-    var stack = List(-1)
-    for (k <- toks.indices) {
-      toks(k) match {
-        case Punct("(") => parent(k) = stack.head; stack = k :: stack
-        case Punct(")") => stack = stack.drop(1); parent(k) = stack.head
-        case _ => parent(k) = stack.head
-      }
-    }
+    val parent = parents(toks)
     val unions = scala.collection.mutable.Map[Int, Vector[Int]]()
     val hasMod = scala.collection.mutable.Set[Int]()
     for (k <- toks.indices) toks(k) match {
@@ -3407,7 +3143,7 @@ object ChTranspiler {
     // outside the first branch's parens (40054/40089/48016), so
     // branch 1 starts at the region-level SELECT after it
     def firstBranchStart(r: Int, us: Vector[Int]): Int = {
-      val s0 = nextSig(if (r < 0) 0 else r + 1)
+      val s0 = nextSig(toks, if (r < 0) 0 else r + 1)
       if (toks.lift(s0).exists(isWordI(_, "WITH"))) {
         // the branch is the first depth-0 SELECT, or a depth-0 '('
         // not preceded by AS (CTE bodies are `name AS ( … )`; an
@@ -3415,17 +3151,17 @@ object ChTranspiler {
         var k = s0 + 1
         var d = 0
         var sel = -1
-        var prevSig: Tok = Word("WITH")
+        var lastSig: Tok = Word("WITH")
         while (k < us.head && sel < 0) {
           toks(k) match {
             case Punct("(") =>
-              if (d == 0 && !isWordI(prevSig, "AS")) sel = k
-              d += 1; prevSig = Punct("(")
-            case Punct(")") => d -= 1; prevSig = Punct(")")
+              if (d == 0 && !isWordI(lastSig, "AS")) sel = k
+              d += 1; lastSig = Punct("(")
+            case Punct(")") => d -= 1; lastSig = Punct(")")
             case Word(w) if d == 0 && w.equalsIgnoreCase("SELECT") =>
               sel = k
             case _: Ws => ()
-            case t => prevSig = t
+            case t => lastSig = t
           }
           k += 1
         }
@@ -3443,10 +3179,10 @@ object ChTranspiler {
       }))
       val regionStart0 = firstBranchStart(r, us)
       val starts = regionStart0 +: us.map { u =>
-        val a = nextSig(u + 1)
+        val a = nextSig(toks, u + 1)
         toks.lift(a) match {
           case Some(Word(w)) if w.equalsIgnoreCase("ALL") ||
-              w.equalsIgnoreCase("DISTINCT") => nextSig(a + 1)
+              w.equalsIgnoreCase("DISTINCT") => nextSig(toks, a + 1)
           case _ => a
         }
       }
@@ -3472,7 +3208,7 @@ object ChTranspiler {
         }
         // branch boundaries: [regionStart, u1), [afterKw(u1), u2), …
         def afterKw(u: Int): Int = {
-          val a = nextSig(u + 1)
+          val a = nextSig(toks, u + 1)
           toks.lift(a) match {
             case Some(Word(w)) if w.equalsIgnoreCase("ALL") ||
                 w.equalsIgnoreCase("DISTINCT") => a + 1
@@ -3501,17 +3237,14 @@ object ChTranspiler {
   private def rewriteParenLambda(sql: String): String = {
     if (!sql.contains("->")) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     var i = 0
     while (i < toks.length) {
       if (toks(i) == Punct("(")) {
-        val w = nextSig(i + 1)
+        val w = nextSig(toks, i + 1)
         val close = if (w < toks.length && toks(w).isInstanceOf[Word])
-          nextSig(w + 1) else -1
+          nextSig(toks, w + 1) else -1
         if (close > 0 && close < toks.length && toks(close) == Punct(")")) {
-          val dash = nextSig(close + 1)
+          val dash = nextSig(toks, close + 1)
           if (dash + 1 < toks.length && toks(dash) == Punct("-") &&
               toks(dash + 1) == Punct(">")) {
             val rewritten =
@@ -3527,13 +3260,9 @@ object ChTranspiler {
 
   private def rewriteInfixMod(sql: String): String = {
     val toks = tokenize(sql)
-    def prevSig(j: Int): Option[Tok] = {
-      var k = j - 1
-      while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1
-      if (k >= 0) Some(toks(k)) else None
-    }
     toks.zipWithIndex.map {
-      case (Word(w), k) if w.equalsIgnoreCase("MOD") && (prevSig(k) match {
+      case (Word(w), k) if w.equalsIgnoreCase("MOD") &&
+          (toks.lift(prevSig(toks, k - 1)) match {
         case Some(Word(p)) => !Set("SELECT", "WHERE", "AND", "OR", "NOT",
           "WHEN", "THEN", "ELSE", "BY", "ON", "AS", "IN", "LIKE",
           "HAVING").contains(p.toUpperCase)
@@ -3659,12 +3388,9 @@ object ChTranspiler {
       changed = false
       guard += 1
       val toks = tokenize(out)
-      def nextSigIdx(j: Int): Int = {
-        var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-      }
       var i = 0
       while (i < toks.length && !changed) {
-        val p = nextSigIdx(i + 1)
+        val p = nextSig(toks, i + 1)
         if (isWordI(toks(i), "CAST") && p < toks.length && toks(p) == Punct("(")) {
           // split the argument list at top level
           var depth = 0
@@ -3718,27 +3444,15 @@ object ChTranspiler {
   private def rewriteNestedArrayJoinDeep(sql: String): String = {
     if (!"""(?i)\barrayJoin\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     var i = 0
     while (i < toks.length) {
       if (toks(i) == Punct("(") && {
-        val f = nextSig(i + 1)
+        val f = nextSig(toks, i + 1)
         f < toks.length && (isWordI(toks(f), "SELECT") ||
           isWordI(toks(f), "WITH"))
       }) {
-        var d = 1
-        var j = i + 1
-        while (d > 0 && j < toks.length) {
-          toks(j) match {
-            case Punct("(") => d += 1
-            case Punct(")") => d -= 1
-            case _ => ()
-          }
-          if (d > 0) j += 1
-        }
-        if (d == 0) {
+        val j = balancedClose(toks, i)
+        if (j >= 0) {
           val inner = toks.slice(i + 1, j).map(_.text).mkString
           val rewritten = rewriteNestedArrayJoin(rewriteNestedArrayJoinDeep(inner))
           if (rewritten != inner) {
@@ -3755,9 +3469,6 @@ object ChTranspiler {
 
   private def rewriteNestedArrayJoin(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSigIdx(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     // subquery-nesting of each token: >0 means inside a (SELECT …) group
     val subDepth = new Array[Int](toks.length)
     var stack = List[Boolean]()
@@ -3765,7 +3476,7 @@ object ChTranspiler {
       subDepth(k) = stack.count(identity)
       toks(k) match {
         case Punct("(") =>
-          val first = nextSigIdx(k + 1)
+          val first = nextSig(toks, k + 1)
           val isSub = first < toks.length &&
             (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
           stack = isSub :: stack
@@ -3778,7 +3489,7 @@ object ChTranspiler {
     val calls = ArrayBuffer[Call]()
     var i = 0
     while (i < toks.length) {
-      val p = nextSigIdx(i + 1)
+      val p = nextSig(toks, i + 1)
       if (isWordI(toks(i), "arrayJoin") && subDepth(i) == 0 &&
           p < toks.length && toks(p) == Punct("(")) {
         var depth = 0
@@ -3807,7 +3518,7 @@ object ChTranspiler {
     val lone = calls.size == 1 && {
       val c = calls.head
       val before = toks.take(c.start).filterNot(_.isInstanceOf[Ws])
-      val afterIdx = nextSigIdx(c.end + 1)
+      val afterIdx = nextSig(toks, c.end + 1)
       val beforeOk = before.lastOption.forall(t =>
         isWordI(t, "SELECT") || isWordI(t, "DISTINCT") || t == Punct(","))
       val afterOk = afterIdx >= toks.length || (toks(afterIdx) match {
@@ -3836,20 +3547,6 @@ object ChTranspiler {
     }.mkString
     // place after the top-level FROM source (or synthesize one)
     val toks2 = tokenize(sb.toString)
-    val sub2 = new Array[Int](toks2.length)
-    var st2 = List[Boolean]()
-    for (k <- toks2.indices) {
-      sub2(k) = st2.count(identity)
-      toks2(k) match {
-        case Punct("(") =>
-          var f = k + 1
-          while (f < toks2.length && toks2(f).isInstanceOf[Ws]) f += 1
-          st2 = (f < toks2.length && (isWordI(toks2(f), "SELECT") ||
-            isWordI(toks2(f), "WITH"))) :: st2
-        case Punct(")") => st2 = st2.drop(1)
-        case _ => ()
-      }
-    }
     var depth2 = 0
     val depthAt2 = toks2.map { t =>
       val d = depth2
@@ -3863,11 +3560,8 @@ object ChTranspiler {
     val fromIdx = toks2.indices.find(k => depthAt2(k) == 0 && isWordI(toks2(k), "FROM"))
     // a clause keyword right after AS is an ALIAS (`… AS rows`), not a
     // boundary — 01700's deltaSumState(arrayJoin(…)) AS rows
-    def aliased(k: Int): Boolean = {
-      var p = k - 1
-      while (p >= 0 && toks2(p).isInstanceOf[Ws]) p -= 1
-      p >= 0 && isWordI(toks2(p), "AS")
-    }
+    def aliased(k: Int): Boolean =
+      toks2.lift(prevSig(toks2, k - 1)).exists(isWordI(_, "AS"))
     def boundaryAfter(start: Int): Int =
       toks2.indices.drop(start).find { k =>
         depthAt2(k) == 0 && (toks2(k) match {
@@ -3961,13 +3655,12 @@ object ChTranspiler {
   private def rewriteLimitOffset(sql: String): String = {
     if (!sql.toUpperCase.contains("LIMIT")) return sql
     val toks = tokenize(sql)
-    def sig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val sb = new StringBuilder
     var i = 0
     while (i < toks.length) {
-      val a = sig(i + 1); lazy val comma = sig(a + 1); lazy val b = sig(comma + 1)
+      val a = nextSig(toks, i + 1)
+      lazy val comma = nextSig(toks, a + 1)
+      lazy val b = nextSig(toks, comma + 1)
       (toks(i), if (a < toks.length) toks(a) else Ws(""),
         if (comma < toks.length) toks(comma) else Ws(""),
         if (b < toks.length) toks(b) else Ws("")) match {
@@ -4075,16 +3768,13 @@ object ChTranspiler {
     */
   private def rewriteOrderNulls(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val inserts = ArrayBuffer[(Int, String)]() // insert text BEFORE token idx
     var i = 0
     while (i < toks.length) {
-      val byIdx = nextSig(i + 1)
+      val byIdx = nextSig(toks, i + 1)
       if (isWordI(toks(i), "ORDER") && byIdx < toks.length &&
           isWordI(toks(byIdx), "BY")) {
-        var j = nextSig(byIdx + 1)
+        var j = nextSig(toks, byIdx + 1)
         var done = j >= toks.length
         while (!done) {
           var depth = 0
@@ -4124,7 +3814,7 @@ object ChTranspiler {
             inserts += ((lastSigIdx + 1,
               if (lastDesc) " NULLS FIRST" else " NULLS LAST"))
           if (!done) {
-            j = nextSig(itemEnd + 1) // past the comma
+            j = nextSig(toks, itemEnd + 1) // past the comma
             if (j >= toks.length) done = true
           }
         }
@@ -4154,21 +3844,7 @@ object ChTranspiler {
   private def rewriteWhereAliases(sql: String): String = {
     if (!"""(?i)\bas\b""".r.findFirstIn(sql).isDefined) return sql
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    def prevSig(j: Int): Int = {
-      var k = j - 1; while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1; k
-    }
-    val depth = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) {
-      toks(k) match {
-        case Punct("(") => depth(k) = d; d += 1
-        case Punct(")") => d -= 1; depth(k) = d
-        case _ => depth(k) = d
-      }
-    }
+    val depth = depths(toks)
     val clauseEnd = Set("GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
       "SETTINGS", "FORMAT", "WINDOW", "INTERSECT", "EXCEPT")
     val replacements = scala.collection.mutable.Map[Int, String]()
@@ -4214,7 +3890,7 @@ object ChTranspiler {
         var a = s + 1
         while (a < fromIdx) {
           if (isWordI(toks(a), "AS") && depth(a) == dS) {
-            val nIdx = nextSig(a + 1)
+            val nIdx = nextSig(toks, a + 1)
             toks.lift(nIdx) match {
               case Some(Word(name)) =>
                 var st = s + 1; var b = a - 1; var dd = 0; var brk = false
@@ -4264,8 +3940,8 @@ object ChTranspiler {
                     // column, never the alias
                     !(w >= aliases(x)._2 && w <= aliases(x)._3) &&
                     (!fwdOnly || aliases(x)._3 > w) =>
-                  val pv = toks.lift(prevSig(w))
-                  val nx = toks.lift(nextSig(w + 1))
+                  val pv = toks.lift(prevSig(toks, w - 1))
+                  val nx = toks.lift(nextSig(toks, w + 1))
                   val qualified = pv.contains(Punct(".")) ||
                     nx.contains(Punct("."))
                   val isCall = nx.contains(Punct("("))
@@ -4296,9 +3972,6 @@ object ChTranspiler {
     */
   private def rewriteInlineAliases(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSigIdx(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     // for every token index, the index of its enclosing "(" (-1 at top)
     val parent = new Array[Int](toks.length)
     // paren kind: true = expression parens (eligible), false = subquery/CAST
@@ -4308,10 +3981,9 @@ object ChTranspiler {
       parent(k) = stack.head
       toks(k) match {
         case Punct("(") =>
-          var prev = k - 1
-          while (prev >= 0 && toks(prev).isInstanceOf[Ws]) prev -= 1
+          val prev = prevSig(toks, k - 1)
           val prevIsCast = prev >= 0 && isWordI(toks(prev), "CAST")
-          val first = nextSigIdx(k + 1)
+          val first = nextSig(toks, k + 1)
           val isSubquery = first < toks.length &&
             (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
           eligible(k) = !prevIsCast && !isSubquery
@@ -4327,7 +3999,7 @@ object ChTranspiler {
     for (k <- toks.indices) {
       if (isWordI(toks(k), "AS") && parent(k) >= 0 &&
           eligible.getOrElse(parent(k), false)) {
-        val nIdx = nextSigIdx(k + 1)
+        val nIdx = nextSig(toks, k + 1)
         toks.lift(nIdx) match {
           case Some(Word(name)) =>
             // expr = tokens since the last same-depth comma (or the paren
@@ -4381,11 +4053,10 @@ object ChTranspiler {
       if (dropIdx(k)) ()
       else toks(k) match {
         case Word(w) if defs.contains(w) && !defSites(k) && {
-            val nxt = nextSigIdx(k + 1)
+            val nxt = nextSig(toks, k + 1)
             val nextIsParenOrDot = nxt < toks.length &&
               (toks(nxt) == Punct("(") || toks(nxt) == Punct("."))
-            var prv = k - 1
-            while (prv >= 0 && toks(prv).isInstanceOf[Ws]) prv -= 1
+            val prv = prevSig(toks, k - 1)
             val prevIsDot = prv >= 0 && toks(prv) == Punct(".")
             val prevIsAs = prv >= 0 && isWordI(toks(prv), "AS")
             !nextIsParenOrDot && !prevIsDot && !prevIsAs } =>
@@ -4403,9 +4074,6 @@ object ChTranspiler {
     */
   private def rewriteTupleLiterals(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSigIdx(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val prefix = ArrayBuffer[(Int, String)]() // "(" indexes to prefix with struct
     var stack = List[(Int, Boolean)]() // (openIdx, sawTopComma)
     val tupleAt = scala.collection.mutable.Set[Int]()
@@ -4428,9 +4096,7 @@ object ChTranspiler {
       }
       toks(k) match {
         case Punct("(") =>
-          var prv = k - 1
-          while (prv >= 0 && toks(prv).isInstanceOf[Ws]) prv -= 1
-          val prevTok = if (prv >= 0) Some(toks(prv)) else None
+          val prevTok = toks.lift(prevSig(toks, k - 1))
           val callLike = prevTok.exists {
             case Word(w) => !Set("SELECT", "WHERE", "AND", "OR", "NOT", "IN",
               "BY", "ON", "WHEN", "THEN", "ELSE", "HAVING", "FROM", "AS",
@@ -4454,7 +4120,7 @@ object ChTranspiler {
             setsDepth += stack.length + 1
           }
           val inSetsList = setsDepth.contains(stack.length)
-          val first = nextSigIdx(k + 1)
+          val first = nextSig(toks, k + 1)
           val isSubquery = first < toks.length &&
             (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
           stack = (k, false) :: stack
@@ -4470,7 +4136,7 @@ object ChTranspiler {
               // `(x, y) -> …` is a lambda PARAMETER LIST (arrayMap,
               // arraySplit, …), not a tuple literal; "->" tokenizes as
               // two adjacent single-char puncts
-              val nxt = nextSigIdx(k + 1)
+              val nxt = nextSig(toks, k + 1)
               if (nxt + 1 < toks.length && toks(nxt).text == "-" &&
                   toks(nxt + 1).text == ">")
                 tupleAt -= openIdx
@@ -4500,19 +4166,16 @@ object ChTranspiler {
     */
   private def rewriteInClauses(sql: String): String = {
     val toks = tokenize(sql)
-    def nextSigIdx(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
     val dropWord = scala.collection.mutable.Set[Int]()
     // `x IN <literal>` (scalar right side = equality in CH,
     // FunctionsComparison in-with-scalar) needs Spark's parens
     val parenAt = scala.collection.mutable.Set[Int]()
     for (k <- toks.indices) {
       if (isWordI(toks(k), "IN")) {
-        val f = nextSigIdx(k + 1)
+        val f = nextSig(toks, k + 1)
         if (f < toks.length && (toks(f) match {
           case Word(w) => (w == "array" || w == "tuple") && {
-            val p = nextSigIdx(f + 1)
+            val p = nextSig(toks, f + 1)
             p < toks.length && toks(p) == Punct("(")
           }
           case _ => false
@@ -4533,9 +4196,9 @@ object ChTranspiler {
     val overrideTok = scala.collection.mutable.Map[Int, String]()
     for (k <- toks.indices) {
       if (isWordI(toks(k), "IN")) {
-        val f = nextSigIdx(k + 1)
+        val f = nextSig(toks, k + 1)
         if (f < toks.length && toks(f) == Punct("(") && {
-          val h = nextSigIdx(f + 1)
+          val h = nextSig(toks, f + 1)
           h < toks.length && !isWordI(toks(h), "SELECT") &&
             !isWordI(toks(h), "WITH")
         }) {
@@ -4630,9 +4293,6 @@ object ChTranspiler {
     if (nestedGroups.isEmpty ||
         !nestedGroups.keys.exists(g => sql.contains(g))) return sql
     var toks = tokenize(sql)
-    def nextSig(ts: Vector[Tok], j: Int): Int = {
-      var k = j; while (k < ts.length && ts(k).isInstanceOf[Ws]) k += 1; k
-    }
     // ---- (a) ARRAY JOIN bare-group expansion -------------------------
     val aliasMap = scala.collection.mutable.Map[String, String]()
     val sb = new StringBuilder
@@ -4693,11 +4353,7 @@ object ChTranspiler {
       toks(i) match {
         case Word(p) if subsOf(p).isDefined && {
           // not itself qualified (db.nest.x) and followed by `.sub`
-          val prev = {
-            var k = i - 1
-            while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1
-            if (k >= 0) Some(toks(k)) else None
-          }
+          val prev = toks.lift(prevSig(toks, i - 1))
           !prev.contains(Punct(".")) && i + 2 < toks.length &&
             toks(i + 1) == Punct(".") && (toks(i + 2) match {
               case Word(s) => subsOf(p).get.contains(s)
@@ -4730,34 +4386,20 @@ object ChTranspiler {
 
   private def rewriteOneArrayJoin(sql: String): Option[String] = {
     val toks = tokenize(sql)
-    def nextSig(j: Int): Int = {
-      var k = j; while (k < toks.length && toks(k).isInstanceOf[Ws]) k += 1; k
-    }
-    def prevSig(j: Int): Int = {
-      var k = j; while (k >= 0 && toks(k).isInstanceOf[Ws]) k -= 1; k
-    }
     // depth of every token, for locating the owning FROM
-    val depthAt = new Array[Int](toks.length)
-    var d = 0
-    for (k <- toks.indices) {
-      toks(k) match {
-        case Punct("(") => depthAt(k) = d; d += 1
-        case Punct(")") => d -= 1; depthAt(k) = d
-        case _ => depthAt(k) = d
-      }
-    }
+    val depthAt = depths(toks)
     var i = 0
     while (i < toks.length) {
-      val jIdx = nextSig(i + 1)
+      val jIdx = nextSig(toks, i + 1)
       if (isWordI(toks(i), "ARRAY") && jIdx < toks.length &&
           isWordI(toks(jIdx), "JOIN")) {
-        val pIdx = prevSig(i - 1)
+        val pIdx = prevSig(toks, i - 1)
         val leftOuter = pIdx >= 0 && isWordI(toks(pIdx), "LEFT")
         val startIdx = if (leftOuter) pIdx else i
         val myDepth = depthAt(i)
         // ---- parse items ----
         val items = ArrayBuffer[AjItem]()
-        var j = nextSig(jIdx + 1)
+        var j = nextSig(toks, jIdx + 1)
         var endIdx = -1
         var cur = ArrayBuffer[Tok]()
         var depth = 0
@@ -4808,9 +4450,9 @@ object ChTranspiler {
           (0 until limit).reverse
             .find(k => depthAt(k) == myDepth && isWordI(toks(k), "SELECT"))
             .foreach { si =>
-              var j = nextSig(si + 1)
+              var j = nextSig(toks, si + 1)
               if (j < toks.length && isWordI(toks(j), "DISTINCT"))
-                j = nextSig(j + 1)
+                j = nextSig(toks, j + 1)
               if (j < toks.length && toks(j) == Punct("*"))
                 overrides += j -> s"* EXCEPT (${hidden.mkString(", ")})"
             }
@@ -4829,7 +4471,7 @@ object ChTranspiler {
             if (!isBareIdent(id) || fromIdx < 0)
               return None
             hideFromStar(Seq(s"__aj_in$n"))
-            val src = text(nextSig(fromIdx + 1), startIdx)
+            val src = text(nextSig(toks, fromIdx + 1), startIdx)
             if (id.head == '`') {
               // LATERAL VIEW column aliases keep backticks literally —
               // alias clean and rewrite the references instead
@@ -4921,15 +4563,10 @@ object ChTranspiler {
     */
   private def substIdents(sql: String, map: Map[String, String]): String = {
     val toks = tokenize(sql)
-    def sigAt(j: Int, dir: Int): Option[Tok] = {
-      var k = j + dir
-      while (k >= 0 && k < toks.length && toks(k).isInstanceOf[Ws]) k += dir
-      if (k >= 0 && k < toks.length) Some(toks(k)) else None
-    }
     toks.zipWithIndex.map {
       case (Word(w), idx) if map.contains(w) &&
-          !sigAt(idx, -1).contains(Punct(".")) &&
-          !sigAt(idx, +1).contains(Punct(".")) => map(w)
+          !toks.lift(prevSig(toks, idx - 1)).contains(Punct(".")) &&
+          !toks.lift(nextSig(toks, idx + 1)).contains(Punct(".")) => map(w)
       case (t, _) => t.text
     }.mkString
   }

@@ -189,14 +189,6 @@ object Dictionaries {
     d
   }
 
-  /** Attribute type, consulted by the dialect builder at plan build time
-    * (the reference reads the same thing from the dictionary DDL).
-    */
-  def attrType(name: String, attr: String): DataType = {
-    val d = dict(name)
-    if (d.complex) d.cattrMap(attr)._1 else d.attrMap(attr)._1
-  }
-
   // --- executor-side walk helpers (called from eval and codegen; the
   //     maps arrive as expression fields / codegen reference objects) ---
 

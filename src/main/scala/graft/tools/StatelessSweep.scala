@@ -718,18 +718,13 @@ object StatelessSweep {
     // groups by the constant 1 (one group), matching these off
     "spark.sql.groupByOrdinal" -> "false",
     "spark.sql.orderByOrdinal" -> "false",
-    // CH default join_use_nulls=0: outer joins pad with type defaults
-    graft.sql.ChJoinDefaults.Flag -> "true",
-    // CH ROLLUP/CUBE sub-total keys are type defaults, not NULLs
-    graft.sql.ChRollupDefaults.Flag -> "true",
+    // CH join padding, ROLLUP keys, IEEE `/` and ALL set operations
+    // (every rule the flag's scaladoc lists)
+    graft.sql.ChCoercions.CorpusFlag -> "true",
     // CH map columns tolerate duplicate keys (last write wins)
     "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
     // CH double-quoted tokens are IDENTIFIERS ("col" = `col`)
-    "spark.sql.ansi.doubleQuotedIdentifiers" -> "true",
-    // CH `/` is IEEE Float64 division (1/0 = inf), never an ANSI error
-    graft.sql.ChCoercions.IeeeDivFlag -> "true",
-    // CH INTERSECT/EXCEPT ALL = semi/anti filters (ChCoercions)
-    graft.sql.ChCoercions.SetOpsAllFlag -> "true")
+    "spark.sql.ansi.doubleQuotedIdentifiers" -> "true")
 
   /** Give `spark` the corpus semantics: [[corpusConfs]], session zone
     * `tz` and the strict dialect registry, whose overrides replace the

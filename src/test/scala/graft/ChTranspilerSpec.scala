@@ -1,6 +1,10 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths}
 import graft.sql.{ChFormat, ChTranspiler}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit pins for the ClickHouse-syntax transpiler and the TabSeparated
@@ -55,8 +59,8 @@ class ChTranspilerSpec extends AnyFunSuite {
   }
 
   test("statement splitting respects string literals and comments") {
-    val stmts = ChTranspiler.statements(
-      "SELECT 'a;b'; -- c;\nSELECT 2; /* x; */ SELECT 3")
+    val stmts = ChTranspiler.statementsRawAll(
+      "SELECT 'a;b'; -- c;\nSELECT 2; /* x; */ SELECT 3").map(_._2).filter(_.nonEmpty)
     assert(stmts == Seq("SELECT 'a;b'", "SELECT 2", "SELECT 3"))
   }
 
@@ -147,8 +151,8 @@ class ChTranspilerSpec extends AnyFunSuite {
   }
 
   test("statementsRaw keeps the raw text for clickhouse-test echo mode") {
-    val raws = ChTranspiler.statementsRaw(
-      "select 1;\n-- { echo }\nselect 2;")
+    val raws = ChTranspiler.statementsRawAll(
+      "select 1;\n-- { echo }\nselect 2;").filter(_._2.nonEmpty)
     assert(raws.map(_._2) == Seq("select 1", "select 2"))
     assert(raws(1)._1 == "-- { echo }\nselect 2;")
   }
@@ -265,5 +269,89 @@ class ChTranspilerSpec extends AnyFunSuite {
     val s = t("SELECT f(g('x' AS a) AS b) AS c, b = a")
     assert(!s.matches("(?is).*\\(\\s*g\\('x' AS a\\)\\s*\\).*"), s)
     assert(s.contains("(g('x')) = ('x')"), s)
+  }
+
+  private def read(f: File): String =
+    if (f.exists) Files.readString(f.toPath).stripSuffix("\n") else ""
+
+  /** Runs `f` with `graft.ch.dialect` set: on the thread's active session
+    * when there is one (its conf wins over any other), else on a private
+    * conf.
+    */
+  private def withDialect[T](dialect: String)(f: => T): T = {
+    val key = "graft.ch.dialect"
+    SparkSession.getActiveSession match {
+      case Some(s) =>
+        val old = s.conf.getOption(key)
+        s.conf.set(key, dialect)
+        try f finally old.fold(s.conf.unset(key))(s.conf.set(key, _))
+      case None =>
+        val conf = new SQLConf
+        conf.setConfString(key, dialect)
+        SQLConf.withExistingConf(conf)(f)
+    }
+  }
+
+  /** One golden case: `<pass>[_<variant>]` names the rewrite pass the
+    * input exercises and picks the public entry point that reaches it
+    * (`transpile` unless named otherwise); `<name>.err` holds the error
+    * text for the retry entry points.
+    */
+  private def goldenRun(name: String, in: String, err: String): String = {
+    val res: Any = try withDialect(if (name == "mysqlPasses") "MYSQL" else "CLICKHOUSE") {
+      name.takeWhile(_ != '_') match {
+        case "widenIntLiterals" => ChTranspiler.transpile(in, true)
+        case "rewriteNestedCols" =>
+          ChTranspiler.registerNestedGroup("gnest", Seq("x", "y"))
+          ChTranspiler.transpile(in)
+        case "statementsRawAll" => ChTranspiler.statementsRawAll(in)
+        case "splitTotals" => ChTranspiler.splitTotals(in)
+        case "splitJoinTotals" => ChTranspiler.splitJoinTotals(in)
+        case "stripWithFill" => ChTranspiler.stripWithFill(in)
+        case "inlineSelectAliases" => ChTranspiler.inlineSelectAliases(in)
+        case "disambiguateAt" => ChTranspiler.disambiguateAt(in, err)
+        case "disambiguate" => ChTranspiler.disambiguate(in, err)
+        case "fixUsingAlias" => ChTranspiler.fixUsingAlias(in, err)
+        case _ => ChTranspiler.transpile(in)
+      }
+    } catch { case e: Exception => s"EXCEPTION ${e.getClass.getName}: ${e.getMessage}" }
+    String.valueOf(res)
+  }
+
+  test("every rewrite pass reproduces its golden output byte for byte") {
+    val dir = new File(getClass.getResource("/transpile").toURI)
+    val cases = dir.listFiles.filter(_.getName.endsWith(".sql")).sortBy(_.getName)
+    assert(cases.length >= 50, cases.length)
+    val diffs = cases.toSeq.flatMap { f =>
+      val name = f.getName.stripSuffix(".sql")
+      val got = goldenRun(name, read(f), read(new File(dir, name + ".err")))
+      val want = read(new File(dir, name + ".expected"))
+      if (got == want) None else Some(s"$name\n  want: $want\n  got:  $got")
+    }
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+  }
+
+  test("ChTranspiler keeps one copy of each lexical helper") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/sql/ChTranspiler.scala"))
+    def defs(name: String) = s"\\bdef $name\\(".r.findAllIn(src).size
+    val counts = Seq("nextSig", "prevSig", "matchClose", "balancedClose", "balancedOpen")
+      .map(n => n -> defs(n)).filter(_._2 != 1)
+    assert(counts.isEmpty, s"cursor helpers not defined exactly once: $counts")
+    val retired = Seq("nextSigIdx", "nonWs", "nextNonWs", "prevNonWs")
+      .map(n => n -> defs(n)).filter(_._2 > 0)
+    assert(retired.isEmpty, s"local whitespace cursors are back: $retired")
+    // a hand-rolled paren-depth or parent-index walk over a token vector
+    // belongs in `depths` / `parents` only
+    def body(name: String): (Int, Int) = {
+      val start = src.indexOf(s"private def $name(")
+      assert(start >= 0, name)
+      (start, src.indexOf("\n  }\n", start))
+    }
+    val homes = Seq(body("depths"), body("parents"))
+    val walk = ("""case Punct\("\("\) => \w+\(\w+\) = (\w+); \1 \+= 1""" +
+      """|case Punct\("\)"\) => stack = stack\.drop\(1\); \w+\(\w+\) = stack\.head""").r
+    val strays = walk.findAllMatchIn(src).map(_.start)
+      .filterNot(p => homes.exists { case (a, b) => p > a && p < b }).toList
+    assert(strays.isEmpty, s"depth/parent walks outside depths/parents at offsets $strays")
   }
 }

@@ -7,7 +7,7 @@ import scala.util.Random
   * layout-dependent granularity>1 path that the oracle query can't pin)
   * and the -Stack combinator's cumulative prefixes.
   */
-class CoverageWave9Spec extends SparkSpec {
+class CountByGranularitySpec extends SparkSpec {
   import spark.implicits._
 
   test("countByGranularity counts once per granule on a single stream") {

@@ -18,10 +18,8 @@ class SessionIsolationSpec extends SparkSpec {
     // the shared test session IS a library-shaped session (graft
     // extensions, no corpus shims)
     val conf = spark.conf
-    assert(conf.getOption(graft.sql.ChJoinDefaults.Flag).forall(_ != "true"),
-      "ChJoinDefaults.Flag must not be set in a library session")
-    assert(conf.getOption(graft.sql.ChCoercions.IeeeDivFlag).forall(_ != "true"),
-      "ChCoercions.IeeeDivFlag must not be set in a library session")
+    assert(conf.getOption(graft.sql.ChCoercions.CorpusFlag).forall(_ != "true"),
+      "ChCoercions.CorpusFlag must not be set in a library session")
     assert(conf.get("spark.sql.groupByOrdinal") == "true",
       "library sessions keep standard GROUP BY ordinals")
     assert(conf.get("spark.sql.orderByOrdinal") == "true",
@@ -51,15 +49,13 @@ class SessionIsolationSpec extends SparkSpec {
       .head.getSeq[Int](0) == Seq(1, 2, 3))
     // the parent observes none of it
     assert(spark.conf.getAll == parentBefore)
-    assert(spark.conf.getOption(graft.sql.ChJoinDefaults.Flag)
-      .forall(_ != "true"))
-    assert(spark.conf.getOption(graft.sql.ChCoercions.IeeeDivFlag)
+    assert(spark.conf.getOption(graft.sql.ChCoercions.CorpusFlag)
       .forall(_ != "true"))
     assert(spark.conf.get("spark.sql.groupByOrdinal") == "true")
     assert(scalar(spark, "SELECT length('ü')") == 1)
     // nor does a sibling session
     val fresh = spark.newSession()
-    assert(fresh.conf.getOption(graft.sql.ChJoinDefaults.Flag)
+    assert(fresh.conf.getOption(graft.sql.ChCoercions.CorpusFlag)
       .forall(_ != "true"))
     assert(fresh.conf.get("spark.sql.orderByOrdinal") == "true")
   }
