@@ -23,17 +23,21 @@ object Engine {
     * default keeps Spark's 100: 2000 entries cost an ad-hoc workload 21%
     * more retained heap for fewer compiles.
     *
-    * Per-session artifact isolation is off ([[sharedCodegenConf]]). The
-    * engine adds no session jars or files, so isolation only gave every
-    * session — each `newSession()` child, i.e. every ad-hoc client and
-    * every corpus file — its own executor class loader, and with it its
-    * own copy of every compiled class. Turning it back on would cost
+    * Every session also carries [[sharedConf]]. Per-session artifact
+    * isolation is off: the engine adds no session jars or files, so
+    * isolation only gave every session — each `newSession()` child, i.e.
+    * every ad-hoc client and every corpus file — its own executor class
+    * loader, and with it its own copy of every compiled class. Turning
+    * it back on would cost
     * about 9% of the ad-hoc workload's median query latency (perfbench
     * `adhoc_inventory`, 4 vCPUs): each new session recompiles what the
     * JVM already holds, its copies crowd the codegen cache, and Janino's
     * missed class lookups on task threads go through an RPC class fetch
     * from the driver. The price of sharing: a jar or file added to one
     * session (`addArtifact`, `ADD JAR`) would be seen by all of them.
+    * And `file:` paths go through [[graft.sources.LocalFiles]], which
+    * answers Hadoop's per-file `chmod` and `readlink` without starting a
+    * process (40 per streaming trigger on the stream thread alone).
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
               codegenCacheEntries: Int = 100): SparkSession = {
@@ -51,24 +55,34 @@ object Engine {
       // must surface as TimestampType, not NTZ — see Tables.apply.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
-      .config(sharedCodegenConf)
+      .config(sharedConf)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 
-  /** Spark's per-session artifact isolation, off, so every session of the
-    * JVM shares one compiled class per generated source. Spark keys its
-    * compiled-class cache (`CodeGenerator.compile`) on the thread's
-    * context class loader as well as the source; with isolation on (the
-    * default), each session's jobs carry its own `JobArtifactState`, so
-    * their tasks run under a per-session executor class loader and miss
-    * every class another session compiled. Child sessions (`newSession()`)
-    * inherit the setting from the factory's SparkContext. The one
-    * compiled-expression cache per server process, shared by every
-    * session, is the reference's behaviour too.
+  /** The settings every session of the JVM shares, applied by each
+    * session factory and the test session alike:
+    *
+    *  - Spark's per-session artifact isolation, off, so every session
+    *    shares one compiled class per generated source. Spark keys its
+    *    compiled-class cache (`CodeGenerator.compile`) on the thread's
+    *    context class loader as well as the source; with isolation on (the
+    *    default), each session's jobs carry its own `JobArtifactState`, so
+    *    their tasks run under a per-session executor class loader and miss
+    *    every class another session compiled. The one compiled-expression
+    *    cache per server process, shared by every session, is the
+    *    reference's behaviour too.
+    *  - [[graft.sources.LocalFiles.conf]]: graft's fork-free classes serve
+    *    `file:` for the FileSystem and FileContext APIs.
+    *
+    * Child sessions (`newSession()`) inherit both from the factory's
+    * SparkContext. Hadoop caches its FileSystem per scheme whatever the
+    * conf, so the first session of a JVM decides which class serves
+    * `file:`.
     */
-  val sharedCodegenConf: Map[String, String] =
-    Map(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
+  val sharedConf: Map[String, String] =
+    Map(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false") ++
+      graft.sources.LocalFiles.conf
 
   /** Install the engine's udfs ([[GraftExtensions.udfs]]) into a session
     * that was built without [[GraftExtensions]], skipping every name the

@@ -238,17 +238,30 @@ object ChTranspiler {
   }
 
   /** Index of every token's enclosing `(` (-1 at top level); a `(` and
-    * its `)` both map to the paren enclosing them.
+    * its `)` both map to the paren enclosing them. A `)` that closes
+    * nothing stays at top level.
     */
   private def parents(ts: Vector[Tok]): Array[Int] = {
     val parent = new Array[Int](ts.length)
     var stack = List(-1)
     for (k <- ts.indices) ts(k) match {
       case Punct("(") => parent(k) = stack.head; stack = k :: stack
-      case Punct(")") => stack = stack.drop(1); parent(k) = stack.head
+      case Punct(")") => stack = closeParen(stack); parent(k) = stack.head
       case _ => parent(k) = stack.head
     }
     parent
+  }
+
+  /** A paren stack (innermost `(` first, over a -1 top-level sentinel)
+    * after a `)`: a stray `)` leaves the sentinel in place.
+    */
+  private def closeParen(stack: List[Int]): List[Int] =
+    if (stack.tail.isEmpty) stack else stack.tail
+
+  /** True when some `)` closes no `(`. */
+  private def hasStrayClose(ts: Vector[Tok]): Boolean = {
+    val depth = depths(ts)
+    ts.indices.exists(k => depth(k) < 0 && ts(k) == Punct(")"))
   }
 
   /** True when a `[` following `prev` opens an array LITERAL (otherwise
@@ -1770,6 +1783,9 @@ object ChTranspiler {
       }
       i += 1
     }
+    // a `)` that closes nothing: no pass below can make sense of the
+    // statement, so Spark's parser gets it as written and reports it
+    if (hasStrayClose(tokenize(out.toString))) return stmt
     val sqlOut = rewriteBareSetOps(rewriteAnyJoin(rewriteLimitBy(guardSelectStringHead(
     rewriteOrderNulls(rewriteCollate(rewriteNestedArrayJoinDeep(rewriteArrayJoin(rewriteInClauses(
       rewriteNestedCols(rewriteTupleLiterals(rewriteUnionBranches(rewriteParenLambda(rewriteTernary(rewriteWhereAliases(rewriteInlineAliases(
@@ -2355,8 +2371,9 @@ object ChTranspiler {
     val drop = ArrayBuffer[(Int, Int)]()
     var i = 0
     while (i < toks.length) {
+      // (a WITH that ends the statement is no fill; it passes through)
       if (depthAt(i) == 0 && isWordI(toks(i), "WITH") &&
-          isWordI(toks(nextSig(toks, i + 1)), "FILL")) {
+          toks.lift(nextSig(toks, i + 1)).exists(isWordI(_, "FILL"))) {
         // walk back to the item start (comma / BY at depth 0)
         var s = i - 1
         var itemStart = 0
@@ -3118,81 +3135,21 @@ object ChTranspiler {
     * syntax error. Wrap every branch of a union whose region carries a
     * branch-level LIMIT/ORDER in parentheses — same semantics in both
     * readings. */
-  private def rewriteUnionBranches(sql: String): String = {
-    if (!"""(?i)\bunion\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
-    // region id = index of enclosing '(' (-1 = top level)
-    val parent = parents(toks)
-    val unions = scala.collection.mutable.Map[Int, Vector[Int]]()
-    val hasMod = scala.collection.mutable.Set[Int]()
-    for (k <- toks.indices) toks(k) match {
-      case Word(w) if w.equalsIgnoreCase("UNION") =>
-        unions(parent(k)) = unions.getOrElse(parent(k), Vector()) :+ k
-      case Word(w) if w.equalsIgnoreCase("LIMIT") ||
-          w.equalsIgnoreCase("ORDER") =>
-        hasMod += parent(k)
-      case _ => ()
-    }
-    // every union's branches get parenthesized: ClickHouse binds
-    // ORDER BY / LIMIT (before OR after the last UNION — 00098) and
-    // arrayJoin scope (00371/00384) to the individual SELECT, where
-    // Spark would either reject the syntax or apply them to the whole
-    // union; with no modifiers the parens are identity. Skip regions
-    // already wrapped (every branch starts with '(').
-    // a WITH prologue binds CTEs for EVERY branch — it must stay
-    // outside the first branch's parens (40054/40089/48016), so
-    // branch 1 starts at the region-level SELECT after it
-    def firstBranchStart(r: Int, us: Vector[Int]): Int = {
-      val s0 = nextSig(toks, if (r < 0) 0 else r + 1)
-      if (toks.lift(s0).exists(isWordI(_, "WITH"))) {
-        // the branch is the first depth-0 SELECT, or a depth-0 '('
-        // not preceded by AS (CTE bodies are `name AS ( … )`; an
-        // already-wrapped branch is a bare '(' — recursion pass 2)
-        var k = s0 + 1
-        var d = 0
-        var sel = -1
-        var lastSig: Tok = Word("WITH")
-        while (k < us.head && sel < 0) {
-          toks(k) match {
-            case Punct("(") =>
-              if (d == 0 && !isWordI(lastSig, "AS")) sel = k
-              d += 1; lastSig = Punct("(")
-            case Punct(")") => d -= 1; lastSig = Punct(")")
-            case Word(w) if d == 0 && w.equalsIgnoreCase("SELECT") =>
-              sel = k
-            case _: Ws => ()
-            case t => lastSig = t
-          }
-          k += 1
-        }
-        if (sel >= 0) sel else s0
-      } else s0
-    }
-    val target = unions.keys.find { r =>
-      val us = unions(r)
-      // mixed set operators at the same depth keep left-assoc
-      // precedence — wrapping on UNION boundaries alone would regroup
-      val mixed = toks.indices.exists(k => parent(k) == r && (toks(k) match {
-        case Word(w) => w.equalsIgnoreCase("INTERSECT") ||
-          w.equalsIgnoreCase("EXCEPT")
-        case _ => false
-      }))
-      val regionStart0 = firstBranchStart(r, us)
-      val starts = regionStart0 +: us.map { u =>
-        val a = nextSig(toks, u + 1)
-        toks.lift(a) match {
-          case Some(Word(w)) if w.equalsIgnoreCase("ALL") ||
-              w.equalsIgnoreCase("DISTINCT") => nextSig(toks, a + 1)
-          case _ => a
-        }
-      }
-      !mixed && !starts.forall(s0 => toks.lift(s0).contains(Punct("(")))
-    }
-    target match {
+  private def rewriteUnionBranches(sql: String): String =
+    if (!"""(?i)\bunion\b""".r.findFirstIn(sql).isDefined) sql
+    else wrapUnionBranches(sql, unionRegions(sql))
+
+  /** One wrap of [[rewriteUnionBranches]]: the first pending region of
+    * `regions` (`sql`'s [[unionRegions]]), then the next.
+    */
+  private def wrapUnionBranches(sql: String,
+      regions: (Vector[Tok], scala.collection.Map[Int, Vector[Int]], Seq[Int])): String = {
+    val (toks, unions, pending) = regions
+    pending.headOption match {
       case None => sql
       case Some(r) =>
         val us = unions(r)
-        val regionStart = firstBranchStart(r, us)
+        val regionStart = firstBranchStart(toks, r, us)
         val regionEnd = if (r < 0) toks.length else {
           // matching close of r
           var d = 0; var j = r; var e = toks.length
@@ -3227,8 +3184,90 @@ object ChTranspiler {
             sb.append(toks(k).text)
           }
         }
-        rewriteUnionBranches(sb.toString)
+        val wrapped = sb.toString
+        val next = unionRegions(wrapped)
+        // a re-wrap that leaves as many regions to wrap made no progress
+        // (an empty branch, as in `( UNION ALL …`, re-wraps forever):
+        // hand the statement on unchanged for Spark's parser to reject
+        if (next._3.size < pending.size) wrapUnionBranches(wrapped, next)
+        else sql
     }
+  }
+
+  /** The tokens of `sql`, the UNIONs of each region (region id = index
+    * of the enclosing '(', -1 = top level) and, in the regions' map
+    * order, the regions whose branches [[rewriteUnionBranches]] still
+    * wraps in parentheses.
+    */
+  private def unionRegions(sql: String)
+      : (Vector[Tok], scala.collection.Map[Int, Vector[Int]], Seq[Int]) = {
+    val toks = tokenize(sql)
+    val parent = parents(toks)
+    val unions = scala.collection.mutable.Map[Int, Vector[Int]]()
+    for (k <- toks.indices) toks(k) match {
+      case Word(w) if w.equalsIgnoreCase("UNION") =>
+        unions(parent(k)) = unions.getOrElse(parent(k), Vector()) :+ k
+      case _ => ()
+    }
+    // every union's branches get parenthesized: ClickHouse binds
+    // ORDER BY / LIMIT (before OR after the last UNION — 00098) and
+    // arrayJoin scope (00371/00384) to the individual SELECT, where
+    // Spark would either reject the syntax or apply them to the whole
+    // union; with no modifiers the parens are identity. Skip regions
+    // already wrapped (every branch starts with '(').
+    val pending = unions.keys.filter { r =>
+      val us = unions(r)
+      // mixed set operators at the same depth keep left-assoc
+      // precedence — wrapping on UNION boundaries alone would regroup
+      val mixed = toks.indices.exists(k => parent(k) == r && (toks(k) match {
+        case Word(w) => w.equalsIgnoreCase("INTERSECT") ||
+          w.equalsIgnoreCase("EXCEPT")
+        case _ => false
+      }))
+      val regionStart0 = firstBranchStart(toks, r, us)
+      val starts = regionStart0 +: us.map { u =>
+        val a = nextSig(toks, u + 1)
+        toks.lift(a) match {
+          case Some(Word(w)) if w.equalsIgnoreCase("ALL") ||
+              w.equalsIgnoreCase("DISTINCT") => nextSig(toks, a + 1)
+          case _ => a
+        }
+      }
+      !mixed && !starts.forall(s0 => toks.lift(s0).contains(Punct("(")))
+    }.toSeq
+    (toks, unions, pending)
+  }
+
+  /** Where the first branch of union region `r` (UNIONs at `us`)
+    * starts. A WITH prologue binds CTEs for EVERY branch — it must stay
+    * outside the first branch's parens (40054/40089/48016), so branch 1
+    * starts at the region-level SELECT after it.
+    */
+  private def firstBranchStart(toks: Vector[Tok], r: Int, us: Vector[Int]): Int = {
+    val s0 = nextSig(toks, if (r < 0) 0 else r + 1)
+    if (toks.lift(s0).exists(isWordI(_, "WITH"))) {
+      // the branch is the first depth-0 SELECT, or a depth-0 '('
+      // not preceded by AS (CTE bodies are `name AS ( … )`; an
+      // already-wrapped branch is a bare '(' — recursion pass 2)
+      var k = s0 + 1
+      var d = 0
+      var sel = -1
+      var lastSig: Tok = Word("WITH")
+      while (k < us.head && sel < 0) {
+        toks(k) match {
+          case Punct("(") =>
+            if (d == 0 && !isWordI(lastSig, "AS")) sel = k
+            d += 1; lastSig = Punct("(")
+          case Punct(")") => d -= 1; lastSig = Punct(")")
+          case Word(w) if d == 0 && w.equalsIgnoreCase("SELECT") =>
+            sel = k
+          case _: Ws => ()
+          case t => lastSig = t
+        }
+        k += 1
+      }
+      if (sel >= 0) sel else s0
+    } else s0
   }
 
   /** `(x) -> body` → `x -> body`: ClickHouse allows a parenthesized
@@ -3988,7 +4027,7 @@ object ChTranspiler {
             (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
           eligible(k) = !prevIsCast && !isSubquery
           stack = k :: stack
-        case Punct(")") => stack = stack.drop(1)
+        case Punct(")") => stack = closeParen(stack)
         case _ => ()
       }
     }

@@ -744,7 +744,7 @@ object StatelessSweep {
       .master("local[8]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config(graft.Engine.sharedCodegenConf)
+      .config(graft.Engine.sharedConf)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -318,13 +318,26 @@ class ChTranspilerSpec extends AnyFunSuite {
     String.valueOf(res)
   }
 
+  /** `body` on a daemon thread, or "TIMEOUT" when it runs past
+    * `seconds`: a pass that never terminates fails its case instead of
+    * hanging the suite (the thread is left to spin).
+    */
+  private def bounded(seconds: Int)(body: => String): String = {
+    val result = new java.util.concurrent.FutureTask[String](() => body)
+    val thread = new Thread(result, "golden-case")
+    thread.setDaemon(true)
+    thread.start()
+    try result.get(seconds.toLong, java.util.concurrent.TimeUnit.SECONDS)
+    catch { case _: java.util.concurrent.TimeoutException => s"TIMEOUT after $seconds s" }
+  }
+
   test("every rewrite pass reproduces its golden output byte for byte") {
     val dir = new File(getClass.getResource("/transpile").toURI)
     val cases = dir.listFiles.filter(_.getName.endsWith(".sql")).sortBy(_.getName)
     assert(cases.length >= 50, cases.length)
     val diffs = cases.toSeq.flatMap { f =>
       val name = f.getName.stripSuffix(".sql")
-      val got = goldenRun(name, read(f), read(new File(dir, name + ".err")))
+      val got = bounded(20)(goldenRun(name, read(f), read(new File(dir, name + ".err"))))
       val want = read(new File(dir, name + ".expected"))
       if (got == want) None else Some(s"$name\n  want: $want\n  got:  $got")
     }
@@ -349,7 +362,8 @@ class ChTranspilerSpec extends AnyFunSuite {
     }
     val homes = Seq(body("depths"), body("parents"))
     val walk = ("""case Punct\("\("\) => \w+\(\w+\) = (\w+); \1 \+= 1""" +
-      """|case Punct\("\)"\) => stack = stack\.drop\(1\); \w+\(\w+\) = stack\.head""").r
+      """|case Punct\("\)"\) => stack = (stack\.drop\(1\)|closeParen\(stack\)); """ +
+      """\w+\(\w+\) = stack\.head""").r
     val strays = walk.findAllMatchIn(src).map(_.start)
       .filterNot(p => homes.exists { case (a, b) => p > a && p < b }).toList
     assert(strays.isEmpty, s"depth/parent walks outside depths/parents at offsets $strays")

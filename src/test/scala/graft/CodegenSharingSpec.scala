@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.sum
   * keys its compiled-class cache on the task thread's class loader; with
   * per-session artifact isolation on, every `newSession()` child runs its
   * tasks under its own loader and recompiles what a sibling compiled.
-  * [[Engine.sharedCodegenConf]] turns that off in every session factory,
-  * the test session included.
+  * [[Engine.sharedConf]] turns that off in every session factory, the
+  * test session included.
   */
 class CodegenSharingSpec extends SparkSpec {
 

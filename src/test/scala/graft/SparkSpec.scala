@@ -22,7 +22,7 @@ object SparkSpec {
     // Tz-less parquet timestamps (one observed testdata regeneration)
     // must surface as TimestampType, not NTZ — see Tables.apply.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config(Engine.sharedCodegenConf)
+    .config(Engine.sharedConf)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
