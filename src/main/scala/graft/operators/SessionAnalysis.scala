@@ -67,7 +67,12 @@ object SessionAnalysis {
       // layer 2 is the two running session-start carriers.
       .withColumn("__brk",
         when(prev.isNull || col("__us") - prev >= gapUs, 1).otherwise(0))
-      .withColumn("__end", nxt.isNull || nxt - col("__us") >= gapUs)
+      // A row without a timestamp is a session of its own (duration and
+      // session_time null, depth 1): nulls sort first, so it breaks
+      // (lag is null) and ends here, or the `>=` would be null and the
+      // filter would drop it.
+      .withColumn("__end",
+        nxt.isNull || col("__us").isNull || nxt - col("__us") >= gapUs)
       .withColumn("__rn", row_number().over(w))
       .withColumn("__sus", startOf(col("__us")))
       .withColumn("__srn", startOf(col("__rn")))

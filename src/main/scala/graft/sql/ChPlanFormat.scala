@@ -74,7 +74,7 @@ object ChPlanFormat {
     val t = lookup(tableName.replaceAll("`", "")).getOrElse(return None)
 
     // ---- select items: aggregate calls only
-    val items = ChSession.splitTop(itemsTxt).map(_.trim).filter(_.nonEmpty)
+    val items = ChLex.splitTop(itemsTxt).map(_.trim).filter(_.nonEmpty)
     val aggs = items.map { it =>
       val am = """(?is)^(\w+)\s*\((.*)\)$""".r.findFirstMatchIn(it)
         .getOrElse(return None)
@@ -91,7 +91,7 @@ object ChPlanFormat {
           .map(_.group(1).replaceAll("`", "")).toList.distinct
         (ks, true)
       case Some(g) =>
-        val ks = ChSession.splitTop(g).map(_.trim.replaceAll("`", ""))
+        val ks = ChLex.splitTop(g).map(_.trim.replaceAll("`", ""))
         if (!ks.forall(k => k.matches("""\w+"""))) return None
         (ks.toList, false)
     }

@@ -38,6 +38,7 @@ import scala.collection.mutable
   */
 final class ChSession(spark: SparkSession) {
   import ChSession._
+  import ChLex.{maskStrings, matchParen, normalizeSpace, splitTop, splitTuples, topLevelEq}
 
   private case class TableState(
       schema: StructType,
@@ -369,30 +370,6 @@ final class ChSession(spark: SparkSession) {
     * Done = handled, no output; Output = handled with rows (DESCRIBE);
     * NotHandled = a query — the caller runs it through spark.sql.
     */
-  /** U+3000 / U+00A0 whitespace outside string literals → ASCII space:
-    * the session's regex-based DDL/DML parsers use `\s`, which does not
-    * match them (600201_mysql_if writes ideographic spaces).
-    */
-  private def normalizeSpace(in: String): String = {
-    if (!in.exists(c => c == '\u3000' || c == '\u00A0')) return in
-    val sb = new StringBuilder(in.length)
-    var i = 0
-    var q = 0.toChar
-    while (i < in.length) {
-      val c = in.charAt(i)
-      if (q != 0) {
-        sb.append(c)
-        if (c == '\\' && q == '\'' && i + 1 < in.length) {
-          sb.append(in.charAt(i + 1)); i += 1
-        } else if (c == q) q = 0.toChar
-      } else if (c == '\'' || c == '`') { q = c; sb.append(c) }
-      else if (c == '\u3000' || c == '\u00A0') sb.append(' ')
-      else sb.append(c)
-      i += 1
-    }
-    sb.toString
-  }
-
   /** `SELECT * FROM t …`: MATERIALIZED/ALIAS columns are hidden from
     * star expansion (reference ColumnDefaultKind) — expand the bare
     * star for the single-table shape so they stay invisible.
@@ -2002,21 +1979,6 @@ final class ChSession(spark: SparkSession) {
     var hidden = false
     // modifier keywords inside STRING literals are data, not clauses
     // (02313: `Enum('default' = 0, …)` must not read as DEFAULT)
-    def maskStrings(s0: String): String = {
-      val sb = new StringBuilder(s0)
-      var i = 0; var q = false
-      while (i < s0.length) {
-        val c = s0.charAt(i)
-        if (q) {
-          if (c == '\\' && i + 1 < s0.length) {
-            sb.setCharAt(i, '_'); sb.setCharAt(i + 1, '_'); i += 1
-          } else if (c == '\'') q = false
-          else sb.setCharAt(i, '_')
-        } else if (c == '\'') q = true
-        i += 1
-      }
-      sb.toString
-    }
     modifierRe.findFirstMatchIn(maskStrings(rest)).foreach { mm =>
       val kw = mm.group(1).toUpperCase
       val tail = rest.substring(mm.start + mm.group(1).length).trim
@@ -2939,26 +2901,6 @@ final class ChSession(spark: SparkSession) {
     registerView(name)
   }
 
-  /** Index of the first top-level `=` (not ==, !=, <=, >=). */
-  private def topLevelEq(a: String): Int = {
-    var depth = 0; var inStr = false; var i = 0
-    while (i < a.length) {
-      val c = a.charAt(i)
-      if (inStr) { if (c == '\\') i += 1 else if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case '=' if depth == 0 && i > 0 &&
-            !"=!<>".contains(a.charAt(i - 1)) &&
-            (i + 1 >= a.length || a.charAt(i + 1) != '=') => return i
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"no assignment in: ${a.take(40)}")
-  }
-
   private def addColumn(name: String, cd: ColDef,
       pos: Option[String]): Unit = {
     val st = tables(name)
@@ -3094,6 +3036,7 @@ final class ChSession(spark: SparkSession) {
 }
 
 object ChSession {
+  import ChLex.{matchParen, splitTop}
   sealed trait Result
   case object Done extends Result
   case object NotHandled extends Result
@@ -3190,97 +3133,55 @@ object ChSession {
         !"""(?i)\bSELECT\b""".r.findFirstIn(sql0).isDefined)
       return sql0
     val sql = stripDbAfterKeywords(sql0)
+    import ChLex.{Comment, Num, Punct, Tok, Word, Ws}
+    val ts = ChLex.tokenize(sql, comments = true)
+    val off = ChLex.offsets(ts)
+    def at(k: Int) = ts.lift(k)
+    def unquoted(t: Tok) = t match { case Word(w) => !"`\"".contains(w.head); case _ => false }
+    // a name starts where no identifier character touches it
+    def nameAt(k: Int) = !at(k - 1).exists {
+      case Word(_) | Num(_) | Punct(".") => true; case _ => false }
+    // whitespace and block comments may sit around the dot of
+    // `system . one` (00269_database_table_whitespace)
+    def skipGap(k: Int): Int = at(k) match {
+      case Some(Ws(_)) => skipGap(k + 1)
+      case Some(Comment(c)) if c.startsWith("/*") && c.endsWith("*/") => skipGap(k + 1)
+      case _ => k
+    }
+    def spells(k: Int, w: String) = at(k).exists(t => t.text == w || t.text == s"`$w`")
+    // `system.one` / `system.numbers[_mt]`: the reference's modeled
+    // system tables (`one`: a single row of dummy UInt8 = 0; `numbers`:
+    // the number stream, registered as a bounded view) — index past the
+    // table name and its temp-view name
+    def sysTable(k: Int): Option[(Int, String)] =
+      if (!spells(k, "system") || !nameAt(k)) None
+      else {
+        val dot = skipGap(k + 1)
+        val name = skipGap(dot + 1)
+        val tail = at(name + 1).exists(t => unquoted(t) ||
+          t.isInstanceOf[Num] || t == Punct("."))
+        if (at(dot).contains(Punct(".")) && !tail)
+          Seq("one" -> "one", "numbers_mt" -> "numbers", "numbers" -> "numbers")
+            .collectFirst { case (spelled, view) if spells(name, spelled) =>
+              (name + 1, view) }
+        else None
+      }
+    // `test.` / `default.` before a table name
+    def dbQualifier(k: Int) = at(k).exists(t => unquoted(t) &&
+        (t.text == "test" || t.text == "default")) && nameAt(k) &&
+      at(k + 1).contains(Punct(".")) && at(k + 2).exists {
+        case Word(w) => w.head.isLetter || w.head == '_' || w.head == '`'
+        case _ => false }
     val sb = new StringBuilder
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        sb.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sql.charAt(i); sb.append(d); i += 1
-          if (d == '\\' && i < n) { sb.append(sql.charAt(i)); i += 1 }
-          else if (d == '\'') done = true
-        }
-      } else if ((c == 's' || c == '`') &&
-          (i == 0 || !isIdentChar(sql.charAt(i - 1))) &&
-          sysTableEnd(sql, i)._1 > 0) {
-        // the reference's modeled system tables (`one`: a single row of
-        // dummy UInt8 = 0; `numbers`: the number stream, registered as
-        // a bounded view) — rewritten to the bare temp-view names.
-        // Tolerates backticks, whitespace and /*…*/ comments around the
-        // dot (00269_database_table_whitespace exercises all three).
-        val (end, nm) = sysTableEnd(sql, i)
-        sb.append(nm); i = end
-      } else if ((c == 't' || c == 'd') &&
-          (i == 0 || !isIdentChar(sql.charAt(i - 1))) &&
-          (sql.startsWith("test.", i) || sql.startsWith("default.", i))) {
-        val skip = if (c == 't') 5 else 8
-        // only when followed by an identifier (a table name)
-        if (i + skip < n && (sql.charAt(i + skip).isLetter ||
-            sql.charAt(i + skip) == '_' || sql.charAt(i + skip) == '`'))
-          i += skip
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+    var k = 0
+    while (k < ts.length) {
+      sysTable(k) match {
+        case Some((end, view)) => sb.append(view); k = end
+        case None if dbQualifier(k) => k += 2
+        case None => sb.append(sql.substring(off(k), off(k + 1))); k += 1
+      }
     }
     sb.toString
-  }
-
-  private def isIdentChar(c: Char): Boolean =
-    c.isLetterOrDigit || c == '_' || c == '.' || c == '`'
-
-
-  /** If `sql` at position `i` spells a reference to `system.one` or
-    * `system.numbers` (optionally backticked, with whitespace or block
-    * comments around the dot), return (index just past it, table name);
-    * else (-1, "").
-    */
-  private def sysTableEnd(sql: String, i: Int): (Int, String) = {
-    // numbers_mt is the multi-threaded spelling of the same stream —
-    // both rewrite to the bounded `numbers` view (longest name first so
-    // `numbers` does not shadow it)
-    Seq("one" -> "one", "numbers_mt" -> "numbers", "numbers" -> "numbers")
-      .foreach { case (spelled, view) =>
-        val e = sysRefEnd(sql, i, spelled)
-        if (e > 0) return (e, view)
-      }
-    (-1, "")
-  }
-
-  private def sysRefEnd(sql: String, i: Int, table: String): Int = {
-    var k = i
-    val n = sql.length
-    def word(w: String): Boolean = {
-      val tick = k < n && sql.charAt(k) == '`'
-      if (tick) k += 1
-      if (!sql.regionMatches(k, w, 0, w.length)) return false
-      k += w.length
-      if (tick) {
-        if (k >= n || sql.charAt(k) != '`') return false
-        k += 1
-      }
-      true
-    }
-    def skipWsComments(): Unit = {
-      var moved = true
-      while (moved) {
-        moved = false
-        while (k < n && sql.charAt(k).isWhitespace) { k += 1; moved = true }
-        if (k + 1 < n && sql.charAt(k) == '/' && sql.charAt(k + 1) == '*') {
-          val close = sql.indexOf("*/", k + 2)
-          if (close >= 0) { k = close + 2; moved = true }
-        }
-      }
-    }
-    if (!word("system")) return -1
-    skipWsComments()
-    if (k >= n || sql.charAt(k) != '.') return -1
-    k += 1
-    skipWsComments()
-    if (!word(table)) return -1
-    if (k < n && isIdentChar(sql.charAt(k)) && sql.charAt(k) != '`') return -1
-    k
   }
 
   private val dbAfterKwRe =
@@ -3297,68 +3198,6 @@ object ChSession {
       if (m.group(1) != null)
         java.util.regex.Matcher.quoteReplacement(m.group(0))
       else m.group(2) + " ")
-
-  /** Content of the leading `( … )` plus the text after it. */
-  def matchParen(s: String): (String, String) = {
-    require(s.startsWith("("), s"expected '(': ${s.take(20)}")
-    var depth = 0; var i = 0; var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inStr = false
-      } else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return (s.substring(1, i), s.substring(i + 1))
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens: ${s.take(40)}")
-  }
-
-  /** Split on top-level commas (parens and strings respected). */
-  def splitTop(s: String): Seq[String] = {
-    val out = mutable.ArrayBuffer[String]()
-    var depth = 0; var inStr = false; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inStr = false
-      } else c match {
-        case '\'' => inStr = true
-        case '(' | '[' | '{' => depth += 1
-        case ')' | ']' | '}' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
-  /** The `( … )` tuple bodies of a VALUES clause — comma between tuples
-    * optional, as the reference parser allows.
-    */
-  def splitTuples(s: String): Seq[String] = {
-    val out = mutable.ArrayBuffer[String]()
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') {
-        val (body, rest) = matchParen(s.substring(i))
-        out += body
-        i = s.length - rest.length
-      } else i += 1
-    }
-    out.toSeq
-  }
 
   /** MergeTree sorting key: only plain column names are honored (an
     * expression key would need evaluate-then-drop; corpus tables nearly
@@ -3465,7 +3304,7 @@ object ChTypes {
     val paren = t.indexOf('(')
     val head = (if (paren < 0) t else t.substring(0, paren)).trim
     lazy val args: Seq[String] =
-      ChSession.splitTop(t.substring(paren + 1, t.lastIndexOf(')')))
+      ChLex.splitTop(t.substring(paren + 1, t.lastIndexOf(')')))
         .map(_.trim)
     if (head == "DateTime" || head == "DateTime64") return t
     head.toUpperCase match {
@@ -3506,7 +3345,7 @@ object ChTypes {
     val paren = s.indexOf('(')
     val head = (if (paren < 0) s else s.substring(0, paren)).trim
     lazy val args: Seq[String] =
-      ChSession.splitTop(s.substring(paren + 1, s.lastIndexOf(')')))
+      ChLex.splitTop(s.substring(paren + 1, s.lastIndexOf(')')))
         .map(_.trim)
     head match {
       case "Nullable" => (parse(args.head)._1, true)

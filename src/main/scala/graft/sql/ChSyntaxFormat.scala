@@ -16,58 +16,35 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ChSyntaxFormat {
 
-  private sealed trait Kind
-  private case object W extends Kind   // word / number
-  private case object S extends Kind   // string literal
-  private case object P extends Kind   // punctuation
+  import ChLex.{Num, Punct, Str, Tok, Word}
 
-  private final case class T(text: String, kind: Kind)
-
-  private def lex(s: String): Vector[T] = {
-    val out = Vector.newBuilder[T]
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '-' && i + 1 < n && s.charAt(i + 1) == '-') {
-        while (i < n && s.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && s.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < n && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) i += 1
-        i = math.min(n, i + 2)
-      } else if (c == '\'' || c == '`' || c == '"') {
-        val q = c
-        val sb = new StringBuilder().append(q)
-        i += 1
-        while (i < n && s.charAt(i) != q) {
-          if (s.charAt(i) == '\\' && i + 1 < n) { sb.append(s.charAt(i)); i += 1 }
-          sb.append(s.charAt(i)); i += 1
-        }
-        if (i < n) { sb.append(q); i += 1 }
-        out += T(sb.toString, S)
-      } else if (c.isLetterOrDigit || c == '_' || c == '$') {
-        val st = i
-        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_' ||
-          s.charAt(i) == '$')) i += 1
-        out += T(s.substring(st, i), W)
-      } else {
-        // multi-char operators kept whole so spacing stays natural
-        val two = if (i + 1 < n) s.substring(i, i + 2) else ""
-        if (Set("::", "->", "<=", ">=", "!=", "<>", "||", "==").contains(two)) {
-          out += T(two, P); i += 2
-        } else { out += T(c.toString, P); i += 1 }
-      }
+  /** The query's tokens without whitespace or comments, two-char
+    * operators whole (so spacing stays natural) and a tuple index `.1`
+    * split from its dot.
+    */
+  private def tokens(query: String): Vector[Tok] =
+    ChLex.mergeOperators(ChLex.tokenize(ChLex.stripComments(query))).flatMap {
+      case _: ChLex.Ws => Nil
+      case Num(n) if n.startsWith(".") => Seq(Punct("."), Num(n.tail))
+      case t => Seq(t)
     }
-    out.result()
+
+  /** A word or number: what the formatter reads as a name or a value. */
+  private def isWordK(t: Tok): Boolean = t match {
+    case Word(w) => !w.startsWith("`") && !w.startsWith("\"")
+    case _: Num => true
+    case _ => false
   }
+
+  /** A string literal or quoted identifier: printed verbatim. */
+  private def isLitK(t: Tok): Boolean = t.isInstanceOf[Str] || t.isInstanceOf[Word] && !isWordK(t)
 
   /** `x::Type` prints as the reference's CAST form: a LITERAL operand
     * becomes its quoted text — CAST('-1', 'Int32'),
     * CAST('[1, 2]', 'Array(UInt32)') — and any other operand stays an
     * expression: CAST(1 + 2, 'UInt32'); nested `::` rewrites inner-
     * first (01852_cast_operator*). */
-  private def rewriteCastOps(ts0: Seq[T]): Seq[T] = {
+  private def rewriteCastOps(ts0: Seq[Tok]): Seq[Tok] = {
     val ts = ts0.toVector
     val i = ts.indexWhere(_.text == "::")
     if (i <= 0 || i + 1 >= ts.length) return ts
@@ -75,84 +52,60 @@ object ChSyntaxFormat {
     var aStart = i - 1
     ts(aStart).text match {
       case ")" | "]" =>
-        var d = 0
-        var k = i - 1
-        while (k >= 0 && aStart == i - 1) {
-          ts(k).text match {
-            case ")" | "]" => d += 1
-            case "(" | "[" => d -= 1; if (d == 0) aStart = k
-            case _ => ()
-          }
-          k -= 1
-        }
+        val open = ChLex.balancedOpen(ts, i - 1, brackets = true)
+        if (open >= 0) aStart = open
         // function call: name immediately before '('
         if (aStart > 0 && ts(aStart).text == "(" &&
-            ts(aStart - 1).kind == W && !keyword(ts(aStart - 1).text))
+            isWordK(ts(aStart - 1)) && !keyword(ts(aStart - 1).text))
           aStart -= 1
       case _ => ()
     }
-    // a decimal literal spans `digits . digits` in this lexer
-    def isNum(t: T): Boolean =
-      t.kind == W && t.text.nonEmpty && t.text.head.isDigit
-    while (aStart >= 2 && isNum(ts(aStart)) && ts(aStart - 1).text == "." &&
-        isNum(ts(aStart - 2)))
-      aStart -= 2
     // a numeric literal absorbs its unary sign (CH: -1::Int32 is the
     // literal -1)
-    val numWord = isNum(ts(aStart))
+    val numWord = ts(aStart).isInstanceOf[Num]
     if (numWord && aStart > 0 &&
         (ts(aStart - 1).text == "-" || ts(aStart - 1).text == "+") &&
-        (aStart - 2 < 0 || (ts(aStart - 2).kind == P &&
+        (aStart - 2 < 0 || (ts(aStart - 2).isInstanceOf[Punct] &&
           ts(aStart - 2).text != ")" && ts(aStart - 2).text != "]") ||
-          (ts(aStart - 2).kind == W && keyword(ts(aStart - 2).text))))
+          (isWordK(ts(aStart - 2)) && keyword(ts(aStart - 2).text))))
       aStart -= 1
     // type span: Word [ ( … ) ]
     var tEnd = i + 1
-    if (ts(tEnd).kind != W) return ts // not a type — leave untouched
+    if (!isWordK(ts(tEnd))) return ts // not a type — leave untouched
     if (tEnd + 1 < ts.length && ts(tEnd + 1).text == "(") {
-      var d = 0
-      var k = tEnd + 1
-      var close = -1
-      while (k < ts.length && close < 0) {
-        ts(k).text match {
-          case "(" => d += 1
-          case ")" => d -= 1; if (d == 0) close = k
-          case _ => ()
-        }
-        k += 1
-      }
+      val close = ChLex.balancedClose(ts, tEnd + 1)
       if (close >= 0) tEnd = close
     }
     val operand = rewriteCastOps(ts.slice(aStart, i))
     val typeTxt = renderType(ts.slice(i + 1, tEnd + 1))
     val isLit = operand.forall(t =>
-      t.kind == S ||
-        (t.kind == W && t.text.nonEmpty && t.text.head.isDigit) ||
-        (t.kind == P && Set(".", ",", "[", "]", "(", ")", "-", "+")
+      isLitK(t) ||
+        (isWordK(t) && t.text.nonEmpty && t.text.head.isDigit) ||
+        (t.isInstanceOf[Punct] && Set(".", ",", "[", "]", "(", ")", "-", "+")
           .contains(t.text)))
-    val castToks: Seq[T] =
+    val castToks: Seq[Tok] =
       if (isLit) {
         val text =
-          if (operand.length == 1 && operand.head.kind == S)
+          if (operand.length == 1 && isLitK(operand.head))
             operand.head.text.stripPrefix("'").stripSuffix("'")
           else render(operand)
-        Seq(T("CAST", W), T("(", P),
-          T("'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'", S),
-          T(",", P), T("'" + typeTxt + "'", S), T(")", P))
+        Seq(Word("CAST"), Punct("("),
+          Str("'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"),
+          Punct(","), Str("'" + typeTxt + "'"), Punct(")"))
       } else
-        Seq(T("CAST", W), T("(", P)) ++ stripOuterParens(operand) ++
-          Seq(T(",", P), T("'" + typeTxt + "'", S), T(")", P))
+        Seq(Word("CAST"), Punct("(")) ++ stripOuterParens(operand) ++
+          Seq(Punct(","), Str("'" + typeTxt + "'"), Punct(")"))
     rewriteCastOps(ts.take(aStart) ++ castToks ++ ts.drop(tEnd + 1))
   }
 
   /** Type-name spacing: none before '(', a space after ',' and between
     * adjacent words (`Nested(u UInt8, s String)`). */
-  private def renderType(ts: Seq[T]): String = {
+  private def renderType(ts: Seq[Tok]): String = {
     val sb = new StringBuilder
-    var prev: T = null
+    var prev: Tok = null
     ts.foreach { t =>
       if (prev != null &&
-          ((prev.kind == W && t.kind == W) || prev.text == ","))
+          ((isWordK(prev) && isWordK(t)) || prev.text == ","))
         sb.append(' ')
       sb.append(t.text)
       prev = t
@@ -160,28 +113,18 @@ object ChSyntaxFormat {
     sb.toString
   }
 
-  /** Is ts(i) the start of a numeric literal? Returns its end index
-    * (exclusive) or -1. Handles `1`, `1.`, `1.5` (the lexer splits the
-    * dot out of the word run). */
-  private def numEnd(ts: Seq[T], i: Int): Int = {
-    if (i >= ts.length || ts(i).kind != W ||
-        ts(i).text.isEmpty || !ts(i).text.head.isDigit) return -1
-    var j = i + 1
-    if (j < ts.length && ts(j).text == "." ) {
-      j += 1
-      if (j < ts.length && ts(j).kind == W && ts(j).text.head.isDigit) j += 1
-    }
-    j
-  }
+  /** End index (exclusive) of the numeric literal at ts(i), or -1. */
+  private def numEnd(ts: Seq[Tok], i: Int): Int =
+    if (ts.lift(i).exists(_.isInstanceOf[Num])) i + 1 else -1
 
   /** Whether position i is a UNARY operator slot: start of expression,
     * or after '(', '[', ',', an operator punct, or a keyword. */
-  private def unarySlot(ts: Seq[T], i: Int): Boolean =
+  private def unarySlot(ts: Seq[Tok], i: Int): Boolean =
     i == 0 || {
       val p = ts(i - 1)
       p.text == "(" || p.text == "[" || p.text == "," ||
-        (p.kind == P && p.text != ")" && p.text != "]") ||
-        (p.kind == W && keyword(p.text))
+        (p.isInstanceOf[Punct] && p.text != ")" && p.text != "]") ||
+        (isWordK(p) && keyword(p.text))
     }
 
   /** CH formatter canonicalization (IAST::formatImpl conventions):
@@ -189,7 +132,7 @@ object ChSyntaxFormat {
     * is the negate FUNCTION (`- -1` → `-(-1)`); integer `-0` folds to
     * `0`; redundant parens around a lone signed literal drop (except
     * the IN-list's); operator keywords print uppercase. */
-  private def canon(ts0: Seq[T]): Seq[T] = {
+  private def canon(ts0: Seq[Tok]): Seq[Tok] = {
     var ts = ts0.toVector
     var guard = 0
     var changed = true
@@ -200,23 +143,23 @@ object ChSyntaxFormat {
         // negate(x) → -(x)
         if (isW(ts(i), "negate") && i + 1 < ts.length &&
             ts(i + 1).text == "(") {
-          ts = ts.take(i) ++ Vector(T("-", P)) ++ ts.drop(i + 1)
+          ts = ts.take(i) ++ Vector(Punct("-")) ++ ts.drop(i + 1)
           changed = true
         }
         // integer -0 → 0 (int literals have no signed zero)
-        else if (ts(i).text == "-" && ts(i).kind == P && unarySlot(ts, i) &&
+        else if (ts(i).text == "-" && ts(i).isInstanceOf[Punct] && unarySlot(ts, i) &&
             i + 1 < ts.length && ts(i + 1).text == "0" &&
             (i + 2 >= ts.length || ts(i + 2).text != ".")) {
           ts = ts.take(i) ++ ts.drop(i + 1)
           changed = true
         }
         // unary minus before a SIGNED literal = negate: - -1 → -(-1)
-        else if (ts(i).text == "-" && ts(i).kind == P && unarySlot(ts, i) &&
+        else if (ts(i).text == "-" && ts(i).isInstanceOf[Punct] && unarySlot(ts, i) &&
             i + 1 < ts.length && ts(i + 1).text == "-" &&
             numEnd(ts, i + 2) > 0) {
           val e = numEnd(ts, i + 2)
-          ts = ts.take(i + 1) ++ Vector(T("(", P)) ++ ts.slice(i + 1, e) ++
-            Vector(T(")", P)) ++ ts.drop(e)
+          ts = ts.take(i + 1) ++ Vector(Punct("(")) ++ ts.slice(i + 1, e) ++
+            Vector(Punct(")")) ++ ts.drop(e)
           changed = true
         }
         // (±lit) → ±lit except directly after IN (the IN-list parens),
@@ -224,15 +167,15 @@ object ChSyntaxFormat {
         // -(x) KEEPS its parens)
         else if (ts(i).text == "(" &&
             !(i > 0 && (isW(ts(i - 1), "IN") ||
-              (ts(i - 1).kind == W && !keyword(ts(i - 1).text)) ||
+              (isWordK(ts(i - 1)) && !keyword(ts(i - 1).text)) ||
               ts(i - 1).text == ")" || ts(i - 1).text == "]" ||
               ts(i - 1).text == "-")) && {
             val s = if (i + 1 < ts.length && ts(i + 1).text == "-" &&
-              ts(i + 1).kind == P) i + 2 else i + 1
+              ts(i + 1).isInstanceOf[Punct]) i + 2 else i + 1
             val e = numEnd(ts, s)
             e > 0 && e < ts.length && ts(e).text == ")"
           }) {
-          val s = if (ts(i + 1).text == "-" && ts(i + 1).kind == P) i + 2
+          val s = if (ts(i + 1).text == "-" && ts(i + 1).isInstanceOf[Punct]) i + 2
             else i + 1
           val e = numEnd(ts, s)
           ts = ts.take(i) ++ ts.slice(i + 1, e) ++ ts.drop(e + 1)
@@ -250,21 +193,14 @@ object ChSyntaxFormat {
       val isSum = isW(ts(j), "sum") && ts(j + 1).text == "("
       if (isCount || isSum) {
         val inner0 = j + 2
-        var e = inner0
-        var d = 1
-        while (e < ts.length && d > 0) {
-          ts(e).text match {
-            case "(" => d += 1; case ")" => d -= 1; case _ => ()
-          }
-          if (d > 0) e += 1
-        }
+        val e = closeOf(ts, j + 1)
         val body = ts.slice(inner0, e).map(_.text).mkString
         val normalizes =
           if (isCount) body == "*" || body == "1" || body == "-1"
           else body == "1"
         if (normalizes && e < ts.length) {
           ts = ts.take(j) ++
-            Vector(T("count", W), T("(", P), T(")", P)) ++ ts.drop(e + 1)
+            Vector(Word("count"), Punct("("), Punct(")")) ++ ts.drop(e + 1)
         }
       }
       j += 1
@@ -273,14 +209,14 @@ object ChSyntaxFormat {
     // injective wrappers (unary minus, negate, bitNot) from each arg
     val uniqSet = Set("uniq", "uniqexact", "uniqhll12", "uniqcombined",
       "uniqcombined64")
-    def stripInjective(arg0: Seq[T]): Seq[T] = {
+    def stripInjective(arg0: Seq[Tok]): Seq[Tok] = {
       var a = stripOuterParens(arg0)
       var go = true
       while (go && a.nonEmpty) {
         go = false
-        if (a.head.text == "-" && a.head.kind == P) {
+        if (a.head.text == "-" && a.head.isInstanceOf[Punct]) {
           a = stripOuterParens(a.tail); go = true
-        } else if (a.length >= 3 && a.head.kind == W &&
+        } else if (a.length >= 3 && isWordK(a.head) &&
             Set("bitnot", "negate").contains(a.head.text.toLowerCase) &&
             a(1).text == "(" && a.last.text == ")") {
           a = stripOuterParens(a.slice(2, a.length - 1)); go = true
@@ -294,27 +230,20 @@ object ChSyntaxFormat {
     while (j + 3 < ts.length) {
       if (isW(ts(j), "count") && ts(j + 1).text == "(" &&
           isW(ts(j + 2), "DISTINCT")) {
-        ts = ts.take(j) ++ Vector(T("uniqExact", W), T("(", P)) ++
+        ts = ts.take(j) ++ Vector(Word("uniqExact"), Punct("(")) ++
           ts.drop(j + 3)
       }
       j += 1
     }
     j = 0
     while (uniqStrip.value && j + 2 < ts.length) {
-      if (ts(j).kind == W && uniqSet.contains(ts(j).text.toLowerCase) &&
+      if (isWordK(ts(j)) && uniqSet.contains(ts(j).text.toLowerCase) &&
           ts(j + 1).text == "(") {
-        var e = j + 2
-        var d = 1
-        while (e < ts.length && d > 0) {
-          ts(e).text match {
-            case "(" => d += 1; case ")" => d -= 1; case _ => ()
-          }
-          if (d > 0) e += 1
-        }
+        val e = closeOf(ts, j + 1)
         if (e < ts.length) {
           val args = splitItems(ts.slice(j + 2, e)).map(stripInjective)
           val rebuilt = args.zipWithIndex.flatMap { case (a, k) =>
-            (if (k > 0) Seq(T(",", P)) else Nil) ++ a
+            (if (k > 0) Seq(Punct(",")) else Nil) ++ a
           }
           ts = ts.take(j + 2) ++ rebuilt ++ ts.drop(e)
         }
@@ -326,31 +255,19 @@ object ChSyntaxFormat {
     // min/max/avg also ±, and a NEGATIVE */÷ literal flips min↔max
     // (01271/01702/01703 goldens, including the reference's unflipped
     // `c - x` quirk). Canonical lowercase agg spelling (01703).
-    def litSpan(a: Seq[T], s0: Int): Int = {
+    def litSpan(a: Seq[Tok], s0: Int): Int = {
       // numeric literal starting at s0 (optional unary minus): end excl
-      val s = if (s0 < a.length && a(s0).text == "-" && a(s0).kind == P)
+      val s = if (s0 < a.length && a(s0).text == "-" && a(s0).isInstanceOf[Punct])
         s0 + 1 else s0
       val e = numEnd(a, s)
       if (e < 0) -1 else e
     }
-    def depth0Ops(a: Seq[T]): Seq[Int] = {
-      var d = 0
-      val out = ArrayBuffer[Int]()
-      a.indices.foreach { k =>
-        a(k).text match {
-          case "(" | "[" => d += 1
-          case ")" | "]" => d -= 1
-          case "+" | "-" | "*" | "/" if d == 0 && !unarySlot(a, k) => out += k
-          case _ => ()
-        }
-      }
-      out.toSeq
-    }
+    def depth0Ops(a: Seq[Tok]): Seq[Int] = topOps(a, "+-*/")
     if (aggArith.value) {
       val aggSet = Set("sum", "min", "max", "avg")
       // one pull step: Some((op, litToks, litLeft, flip, inner))
-      def pullOnce(agg: String, arg: Seq[T])
-          : Option[(String, Seq[T], Boolean, Boolean, Seq[T])] = {
+      def pullOnce(agg: String, arg: Seq[Tok])
+          : Option[(String, Seq[Tok], Boolean, Boolean, Seq[Tok])] = {
         val ops = depth0Ops(arg)
         def prec(k: Int) = if ("+-".contains(arg(k).text)) 1 else 2
         val top =
@@ -382,29 +299,22 @@ object ChSyntaxFormat {
       }
       j = 0
       while (j + 2 < ts.length) {
-        if (ts(j).kind == W && aggSet.contains(ts(j).text.toLowerCase) &&
+        if (isWordK(ts(j)) && aggSet.contains(ts(j).text.toLowerCase) &&
             ts(j + 1).text == "(") {
           val agg = ts(j).text.toLowerCase
-          var e = j + 2
-          var d = 1
-          while (e < ts.length && d > 0) {
-            ts(e).text match {
-              case "(" => d += 1; case ")" => d -= 1; case _ => ()
-            }
-            if (d > 0) e += 1
-          }
+          val e = closeOf(ts, j + 1)
           if (e < ts.length &&
               splitItems(ts.slice(j + 2, e)).lengthCompare(1) == 0) {
             // pull repeatedly while the operator stays the SAME (the
             // reference rewrites a chain of one op, then stops)
-            var arg: Seq[T] = ts.slice(j + 2, e)
+            var arg: Seq[Tok] = ts.slice(j + 2, e)
             var flip = false
             // keep pulling within one precedence GROUP (additive ops
             // chain: min(1 + n - 1) double-pulls; a group switch stops:
             // min(1 + n * 2) keeps the multiply inside)
             var lastGrp: Option[String] = None
             def grp(op: String) = if ("+-".contains(op)) "a" else "m"
-            val wraps = ArrayBuffer[(String, Seq[T], Boolean)]()
+            val wraps = ArrayBuffer[(String, Seq[Tok], Boolean)]()
             var go = true
             while (go) {
               pullOnce(agg, arg) match {
@@ -421,20 +331,20 @@ object ChSyntaxFormat {
               val agg2 =
                 if (!flip) agg
                 else if (agg == "min") "max" else "min"
-              var repl: Vector[T] = Vector(T(agg2, W), T("(", P)) ++
-                arg ++ Vector(T(")", P))
+              var repl: Vector[Tok] = Vector(Word(agg2), Punct("(")) ++
+                arg ++ Vector(Punct(")"))
               wraps.reverse.foreach { case (op, c, litLeft) =>
                 repl =
-                  if (litLeft) c.toVector ++ Vector(T(op, P)) ++ repl
-                  else repl ++ Vector(T(op, P)) ++ c.toVector
+                  if (litLeft) c.toVector ++ Vector(Punct(op)) ++ repl
+                  else repl ++ Vector(Punct(op)) ++ c.toVector
               }
               // parenthesize the expansion: it replaces ONE call-site
               // operand; reparen() drops the parens when redundant
-              repl = T("(", P) +: repl :+ T(")", P)
+              repl = Punct("(") +: repl :+ Punct(")")
               ts = ts.take(j) ++ repl ++ ts.drop(e + 1)
               j += repl.length - 1 // the emitted call is final
-            } else if (ts(j).text != agg) ts = ts.updated(j, T(agg, W))
-          } else if (ts(j).text != agg) ts = ts.updated(j, T(agg, W))
+            } else if (ts(j).text != agg) ts = ts.updated(j, Word(agg))
+          } else if (ts(j).text != agg) ts = ts.updated(j, Word(agg))
         }
         j += 1
       }
@@ -442,40 +352,33 @@ object ChSyntaxFormat {
     // NOT-chain canonical parenthesization (01920): a pure chain of n
     // NOTs over a literal prints the innermost TWO bare and wraps each
     // outer level — NOT (NOT (NOT NOT x))
-    def parseNot(i: Int, depth: Int): Option[(Int, Seq[T], Int)] = {
+    def parseNot(i: Int, depth: Int): Option[(Int, Seq[Tok], Int)] = {
       if (depth > 16 || i >= ts.length) return None
       if (isW(ts(i), "NOT")) parseNot(i + 1, depth + 1)
         .map { case (n, lit, e) => (n + 1, lit, e) }
       else if (ts(i).text == "(") {
-        var e = i + 1
-        var d = 1
-        while (e < ts.length && d > 0) {
-          ts(e).text match {
-            case "(" => d += 1; case ")" => d -= 1; case _ => ()
-          }
-          if (d > 0) e += 1
-        }
+        val e = closeOf(ts, i)
         if (e >= ts.length) None
         else parseNot(i + 1, depth + 1) match {
           case Some((n, lit, inEnd)) if inEnd == e =>
             Some((n, lit, e + 1))
           case _ =>
-            if (e == i + 2 && ts(i + 1).kind != P)
+            if (e == i + 2 && !ts(i + 1).isInstanceOf[Punct])
               Some((0, Seq(ts(i + 1)), e + 1))
             else None
         }
       }
-      else if (ts(i).kind != P) Some((0, Seq(ts(i)), i + 1))
+      else if (!ts(i).isInstanceOf[Punct]) Some((0, Seq(ts(i)), i + 1))
       else None
     }
-    def emitNot(n: Int, lit: Seq[T]): Seq[T] =
-      if (n <= 2) Seq.fill(n)(T("NOT", W)) ++ lit
-      else Seq(T("NOT", W), T("(", P)) ++ emitNot(n - 1, lit) ++
-        Seq(T(")", P))
+    def emitNot(n: Int, lit: Seq[Tok]): Seq[Tok] =
+      if (n <= 2) Seq.fill(n)(Word("NOT")) ++ lit
+      else Seq(Word("NOT"), Punct("(")) ++ emitNot(n - 1, lit) ++
+        Seq(Punct(")"))
     j = 0
     while (j < ts.length) {
       if (isW(ts(j), "NOT") && !(j > 0 && (isW(ts(j - 1), "IS") ||
-          ts(j - 1).kind == W && !keyword(ts(j - 1).text)))) {
+          isWordK(ts(j - 1)) && !keyword(ts(j - 1).text)))) {
         parseNot(j, 0) match {
           case Some((n, lit, e)) if n >= 2 =>
             ts = ts.take(j) ++ emitNot(n, lit) ++ ts.drop(e)
@@ -509,8 +412,8 @@ object ChSyntaxFormat {
       }
       "'" + sb.toString + "'"
     }
-    ts = ts.map(t => if (t.kind == S && t.text.contains('\\') &&
-      t.text.startsWith("'")) T(canonStr(t.text), S) else t)
+    ts = ts.map(t => if (isLitK(t) && t.text.contains('\\') &&
+      t.text.startsWith("'")) Str(canonStr(t.text)) else t)
     // rewrite_like_function: a wildcard-free pattern turns LIKE into
     // equality (NOT LIKE into !=) — 48011 goldens
     if (likeRw.value) {
@@ -527,11 +430,11 @@ object ChSyntaxFormat {
       }
       var m2 = 0
       while (m2 + 1 < ts.length) {
-        if (isW(ts(m2), "LIKE") && ts(m2 + 1).kind == S &&
+        if (isW(ts(m2), "LIKE") && isLitK(ts(m2 + 1)) &&
             ts(m2 + 1).text.startsWith("'") &&
             plainPattern(ts(m2 + 1).text)) {
           val neg = m2 > 0 && isW(ts(m2 - 1), "NOT")
-          val op = T(if (neg) "!=" else "=", P)
+          val op = Punct(if (neg) "!=" else "=")
           ts =
             if (neg) ts.take(m2 - 1) ++ Vector(op) ++ ts.drop(m2 + 1)
             else ts.take(m2) ++ Vector(op) ++ ts.drop(m2 + 1)
@@ -546,16 +449,8 @@ object ChSyntaxFormat {
     var found = true
     while (found && guard2 < 16) {
       found = false; guard2 += 1
-      val depthAt = new Array[Int](ts.length)
-      var dd = 0
-      ts.indices.foreach { k =>
-        ts(k).text match {
-          case "(" | "[" => depthAt(k) = dd; dd += 1
-          case ")" | "]" => dd -= 1; depthAt(k) = dd
-          case _ => depthAt(k) = dd
-        }
-      }
-      val qIdx = ts.indices.find(k => ts(k).text == "?" && ts(k).kind == P)
+      val depthAt = ChLex.depths(ts, brackets = true)
+      val qIdx = ts.indices.find(k => ts(k).text == "?" && ts(k).isInstanceOf[Punct])
       qIdx.foreach { q =>
         val d0 = depthAt(q)
         // matching ':' at the same depth, skipping nested ternaries
@@ -574,7 +469,7 @@ object ChSyntaxFormat {
         var start = q - 1
         while (start >= 0 && !(depthAt(start) < d0 ||
             (depthAt(start) == d0 && (ts(start).text == "," ||
-              (ts(start).kind == W && keyword(ts(start).text) &&
+              (isWordK(ts(start)) && keyword(ts(start).text) &&
                 !isW(ts(start), "NULL"))))))
           start -= 1
         start += 1
@@ -582,7 +477,7 @@ object ChSyntaxFormat {
         var eEnd = colon + 1
         while (eEnd < ts.length && !(depthAt(eEnd) < d0 ||
             (depthAt(eEnd) == d0 && (ts(eEnd).text == "," ||
-              (ts(eEnd).kind == W && keyword(ts(eEnd).text) &&
+              (isWordK(ts(eEnd)) && keyword(ts(eEnd).text) &&
                 !isW(ts(eEnd), "NULL"))))))
           eEnd += 1
         if (colon > 0 && start < q && colon + 1 < eEnd) {
@@ -590,8 +485,8 @@ object ChSyntaxFormat {
           val thenT = ts.slice(q + 1, colon)
           val elseT = stripOuterParens(ts.slice(colon + 1, eEnd))
           ts = ts.take(start) ++
-            Vector(T("if", W), T("(", P)) ++ cond ++ Vector(T(",", P)) ++
-            thenT ++ Vector(T(",", P)) ++ elseT ++ Vector(T(")", P)) ++
+            Vector(Word("if"), Punct("(")) ++ cond ++ Vector(Punct(",")) ++
+            thenT ++ Vector(Punct(",")) ++ elseT ++ Vector(Punct(")")) ++
             ts.drop(eEnd)
           found = true
         }
@@ -608,23 +503,17 @@ object ChSyntaxFormat {
           if ((isW(ts(k), "if") || isW(ts(k), "multiIf")) &&
               ts(k + 1).text == "(") {
             // last argument starts with if( ?
-            var d2 = 1
-            var m = k + 2
-            var lastComma = k + 1
-            while (m < ts.length && d2 > 0) {
-              ts(m).text match {
-                case "(" => d2 += 1
-                case ")" => d2 -= 1
-                case "," if d2 == 1 => lastComma = m
-                case _ => ()
-              }
-              if (d2 > 0) m += 1
-            }
+            val m = closeOf(ts, k + 1)
+            val args = ts.slice(k + 2, m)
+            val depth = ChLex.depths(args)
+            val lastComma = args.indices
+              .filter(x => depth(x) == 0 && args(x) == Punct(","))
+              .lastOption.fold(k + 1)(_ + k + 2)
             if (m < ts.length && lastComma + 2 < m &&
                 isW(ts(lastComma + 1), "if") &&
                 ts(lastComma + 2).text == "(") {
               // splice: drop the inner `if(` and its close, rename head
-              ts = ts.take(k) ++ Vector(T("multiIf", W)) ++
+              ts = ts.take(k) ++ Vector(Word("multiIf")) ++
                 ts.slice(k + 1, lastComma + 1) ++
                 ts.slice(lastComma + 3, m - 1) ++ ts.drop(m)
               again = true
@@ -641,35 +530,28 @@ object ChSyntaxFormat {
       var m3 = 0
       while (m3 + 1 < ts.length) {
         if (isW(ts(m3), "transform") && ts(m3 + 1).text == "(") {
-          var d6 = 1
-          var m = m3 + 2
-          while (m < ts.length && d6 > 0) {
-            ts(m).text match {
-              case "(" => d6 += 1; case ")" => d6 -= 1; case _ => ()
-            }
-            if (d6 > 0) m += 1
-          }
+          val m = closeOf(ts, m3 + 1)
           if (m < ts.length) {
             val args = splitItems(ts.slice(m3 + 2, m))
             if (args.length == 4 &&
-                args(2).forall(t => t.kind == S || t.text == "[" ||
+                args(2).forall(t => isLitK(t) || t.text == "[" ||
                   t.text == "]" || t.text == ",") &&
-                args(3).length == 1 && args(3).head.kind == S) {
-              val vals = (args(2).filter(_.kind == S) ++ args(3))
+                args(3).length == 1 && isLitK(args(3).head)) {
+              val vals = (args(2).filter(isLitK(_)) ++ args(3))
                 .map(_.text.stripPrefix("'").stripSuffix("'"))
                 .distinct.sorted
               val enum = vals.zipWithIndex
                 .map { case (v, k) => "\\'" + v + "\\' = " + (k + 1) }
                 .mkString(", ")
-              val arrCast = Vector(T("CAST", W), T("(", P)) ++ args(2) ++
-                Vector(T(",", P),
-                  T("'Array(Enum8(" + enum + "))'", S), T(")", P))
-              val dfltCast = Vector(T("CAST", W), T("(", P)) ++ args(3) ++
-                Vector(T(",", P), T("'Enum8(" + enum + ")'", S), T(")", P))
-              val rebuilt = Vector(T("transform", W), T("(", P)) ++
-                args(0) ++ Vector(T(",", P)) ++ args(1) ++
-                Vector(T(",", P)) ++ arrCast ++ Vector(T(",", P)) ++
-                dfltCast ++ Vector(T(")", P))
+              val arrCast = Vector(Word("CAST"), Punct("(")) ++ args(2) ++
+                Vector(Punct(","),
+                  Str("'Array(Enum8(" + enum + "))'"), Punct(")"))
+              val dfltCast = Vector(Word("CAST"), Punct("(")) ++ args(3) ++
+                Vector(Punct(","), Str("'Enum8(" + enum + ")'"), Punct(")"))
+              val rebuilt = Vector(Word("transform"), Punct("(")) ++
+                args(0) ++ Vector(Punct(",")) ++ args(1) ++
+                Vector(Punct(",")) ++ arrCast ++ Vector(Punct(",")) ++
+                dfltCast ++ Vector(Punct(")"))
               ts = ts.take(m3) ++ rebuilt ++ ts.drop(m + 1)
               m3 += rebuilt.length
             }
@@ -683,8 +565,8 @@ object ChSyntaxFormat {
       "NULL", "BETWEEN", "CASE", "WHEN", "THEN", "ELSE", "END", "INTERVAL",
       "EXISTS", "ASC", "DESC", "GLOBAL")
     ts.map(t =>
-      if (t.kind == W && opKw.contains(t.text.toUpperCase) &&
-          t.text.exists(_.isLower)) T(t.text.toUpperCase, W)
+      if (isWordK(t) && opKw.contains(t.text.toUpperCase) &&
+          t.text.exists(_.isLower)) Word(t.text.toUpperCase)
       else t)
   }
 
@@ -694,48 +576,41 @@ object ChSyntaxFormat {
   // under AND/OR get parens: `(str = 'a') AND (id = 1)`. AND/OR are
   // n-ary (chains stay flat); arithmetic stays left-nested. ----
   private sealed trait EN
-  private final case class EAtom(ts: Seq[T]) extends EN
-  private final case class EBin(op: Seq[T], l: EN, r: EN) extends EN
+  private final case class EAtom(ts: Seq[Tok]) extends EN
+  private final case class EBin(op: Seq[Tok], l: EN, r: EN) extends EN
   private final case class ENary(op: String, cs: Seq[EN]) extends EN
 
   private final class PErr extends RuntimeException
 
-  private def reparen(ts: Seq[T]): Seq[T] = {
+  private def reparen(ts: Seq[Tok]): Seq[Tok] = {
     val items = splitItems(ts)
     if (items.length > 1)
       return items.zipWithIndex.flatMap { case (a, k) =>
-        (if (k > 0) Seq(T(",", P)) else Nil) ++ reparen(a)
+        (if (k > 0) Seq(Punct(",")) else Nil) ++ reparen(a)
       }
     parseEN(ts).map(emit(_, wrapBin = false)).getOrElse(ts)
   }
 
   /** Full-slice expression parse; None when the slice contains
     * structures the parser does not model. */
-  private def parseEN(ts: Seq[T]): Option[EN] = {
+  private def parseEN(ts: Seq[Tok]): Option[EN] = {
     val bail = Set("BETWEEN", "CASE", "INTERVAL", "EXISTS", "ALL", "ANY",
       "AS", "OVER", "DISTINCT")
-    if (ts.exists(t => (t.kind == W && bail.contains(t.text.toUpperCase)) ||
+    if (ts.exists(t => (isWordK(t) && bail.contains(t.text.toUpperCase)) ||
         t.text == "->" || t.text == "::")) return None
     try {
       var i = 0
-      def peek: Option[T] = if (i < ts.length) Some(ts(i)) else None
-      def take(): T = {
+      def peek: Option[Tok] = if (i < ts.length) Some(ts(i)) else None
+      def take(): Tok = {
         if (i >= ts.length) throw new PErr
         val t = ts(i); i += 1; t
       }
-      def group(): Seq[T] = {
-        var d = 0
+      def group(): Seq[Tok] = {
         val s = i
-        while (i < ts.length) {
-          ts(i).text match {
-            case "(" | "[" => d += 1
-            case ")" | "]" => d -= 1
-            case _ => ()
-          }
-          i += 1
-          if (d == 0) return ts.slice(s, i)
-        }
-        throw new PErr
+        val close = ChLex.balancedClose(ts, i, brackets = true)
+        if (close < 0) throw new PErr
+        i = close + 1
+        ts.slice(s, i)
       }
       def primary(): EN = peek match {
         case None => throw new PErr
@@ -744,10 +619,10 @@ object ChSyntaxFormat {
           if (g.length > 1 && isW(g(1), "SELECT")) EAtom(g)
           else parseEN(g.slice(1, g.length - 1)).getOrElse(EAtom(g))
         case Some(t) if t.text == "[" => EAtom(group())
-        case Some(t) if t.text == "-" && t.kind == P =>
+        case Some(t) if t.text == "-" && t.isInstanceOf[Punct] =>
           take()
           peek match {
-            case Some(n) if n.kind == W && n.text.nonEmpty &&
+            case Some(n) if isWordK(n) && n.text.nonEmpty &&
                 n.text.head.isDigit =>
               val e = numEnd(ts, i)
               val lit = ts.slice(i - 1, e); i = e; EAtom(lit)
@@ -764,36 +639,36 @@ object ChSyntaxFormat {
           if (peek.exists(_.text == "(")) EAtom(Seq(t) ++ group())
           else primary() match {
             case EAtom(a) => EAtom(Seq(t) ++ a)
-            case other => EAtom(Seq(t, T("(", P)) ++
-              emit(other, wrapBin = false) ++ Seq(T(")", P)))
+            case other => EAtom(Seq(t, Punct("(")) ++
+              emit(other, wrapBin = false) ++ Seq(Punct(")")))
           }
-        case Some(t) if t.kind == S => take(); EAtom(Seq(t))
-        case Some(t) if t.kind == W =>
+        case Some(t) if isLitK(t) => take(); EAtom(Seq(t))
+        case Some(t) if isWordK(t) =>
           if (keyword(t.text) && !t.text.equalsIgnoreCase("NULL"))
             throw new PErr
           val e = numEnd(ts, i)
           if (e > 0) { val lit = ts.slice(i, e); i = e; EAtom(lit) }
           else {
-            val parts = ArrayBuffer[T](take())
+            val parts = ArrayBuffer[Tok](take())
             while (peek.exists(_.text == ".") && i + 1 < ts.length &&
-                ts(i + 1).kind == W) {
+                isWordK(ts(i + 1))) {
               parts += take(); parts += take()
             }
             if (peek.exists(_.text == "(")) {
               val g = group()
               val args = splitItems(g.slice(1, g.length - 1))
               val rebuilt = args.zipWithIndex.flatMap { case (a, k) =>
-                (if (k > 0) Seq(T(",", P)) else Nil) ++ reparen(a)
+                (if (k > 0) Seq(Punct(",")) else Nil) ++ reparen(a)
               }
-              EAtom(parts.toSeq ++ Seq(T("(", P)) ++ rebuilt ++
-                Seq(T(")", P)))
+              EAtom(parts.toSeq ++ Seq(Punct("(")) ++ rebuilt ++
+                Seq(Punct(")")))
             } else EAtom(parts.toSeq)
           }
         case Some(t) if t.text == "*" && ts.length == 1 =>
           take(); EAtom(Seq(t))
         case _ => throw new PErr
       }
-      def cmpOp(): Option[Seq[T]] = peek match {
+      def cmpOp(): Option[Seq[Tok]] = peek match {
         case Some(t) if Set("=", "==", "!=", "<>", "<", ">", "<=", ">=")
             .contains(t.text) => Some(Seq(take()))
         case Some(t) if isW(t, "LIKE") || isW(t, "ILIKE") =>
@@ -816,7 +691,7 @@ object ChSyntaxFormat {
       def add(): EN = {
         var l = mul()
         while (peek.exists(t =>
-            (Set("+", "-").contains(t.text) && t.kind == P) ||
+            (Set("+", "-").contains(t.text) && t.isInstanceOf[Punct]) ||
               t.text == "||")) {
           val op = take(); l = EBin(Seq(op), l, mul())
         }
@@ -836,7 +711,7 @@ object ChSyntaxFormat {
             case Some(op) => l = EBin(op, l, add())
             case None => peek match {
               case Some(t) if isW(t, "IS") =>
-                val tail = ArrayBuffer[T](take())
+                val tail = ArrayBuffer[Tok](take())
                 if (peek.exists(isW(_, "NOT"))) tail += take()
                 if (!peek.exists(isW(_, "NULL"))) throw new PErr
                 tail += take()
@@ -871,25 +746,25 @@ object ChSyntaxFormat {
     } catch { case _: PErr => None }
   }
 
-  private def emit(n: EN, wrapBin: Boolean): Seq[T] = n match {
+  private def emit(n: EN, wrapBin: Boolean): Seq[Tok] = n match {
     case EAtom(a) => a
     case EBin(op, l, r) =>
       val inner = emit(l, wrapBin = true) ++ op ++ emit(r, wrapBin = true)
-      if (wrapBin) Seq(T("(", P)) ++ inner ++ Seq(T(")", P)) else inner
+      if (wrapBin) Seq(Punct("(")) ++ inner ++ Seq(Punct(")")) else inner
     case ENary(op, cs) =>
       val inner = cs.zipWithIndex.flatMap { case (c, k) =>
-        (if (k > 0) Seq(T(op, W)) else Nil) ++ emit(c, wrapBin = true)
+        (if (k > 0) Seq(Word(op)) else Nil) ++ emit(c, wrapBin = true)
       }
-      if (wrapBin) Seq(T("(", P)) ++ inner ++ Seq(T(")", P)) else inner
+      if (wrapBin) Seq(Punct("(")) ++ inner ++ Seq(Punct(")")) else inner
   }
 
   /** Re-join a token slice with natural SQL spacing. */
-  private def render(ts0raw: Seq[T]): String = {
+  private def render(ts0raw: Seq[Tok]): String = {
     val ts0 = reparen(canon(ts0raw))
     val ts = if (ts0.exists(_.text == "::")) rewriteCastOps(ts0) else ts0
     val sb = new StringBuilder
-    var prev: T = null
-    var prev2: T = null // the significant token before prev
+    var prev: Tok = null
+    var prev2: Tok = null // the significant token before prev
     ts.foreach { t =>
       // a sign is UNARY when nothing value-like precedes it — no space
       // between it and its operand (`SELECT -1`, `f(-1)`)
@@ -897,26 +772,26 @@ object ChSyntaxFormat {
         (prev.text == "-" || prev.text == "+") &&
         (prev2 == null || prev2.text == "(" || prev2.text == "[" ||
           prev2.text == "," ||
-          (prev2.kind == P && prev2.text != ")" && prev2.text != "]") ||
-          (prev2.kind == W && keyword(prev2.text)))
+          (prev2.isInstanceOf[Punct] && prev2.text != ")" && prev2.text != "]") ||
+          (isWordK(prev2) && keyword(prev2.text)))
       val sp =
         if (prev == null) ""
         else if (prevIsUnarySign) ""
         else if (t.text == "(" )
           // no space between a function name / ) / ] / '(' and its '('
           // (ANY/ALL are keywords in joins but functions before parens)
-          if (prev.kind == W && (!keyword(prev.text) ||
+          if (isWordK(prev) && (!keyword(prev.text) ||
               Set("ANY", "ALL").contains(prev.text.toUpperCase))) ""
           else if (prev.text == ")" || prev.text == "]") ""
           else if (prev.text == "(" || prev.text == "[") ""
           else " "
         else if (t.text == ")" || t.text == "]" || t.text == "," ||
           t.text == "::" || t.text == ".") ""
-        else if (prev.text == "." && t.kind == W && keyword(t.text)) " "
+        else if (prev.text == "." && isWordK(t) && keyword(t.text)) " "
         else if (prev.text == "(" || prev.text == "[" || prev.text == "::" ||
           prev.text == ".") ""
         else if (t.text == "[")
-          if (prev.kind == W && !keyword(prev.text)) "" else " "
+          if (isWordK(prev) && !keyword(prev.text)) "" else " "
         else " "
       sb.append(sp).append(t.text)
       prev2 = prev
@@ -934,49 +809,48 @@ object ChSyntaxFormat {
     "INTERPOLATE", "TIES", "INTERSECT", "EXCEPT")
   private def keyword(w: String): Boolean = kw.contains(w.toUpperCase)
 
-  private def isW(t: T, s: String): Boolean =
-    t.kind == W && t.text.equalsIgnoreCase(s)
+  private def isW(t: Tok, s: String): Boolean =
+    isWordK(t) && t.text.equalsIgnoreCase(s)
 
   /** Split `ts` at depth-0 commas. */
-  private def splitItems(ts: Seq[T]): Seq[Seq[T]] = {
-    val out = ArrayBuffer[Seq[T]]()
-    var d = 0
-    var cur = ArrayBuffer[T]()
-    ts.foreach { t =>
-      t.text match {
-        case "(" | "[" => d += 1; cur += t
-        case ")" | "]" => d -= 1; cur += t
-        case "," if d == 0 => out += cur.toSeq; cur = ArrayBuffer[T]()
-        case _ => cur += t
-      }
-    }
-    if (cur.nonEmpty || out.nonEmpty) out += cur.toSeq
-    out.toSeq
+  private def splitItems(ts: Seq[Tok]): Seq[Seq[Tok]] =
+    if (ts.isEmpty) Nil else ChLex.splitTop(ts)
+
+  /** Index of the `)` closing the `(` at `open`, or `ts.length` when it
+    * never closes.
+    */
+  private def closeOf(ts: Seq[Tok], open: Int): Int = {
+    val close = ChLex.balancedClose(ts, open)
+    if (close < 0) ts.length else close
+  }
+
+  /** Indices of the binary operators among `ops` outside brackets. */
+  private def topOps(ts: Seq[Tok], ops: String): Seq[Int] = {
+    val depth = ChLex.depths(ts, brackets = true)
+    ts.indices.filter(k => depth(k) == 0 && ts(k).isInstanceOf[Punct] &&
+      ops.contains(ts(k).text) && !unarySlot(ts, k))
+  }
+
+  /** The first index from `from` whose token is a word outside brackets
+    * (counted from `from`) and passes `p`, or `ts.length`.
+    */
+  private def topWord(ts: Seq[Tok], from: Int)(p: Int => Boolean): Int = {
+    val depth = ChLex.depths(ts.drop(from), brackets = true)
+    (from until ts.length).find(k => depth(k - from) == 0 && isWordK(ts(k)) && p(k))
+      .getOrElse(ts.length)
   }
 
   /** Top-level SELECT-clause boundaries. Returns (clause → token slice). */
-  private def clause(ts: Seq[T], i0: Int): Int = {
-    // find next depth-0 clause keyword index from i0 (exclusive start)
-    var d = 0
-    var i = i0
-    while (i < ts.length) {
-      val t = ts(i)
-      t.text match {
-        case "(" | "[" => d += 1
-        case ")" | "]" => d -= 1
-        case _ if d == 0 && t.kind == W =>
-          val u = t.text.toUpperCase
-          if (u == "FROM" || u == "WHERE" || u == "PREWHERE" ||
-            u == "HAVING" || u == "SETTINGS" || u == "LIMIT" ||
-            ((u == "GROUP" || u == "ORDER") && i + 1 < ts.length &&
-              isW(ts(i + 1), "BY")))
-            return i
-          // UNION handled by the caller
-        case _ => ()
-      }
-      i += 1
+  private def clause(ts: Seq[Tok], i0: Int): Int = {
+    // find next depth-0 clause keyword index from i0 (exclusive start);
+    // UNION is handled by the caller
+    topWord(ts, i0) { i =>
+      val u = ts(i).text.toUpperCase
+      u == "FROM" || u == "WHERE" || u == "PREWHERE" ||
+        u == "HAVING" || u == "SETTINGS" || u == "LIMIT" ||
+        ((u == "GROUP" || u == "ORDER") && i + 1 < ts.length &&
+          isW(ts(i + 1), "BY"))
     }
-    ts.length
   }
 
   /** Session toggle: optimize_injective_functions_inside_uniq — the
@@ -1036,7 +910,7 @@ object ChSyntaxFormat {
 
   private def format0(query: String,
       columnsOf: String => Option[Seq[String]]): Seq[String] = {
-    val ts = lex(query)
+    val ts = tokens(query)
     val out = formatUnion(ts, 0, columnsOf)
     // quirk preserved from the reference formatter: a mixed chain whose
     // first rendered element is a parenthesized group prints a leading
@@ -1045,45 +919,24 @@ object ChSyntaxFormat {
   }
 
   /** Union-mode token triples at depth 0: (index, isAll, isDistinct). */
-  private def unionSplits(ts: Seq[T]): Seq[(Int, String)] = {
-    var d = 0
-    val out = ArrayBuffer[(Int, String)]()
-    var i = 0
-    while (i < ts.length) {
-      ts(i).text match {
-        case "(" | "[" => d += 1
-        case ")" | "]" => d -= 1
-        case _ =>
-          if (d == 0 && isW(ts(i), "UNION")) {
-            val mode =
-              if (i + 1 < ts.length && isW(ts(i + 1), "ALL")) "ALL"
-              else if (i + 1 < ts.length && isW(ts(i + 1), "DISTINCT")) "DISTINCT"
-              else "DISTINCT"
-            out += ((i, mode))
-          }
-      }
-      i += 1
+  private def unionSplits(ts: Seq[Tok]): Seq[(Int, String)] = {
+    val depth = ChLex.depths(ts, brackets = true)
+    ts.indices.filter(i => depth(i) == 0 && isW(ts(i), "UNION")).map { i =>
+      (i, if (i + 1 < ts.length && isW(ts(i + 1), "ALL")) "ALL" else "DISTINCT")
     }
-    out.toSeq
   }
 
-  private def stripOuterParens(ts: Seq[T]): Seq[T] = {
+  private def stripOuterParens(ts: Seq[Tok]): Seq[Tok] = {
     var cur = ts
     var changed = true
     while (changed && cur.length >= 2 && cur.head.text == "(" &&
         cur.last.text == ")") {
       changed = false
-      // the opening paren must match the closing one
-      var d = 0
-      var ok = true
-      for (k <- cur.indices) {
-        cur(k).text match {
-          case "(" => d += 1
-          case ")" => d -= 1; if (d == 0 && k != cur.length - 1) ok = false
-          case _ => ()
-        }
+      // the opening paren must match the closing one (or never close)
+      val close = ChLex.balancedClose(cur, 0)
+      if (close < 0 || close == cur.length - 1) {
+        cur = cur.slice(1, cur.length - 1); changed = true
       }
-      if (ok) { cur = cur.slice(1, cur.length - 1); changed = true }
     }
     cur
   }
@@ -1094,10 +947,10 @@ object ChSyntaxFormat {
   // mode splice into it — distinct over all rows either way), then the
   // remaining UNION ALL tail splices flat ----
   private sealed trait UNode
-  private final case class USel(ts: Seq[T]) extends UNode
+  private final case class USel(ts: Seq[Tok]) extends UNode
   private final case class UChain(all: Boolean, cs: Vector[UNode]) extends UNode
 
-  private def parseUnion(ts0: Seq[T]): UNode = {
+  private def parseUnion(ts0: Seq[Tok]): UNode = {
     val ts = stripOuterParens(ts0)
     val splits = unionSplits(ts)
     if (splits.isEmpty) return USel(ts)
@@ -1158,17 +1011,15 @@ object ChSyntaxFormat {
   /** Depth-0 set-operation splits incl. INTERSECT/EXCEPT: Seq of
     * (separator label, branch tokens); None when the chain is
     * UNION-only (the UNION normalizer handles those). */
-  private def setopChain(ts0: Seq[T]): Option[Seq[(String, Seq[T])]] = {
+  private def setopChain(ts0: Seq[Tok]): Option[Seq[(String, Seq[Tok])]] = {
     val ts = stripOuterParens(ts0)
-    var d = 0
+    val depth = ChLex.depths(ts, brackets = true)
     val cuts = ArrayBuffer[(Int, Int, String)]() // (from, to, label)
     var i = 0
     var sawIE = false
     while (i < ts.length) {
       ts(i).text match {
-        case "(" | "[" => d += 1
-        case ")" | "]" => d -= 1
-        case _ if d == 0 && ts(i).kind == W =>
+        case _ if depth(i) == 0 && isWordK(ts(i)) =>
           val u = ts(i).text.toUpperCase
           if (u == "UNION" || u == "INTERSECT" || u == "EXCEPT") {
             if (u != "UNION") sawIE = true
@@ -1193,7 +1044,7 @@ object ChSyntaxFormat {
     Some(labels.zip(branches).toSeq)
   }
 
-  private def formatUnion(ts0: Seq[T], indent: Int,
+  private def formatUnion(ts0: Seq[Tok], indent: Int,
       columnsOf: String => Option[Seq[String]]): Seq[String] =
     setopChain(ts0) match {
       case Some(chain) =>
@@ -1213,7 +1064,7 @@ object ChSyntaxFormat {
       case None => renderNode(parseUnion(ts0), indent, columnsOf)
     }
 
-  private def formatSelect(ts0: Seq[T], indent: Int,
+  private def formatSelect(ts0: Seq[Tok], indent: Int,
       columnsOf: String => Option[Seq[String]]): Seq[String] = {
     val ts = stripOuterParens(ts0)
     val pad = " " * indent
@@ -1223,19 +1074,7 @@ object ChSyntaxFormat {
     // WITH prologue
     if (isW(ts(i), "WITH")) {
       // ends at the depth-0 SELECT
-      var d = 0
-      var j = i + 1
-      var sel = -1
-      while (j < ts.length && sel < 0) {
-        ts(j).text match {
-          case "(" | "[" => d += 1
-          case ")" | "]" => d -= 1
-          case _ if d == 0 && isW(ts(j), "SELECT") => sel = j
-          case _ => ()
-        }
-        j += 1
-      }
-      if (sel < 0) sel = ts.length
+      val sel = topWord(ts, i + 1)(j => isW(ts(j), "SELECT"))
       val items = splitItems(ts.slice(i + 1, sel))
       if (items.length == 1) lines += pad + "WITH " + renderWithItem(items.head, indent, columnsOf)
       else {
@@ -1255,13 +1094,13 @@ object ChSyntaxFormat {
     // optimize_duplicate_order_by_and_distinct: an outer DISTINCT whose
     // item set equals the inner SELECT DISTINCT's output-name set is
     // redundant and prints dropped (01455)
-    def itemName(it: Seq[T]): String = {
+    def itemName(it: Seq[Tok]): String = {
       val asAt = it.lastIndexWhere(isW(_, "AS"))
       if (asAt >= 0 && asAt == it.length - 2) it.last.text
-      else if (it.length >= 2 && it.last.kind == W &&
+      else if (it.length >= 2 && isWordK(it.last) &&
           !keyword(it.last.text) && !it.last.text.head.isDigit && {
             val p = it(it.length - 2)
-            (p.kind == W && !keyword(p.text)) || p.kind == S ||
+            (isWordK(p) && !keyword(p.text)) || isLitK(p) ||
               p.text == ")" || p.text == "]"
           }) it.last.text // implicit alias
       else render(it)
@@ -1271,25 +1110,17 @@ object ChSyntaxFormat {
     i = selEnd
     // locate FROM for star expansion + formatting
     var fromTable: Option[String] = None
-    var fromSub: Option[Seq[T]] = None
-    var fromTail: Seq[T] = Nil
+    var fromSub: Option[Seq[Tok]] = None
+    var fromTail: Seq[Tok] = Nil
     if (i < ts.length && isW(ts(i), "FROM")) {
       val fe = clause(ts, i + 1)
       val body = ts.slice(i + 1, fe)
       if (body.nonEmpty && body.head.text == "(") {
         // the subquery part and whatever trails its close (alias, joins)
-        var d = 0
-        var close = -1
-        for (k <- body.indices if close < 0) {
-          body(k).text match {
-            case "(" => d += 1
-            case ")" => d -= 1; if (d == 0) close = k
-            case _ => ()
-          }
-        }
+        val close = ChLex.balancedClose(body, 0)
         if (close == body.length - 1) fromSub = Some(body)
         else { fromSub = Some(body.take(close + 1)); fromTail = body.drop(close + 1) }
-      } else if (body.length == 1 && body.head.kind == W) {
+      } else if (body.length == 1 && isWordK(body.head)) {
         fromTable = Some(body.head.text)
       } else fromTail = body
       i = fe
@@ -1309,7 +1140,7 @@ object ChSyntaxFormat {
         items.head.head.text == "*") {
       fromTable.flatMap(tableCols) match {
         case Some(cols) if cols.nonEmpty =>
-          items = cols.map(c => Seq(T(c, W)))
+          items = cols.map(c => Seq(Word(c)))
         case _ => ()
       }
     }
@@ -1318,22 +1149,13 @@ object ChSyntaxFormat {
     // argument (01321)
     if (aggOfKeys.value) {
       // the GROUP BY items of THIS select level
-      var d4 = 0
-      var gAt = -1
-      (i until ts.length).foreach { k =>
-        ts(k).text match {
-          case "(" | "[" => d4 += 1
-          case ")" | "]" => d4 -= 1
-          case _ if d4 == 0 && gAt < 0 && isW(ts(k), "GROUP") => gAt = k
-          case _ => ()
-        }
-      }
-      if (gAt >= 0) {
+      val gAt = topWord(ts, i)(k => isW(ts(k), "GROUP"))
+      if (gAt < ts.length) {
         val ge = clause(ts, gAt + 2)
         val keys = splitItems(ts.slice(gAt + 2, ge))
           .map(k0 => stripOuterParens(k0).map(_.text))
           .filter(_.nonEmpty)
-        def coveredByKeys(arg: Seq[T]): Boolean = {
+        def coveredByKeys(arg: Seq[Tok]): Boolean = {
           val txts = arg.map(_.text)
           val covered = Array.fill(arg.length)(false)
           keys.foreach { key =>
@@ -1345,24 +1167,17 @@ object ChSyntaxFormat {
             }
           }
           arg.indices.forall { k =>
-            covered(k) || arg(k).kind != W || keyword(arg(k).text) ||
+            covered(k) || !isWordK(arg(k)) || keyword(arg(k).text) ||
               arg(k).text.head.isDigit ||
               (k + 1 < arg.length && arg(k + 1).text == "(") // fn name
           }
         }
         val reducible = Set("min", "max", "any", "anylast")
-        def reduceItem(it: Seq[T]): Seq[T] = {
-          if (it.length >= 3 && it.head.kind == W &&
+        def reduceItem(it: Seq[Tok]): Seq[Tok] = {
+          if (it.length >= 3 && isWordK(it.head) &&
               reducible.contains(it.head.text.toLowerCase) &&
               it(1).text == "(") {
-            var d5 = 1
-            var m = 2
-            while (m < it.length && d5 > 0) {
-              it(m).text match {
-                case "(" => d5 += 1; case ")" => d5 -= 1; case _ => ()
-              }
-              if (d5 > 0) m += 1
-            }
+            val m = closeOf(it, 1)
             if (m < it.length) {
               val arg = it.slice(2, m)
               val tail = it.drop(m + 1) // e.g. ` AS a`
@@ -1378,26 +1193,26 @@ object ChSyntaxFormat {
     }
     // CH always prints an alias with explicit AS: a select item ending
     // in two adjacent value tokens (`expr alias`) gains the keyword
-    def withAs(it: Seq[T]): Seq[T] = {
+    def withAs(it: Seq[Tok]): Seq[Tok] = {
       val winKw = Set("OVER", "ROWS", "RANGE", "PRECEDING", "FOLLOWING",
         "UNBOUNDED", "CURRENT", "ROW", "FILTER", "RESPECT", "IGNORE",
         "NULLS", "FIRST", "LAST")
-      if (it.length >= 2 && it.last.kind == W && !keyword(it.last.text) &&
+      if (it.length >= 2 && isWordK(it.last) && !keyword(it.last.text) &&
           !winKw.contains(it.last.text.toUpperCase) &&
           !it.last.text.head.isDigit && {
             val p = it(it.length - 2)
-            ((p.kind == W && !keyword(p.text) &&
-              !winKw.contains(p.text.toUpperCase)) || p.kind == S ||
+            ((isWordK(p) && !keyword(p.text) &&
+              !winKw.contains(p.text.toUpperCase)) || isLitK(p) ||
               p.text == ")" || p.text == "]")
           } && !it.exists(t => isW(t, "INTERVAL") || isW(t, "OVER")))
-        it.init ++ Seq(T("AS", W), it.last)
+        it.init ++ Seq(Word("AS"), it.last)
       else it
     }
     if (distinct && dupDistinct.value && fromSub.isDefined) {
       // the guaranteed-distinct output-name set of a subquery: a SELECT
       // DISTINCT's items, or — through a plain projection that passes
       // those names unchanged — its own subquery's set
-      def distinctNames(sub0: Seq[T], depth: Int): Option[Set[String]] = {
+      def distinctNames(sub0: Seq[Tok], depth: Int): Option[Set[String]] = {
         if (depth > 4) return None
         val inner = stripOuterParens(sub0)
         var k = 0
@@ -1444,30 +1259,28 @@ object ChSyntaxFormat {
     }
     // table aliases print with explicit AS; each JOIN lands on its own
     // line (IAST::FormatSettings one_line=false join layout)
-    def aliasify(ts2: Seq[T], afterParen: Boolean = false): Seq[T] = {
-      val out2 = ArrayBuffer[T]()
+    def aliasify(ts2: Seq[Tok], afterParen: Boolean = false): Seq[Tok] = {
+      val out2 = ArrayBuffer[Tok]()
       ts2.zipWithIndex.foreach { case (t, k) =>
         val prevOk = out2.lastOption.exists(p =>
-          (p.kind == W && !keyword(p.text)) || p.text == ")") ||
+          (isWordK(p) && !keyword(p.text)) || p.text == ")") ||
           (k == 0 && afterParen)
-        if (t.kind == W && !keyword(t.text) && !t.text.head.isDigit &&
+        if (isWordK(t) && !keyword(t.text) && !t.text.head.isDigit &&
             prevOk && (k + 1 >= ts2.length || ts2(k + 1).text != "(" &&
               ts2(k + 1).text != "."))
-          out2 += T("AS", W)
+          out2 += Word("AS")
         out2 += t
       }
       out2.toSeq
     }
-    def joinSplit(ts2: Seq[T]): Seq[Seq[T]] = {
+    def joinSplit(ts2: Seq[Tok]): Seq[Seq[Tok]] = {
       val joinKw = Set("CROSS", "INNER", "LEFT", "RIGHT", "FULL", "GLOBAL",
         "ANY", "ALL", "ASOF", "SEMI", "ANTI", "PASTE")
       val cuts = ArrayBuffer[Int]()
-      var d = 0
+      val depth = ChLex.depths(ts2, brackets = true)
       ts2.indices.foreach { k =>
         ts2(k).text match {
-          case "(" | "[" => d += 1
-          case ")" | "]" => d -= 1
-          case _ if d == 0 && ts2(k).kind == W =>
+          case _ if depth(k) == 0 && isWordK(ts2(k)) =>
             val u = ts2(k).text.toUpperCase
             if (u == "JOIN" || (joinKw.contains(u) && ts2.drop(k + 1)
                 .find(!_.text.isEmpty).exists(_ => true) && {
@@ -1476,14 +1289,14 @@ object ChSyntaxFormat {
               var okRun = true
               while (okRun && m < ts2.length &&
                   !isW(ts2(m), "JOIN")) {
-                okRun = ts2(m).kind == W &&
+                okRun = isWordK(ts2(m)) &&
                   joinKw.contains(ts2(m).text.toUpperCase)
                 m += 1
               }
               okRun && m < ts2.length
             })) {
               // only cut at the START of the run
-              val prevW = (k - 1 >= 0) && ts2(k - 1).kind == W &&
+              val prevW = (k - 1 >= 0) && isWordK(ts2(k - 1)) &&
                 (joinKw.contains(ts2(k - 1).text.toUpperCase) ||
                   isW(ts2(k - 1), "JOIN"))
               if (!prevW) cuts += k
@@ -1497,7 +1310,7 @@ object ChSyntaxFormat {
         bounds.map { case (a, b) => ts2.slice(a, b) }
       }
     }
-    def fromTailLines(ts2: Seq[T], firstPrefix: String): Unit = {
+    def fromTailLines(ts2: Seq[Tok], firstPrefix: String): Unit = {
       val segs = joinSplit(aliasify(ts2,
         afterParen = firstPrefix.endsWith(")")))
       segs.zipWithIndex.foreach { case (seg, k) =>
@@ -1529,19 +1342,15 @@ object ChSyntaxFormat {
     // aggregate moves to WHERE (printed before GROUP BY — 01300_having)
     var ts2 = ts
     if (true) { // aggregate-free HAVING always prints moved to WHERE
-      var d3 = 0
       var havingAt = -1
       var groupAt = -1
+      val depth = ChLex.depths(ts2.drop(i), brackets = true)
       (i until ts2.length).foreach { k =>
-        ts2(k).text match {
-          case "(" | "[" => d3 += 1
-          case ")" | "]" => d3 -= 1
-          case _ if d3 == 0 && ts2(k).kind == W =>
-            val u = ts2(k).text.toUpperCase
-            if (u == "HAVING" && havingAt < 0) havingAt = k
-            if (u == "GROUP" && groupAt < 0) groupAt = k
-            if (u == "WHERE") havingAt = -2 // existing WHERE: leave as-is
-          case _ => ()
+        if (depth(k - i) == 0 && isWordK(ts2(k))) {
+          val u = ts2(k).text.toUpperCase
+          if (u == "HAVING" && havingAt < 0) havingAt = k
+          if (u == "GROUP" && groupAt < 0) groupAt = k
+          if (u == "WHERE") havingAt = -2 // existing WHERE: leave as-is
         }
       }
       if (havingAt >= 0 && groupAt >= 0 && havingAt > groupAt) {
@@ -1549,13 +1358,13 @@ object ChSyntaxFormat {
         val hav = ts2.slice(havingAt + 1, he)
         val aggNames = Set("sum", "min", "max", "avg", "count", "uniq",
           "uniqexact", "any", "grouparray")
-        val hasAgg = hav.exists(t => t.kind == W &&
+        val hasAgg = hav.exists(t => isWordK(t) &&
           aggNames.contains(t.text.toLowerCase))
         if (!hasAgg && hav.nonEmpty) {
           ts2 = ts2.take(havingAt) ++ ts2.slice(he, ts2.length)
           val g = ts2.indexWhere(x => isW(x, "GROUP"), i)
           if (g >= 0)
-            ts2 = ts2.take(g) ++ Vector(T("WHERE", W)) ++ hav ++
+            ts2 = ts2.take(g) ++ Vector(Word("WHERE")) ++ hav ++
               ts2.drop(g)
         }
       }
@@ -1575,29 +1384,19 @@ object ChSyntaxFormat {
           // arguments are all other keys or literals is redundant
           // (non-recursive — a composite argument keeps the key, 01300)
           if (gbFnKeys.value && gs.length > 1) {
-            def txt(x: Seq[T]) = render(stripOuterParens(x))
+            def txt(x: Seq[Tok]) = render(stripOuterParens(x))
             val keyTexts = gs.map(txt)
-            def topArgs(item0: Seq[T]): Seq[Seq[T]] = {
+            def topArgs(item0: Seq[Tok]): Seq[Seq[Tok]] = {
               val item = stripOuterParens(item0)
               // operator form: split at the lowest-precedence depth-0 ops
-              var d = 0
-              val ops = ArrayBuffer[Int]()
-              item.indices.foreach { k =>
-                item(k).text match {
-                  case "(" | "[" => d += 1
-                  case ")" | "]" => d -= 1
-                  case "+" | "-" | "*" | "/" | "%"
-                      if d == 0 && !unarySlot(item, k) => ops += k
-                  case _ => ()
-                }
-              }
+              val ops = topOps(item, "+-*/%")
               if (ops.nonEmpty) {
                 def prec(k: Int) = if ("+-".contains(item(k).text)) 1 else 2
                 val lo = ops.map(prec).min
                 val cut = ops.filter(prec(_) == lo).toSeq
                 val bounds = (0 +: cut.map(_ + 1)).zip(cut :+ item.length)
                 bounds.map { case (a, b) => item.slice(a, b) }.toSeq
-              } else if (item.length > 2 && item.head.kind == W &&
+              } else if (item.length > 2 && isWordK(item.head) &&
                   !keyword(item.head.text) && item(1).text == "(" &&
                   item.last.text == ")")
                 splitItems(item.slice(2, item.length - 1))
@@ -1662,7 +1461,7 @@ object ChSyntaxFormat {
                   byItems.head.head.text == "*")
                 fromTable.flatMap(tableCols) match {
                   case Some(cols) if cols.nonEmpty =>
-                    byItems = cols.map(c => Seq(T(c, W)))
+                    byItems = cols.map(c => Seq(Word(c)))
                   case _ => ()
                 }
               val head = pad + "LIMIT " + render(body.take(b)) + " BY"
@@ -1690,10 +1489,10 @@ object ChSyntaxFormat {
 
   /** A WITH item may be a CTE (`name AS (subquery)`) — format its body
     * multi-line like the reference does; scalar items echo verbatim. */
-  private def renderWithItem(it: Seq[T], indent: Int,
+  private def renderWithItem(it: Seq[Tok], indent: Int,
       columnsOf: String => Option[Seq[String]]): String = {
     // CTE shape: word AS ( … )
-    if (it.length >= 4 && it.head.kind == W && isW(it(1), "AS") &&
+    if (it.length >= 4 && isWordK(it.head) && isW(it(1), "AS") &&
         it(2).text == "(" && it.last.text == ")") {
       val inner = formatUnion(it.slice(3, it.length - 1), indent + 4, columnsOf)
       (it.head.text + " AS\n" + " " * indent + "(\n" +

@@ -23,24 +23,7 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ChTranspiler {
 
-  /** True when `t`'s parens balance outside single-quoted literals. */
-  private def balancedParens(t: String): Boolean = {
-    var d = 0
-    var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == '\'') {
-        i += 1
-        while (i < t.length && t.charAt(i) != '\'') {
-          if (t.charAt(i) == '\\') i += 1
-          i += 1
-        }
-      } else if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      i += 1
-    }
-    d == 0
-  }
+  import ChLex._
 
   /** Split a test file's text into top-level statements, each paired
     * with its RAW text: (raw, clean). Semicolons inside string literals
@@ -58,32 +41,13 @@ object ChTranspiler {
     val out = ArrayBuffer[(String, String)]()
     val cur = new StringBuilder
     var segStart = 0
-    var i = 0
     val n = sqlText.length
-    while (i < n) {
-      val c = sqlText.charAt(i)
-      if (c == '\'' ) {
-        cur.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sqlText.charAt(i)
-          cur.append(d)
-          if (d == '\\' && i + 1 < n) { cur.append(sqlText.charAt(i + 1)); i += 2 }
-          else { if (d == '\'') done = true; i += 1 }
-        }
-      } else if (c == '-' && i + 1 < n && sqlText.charAt(i + 1) == '-') {
-        while (i < n && sqlText.charAt(i) != '\n') i += 1
-      } else if (c == '#') {
-        // CH lexer comments `#` to end-of-line (Lexer.cpp)
-        while (i < n && sqlText.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && sqlText.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < n && !(sqlText.charAt(i) == '*' && sqlText.charAt(i + 1) == '/')) i += 1
-        i = math.min(i + 2, n)
-        cur.append(' ')
-      } else if (c == ';') {
-        out += ((sqlText.substring(segStart, i + 1).trim, cur.toString.trim))
-        cur.clear(); i += 1; segStart = i
+    foreachUnit(sqlText) { (a, b, comment) =>
+      val c = sqlText.charAt(a)
+      if (comment) { if (c == '/') cur.append(' ') }
+      else if (c == ';') {
+        out += ((sqlText.substring(segStart, b).trim, cur.toString.trim))
+        cur.clear(); segStart = b
       } else if (c == '\n' && {
           // the client ends INSERT … VALUES data at the NEWLINE — a
           // following line starting a new statement keyword is a new
@@ -92,176 +56,17 @@ object ChTranspiler {
           ("""(?is)^INSERT\s.*\bVALUES\b""".r.findFirstIn(t).isDefined ||
             """(?is)^INSERT\s.*\bFORMAT\s+Values\b""".r.findFirstIn(t)
               .isDefined) &&
-            t.endsWith(")") && balancedParens(t) && {
-              var k = i + 1
+            t.endsWith(")") && balanced(t) && {
+              var k = b
               while (k < n && sqlText.charAt(k).isWhitespace) k += 1
               k < n && sqlText.charAt(k).isLetter
             } }) {
-        out += ((sqlText.substring(segStart, i).trim, cur.toString.trim))
-        cur.clear(); i += 1; segStart = i
-      } else { cur.append(c); i += 1 }
+        out += ((sqlText.substring(segStart, a).trim, cur.toString.trim))
+        cur.clear(); segStart = b
+      } else cur.append(sqlText.substring(a, b))
     }
     out += ((sqlText.substring(segStart, n).trim, cur.toString.trim))
     out.toSeq
-  }
-
-  private sealed trait Tok { def text: String }
-  private case class Word(text: String) extends Tok
-  private case class Str(text: String) extends Tok
-  private case class Num(text: String) extends Tok
-  private case class Punct(text: String) extends Tok
-  private case class Ws(text: String) extends Tok
-
-  private def tokenize(s: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c.isWhitespace) {
-        val j = i; while (i < n && s.charAt(i).isWhitespace) i += 1
-        // exotic unicode spaces (U+3000 in 600201_mysql_if) would reach
-        // Spark's lexer verbatim — normalize to ASCII
-        out += Ws(s.substring(j, i)
-          .map(ch => if (ch > ' ' || ch == ' ') ' ' else ch))
-      } else if (c == '\'') {
-        val j = i; i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = s.charAt(i)
-          if (d == '\\' && i + 1 < n) i += 2
-          else { if (d == '\'') done = true; i += 1 }
-        }
-        out += Str(s.substring(j, i))
-      } else if (c.isLetter || c == '_' || c == '`') {
-        if (c == '`') {
-          val j = i; i += 1
-          while (i < n && s.charAt(i) != '`') i += 1
-          i = math.min(i + 1, n)
-          out += Word(s.substring(j, i))
-        } else {
-          val j = i
-          while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-          out += Word(s.substring(j, i))
-        }
-      } else if (c.isDigit ||
-          (c == '.' && i + 1 < n && s.charAt(i + 1).isDigit)) {
-        val j = i
-        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '.' ||
-          ((s.charAt(i) == '+' || s.charAt(i) == '-') && i > j &&
-            (s.charAt(i - 1) == 'e' || s.charAt(i - 1) == 'E')))) i += 1
-        out += Num(s.substring(j, i))
-      } else {
-        out += Punct(c.toString); i += 1
-      }
-    }
-    out.result()
-  }
-
-  // ---- lexical toolkit: the one copy of each token cursor every pass
-  // uses. Free functions on the vector, not a view bound to one: several
-  // passes re-tokenize and reassign their `toks` mid-pass.
-
-  /** Index of the first non-whitespace token at or after `j`
-    * (`ts.length` when there is none).
-    */
-  private def nextSig(ts: Vector[Tok], j: Int): Int = {
-    var k = j
-    while (k < ts.length && ts(k).isInstanceOf[Ws]) k += 1
-    k
-  }
-
-  /** Index of the last non-whitespace token at or before `j` (-1 when
-    * there is none).
-    */
-  private def prevSig(ts: Vector[Tok], j: Int): Int = {
-    var k = j
-    while (k >= 0 && ts(k).isInstanceOf[Ws]) k -= 1
-    k
-  }
-
-  /** Index of the `)` that closes the `(` at `open`, or -1 when the
-    * parens never balance.
-    */
-  private def balancedClose(ts: Vector[Tok], open: Int): Int = {
-    var d = 0
-    var j = open
-    while (j < ts.length) {
-      ts(j) match {
-        case Punct("(") => d += 1
-        case Punct(")") => d -= 1; if (d == 0) return j
-        case _ => ()
-      }
-      j += 1
-    }
-    -1
-  }
-
-  /** Index of the `(` that the `)` at `close` closes, or -1 when the
-    * parens never balance.
-    */
-  private def balancedOpen(ts: Vector[Tok], close: Int): Int = {
-    var d = 0
-    var j = close
-    while (j >= 0) {
-      ts(j) match {
-        case Punct(")") => d += 1
-        case Punct("(") => d -= 1; if (d == 0) return j
-        case _ => ()
-      }
-      j -= 1
-    }
-    -1
-  }
-
-  /** [[balancedClose]] for passes that treat an unclosed `(` as running
-    * to the end: the LAST index (`ts.length - 1`) when the parens never
-    * balance.
-    */
-  private def matchClose(ts: Vector[Tok], open: Int): Int = {
-    val close = balancedClose(ts, open)
-    if (close < 0) ts.length - 1 else close
-  }
-
-  /** Paren depth of every token; a `(` and its `)` both sit at the depth
-    * outside them.
-    */
-  private def depths(ts: Vector[Tok]): Array[Int] = {
-    val depth = new Array[Int](ts.length)
-    var d = 0
-    for (k <- ts.indices) ts(k) match {
-      case Punct("(") => depth(k) = d; d += 1
-      case Punct(")") => d -= 1; depth(k) = d
-      case _ => depth(k) = d
-    }
-    depth
-  }
-
-  /** Index of every token's enclosing `(` (-1 at top level); a `(` and
-    * its `)` both map to the paren enclosing them. A `)` that closes
-    * nothing stays at top level.
-    */
-  private def parents(ts: Vector[Tok]): Array[Int] = {
-    val parent = new Array[Int](ts.length)
-    var stack = List(-1)
-    for (k <- ts.indices) ts(k) match {
-      case Punct("(") => parent(k) = stack.head; stack = k :: stack
-      case Punct(")") => stack = closeParen(stack); parent(k) = stack.head
-      case _ => parent(k) = stack.head
-    }
-    parent
-  }
-
-  /** A paren stack (innermost `(` first, over a -1 top-level sentinel)
-    * after a `)`: a stray `)` leaves the sentinel in place.
-    */
-  private def closeParen(stack: List[Int]): List[Int] =
-    if (stack.tail.isEmpty) stack else stack.tail
-
-  /** True when some `)` closes no `(`. */
-  private def hasStrayClose(ts: Vector[Tok]): Boolean = {
-    val depth = depths(ts)
-    ts.indices.exists(k => depth(k) < 0 && ts(k) == Punct(")"))
   }
 
   /** True when a `[` following `prev` opens an array LITERAL (otherwise
@@ -278,7 +83,7 @@ object ChTranspiler {
         "GROUP").contains(kw)
     case Some(Punct(p)) => p != ")" && p != "]"
     case Some(_: Str) | Some(_: Num) => false
-    case Some(_: Ws) => true // handled by caller (skips ws)
+    case Some(_: Ws) | Some(_: Comment) => true // handled by caller (skips ws)
   }
 
   /** ClickHouse type name → Spark SQL type, for CAST targets. */
@@ -1275,7 +1080,7 @@ object ChTranspiler {
     if (selStart < 0) return stmt
     val listText = toks.slice(selStart + 1, listEnd).map(_.text).mkString
     val aliasRe = """(?is)^(.*\S)\s+AS\s+(`[^`]+`|[A-Za-z_]\w*)\s*$""".r
-    val pairs = graft.sql.ChSession.splitTop(listText).flatMap {
+    val pairs = ChLex.splitTop(listText).flatMap {
       case aliasRe(expr, alias) =>
         val name = alias.stripPrefix("`").stripSuffix("`")
         // self-aliased columns (`x AS x`) add nothing
@@ -1516,51 +1321,6 @@ object ChTranspiler {
   }
 
   def transpile(stmt: String): String = transpile(stmt, false)
-
-  /** Drop `-- … EOL` and `/* … */` comments (string- and
-    * backtick-aware) before tokenizing: the token passes must not see
-    * comment text — a comma inside a comment would split a scalar WITH
-    * item list, and words inside comments would get rewritten.
-    */
-  private def stripComments(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    val n = s.length
-    // under SET dialect_type='MYSQL' double quotes delimit STRINGS, so
-    // comment markers inside them must survive (ADVICE r11)
-    val dquoteIsString = mysqlDialect
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '#') {
-        // CH lexer comments `#` to end-of-line (Lexer.cpp '#', '#!')
-        while (i < n && s.charAt(i) != '\n') i += 1
-      } else if (c == '\'' || c == '`' || (dquoteIsString && c == '"')) {
-        val quote = c
-        sb.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = s.charAt(i); sb.append(d); i += 1
-          if (d == '\\' && quote != '`' && i < n) {
-            sb.append(s.charAt(i)); i += 1
-          } else if (d == quote) done = true
-        }
-      } else if (c == '-' && i + 1 < n && s.charAt(i + 1) == '-') {
-        while (i < n && s.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && s.charAt(i + 1) == '*') {
-        val close = s.indexOf("*/", i + 2)
-        i = if (close < 0) n else close + 2
-        sb.append(' ')
-      } else {
-        sb.append(c); i += 1
-      }
-    }
-    sb.toString
-  }
-
-  private def mysqlDialect: Boolean =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("graft.ch.dialect", "CLICKHOUSE") == "MYSQL"
-    catch { case _: Throwable => false }
 
   def transpile(stmt: String, widenInts: Boolean): String = {
     val toks0raw = tokenize(stripComments(rewriteRemote(stmt)))
@@ -2629,7 +2389,7 @@ object ChTranspiler {
           val restArgs = toks.slice(nextSig(toks, firstArg + 1), j)
           val tuples = restArgs.map(_.text).mkString
             .replaceAll("^\\s*,", "").trim
-          val defs = ChSession.splitTop(spec).map(_.trim).filter(_.nonEmpty)
+          val defs = ChLex.splitTop(spec).map(_.trim).filter(_.nonEmpty)
           val computedRe =
             """(?is)^(`[^`]+`|\w+)\s+(?:ALIAS|MATERIALIZED|DEFAULT)\s+(.*)$""".r
           val plain = ArrayBuffer[(String, String)]() // name -> CH type
@@ -2987,7 +2747,7 @@ object ChTranspiler {
               if (toks.lift(p0).contains(Punct("("))) {
                 val pc = balancedClose(toks, p0)
                 if (pc > p0) {
-                  val parts = ChSession.splitTop(text(p0 + 1, pc - 1))
+                  val parts = ChLex.splitTop(text(p0 + 1, pc - 1))
                     .map(_.trim).filter(_.nonEmpty)
                   val ident = """^`?[\w.]+`?$""".r
                   if (parts.forall(p => ident.findFirstIn(p).isDefined))
@@ -3508,28 +3268,22 @@ object ChTranspiler {
 
   private def rewriteNestedArrayJoin(sql: String): String = {
     val toks = tokenize(sql)
-    // subquery-nesting of each token: >0 means inside a (SELECT …) group
-    val subDepth = new Array[Int](toks.length)
-    var stack = List[Boolean]()
-    for (k <- toks.indices) {
-      subDepth(k) = stack.count(identity)
-      toks(k) match {
-        case Punct("(") =>
-          val first = nextSig(toks, k + 1)
-          val isSub = first < toks.length &&
-            (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
-          stack = isSub :: stack
-        case Punct(")") => stack = stack.drop(1)
-        case _ => ()
-      }
+    // whether a token sits inside a (SELECT …) group
+    val parent = parents(toks)
+    def isSub(open: Int) = {
+      val first = nextSig(toks, open + 1)
+      first < toks.length &&
+        (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
     }
+    def inSubquery(k: Int) =
+      Iterator.iterate(parent(k))(parent(_)).takeWhile(_ >= 0).exists(isSub)
     // collect top-scope arrayJoin(...) calls
     case class Call(start: Int, end: Int, argText: String) // token range incl ')'
     val calls = ArrayBuffer[Call]()
     var i = 0
     while (i < toks.length) {
       val p = nextSig(toks, i + 1)
-      if (isWordI(toks(i), "arrayJoin") && subDepth(i) == 0 &&
+      if (isWordI(toks(i), "arrayJoin") && !inSubquery(i) &&
           p < toks.length && toks(p) == Punct("(")) {
         var depth = 0
         var k = p + 1
@@ -3633,7 +3387,7 @@ object ChTranspiler {
     * opaque: a regex applied to the raw SQL would rewrite
     * `'select count()'` (a LITERAL) to `'select count(*)'` — observed on
     * the corpus's echo-style tests — so every regex here runs through
-    * [[replaceOutsideStrings]].
+    * [[ChLex.mapOutsideStrings]].
     */
   private def postPass(sql: String): String = {
     // CAST(x, 'Type') two-arg form → CAST(x AS <mapped>); the type string
@@ -3652,40 +3406,7 @@ object ChTranspiler {
       })
     })
     rewriteLimitOffset(
-      replaceOutsideStrings(c, countEmpty, _ => "count(*)"))
-  }
-
-  /** Apply `re.replaceAllIn` only to the segments OUTSIDE single-quoted
-    * string literals (escape-aware), leaving literal text untouched.
-    */
-  private def replaceOutsideStrings(sql: String,
-      re: scala.util.matching.Regex,
-      repl: scala.util.matching.Regex.Match => String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    val n = sql.length
-    var segStart = 0
-    def flush(end: Int): Unit = {
-      sb.append(re.replaceAllIn(sql.substring(segStart, end), repl))
-      segStart = end
-    }
-    while (i < n) {
-      if (sql.charAt(i) == '\'') {
-        flush(i)
-        var j = i + 1
-        var done = false
-        while (j < n && !done) {
-          val d = sql.charAt(j)
-          if (d == '\\' && j + 1 < n) j += 2
-          else { if (d == '\'') done = true; j += 1 }
-        }
-        sb.append(sql.substring(i, j))
-        segStart = j
-        i = j
-      } else i += 1
-    }
-    flush(n)
-    sb.toString
+      mapOutsideStrings(c)(countEmpty.replaceAllIn(_, "count(*)")))
   }
 
   /** MySQL-style `LIMIT offset, count` → `LIMIT count OFFSET offset` —
@@ -4011,25 +3732,16 @@ object ChTranspiler {
     */
   private def rewriteInlineAliases(sql: String): String = {
     val toks = tokenize(sql)
-    // for every token index, the index of its enclosing "(" (-1 at top)
-    val parent = new Array[Int](toks.length)
+    val parent = parents(toks)
     // paren kind: true = expression parens (eligible), false = subquery/CAST
     val eligible = scala.collection.mutable.Map[Int, Boolean]()
-    var stack = List[Int](-1)
-    for (k <- toks.indices) {
-      parent(k) = stack.head
-      toks(k) match {
-        case Punct("(") =>
-          val prev = prevSig(toks, k - 1)
-          val prevIsCast = prev >= 0 && isWordI(toks(prev), "CAST")
-          val first = nextSig(toks, k + 1)
-          val isSubquery = first < toks.length &&
-            (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
-          eligible(k) = !prevIsCast && !isSubquery
-          stack = k :: stack
-        case Punct(")") => stack = closeParen(stack)
-        case _ => ()
-      }
+    for (k <- toks.indices if toks(k) == Punct("(")) {
+      val prev = prevSig(toks, k - 1)
+      val prevIsCast = prev >= 0 && isWordI(toks(prev), "CAST")
+      val first = nextSig(toks, k + 1)
+      val isSubquery = first < toks.length &&
+        (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
+      eligible(k) = !prevIsCast && !isSubquery
     }
     // collect inline aliases: Word(AS) whose enclosing paren is eligible
     case class Inline(name: String, exprText: String, asIdx: Int, nameIdx: Int,
@@ -4612,36 +4324,30 @@ object ChTranspiler {
 
   /** Index in `s` where the trailing primary expression starts: an
     * identifier, a string/number literal, or a balanced (...) / array(...)
-    * call chain (walks back over matched parens plus a preceding name).
+    * call chain (a matched paren group plus the dotted name before it).
     */
   private def primaryStart(s: String): Int = {
-    var i = s.length - 1
-    while (i >= 0 && s.charAt(i).isWhitespace) i -= 1
-    if (i < 0) return 0
-    s.charAt(i) match {
-      case ')' =>
-        var depth = 0
-        var j = i
-        while (j >= 0) {
-          val c = s.charAt(j)
-          if (c == ')') depth += 1
-          else if (c == '(') { depth -= 1; if (depth == 0) { j -= 1
-            // include function name if present
-            var k = j
-            while (k >= 0 && (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_' || s.charAt(k) == '.')) k -= 1
-            return k + 1 } }
-          j -= 1
-        }
-        0
-      case '\'' =>
-        var j = i - 1
-        while (j >= 0 && !(s.charAt(j) == '\'' && (j == 0 || s.charAt(j - 1) != '\\'))) j -= 1
-        j
-      case c if c.isLetterOrDigit || c == '_' =>
-        var j = i
-        while (j >= 0 && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_' || s.charAt(j) == '.')) j -= 1
-        j + 1
-      case _ => i + 1
+    val ts = tokenize(s)
+    val off = offsets(ts)
+    def dotted(t: Tok) = t match {
+      case Word(w) => !w.startsWith("`") && !w.startsWith("\"")
+      case Num(_) | Punct(".") => true
+      case _ => false
+    }
+    def nameStart(end: Int) = {
+      var k = end
+      while (k >= 0 && dotted(ts(k))) k -= 1
+      off(k + 1)
+    }
+    val last = prevSig(ts, ts.length - 1)
+    if (last < 0) return 0
+    ts(last) match {
+      case Punct(")") =>
+        val open = balancedOpen(ts, last)
+        if (open < 0) 0 else nameStart(open - 1)
+      case Str(_) | Word(_) if !dotted(ts(last)) => off(last)
+      case t if dotted(t) && t != Punct(".") => nameStart(last)
+      case _ => off(last + 1)
     }
   }
 }

@@ -186,29 +186,17 @@ object StatelessSweep {
       : Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.types._
     val norm = groupItems.map(_.replaceAll("\\s+", "").toLowerCase).toSet
-    // locate the top-level select list
-    val up = totSql.toUpperCase
-    val selStart = up.indexOf("SELECT")
+    // locate the top-level select list: SELECT up to its first FROM
+    // outside brackets and quotes
+    import graft.sql.ChLex
+    val selStart = totSql.toUpperCase.indexOf("SELECT")
     require(selStart >= 0, "no SELECT in totals query")
-    var depth = 0; var inStr = false; var listEnd = -1
-    var i = selStart + 6
-    while (listEnd < 0 && i < totSql.length) {
-      val c = totSql.charAt(i)
-      if (inStr) { if (c == '\\') i += 1 else if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case 'F' | 'f' if depth == 0 &&
-            up.regionMatches(i, "FROM", 0, 4) &&
-            !Character.isLetterOrDigit(totSql.charAt(i - 1)) => listEnd = i
-        case _ => ()
-      }
-      i += 1
-    }
-    if (listEnd < 0) listEnd = totSql.length
-    val items = graft.sql.ChSession.splitTop(
-      totSql.substring(selStart + 6, listEnd))
+    val list = ChLex.tokenize(totSql.substring(selStart + 6))
+    val depth = ChLex.depths(list, brackets = true)
+    val from = list.indices.find(k => depth(k) == 0 &&
+      list(k).text.equalsIgnoreCase("FROM")).getOrElse(list.length)
+    val listEnd = selStart + 6 + ChLex.offsets(list)(from)
+    val items = ChLex.splitTop(totSql.substring(selStart + 6, listEnd))
     val keyPos = scala.collection.mutable.ArrayBuffer[Int]()
     val newItems = items.zipWithIndex.map { case (item, k) =>
       val noAlias = item.replaceAll("(?is)\\s+AS\\s+[`\\w]+\\s*$", "")
@@ -631,6 +619,15 @@ object StatelessSweep {
     } finally session.close()
   }
 
+  /** Per-file watchdog, in seconds (`SPARK_GRAFT_SWEEP_TIMEOUT_S`
+    * overrides): one pathological test (runaway generate, a planner bug)
+    * must cost its own slice, not the rest of the sweep. 240 s: only ONE
+    * corpus file is >60 s (10045, ~90 s of unique-key merges) and
+    * runaway files are rare — a pathological loop still costs a bounded
+    * slice.
+    */
+  val fileTimeoutS: Long = sys.env.getOrElse("SPARK_GRAFT_SWEEP_TIMEOUT_S", "240").toLong
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .getOrElse("/root/reference/tests/queries/4_cnch_stateless")
@@ -640,12 +637,7 @@ object StatelessSweep {
     val passed = Seq.newBuilder[String]
     // Dev subset filter: regex over file names (unset = all candidates).
     val onlyRe = sys.env.get("SPARK_GRAFT_SWEEP_ONLY").map(_.r)
-    // Per-file watchdog: one pathological test (runaway generate, a
-    // planner bug) must cost its own slice, not the rest of the sweep.
-    // 240s: only ONE corpus file is >60s (10045, ~90s of unique-key
-    // merges) and runaway files are rare — a pathological loop still
-    // costs a bounded slice
-    val timeoutS = sys.env.getOrElse("SPARK_GRAFT_SWEEP_TIMEOUT_S", "240").toLong
+    val timeoutS = fileTimeoutS
     // daemon threads so an abandoned runner cannot pin the JVM open; a
     // fresh pool replaces a timed-out one — a cancelled task that sits
     // in a hot loop (driver-side array materialization ignores

@@ -2,10 +2,12 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Paths}
-import graft.sql.{ChFormat, ChTranspiler}
+import graft.sql.{ChFormat, ChLex, ChSession, ChSyntaxFormat, ChTranspiler}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.control.NonFatal
 
 /** Unit pins for the ClickHouse-syntax transpiler and the TabSeparated
   * formatter backing StatelessCorpusSpec.
@@ -298,8 +300,17 @@ class ChTranspilerSpec extends AnyFunSuite {
     * text for the retry entry points.
     */
   private def goldenRun(name: String, in: String, err: String): String = {
-    val res: Any = try withDialect(if (name == "mysqlPasses") "MYSQL" else "CLICKHOUSE") {
+    val mysql = name == "mysqlPasses" || name.endsWith("_mysql")
+    val res: Any = try withDialect(if (mysql) "MYSQL" else "CLICKHOUSE") {
       name.takeWhile(_ != '_') match {
+        case "syntax" => perLine(in)(syntaxRun(name.dropWhile(_ != '_').drop(1), _))
+        case "splitTop" => perLine(in)(l => cells(ChLex.splitTop(l)))
+        case "matchParen" => perLine(in) { l =>
+          val (body, rest) = ChLex.matchParen(l); cells(Seq(body, rest)) }
+        case "splitTuples" => perLine(in)(l => cells(ChLex.splitTuples(l)))
+        case "stripDbRefs" => perLine(in)(ChSession.stripDbRefs)
+        case "lexical" => perLine(in) { l =>
+          s"${ChTranspiler.transpile(l)}\n  ${ChTranspiler.statementsRawAll(l)}" }
         case "widenIntLiterals" => ChTranspiler.transpile(in, true)
         case "rewriteNestedCols" =>
           ChTranspiler.registerNestedGroup("gnest", Seq("x", "y"))
@@ -314,8 +325,37 @@ class ChTranspilerSpec extends AnyFunSuite {
         case "fixUsingAlias" => ChTranspiler.fixUsingAlias(in, err)
         case _ => ChTranspiler.transpile(in)
       }
-    } catch { case e: Exception => s"EXCEPTION ${e.getClass.getName}: ${e.getMessage}" }
+    } catch { case e: Exception => failure(e) }
     String.valueOf(res)
+  }
+
+  private def failure(e: Exception) = s"EXCEPTION ${e.getClass.getName}: ${e.getMessage}"
+
+  /** One result line per input line, each line's exception its own. */
+  private def perLine(in: String)(f: String => String): String =
+    in.linesIterator.map(l => try f(l) catch { case e: Exception => failure(e) })
+      .mkString("\n")
+
+  private def cells(parts: Seq[String]): String = parts.map(p => s"[$p]").mkString
+
+  /** EXPLAIN SYNTAX of one query: the variant names the corpus test
+    * whose session toggle it flips from ChSession's default (`setopsAll`:
+    * INTERSECT/EXCEPT print as ALL); `t` and `t2` are known tables for
+    * star expansion.
+    */
+  private def syntaxRun(variant: String, q: String): String = {
+    val cols = Map("t" -> Seq("a", "b", "c"), "t2" -> Seq("x", "y"))
+    val setops = if (variant == "setopsAll") "ALL" else "DISTINCT"
+    ChSyntaxFormat.format(q, cols.get,
+      stripUniqInjective = variant == "01390",
+      arithInAgg = variant != "01271",
+      intersectMode = setops, exceptMode = setops,
+      dropDupDistinct = variant == "01455",
+      rewriteLike = variant == "48011",
+      ifToMultiIf = variant == "01388",
+      groupByFnKeys = variant != "01300",
+      aggregatorsOfKeys = variant != "01321",
+      transformToEnum = variant == "01324").mkString("\n")
   }
 
   /** `body` on a daemon thread, or "TIMEOUT" when it runs past
@@ -344,28 +384,120 @@ class ChTranspilerSpec extends AnyFunSuite {
     assert(diffs.isEmpty, diffs.mkString("\n"))
   }
 
-  test("ChTranspiler keeps one copy of each lexical helper") {
-    val src = Files.readString(Paths.get("src/main/scala/graft/sql/ChTranspiler.scala"))
-    def defs(name: String) = s"\\bdef $name\\(".r.findAllIn(src).size
-    val counts = Seq("nextSig", "prevSig", "matchClose", "balancedClose", "balancedOpen")
-      .map(n => n -> defs(n)).filter(_._2 != 1)
-    assert(counts.isEmpty, s"cursor helpers not defined exactly once: $counts")
-    val retired = Seq("nextSigIdx", "nonWs", "nextNonWs", "prevNonWs")
-      .map(n => n -> defs(n)).filter(_._2 > 0)
-    assert(retired.isEmpty, s"local whitespace cursors are back: $retired")
-    // a hand-rolled paren-depth or parent-index walk over a token vector
-    // belongs in `depths` / `parents` only
-    def body(name: String): (Int, Int) = {
-      val start = src.indexOf(s"private def $name(")
-      assert(start >= 0, name)
-      (start, src.indexOf("\n  }\n", start))
+  test("every entry point ends on generated token soup, returning or throwing") {
+    val fragment = Gen.oneOf(
+      "SELECT", "FROM", "WHERE", "GROUP BY", "ORDER BY", "LIMIT", "UNION ALL",
+      "WITH", "TOTALS", "FILL", "JOIN", "USING", "ARRAY JOIN", "ANY", "AS",
+      "SETTINGS", "CAST", "arrayJoin", "if", "count", "t", "a", "x", "nest.x",
+      "(", ")", "[", "]", "{", "}", ",", ";", "'", "\"", "`", "\\", "'s'",
+      "`b,c`", "\"d(e\"", "--", "#", "/*", "*/", "\n", "1", "1.5e-3", ".5",
+      "$v", "->", "<=", "::", "?", ":", "=", "-", "*", "\u3000", "\u00A0")
+    val soup = Gen.listOf(Gen.zip(fragment, Gen.oneOf("", " ", "\n")))
+      .map(_.map { case (f, sep) => f + sep }.mkString)
+    val err = "[AMBIGUOUS_REFERENCE] Reference `k` is ambiguous, could be: " +
+      "[`a`.`k`, `b`.`k`]. SQLSTATE: 42704"
+    val using = "[UNRESOLVED_USING_COLUMN_FOR_JOIN] USING column `k` cannot be " +
+      "resolved on the left side of the join. The left-side columns: [`dummy`]."
+    val entries: Seq[(String, String => Any)] = Seq(
+      "statementsRawAll" -> ChTranspiler.statementsRawAll,
+      "transpile" -> (s => ChTranspiler.transpile(s)),
+      "transpile(widen)" -> (s => ChTranspiler.transpile(s, true)),
+      "splitTotals" -> ChTranspiler.splitTotals,
+      "splitJoinTotals" -> ChTranspiler.splitJoinTotals,
+      "stripWithFill" -> ChTranspiler.stripWithFill,
+      "inlineSelectAliases" -> ChTranspiler.inlineSelectAliases,
+      "disambiguateAt" -> (s => ChTranspiler.disambiguateAt(s, err)),
+      "disambiguate" -> (s => ChTranspiler.disambiguate(s, err)),
+      "fixUsingAlias" -> (s => ChTranspiler.fixUsingAlias(s, using)),
+      "ChSyntaxFormat.format" -> (s => ChSyntaxFormat.format(s)),
+      "ChSession.stripDbRefs" -> ChSession.stripDbRefs,
+      "tokenize" -> (s => ChLex.tokenize(s, comments = true)),
+      "stripComments" -> ChLex.stripComments,
+      "normalizeSpace" -> ChLex.normalizeSpace,
+      "maskStrings" -> ChLex.maskStrings,
+      "splitTop" -> (s => ChLex.splitTop(s)),
+      "matchParen" -> ChLex.matchParen,
+      "splitTuples" -> ChLex.splitTuples,
+      "topLevelEq" -> ChLex.topLevelEq)
+    val prop = Prop.forAll(soup, Gen.oneOf("CLICKHOUSE", "MYSQL")) { (in, dialect) =>
+      val outcome = bounded(20)(withDialect(dialect) {
+        entries.foreach { case (name, f) =>
+          try f(in) catch {
+            case NonFatal(_) => ()
+            case e: Throwable => throw new AssertionError(s"$name: $e", e)
+          }
+        }
+        ""
+      })
+      Prop(outcome.isEmpty) :| s"$dialect ${in.take(200)}: $outcome"
     }
-    val homes = Seq(body("depths"), body("parents"))
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  /** The dialect layer's sources: every file under graft/sql plus the
+    * corpus runner, by file name.
+    */
+  private lazy val dialectSources: Map[String, String] = {
+    val sql = new File("src/main/scala/graft/sql").listFiles
+      .filter(_.getName.endsWith(".scala")).map(_.toPath).toSeq
+    (sql :+ Paths.get("src/main/scala/graft/tools/StatelessSweep.scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toMap
+  }
+
+  test("ChLex holds the one copy of each lexical helper") {
+    def defs(name: String) = dialectSources.toSeq.flatMap { case (f, src) =>
+      Seq.fill(s"\\bdef $name\\(".r.findAllIn(src).size)(f) }
+    val lexHelpers = Seq("tokenize", "stripComments", "nextSig", "prevSig",
+      "matchClose", "balancedClose", "balancedOpen", "depths", "parents",
+      "splitTop", "matchParen", "splitTuples", "topLevelEq", "maskStrings",
+      "normalizeSpace", "mapOutsideStrings")
+    val misplaced = lexHelpers.map(n => n -> defs(n)).filter(_._2.distinct != Seq("ChLex.scala"))
+    assert(misplaced.isEmpty, s"lexical helpers defined outside ChLex: $misplaced")
+    assert(defs("tokenize").size == 1, "one tokenizer")
+    val retired = Seq("lex", "nextSigIdx", "nonWs", "nextNonWs", "prevNonWs",
+      "balancedParens", "replaceOutsideStrings", "sysRefEnd", "closeParen")
+      .map(n => n -> defs(n)).filter(_._2.nonEmpty)
+    assert(retired.isEmpty, s"retired scanners are back: $retired")
+    // a hand-rolled paren-depth or parent-index walk over tokens
     val walk = ("""case Punct\("\("\) => \w+\(\w+\) = (\w+); \1 \+= 1""" +
-      """|case Punct\("\)"\) => stack = (stack\.drop\(1\)|closeParen\(stack\)); """ +
-      """\w+\(\w+\) = stack\.head""").r
-    val strays = walk.findAllMatchIn(src).map(_.start)
-      .filterNot(p => homes.exists { case (a, b) => p > a && p < b }).toList
-    assert(strays.isEmpty, s"depth/parent walks outside depths/parents at offsets $strays")
+      """|case Punct\("\)"\) => stack = stack\.drop\(1\)""" +
+      """|case "\("[^\n]*=> \w+ \+= 1""").r
+    val walks = dialectSources.toSeq.flatMap { case (f, src) =>
+      walk.findAllMatchIn(src).map(m => s"$f@${m.start}") }
+    assert(walks.isEmpty, s"bracket-depth walks outside ChLex: $walks")
+  }
+
+  test("no character scanner for quotes or brackets outside ChLex") {
+    // a `charAt` loop that meets a quote or bracket character literal
+    // within a dozen lines is a scanner, unless it works inside one
+    // literal or on another language (named below)
+    val quoteOrBracket = """'\\''|'"'|'`'|'[()\[\]{}]'""".r
+    val defName = """\bdef (\w+)""".r
+    // the def whose block holds line i: the nearest one above whose
+    // indentation no closing brace has met since
+    def owner(lines: Seq[String], i: Int): String = {
+      val closed = scala.collection.mutable.Set[Int]()
+      (i - 1 to 0 by -1).iterator.map(lines(_)).flatMap { l =>
+        val indent = l.takeWhile(_ == ' ').length
+        if (l.trim.startsWith("}")) { closed += indent; None }
+        else defName.findFirstMatchIn(l)
+          .filter(_ => l.trim.endsWith("{") && !closed(indent)).map(_.group(1))
+      }.nextOption().getOrElse("")
+    }
+    val allowed = Set(
+      "ChTranspiler.scala" -> "normalizeStringLiteral", // a literal's escapes
+      "ChSyntaxFormat.scala" -> "canonStr",             // a literal's escapes
+      "ClickHouseAliases.scala" -> "tsQueryToPredicate", // the tsquery grammar
+      "ClickHouseAliases.scala" -> "chFormatToSpark")   // a date format string
+    val scanners = for {
+      (f, src) <- dialectSources.toSeq if f != "ChLex.scala"
+      lines = src.split("\n").toSeq
+      (line, i) <- lines.zipWithIndex if line.contains("charAt(")
+      window = lines.slice(i - 12, i + 13).filterNot(_.trim.startsWith("//"))
+      if window.exists(quoteOrBracket.findFirstIn(_).isDefined)
+      if !allowed(f -> owner(lines, i))
+    } yield s"$f:${i + 1} in ${owner(lines, i)}"
+    assert(scanners.isEmpty, s"character scanners outside ChLex: ${scanners.distinct}")
   }
 }

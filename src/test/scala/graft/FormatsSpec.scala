@@ -19,7 +19,7 @@ class FormatsSpec extends SparkSpec {
     .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate")
 
   private def roundtrip(format: String, opts: Map[String, String]): Unit = {
-    val dir = Files.createTempDirectory(s"graft_fmt_$format").toString + "/t"
+    val dir = tempDir(s"graft_fmt_$format").toString + "/t"
     src.write.options(opts).format(format).save(dir)
     val back = spark.read.options(opts).schema(src.schema).format(format).load(dir)
     assert(back.count() === src.count(), s"$format row count")
@@ -35,7 +35,7 @@ class FormatsSpec extends SparkSpec {
   test("orc roundtrip") { roundtrip("orc", Map.empty) }
 
   test("orc scan pushes down predicates like parquet") {
-    val dir = Files.createTempDirectory("graft_orc_push").toString + "/t"
+    val dir = tempDir("graft_orc_push").toString + "/t"
     src.write.format("orc").save(dir)
     val plan = spark.read.format("orc").load(dir)
       .filter($"l_quantity" > 45.0).select("l_orderkey")
@@ -46,7 +46,7 @@ class FormatsSpec extends SparkSpec {
 
   test("avro container-file roundtrip (AvroFiles over bundled avro-mapreduce)") {
     import graft.sources.AvroFiles
-    val dir = Files.createTempDirectory("graft_avro").toString + "/t"
+    val dir = tempDir("graft_avro").toString + "/t"
     val in = src.select($"l_orderkey", $"l_linenumber", $"l_quantity", $"l_returnflag",
       $"l_shipdate".cast("string").as("ship"))
     AvroFiles.write(in, dir)
@@ -63,7 +63,7 @@ class FormatsSpec extends SparkSpec {
     import graft.sources.AvroFiles
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_avro_nn").toString + "/t"
+    val dir = tempDir("graft_avro_nn").toString + "/t"
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("s", StringType, nullable = true),

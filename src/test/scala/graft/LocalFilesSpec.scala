@@ -32,7 +32,7 @@ class LocalFilesSpec extends SparkSpec {
     Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
 
   test("setPermission leaves the mode stock Hadoop's chmod leaves") {
-    val base = Files.createTempDirectory("graft_perm")
+    val base = tempDir("graft_perm")
     var n = 0
     // a random rwx mode, on a file or a directory that may carry
     // set-user/group-ID bits already (chmod keeps a directory's)
@@ -58,7 +58,7 @@ class LocalFilesSpec extends SparkSpec {
   }
 
   test("getFileLinkStatus matches stock Hadoop on files, dirs and links") {
-    val base = Files.createTempDirectory("graft_links")
+    val base = tempDir("graft_links")
     val file = Files.write(base.resolve("f"), Array[Byte](1, 2, 3))
     val dir = Files.createDirectory(base.resolve("d"))
     val link = Files.createSymbolicLink(base.resolve("l"), file)
@@ -81,7 +81,7 @@ class LocalFilesSpec extends SparkSpec {
   }
 
   test("a parquet write and a streaming sink trigger start no chmod or readlink") {
-    val base = Files.createTempDirectory("graft_forks").toString
+    val base = tempDir("graft_forks").toString
     val rec = new Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()

@@ -18,7 +18,7 @@ import graft.plans.MaterializedViews
 class MaterializedViewRewriteSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val tmp = Files.createTempDirectory("graft_mv").toString
+  private lazy val tmp = tempDir("graft_mv").toString
 
   // probe the OPTIMIZED logical plan — that is where the rewrite runs;
   // the physical plan hides its tree inside AdaptiveSparkPlanExec

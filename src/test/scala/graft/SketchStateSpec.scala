@@ -22,7 +22,7 @@ class SketchStateSpec extends SparkSpec {
       .repartition(4)
 
     // Partial states at (g, bucket) granularity — the MV write path.
-    val dir = java.nio.file.Files.createTempDirectory("hll_state").toString
+    val dir = tempDir("hll_state").toString
     val partials = raw.withColumn("bucket", pmod(crc32($"u"), lit(13)))
       .groupBy($"g", $"bucket")
       .agg(hll_sketch_agg($"u").as("state"))

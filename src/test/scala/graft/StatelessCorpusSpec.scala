@@ -53,14 +53,19 @@ class StatelessCorpusSpec extends SparkSpec {
     // changes WHEN jobs run, not what they compute).
     // Daemon workers: a timed-out file stuck in a loop that ignores the
     // interrupt must not keep the test JVM alive.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8, { (r: Runnable) =>
-      val t = new Thread(r, "corpus-runner"); t.setDaemon(true); t
-    })
+    val pool = new java.util.concurrent.ThreadPoolExecutor(8, 8, 0L,
+      java.util.concurrent.TimeUnit.MILLISECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, "corpus-runner"); t.setDaemon(true); t
+      })
+    val timeoutNs = java.util.concurrent.TimeUnit.SECONDS.toNanos(StatelessSweep.fileTimeoutS)
     val failures =
       try {
         val futs = allowlist.map { name =>
-          name -> pool.submit(new java.util.concurrent.Callable[Option[String]] {
+          val started = new java.util.concurrent.atomic.AtomicLong(0L)
+          val fut = pool.submit(new java.util.concurrent.Callable[Option[String]] {
             def call(): Option[String] = {
+              started.set(System.nanoTime)
               val sqlText = new String(
                 Files.readAllBytes(Paths.get(corpusDir, name)), "UTF-8")
               val expected = new String(
@@ -78,19 +83,34 @@ class StatelessCorpusSpec extends SparkSpec {
               }
             }
           })
+          (name, started, fut)
         }
-        // Each file fails on its own: a worker exception or a file past
-        // StatelessSweep's 240 s watchdog is reported by name, and the
-        // rest are still collected.
-        futs.flatMap { case (name, fut) =>
-          try fut.get(240, java.util.concurrent.TimeUnit.SECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              fut.cancel(true)
-              Some(s"$name: timed out")
-            case e: java.util.concurrent.ExecutionException =>
-              Some(s"$name: ${e.getCause}")
+        // Each file fails on its own: a worker exception becomes that
+        // file's failure line, and a file running past the sweep
+        // runner's per-file watchdog, counted from its own start (not
+        // from its wait in the queue), is cancelled and reported by name
+        futs.flatMap { case (name, started, fut) =>
+          var result: Option[Option[String]] = None
+          while (result.isEmpty) {
+            result =
+              try Some(fut.get(1, java.util.concurrent.TimeUnit.SECONDS))
+              catch {
+                case _: java.util.concurrent.TimeoutException =>
+                  val t0 = started.get
+                  if (t0 != 0L && System.nanoTime - t0 > timeoutNs) {
+                    fut.cancel(true)
+                    // a worker stuck past the interrupt keeps its thread:
+                    // one more thread keeps the other files running
+                    pool.setMaximumPoolSize(pool.getMaximumPoolSize + 1)
+                    pool.setCorePoolSize(pool.getCorePoolSize + 1)
+                    Some(Some(s"$name: timed out after ${StatelessSweep.fileTimeoutS} s"))
+                  } else None
+                case e: java.util.concurrent.ExecutionException =>
+                  Some(Some(s"$name: ${e.getCause}"))
+                case e: Exception => Some(Some(s"$name: $e"))
+              }
           }
+          result.get
         }
       } finally {
         pool.shutdown()

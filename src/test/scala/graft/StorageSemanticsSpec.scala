@@ -27,7 +27,7 @@ class StorageSemanticsSpec extends SparkSpec {
   }
 
   test("mutations: UPDATE and DELETE as table rewrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mut").toString + "/t"
+    val dir = tempDir("graft_mut").toString + "/t"
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0))
       .toDF("id", "grp", "v").write.parquet(dir)
     Mutations.rewrite(spark, dir, df =>
@@ -58,7 +58,7 @@ class StorageSemanticsSpec extends SparkSpec {
 
   test("compact: small files merge to the target count, data byte-identical") {
     import graft.operators.Mutations
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact").toString + "/t"
     val df = (1 to 5000).map(i => (i.toLong, s"row_$i", i * 1.5)).toDF("id", "name", "v")
     df.repartition(64).write.parquet(dir) // 64 tiny files
     val before = spark.read.parquet(dir)

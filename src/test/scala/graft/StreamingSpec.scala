@@ -11,9 +11,9 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   test("incremental sink consumes each source file exactly once") {
-    val src = Files.createTempDirectory("graft_stream_src").toString
-    val sink = Files.createTempDirectory("graft_stream_sink").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val src = tempDir("graft_stream_src").toString
+    val sink = tempDir("graft_stream_sink").toString + "/out"
+    val ckpt = tempDir("graft_stream_ckpt").toString
 
     Seq((1L, "click", 1.0), (2L, "purchase", 2.0), (3L, "purchase", 3.0))
       .toDF("event_id", "event_type", "value")
@@ -61,7 +61,7 @@ class StreamingSpec extends SparkSpec {
 
   test("live view: snapshot tracks appended source data and matches batch") {
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft_lv_src").toString + "/t"
+    val src = tempDir("graft_lv_src").toString + "/t"
     Seq((1L, "click", 1.0), (2L, "view", 2.0), (3L, "click", 3.0))
       .toDF("event_id", "event_type", "value")
       .write.parquet(src)
@@ -100,8 +100,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup keeps first arrival per key within the watermark") {
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft_dd_src").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_dd_ckpt").toString
+    val src = tempDir("graft_dd_src").toString + "/t"
+    val ckpt = tempDir("graft_dd_ckpt").toString
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
     // Within-batch duplicates share a value (which one survives a single
     // micro-batch is not ordered); the across-batch replay is the real
@@ -109,7 +109,7 @@ class StreamingSpec extends SparkSpec {
     Seq((1L, ts(0), 1.0), (2L, ts(1), 2.0), (2L, ts(2), 2.0))
       .toDF("event_id", "ts", "value").write.parquet(src)
 
-    val sink = Files.createTempDirectory("graft_dd_sink").toString + "/out"
+    val sink = tempDir("graft_dd_sink").toString + "/out"
     val schema = spark.read.parquet(src).schema
     def runOnce(): Seq[(Long, Double)] = {
       val stream = spark.readStream.schema(schema).parquet(src)
@@ -135,8 +135,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join matches the batch join") {
     import org.apache.spark.sql.streaming.Trigger
-    val dirA = Files.createTempDirectory("graft_ss_imp").toString + "/t"
-    val dirB = Files.createTempDirectory("graft_ss_clk").toString + "/t"
+    val dirA = tempDir("graft_ss_imp").toString + "/t"
+    val dirB = tempDir("graft_ss_clk").toString + "/t"
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
     val imps = Seq((1L, ts(0)), (1L, ts(30)), (2L, ts(5)))
       .toDF("ad_id", "ts")
@@ -169,8 +169,8 @@ class StreamingSpec extends SparkSpec {
     assert(!MaterializedView.due(lastRefreshMs = 1000, periodMs = 500, nowMs = 1400))
     assert(MaterializedView.due(lastRefreshMs = 1000, periodMs = 500, nowMs = 1500))
 
-    val base = Files.createTempDirectory("graft_mv_base").toString + "/t"
-    val mv = Files.createTempDirectory("graft_mv_view").toString + "/mv"
+    val base = tempDir("graft_mv_base").toString + "/t"
+    val mv = tempDir("graft_mv_view").toString + "/mv"
     Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("k", "v")
       .write.mode("overwrite").parquet(base)
 

@@ -36,7 +36,7 @@ class TableSchemaSpec extends SparkSpec {
   }
 
   test("streaming-sink, refreshed-view and partitioned directories") {
-    val root = Files.createTempDirectory("graft_schema").toString
+    val root = tempDir("graft_schema").toString
     val events = Seq((1L, "click", 1.0, java.sql.Timestamp.valueOf("2024-01-01 00:00:01")),
       (2L, "view", 2.0, java.sql.Timestamp.valueOf("2024-01-01 01:00:02")))
       .toDF("event_id", "event_type", "value", "ts")
@@ -63,7 +63,7 @@ class TableSchemaSpec extends SparkSpec {
   }
 
   test("a path with no parquet file fails with Spark's own error") {
-    val empty = Files.createTempDirectory("graft_schema_empty").toString
+    val empty = tempDir("graft_schema_empty").toString
     for (p <- Seq(empty, s"$empty/missing")) {
       val spark1 = intercept[Exception](spark.read.parquet(p))
       val ours = intercept[Exception](Tables.parquetSchema(spark, p))

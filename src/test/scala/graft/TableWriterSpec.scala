@@ -7,7 +7,7 @@ import java.nio.file.Files
 class TableWriterSpec extends SparkSpec {
 
   test("partitioned write enables partition pruning at scan") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val orders = Tables(spark, "/root/testdata/sf0.001", "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     TableWriter.writePartitioned(orders, dir, Seq("o_year"), Seq("o_orderkey"))
