@@ -809,7 +809,6 @@ object ChCombinators {
     "create", "table", "with", "over", "partition", "and", "or", "not",
     "in", "exists", "between", "case", "when", "then", "else", "end")
 
-  private val identRe = "([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r
   private val unresolvable =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   // names WE registered: they must not count as "registered bare state
@@ -818,15 +817,23 @@ object ChCombinators {
   private val genericNames =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Scan a transpiled statement for `ident(` call shapes and register a
-    * composed builder for any combinator-chain name the session registry
-    * cannot already resolve. Called from ChTranspiler.transpile — every
-    * corpus execution path funnels through it right before spark.sql.
+  /** Scan a transpiled statement's tokens for `ident(` call shapes (a
+    * plain ASCII identifier, then `(` as the next non-space token) and
+    * register a composed builder for any combinator-chain name the
+    * session registry cannot already resolve. Called from
+    * ChTranspiler.transpile — every corpus execution path funnels
+    * through it right before spark.sql.
     */
-  def registerMissing(sql: String): Unit =
+  def registerMissing(ts: Seq[ChLex.Tok]): Unit =
     SparkSession.getActiveSession.foreach { spark =>
       val fr = spark.sessionState.functionRegistry
-      identRe.findAllMatchIn(sql).map(_.group(1)).toSeq.distinct.foreach { name =>
+      val calls = ts.indices.collect {
+        case k if ts.lift(ChLex.nextSig(ts, k + 1)).contains(ChLex.Punct("(")) => ts(k)
+      }.collect {
+        case ChLex.Word(w) if (w.head == '_' || w.head.isLetter) &&
+            w.forall(c => c < 128 && (c.isLetterOrDigit || c == '_')) => w
+      }
+      calls.distinct.foreach { name =>
         if (!keywordSkip.contains(name.toLowerCase) &&
             !unresolvable.contains(name) &&
             !fr.functionExists(FunctionIdentifier(name.toLowerCase))) {

@@ -112,6 +112,27 @@ private[graft] object ChLex {
     out.result()
   }
 
+  /** The text of `ts`: the one way tokens become text again. */
+  def render(ts: Seq[Tok]): String = ts.map(_.text).mkString
+
+  /** True when `a` and `b` render to the same text. */
+  def sameText(a: Seq[Tok], b: Seq[Tok]): Boolean = render(a) == render(b)
+
+  /** True when `a`'s text followed by `b`'s would not lex back as the
+    * two tokens: a word runs on over identifier characters, a number over
+    * letters, digits, `.` and an exponent's sign, and `.` into digits.
+    */
+  def runsInto(a: Tok, b: Tok): Boolean = {
+    val c = b.text.head
+    a match {
+      case Word(w) => !isQuote(w.head) && isIdentPart(c)
+      case Num(n) => c.isLetterOrDigit || c == '.' ||
+        ((c == '+' || c == '-') && (n.last == 'e' || n.last == 'E'))
+      case Punct(".") => c.isDigit
+      case _ => false
+    }
+  }
+
   /** Start offset in the source text of every token, plus the text's
     * length at the end.
     */
@@ -147,7 +168,7 @@ private[graft] object ChLex {
     * regex parsers match `\s`, which misses U+3000 and U+00A0).
     */
   def normalizeSpace(s: String): String =
-    if (s.forall(_ < '\u0080')) s else tokenize(s).map(_.text).mkString
+    if (s.forall(_ < '\u0080')) s else render(tokenize(s))
 
   /** `s` with the inside of every string literal replaced by `_`, same
     * length: a regex over the result cannot match literal text.
@@ -159,27 +180,13 @@ private[graft] object ChLex {
     case t => t.text
   }.mkString
 
-  /** `s` with `f` applied to each stretch between string literals. */
-  def mapOutsideStrings(s: String)(f: String => String): String = {
-    val ts = tokenize(s)
-    val off = offsets(ts)
-    val sb = new StringBuilder
-    var from = 0
-    for (k <- ts.indices) ts(k) match {
-      case Str(t) =>
-        sb.append(f(s.substring(from, off(k)))).append(t); from = off(k + 1)
-      case _ => ()
-    }
-    sb.append(f(s.substring(from))).toString
-  }
-
   // ---- token cursors: free functions on the vector, not a view bound
-  // to one, since several passes re-tokenize and reassign mid-pass.
+  // to one, since several passes rebuild their vector mid-pass.
 
   /** Index of the first non-whitespace token at or after `j`
     * (`ts.length` when there is none).
     */
-  def nextSig(ts: Seq[Tok], j: Int): Int = {
+  def nextSig(ts: collection.Seq[Tok], j: Int): Int = {
     var k = j
     while (k < ts.length && ts(k).isInstanceOf[Ws]) k += 1
     k
@@ -188,7 +195,7 @@ private[graft] object ChLex {
   /** Index of the last non-whitespace token at or before `j` (-1 when
     * there is none).
     */
-  def prevSig(ts: Seq[Tok], j: Int): Int = {
+  def prevSig(ts: collection.Seq[Tok], j: Int): Int = {
     var k = j
     while (k >= 0 && ts(k).isInstanceOf[Ws]) k -= 1
     k
@@ -209,7 +216,7 @@ private[graft] object ChLex {
   /** Index of the `)` that closes the `(` at `open`, or -1 when the
     * parens never balance; with `brackets`, any closer of any opener.
     */
-  def balancedClose(ts: Seq[Tok], open: Int, brackets: Boolean = false): Int = {
+  def balancedClose(ts: collection.Seq[Tok], open: Int, brackets: Boolean = false): Int = {
     var d = 0
     var j = open
     while (j < ts.length) {
@@ -223,7 +230,7 @@ private[graft] object ChLex {
   /** Index of the `(` that the `)` at `close` closes, or -1 when the
     * parens never balance; with `brackets`, any opener of any closer.
     */
-  def balancedOpen(ts: Seq[Tok], close: Int, brackets: Boolean = false): Int = {
+  def balancedOpen(ts: collection.Seq[Tok], close: Int, brackets: Boolean = false): Int = {
     var d = 0
     var j = close
     while (j >= 0) {

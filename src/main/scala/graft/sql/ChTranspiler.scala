@@ -2,7 +2,7 @@ package graft.sql
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Text-level transpiler for the ClickHouse-specific SYNTAX (not
+/** Token-level transpiler for the ClickHouse-specific SYNTAX (not
   * function names — those resolve through the dialect registry injected
   * by GraftExtensions) that appears in the reference's own stateless
   * test corpus (/root/reference/tests/queries/4_cnch_stateless/): the
@@ -100,6 +100,233 @@ object ChTranspiler {
     case _ => None
   }
 
+  // ---- the token stream ------------------------------------------------
+  //
+  // `transpile` lexes its statement once; every rewrite below is a
+  // `Vector[Tok] => Vector[Tok]` pass (the ordered list is [[passes]])
+  // and the result is rendered once, after the last pass. A pass splices
+  // slices of its input; the only text it lexes is a constant SQL
+  // fragment or the text inside a literal, through [[frag]]. A pass's
+  // output lexes back to itself (adjacent whitespace tokens merged), so
+  // handing tokens on equals rendering and lexing again.
+
+  /** The tokens of a compile-time constant SQL fragment, or of the text
+    * inside a literal that a rewrite turns into SQL (a type string, a
+    * table name): the only text a rewrite pass lexes.
+    */
+  private def frag(s: String): Vector[Tok] = tokenize(s)
+
+  /** `tk"… $x …"`: a rewrite's output as tokens. The literal parts are
+    * constant SQL, lexed by [[frag]]; each argument, a token or a token
+    * sequence taken from the statement, is spliced in as it is.
+    */
+  private implicit class TokInterpolator(sc: StringContext) {
+    def tk(args: Any*): Vector[Tok] = {
+      val out = Vector.newBuilder[Tok]
+      sc.parts.zipAll(args, "", Nil).foreach { case (part, arg) =>
+        out ++= frag(part)
+        arg match {
+          case t: Tok => out += t
+          case ts: Seq[_] => ts.foreach { case t: Tok => out += t }
+        }
+      }
+      out.result()
+    }
+  }
+
+  /** `ts` without the leading and trailing blanks that `String.trim`
+    * drops from its text.
+    */
+  private def trimWs(ts: Seq[Tok]): Vector[Tok] = {
+    def blank(t: Tok) = t match {
+      case _: Ws => true
+      case Punct(p) => p.charAt(0) <= ' '
+      case _ => false
+    }
+    val a = ts.indexWhere(!blank(_))
+    if (a < 0) Vector.empty else ts.slice(a, ts.lastIndexWhere(!blank(_)) + 1).toVector
+  }
+
+  /** The non-whitespace tokens of `ts`. */
+  private def sigToks(ts: Seq[Tok]): Vector[Tok] = ts.filterNot(_.isInstanceOf[Ws]).toVector
+
+  /** Length of the text `ts` renders to. */
+  private def textLength(ts: Seq[Tok]): Int = ts.iterator.map(_.text.length).sum
+
+  /** `parts` with `, ` between them. */
+  private def commaList(parts: Seq[Seq[Tok]]): Vector[Tok] =
+    parts.zipWithIndex.flatMap { case (p, k) =>
+      (if (k > 0) Vector(Punct(","), Ws(" ")) else Vector.empty) ++ p
+    }.toVector
+
+  /** Indices of the tokens directly inside the `(` at `open`, which the
+    * `)` at `close` closes.
+    */
+  private def inside(ts: Seq[Tok], open: Int, close: Int): IndexedSeq[Int] = {
+    val d = depths(ts.slice(open + 1, close))
+    (open + 1 until close).filter(k => d(k - open - 1) == 0)
+  }
+
+  /** Index of the `)` closing the `(` at `open`, or `ts.length` when it
+    * never closes.
+    */
+  private def closeOrEnd(ts: Seq[Tok], open: Int): Int = {
+    val c = balancedClose(ts, open)
+    if (c < 0) ts.length else c
+  }
+
+  /** `a ++ b`, with a space between where they would otherwise glue. */
+  private def join(a: Seq[Tok], b: Seq[Tok]): Vector[Tok] =
+    if (a.nonEmpty && b.nonEmpty && runsInto(a.last, b.head)) (a.toVector :+ Ws(" ")) ++ b
+    else a.toVector ++ b
+
+  /** `ts` without whitespace, except where two tokens would glue. */
+  private def squeeze(ts: Seq[Tok]): Vector[Tok] =
+    sigToks(ts).foldLeft(Vector.empty[Tok])((acc, t) => join(acc, Vector(t)))
+
+  /** One named rewrite over the statement's tokens. */
+  private[graft] final case class Pass(name: String, run: Vector[Tok] => Vector[Tok])
+
+  /** The rewrites up to and including the main loop. */
+  private[graft] val prePasses: Seq[Pass] = Seq(
+    Pass("rewriteRemote", rewriteRemote),
+    Pass("rewriteTimeType", rewriteTimeType),
+    Pass("rewriteCastEnum", rewriteCastEnum),
+    Pass("rewriteConvert", rewriteConvert),
+    Pass("mysqlPasses", mysqlPasses),
+    Pass("rewriteNullableCast", rewriteNullableCast),
+    Pass("rewriteTypes", rewriteTypes),
+    Pass("rewriteCastDecimal", rewriteCastDecimal),
+    Pass("mergePrewhere", mergePrewhere),
+    Pass("mainLoop", mainLoop))
+
+  /** The rewrites after the main loop, on a statement whose parens
+    * close nothing they do not open.
+    */
+  private[graft] val postPasses: Seq[Pass] = Seq(
+    Pass("rewriteValuesTable", rewriteValuesTable),
+    Pass("rewriteDynamicInterval", rewriteDynamicInterval),
+    Pass("parenthesizeUsing", parenthesizeUsing),
+    Pass("rewriteMapLiterals", rewriteMapLiterals),
+    Pass("rewritePositionIn", rewritePositionIn),
+    Pass("rewriteTwoArgCast", rewriteTwoArgCast),
+    Pass("rewriteCountStar", rewriteCountStar),
+    Pass("rewriteLimitOffset", rewriteLimitOffset),
+    Pass("rewriteGroupsFrame", rewriteGroupsFrame),
+    Pass("stripRankFrames", stripRankFrames),
+    Pass("fixOrderlessRange", fixOrderlessRange),
+    Pass("wrapWindowSums", wrapWindowSums),
+    Pass("rewriteInfixMod", rewriteInfixMod),
+    Pass("rewriteScalarWithDeep", rewriteScalarWithDeep),
+    Pass("rewriteInlineAliases", rewriteInlineAliases),
+    Pass("rewriteWhereAliases", rewriteWhereAliases),
+    Pass("rewriteTernary", rewriteTernary),
+    Pass("rewriteParenLambda", rewriteParenLambda),
+    Pass("rewriteUnionBranches", rewriteUnionBranches),
+    Pass("rewriteTupleLiterals", rewriteTupleLiterals),
+    Pass("rewriteNestedCols", rewriteNestedCols),
+    Pass("rewriteInClauses", rewriteInClauses),
+    Pass("rewriteArrayJoin", rewriteArrayJoin),
+    Pass("rewriteNestedArrayJoinDeep", rewriteNestedArrayJoinDeep),
+    Pass("rewriteCollate", rewriteCollate),
+    Pass("rewriteOrderNulls", rewriteOrderNulls),
+    Pass("guardSelectStringHead", guardSelectStringHead),
+    Pass("rewriteLimitBy", rewriteLimitBy),
+    Pass("rewriteAnyJoin", rewriteAnyJoin),
+    Pass("rewriteBareSetOps", rewriteBareSetOps))
+
+  /** Every rewrite of [[transpile]], in order. */
+  private[graft] def passes: Seq[Pass] = prePasses ++ postPasses
+
+  def transpile(stmt: String): String = transpile(stmt, false)
+
+  /** Transpile one statement's ClickHouse syntax to Spark-parseable SQL:
+    * lex once, fold [[passes]], render once. `widenInts` widens integer
+    * literals first (INSERT VALUES tuples).
+    */
+  def transpile(stmt: String, widenInts: Boolean): String = {
+    val lexed = tokenize(stripComments(stmt))
+    val main = prePasses.foldLeft(if (widenInts) widenIntLiterals(lexed) else lexed)(
+      (ts, p) => p.run(ts))
+    // a `)` that closes nothing: no pass below can make sense of the
+    // statement, so Spark's parser gets it as written and reports it
+    if (hasStrayClose(main)) return stmt
+    val out = postPasses.foldLeft(main)((ts, p) => p.run(ts))
+    // Late-bound combinator chains (sumForEachIf, quantilesTimingState…):
+    // register composed builders for any not-yet-registered aggregate
+    // name in this statement, so spark.sql resolves them like the
+    // reference's AggregateFunctionCombinatorFactory does on demand.
+    ChCombinators.registerMissing(out)
+    render(out)
+  }
+
+  /** `remote('addr', table)` / `remoteSecure(...)` — a distribution
+    * wrapper around the named table (reference TableFunctionRemote); a
+    * single engine reads the table directly. Handles the two-argument
+    * address+table form (the corpus shape); the db-expression form
+    * `remote(addr, currentDatabase(), 't')` reduces to the table name.
+    */
+  private def rewriteRemote(ts: Vector[Tok]): Vector[Tok] = {
+    if (!ts.exists(t => isWordI(t, "remote") || isWordI(t, "remoteSecure"))) return ts
+    // a run of adjacent tokens spelling `[`\w.]+`, from `a`: its end
+    def nameEnd(a: Int): Int = {
+      var k = a
+      while (k < ts.length && ts(k).text.forall(c =>
+          c < 128 && (c.isLetterOrDigit || c == '_' || c == '.' || c == '`')) &&
+          !ts(k).isInstanceOf[Ws] && !ts(k).isInstanceOf[Str]) k += 1
+      k
+    }
+    def table(i: Int): Option[(Vector[Tok], Int)] = {
+      val open = nextSig(ts, i + 1)
+      val addr = nextSig(ts, open + 1)
+      val comma = nextSig(ts, addr + 1)
+      val a = nextSig(ts, comma + 1)
+      val shape = a < ts.length && ts(open) == Punct("(") && ts(comma) == Punct(",") &&
+        (ts(addr) match {
+          case Str(s) => s.length >= 2 && s.head == '\'' && s.last == '\'' &&
+            !s.substring(1, s.length - 1).contains('\'')
+          case _ => false
+        })
+      if (!shape) return None
+      val e = nameEnd(a)
+      val close = nextSig(ts, e)
+      if (e > a && close < ts.length && ts(close) == Punct(")"))
+        return Some((ts.slice(a, e), close))
+      // remote(addr, currentDatabase(…), 't' | t)
+      val dbOpen = nextSig(ts, a + 1)
+      if (!isWordI(ts(a), "currentDatabase") || dbOpen >= ts.length ||
+          ts(dbOpen) != Punct("(")) return None
+      val dbClose = (dbOpen + 1 until ts.length).find(k => ts(k).text.contains(')'))
+        .filter(ts(_) == Punct(")")).getOrElse(return None)
+      val c2 = nextSig(ts, dbClose + 1)
+      val t = nextSig(ts, c2 + 1)
+      if (t >= ts.length || ts(c2) != Punct(",")) return None
+      val (tableToks, tEnd) = ts(t) match {
+        case Str(s) if s.length > 2 && s.head == '\'' && s.last == '\'' &&
+            s.substring(1, s.length - 1).forall(c =>
+              c < 128 && (c.isLetterOrDigit || c == '_' || c == '.' || c == '`')) =>
+          (frag(s.substring(1, s.length - 1)), t + 1)
+        case _ => (ts.slice(t, nameEnd(t)), nameEnd(t))
+      }
+      val close2 = nextSig(ts, tEnd)
+      if (tableToks.nonEmpty && close2 < ts.length && ts(close2) == Punct(")"))
+        Some((tableToks, close2))
+      else None
+    }
+    val out = Vector.newBuilder[Tok]
+    var i = 0
+    while (i < ts.length) {
+      (if (isWordI(ts(i), "remote") || isWordI(ts(i), "remoteSecure")) table(i) else None) match {
+        case Some((t, close)) =>
+          out ++= t
+          if (ts.lift(close + 1).exists(runsInto(t.last, _))) out += Ws(" ")
+          i = close + 1
+        case None => out += ts(i); i += 1
+      }
+    }
+    out.result()
+  }
+
   /** `CAST(expr AS Nullable(T))` → `to<T>OrNull(expr)` for the scalar
     * conversion-family types: the reference's cast to a Nullable target
     * yields NULL on unparseable/out-of-range input
@@ -120,17 +347,10 @@ object ChTranspiler {
       if (isWordI(toks(i), "CAST") &&
           toks.lift(nextSig(toks, i + 1)).contains(Punct("("))) {
         val open = nextSig(toks, i + 1)
-        // walk to the matching close, remembering the depth-1 AS
-        var d = 0; var j = open; var asIdx = -1; var close = -1
-        while (j < toks.length && close < 0) {
-          toks(j) match {
-            case Punct("(") => d += 1
-            case Punct(")") => d -= 1; if (d == 0) close = j
-            case Word(w) if d == 1 && w.equalsIgnoreCase("AS") => asIdx = j
-            case _ => ()
-          }
-          j += 1
-        }
+        // the matching close and the last AS directly inside
+        val close = balancedClose(toks, open)
+        val asIdx = if (close < 0) -1
+          else inside(toks, open, close).filter(k => isWordI(toks(k), "AS")).lastOption.getOrElse(-1)
         if (close > 0 && asIdx > 0) {
           val tIdx = nextSig(toks, asIdx + 1)
           val tOpen = nextSig(toks, tIdx + 1)
@@ -166,21 +386,25 @@ object ChTranspiler {
     */
   private def rewriteTypes(toks: Vector[Tok]): Vector[Tok] = {
     val out = Vector.newBuilder[Tok]
-    var depth = 0
-    var closeAs = Map[Int, String]() // depth → replacement text for its ")"
+    // index of a wrapper's ")" → its replacement text
+    val closeAs = scala.collection.mutable.Map[Int, String]()
+    def wrapper(open: Int, closer: String): Unit = {
+      val c = balancedClose(toks, open)
+      if (c >= 0) closeAs(c) = closer
+    }
     var i = 0
     while (i < toks.length) {
       toks(i) match {
         case Word(w) if (w == "Nullable" || w == "LowCardinality") && {
             val k = nextSig(toks, i + 1)
             k < toks.length && toks(k) == Punct("(") } =>
-          depth += 1; closeAs += depth -> ""
+          wrapper(nextSig(toks, i + 1), "")
           i = nextSig(toks, i + 1) + 1
         case Word("Array") if {
             val k = nextSig(toks, i + 1)
             k < toks.length && toks(k) == Punct("(") } =>
           out += Word("ARRAY"); out += Punct("<")
-          depth += 1; closeAs += depth -> ">"
+          wrapper(nextSig(toks, i + 1), ">")
           i = nextSig(toks, i + 1) + 1
         case Word(w) if (w == "Decimal32" || w == "Decimal64" || w == "Decimal128") && {
             val k = nextSig(toks, i + 1)
@@ -189,8 +413,7 @@ object ChTranspiler {
             case "Decimal32" => "9"; case "Decimal64" => "18"; case _ => "38"
           }
           out += Word("DECIMAL"); out += Punct("("); out += Num(p); out += Punct(",")
-          depth += 1 // its ")" closes normally
-          i = nextSig(toks, i + 1) + 1
+          i = nextSig(toks, i + 1) + 1 // its ")" closes normally
         case Word(w) if (w == "Enum8" || w == "Enum16" || w == "Enum" ||
             w == "FixedString") && {
             val k = nextSig(toks, i + 1)
@@ -198,17 +421,7 @@ object ChTranspiler {
           // Enum values surface as their names; FixedString as String
           // (no \0 padding — the tests that observe padding are skipped)
           out += Word("STRING")
-          var k = nextSig(toks, i + 1) + 1
-          var d = 1
-          while (k < toks.length && d > 0) {
-            toks(k) match {
-              case Punct("(") => d += 1
-              case Punct(")") => d -= 1
-              case _ => ()
-            }
-            k += 1
-          }
-          i = k
+          i = closeOrEnd(toks, nextSig(toks, i + 1)) + 1
         // MySQL CAST targets: [UN]SIGNED [INTEGER|INT] → BIGINT (only in
         // `CAST(x AS …)` position, so a column named `signed` survives)
         case Word(w) if (w.equalsIgnoreCase("unsigned") ||
@@ -242,18 +455,28 @@ object ChTranspiler {
                 }) && cc < toks.length && toks(cc) == Punct(")")
               }) nextSig(toks, nextSig(toks, p1 + 1) + 1) + 1
             else i + 1
-        case p @ Punct("(") => depth += 1; out += p; i += 1
         case p @ Punct(")") =>
-          closeAs.get(depth) match {
+          closeAs.get(i) match {
             case Some("") => ()
             case Some(s) => out += Punct(s)
             case None => out += p
           }
-          closeAs -= depth; depth -= 1; i += 1
+          i += 1
         case t => out += t; i += 1
       }
     }
     out.result()
+  }
+
+  /** The `CAST(` at `i`: its `(`, its `)` and the first AS directly
+    * inside, when all three exist.
+    */
+  private def castAs(ts: Vector[Tok], i: Int): Option[(Int, Int, Int)] = {
+    val open = nextSig(ts, i + 1)
+    if (!isWordI(ts(i), "CAST") || open >= ts.length || ts(open) != Punct("(")) return None
+    val close = balancedClose(ts, open)
+    if (close < 0) None
+    else inside(ts, open, close).find(k => isWordI(ts(k), "AS")).map(as => (open, close, as))
   }
 
   /** `CAST(e AS Enum[8|16]('a' = 1, …))` → `chEnum(e, 'a', 1, …)`: the
@@ -272,57 +495,23 @@ object ChTranspiler {
     val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks0.length) {
-      val rewritten: Option[Int] = toks0(i) match {
-        case Word(w) if w.equalsIgnoreCase("CAST") =>
-          val open = nextSig(toks0, i + 1)
-          if (open < toks0.length && toks0(open) == Punct("(")) {
-            var k = open + 1
-            var depth = 1
-            var asPos = -1
-            while (k < toks0.length && depth > 0 && asPos < 0) {
-              toks0(k) match {
-                case Punct("(") => depth += 1
-                case Punct(")") => depth -= 1
-                case Word(a) if depth == 1 && a.equalsIgnoreCase("AS") =>
-                  asPos = k
-                case _ => ()
-              }
-              k += 1
-            }
-            val ew = if (asPos < 0) -1 else nextSig(toks0, asPos + 1)
-            if (ew >= 0 && ew < toks0.length && isEnumWord(toks0(ew)) && {
-                val p = nextSig(toks0, ew + 1)
-                p < toks0.length && toks0(p) == Punct("(") }) {
-              val mOpen = nextSig(toks0, ew + 1)
-              var m = mOpen + 1
-              var d = 1
-              val members = Vector.newBuilder[Tok]
-              while (m < toks0.length && d > 0) {
-                toks0(m) match {
-                  case p @ Punct("(") => d += 1; members += p
-                  case p @ Punct(")") => d -= 1; if (d > 0) members += p
-                  case tk => members += tk
-                }
-                m += 1
-              }
-              val castClose = nextSig(toks0, m)
-              if (d == 0 && castClose < toks0.length &&
-                  toks0(castClose) == Punct(")")) {
-                out += Word("chEnum"); out += Punct("(")
-                rewriteCastEnum(toks0.slice(open + 1, asPos))
-                  .foreach(out += _)
-                out += Punct(",")
-                members.result().foreach {
-                  case Punct("=") => out += Punct(",")
-                  case Ws(_) => ()
-                  case tk => out += tk
-                }
-                out += Punct(")")
-                Some(castClose + 1)
-              } else None
-            } else None
-          } else None
-        case _ => None
+      val rewritten = castAs(toks0, i).flatMap { case (open, close, asPos) =>
+        val ew = nextSig(toks0, asPos + 1)
+        val mOpen = nextSig(toks0, ew + 1)
+        val mClose = if (ew < toks0.length && isEnumWord(toks0(ew)) &&
+          mOpen < toks0.length && toks0(mOpen) == Punct("(")) balancedClose(toks0, mOpen) else -1
+        if (mClose >= 0 && nextSig(toks0, mClose + 1) == close) {
+          out += Word("chEnum"); out += Punct("(")
+          out ++= rewriteCastEnum(toks0.slice(open + 1, asPos))
+          out += Punct(",")
+          toks0.slice(mOpen + 1, mClose).foreach {
+            case Punct("=") => out += Punct(",")
+            case Ws(_) => ()
+            case tk => out += tk
+          }
+          out += Punct(")")
+          Some(close + 1)
+        } else None
       }
       rewritten match {
         case Some(next) => i = next
@@ -338,43 +527,23 @@ object ChTranspiler {
     * the LAST top-level comma inside the call.
     */
   private def rewriteConvert(toks0: Vector[Tok]): Vector[Tok] = {
-    if (!toks0.exists {
-        case Word(w) => w.equalsIgnoreCase("convert")
-        case _ => false }) return toks0
+    if (!toks0.exists(isWordI(_, "convert"))) return toks0
     val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks0.length) {
-      val rewritten: Option[Int] = toks0(i) match {
-        case Word(w) if w.equalsIgnoreCase("convert") &&
-            nextSig(toks0, i + 1) < toks0.length &&
-            toks0(nextSig(toks0, i + 1)) == Punct("(") =>
-          val open = nextSig(toks0, i + 1)
-          var k = open + 1
-          var depth = 1
-          var lastComma = -1
-          while (k < toks0.length && depth > 0) {
-            toks0(k) match {
-              case Punct("(") => depth += 1
-              case Punct(")") => depth -= 1
-              case Punct(",") if depth == 1 => lastComma = k
-              case _ => ()
-            }
-            k += 1
-          }
-          if (depth == 0 && lastComma > 0) {
-            out += Word("CAST"); out += Punct("(")
-            rewriteConvert(toks0.slice(open + 1, lastComma)).foreach(out += _)
-            out += Ws(" "); out += Word("AS"); out += Ws(" ")
-            toks0.slice(lastComma + 1, k - 1).foreach(out += _)
-            out += Punct(")")
-            Some(k)
-          } else None
-        case _ => None
-      }
-      rewritten match {
-        case Some(next) => i = next
-        case None => out += toks0(i); i += 1
-      }
+      val open = nextSig(toks0, i + 1)
+      val close = if (isWordI(toks0(i), "convert") && open < toks0.length &&
+        toks0(open) == Punct("(")) balancedClose(toks0, open) else -1
+      val lastComma = if (close < 0) -1
+        else inside(toks0, open, close).filter(toks0(_) == Punct(",")).lastOption.getOrElse(-1)
+      if (lastComma > 0) {
+        out += Word("CAST"); out += Punct("(")
+        out ++= rewriteConvert(toks0.slice(open + 1, lastComma))
+        out += Ws(" "); out += Word("AS"); out += Ws(" ")
+        out ++= toks0.slice(lastComma + 1, close)
+        out += Punct(")")
+        i = close + 1
+      } else { out += toks0(i); i += 1 }
     }
     out.result()
   }
@@ -387,68 +556,41 @@ object ChTranspiler {
     * spellings are already canonical.
     */
   private def rewriteCastDecimal(toks0: Vector[Tok]): Vector[Tok] = {
-    if (!toks0.exists {
-        case Word(w) => w.equalsIgnoreCase("DECIMAL")
-        case _ => false }) return toks0
+    if (!toks0.exists(isWordI(_, "DECIMAL"))) return toks0
     val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks0.length) {
-      val rewritten: Option[Int] = toks0(i) match {
-        case Word(w) if w.equalsIgnoreCase("CAST") &&
-            nextSig(toks0, i + 1) < toks0.length &&
-            toks0(nextSig(toks0, i + 1)) == Punct("(") =>
-          val open = nextSig(toks0, i + 1)
-          var k = open + 1
-          var depth = 1
-          var asPos = -1
-          while (k < toks0.length && depth > 0 && asPos < 0) {
-            toks0(k) match {
-              case Punct("(") => depth += 1
-              case Punct(")") => depth -= 1
-              case Word(a) if depth == 1 && a.equalsIgnoreCase("AS") =>
-                asPos = k
-              case _ => ()
+      val rewritten = castAs(toks0, i).flatMap { case (open, close, asPos) =>
+        val dw = nextSig(toks0, asPos + 1)
+        if (dw < toks0.length && isWordI(toks0(dw), "DECIMAL")) {
+          // collect optional (p[, s]) then expect the CAST's ')'
+          var p = "10"; var s = "0"
+          var after = dw + 1
+          val mOpen = nextSig(toks0, dw + 1)
+          if (mOpen < toks0.length && toks0(mOpen) == Punct("(")) {
+            val pPos = nextSig(toks0, mOpen + 1)
+            (toks0.lift(pPos), toks0.lift(nextSig(toks0, pPos + 1))) match {
+              case (Some(Num(pp)), Some(Punct(","))) =>
+                val sPos = nextSig(toks0, nextSig(toks0, pPos + 1) + 1)
+                (toks0.lift(sPos), toks0.lift(nextSig(toks0, sPos + 1))) match {
+                  case (Some(Num(ss)), Some(Punct(")"))) =>
+                    p = pp; s = ss; after = nextSig(toks0, sPos + 1) + 1
+                  case _ => after = -1
+                }
+              case (Some(Num(pp)), Some(Punct(")"))) =>
+                p = pp; after = nextSig(toks0, pPos + 1) + 1
+              case _ => after = -1
             }
-            k += 1
           }
-          val dw = if (asPos < 0) -1 else nextSig(toks0, asPos + 1)
-          val isDec = dw >= 0 && dw < toks0.length && (toks0(dw) match {
-            case Word(d) => d.equalsIgnoreCase("DECIMAL")
-            case _ => false
-          })
-          if (isDec) {
-            // collect optional (p[, s]) then expect the CAST's ')'
-            var p = "10"; var s = "0"
-            var after = dw + 1
-            val mOpen = nextSig(toks0, dw + 1)
-            if (mOpen < toks0.length && toks0(mOpen) == Punct("(")) {
-              val pPos = nextSig(toks0, mOpen + 1)
-              (toks0.lift(pPos), toks0.lift(nextSig(toks0, pPos + 1))) match {
-                case (Some(Num(pp)), Some(Punct(","))) =>
-                  val sPos = nextSig(toks0, nextSig(toks0, pPos + 1) + 1)
-                  (toks0.lift(sPos), toks0.lift(nextSig(toks0, sPos + 1))) match {
-                    case (Some(Num(ss)), Some(Punct(")"))) =>
-                      p = pp; s = ss; after = nextSig(toks0, sPos + 1) + 1
-                    case _ => after = -1
-                  }
-                case (Some(Num(pp)), Some(Punct(")"))) =>
-                  p = pp; after = nextSig(toks0, pPos + 1) + 1
-                case _ => after = -1
-              }
-            }
-            val castClose = if (after < 0) -1 else nextSig(toks0, after)
-            if (castClose >= 0 && castClose < toks0.length &&
-                toks0(castClose) == Punct(")")) {
-              out += Word("chDecimal"); out += Punct("(")
-              rewriteCastDecimal(toks0.slice(open + 1, asPos))
-                .foreach(out += _)
-              out += Punct(","); out += Num(p)
-              out += Punct(","); out += Num(s)
-              out += Punct(")")
-              Some(castClose + 1)
-            } else None
+          if (after >= 0 && nextSig(toks0, after) == close) {
+            out += Word("chDecimal"); out += Punct("(")
+            out ++= rewriteCastDecimal(toks0.slice(open + 1, asPos))
+            out += Punct(","); out += Num(p)
+            out += Punct(","); out += Num(s)
+            out += Punct(")")
+            Some(close + 1)
           } else None
-        case _ => None
+        } else None
       }
       rewritten match {
         case Some(next) => i = next
@@ -464,16 +606,12 @@ object ChTranspiler {
     * and the `TIME'…'` typed literal.
     */
   private def rewriteTimeType(toks0: Vector[Tok]): Vector[Tok] = {
-    def isTimeWord(t: Tok) = t match {
-      case Word(w) => w.equalsIgnoreCase("time")
-      case _ => false
-    }
+    def isTimeWord(t: Tok) = isWordI(t, "time")
     if (!toks0.exists {
         case Word(w) => w.equalsIgnoreCase("time")
         case Str(sv) => sv.toUpperCase.contains("TIME")
         case _ => false
       }) return toks0
-    var toks = toks0
     // optional (n) after the Time word: returns (scaleText, indexAfter)
     def scaleAfter(ts: Vector[Tok], tw: Int): (String, Int) = {
       val p = nextSig(ts, tw + 1)
@@ -486,6 +624,30 @@ object ChTranspiler {
         }
       } else ("3", tw + 1)
     }
+    // CH's datetime text reader accepts ANY non-digit delimiters
+    // ('2021 01-02 …' parses); normalize literals that feed a :: cast
+    val dtRe = """^'(\d{4})([^\d'])(\d{2})([^\d'])(\d{2})([ T].*)?'$""".r
+    val dated = toks0.indices.map { k =>
+      toks0(k) match {
+        case Str(sv) if k + 2 < toks0.length && toks0(k + 1) == Punct(":") &&
+            toks0(k + 2) == Punct(":") =>
+          dtRe.findFirstMatchIn(sv).filter(m => m.group(2) != "-" || m.group(4) != "-")
+            .fold(toks0(k))(m => Str(s"'${m.group(1)}-${m.group(3)}-${m.group(5)}" +
+              Option(m.group(6)).getOrElse("") + "'"))
+        case t => t
+      }
+    }.toVector
+    // TIME'…' typed literal
+    val typed = Vector.newBuilder[Tok]
+    var i = 0
+    while (i < dated.length) {
+      if (isTimeWord(dated(i)) && i + 1 < dated.length && dated(i + 1).isInstanceOf[Str]) {
+        typed ++= Vector[Tok](Word("chTime"), Punct("("), dated(i + 1), Punct(","),
+          Num("3"), Punct(")"))
+        i += 2
+      } else { typed += dated(i); i += 1 }
+    }
+    var toks = typed.result()
     def run(step: Vector[Tok] => Option[Vector[Tok]]): Unit = {
       var guard = 0
       var next = step(toks)
@@ -495,38 +657,6 @@ object ChTranspiler {
         next = step(toks)
       }
     }
-    // CH's datetime text reader accepts ANY non-digit delimiters
-    // ('2021 01-02 …' parses); normalize literals that feed a :: cast
-    run(ts => {
-      val dtRe = """^'(\d{4})([^\d'])(\d{2})([^\d'])(\d{2})([ T].*)?'$""".r
-      val i = ts.indices.find { k =>
-        ts(k) match {
-          case Str(sv) => k + 2 < ts.length && ts(k + 1) == Punct(":") &&
-            ts(k + 2) == Punct(":") && {
-              dtRe.findFirstMatchIn(sv).exists(m =>
-                m.group(2) != "-" || m.group(4) != "-")
-            }
-          case _ => false
-        }
-      }
-      i.map { k =>
-        val sv = ts(k).text
-        val m = dtRe.findFirstMatchIn(sv).get
-        val fixed = s"'${m.group(1)}-${m.group(3)}-${m.group(5)}" +
-          Option(m.group(6)).getOrElse("") + "'"
-        ts.updated(k, Str(fixed))
-      }
-    })
-    // TIME'…' typed literal
-    run(ts => {
-      val i = ts.indices.find(k => isTimeWord(ts(k)) &&
-        k + 1 < ts.length && ts(k + 1).isInstanceOf[Str])
-      i.map { k =>
-        ts.take(k) ++
-          Vector[Tok](Word("chTime"), Punct("("), ts(k + 1), Punct(","),
-            Num("3"), Punct(")")) ++ ts.drop(k + 2)
-      }
-    })
     // x :: Time[(n)]  (`::` lexes as two single-char puncts)
     run(ts => {
       val i = ts.indices.find(k => ts(k) == Punct(":") &&
@@ -553,75 +683,27 @@ object ChTranspiler {
             }
           case _ => ()
         }
-        val left = ts.slice(ls, k).filterNot(_.isInstanceOf[Ws])
-        ts.take(ls) ++
-          (Vector[Tok](Word("chTime"), Punct("(")) ++ left ++
-            Vector[Tok](Punct(","), Num(scale), Punct(")"))) ++
+        join(ts.take(ls), tk"chTime(${squeeze(ts.slice(ls, k))},${Num(scale)})") ++
           ts.drop(after)
       }
     })
     // CAST(x AS Time[(n)]) and CAST(x, 'Time[(n)]')
-    run(ts => {
-      val i = ts.indices.find { k =>
-        (ts(k) match {
-          case Word(w) => w.equalsIgnoreCase("CAST")
+    run(ts => ts.indices.iterator.flatMap { k =>
+      val open = nextSig(ts, k + 1)
+      val close = if (isWordI(ts(k), "CAST") && open < ts.length && ts(open) == Punct("("))
+        balancedClose(ts, open) else -1
+      val seps = if (close < 0) Nil
+        else inside(ts, open, close).filter(j => isWordI(ts(j), "AS") || ts(j) == Punct(","))
+      val hit = seps.exists { j =>
+        val w = nextSig(ts, j + 1)
+        w < ts.length && (if (ts(j) == Punct(",")) ts(w) match {
+          case Str(sv) => sv.length > 2 &&
+            sv.substring(1, sv.length - 1).trim.toUpperCase.startsWith("TIME")
           case _ => false
-        }) && {
-          val open = nextSig(ts, k + 1)
-          open < ts.length && ts(open) == Punct("(") && {
-            // scan to AS/, at depth 1, then Time
-            var j = open + 1
-            var d = 1
-            var hit = false
-            while (j < ts.length && d > 0 && !hit) {
-              ts(j) match {
-                case Punct("(") => d += 1
-                case Punct(")") => d -= 1
-                case Word(a) if d == 1 && a.equalsIgnoreCase("AS") =>
-                  val w = nextSig(ts, j + 1)
-                  hit = w < ts.length && isTimeWord(ts(w))
-                case Punct(",") if d == 1 =>
-                  val w = nextSig(ts, j + 1)
-                  hit = w < ts.length && (ts(w) match {
-                    case Str(sv) => sv.length > 2 &&
-                      sv.substring(1, sv.length - 1).trim
-                        .toUpperCase.startsWith("TIME")
-                    case _ => false
-                  })
-                case _ => ()
-              }
-              j += 1
-            }
-            hit
-          }
-        }
+        } else isTimeWord(ts(w)))
       }
-      i.map { k =>
-        val open = nextSig(ts, k + 1)
-        var j = open + 1
-        var d = 1
-        var sep = -1
-        while (j < ts.length && d > 0 && sep < 0) {
-          ts(j) match {
-            case Punct("(") => d += 1
-            case Punct(")") => d -= 1
-            case Word(a) if d == 1 && a.equalsIgnoreCase("AS") => sep = j
-            case Punct(",") if d == 1 => sep = j
-            case _ => ()
-          }
-          j += 1
-        }
-        // close paren of the CAST
-        var close = sep
-        d = 1
-        while (close < ts.length && d > 0) {
-          close += 1
-          ts(close) match {
-            case Punct("(") => d += 1
-            case Punct(")") => d -= 1
-            case _ => ()
-          }
-        }
+      if (!hit) None else {
+        val sep = seps.head
         val scale = ts(nextSig(ts, sep + 1)) match {
           case Str(sv) =>
             val inner = sv.substring(1, sv.length - 1).trim
@@ -629,13 +711,13 @@ object ChTranspiler {
               .map(_.group(1)).getOrElse("3")
           case _ => scaleAfter(ts, nextSig(ts, sep + 1))._1
         }
-        ts.take(k) ++
+        Some(ts.take(k) ++
           (Vector[Tok](Word("chTime"), Punct("(")) ++
             ts.slice(open + 1, sep) ++
             Vector[Tok](Punct(","), Num(scale), Punct(")"))) ++
-          ts.drop(close + 1)
+          ts.drop(close + 1))
       }
-    })
+    }.nextOption())
     toks
   }
 
@@ -646,6 +728,7 @@ object ChTranspiler {
     *    binding each `^` to its immediate primary operands.
     */
   private def mysqlPasses(toks0: Vector[Tok]): Vector[Tok] = {
+    if (!mysqlDialect) return toks0
     var toks = toks0
     // AS 'alias'
     if (toks.exists { case Str(_) => true; case _ => false }) {
@@ -713,29 +796,8 @@ object ChTranspiler {
       toks(re) match {
         case Word(_) if nextSig(toks, re + 1) < toks.length &&
             toks(nextSig(toks, re + 1)) == Punct("(") =>
-          var k = nextSig(toks, re + 1) + 1
-          var d = 1
-          while (k < toks.length && d > 0) {
-            toks(k) match {
-              case Punct("(") => d += 1
-              case Punct(")") => d -= 1
-              case _ => ()
-            }
-            if (d > 0) k += 1
-          }
-          re = k
-        case Punct("(") =>
-          var k = re + 1
-          var d = 1
-          while (k < toks.length && d > 0) {
-            toks(k) match {
-              case Punct("(") => d += 1
-              case Punct(")") => d -= 1
-              case _ => ()
-            }
-            if (d > 0) k += 1
-          }
-          re = k
+          re = closeOrEnd(toks, nextSig(toks, re + 1))
+        case Punct("(") => re = closeOrEnd(toks, re)
         case _ => ()
       }
       // absorb `::Type` chains to the RIGHT
@@ -744,20 +806,13 @@ object ChTranspiler {
         re = nextSig(toks, q + 1)
         q = nextSig(toks, re + 1)
       }
-      val left = toks.slice(ls, xorPos)
-        .filterNot(_.isInstanceOf[Ws])
-      val right = toks.slice(xorPos + 1, re + 1)
-        .filterNot(_.isInstanceOf[Ws])
-      toks = toks.take(ls) ++
-        (Vector[Tok](Word("bitXor"), Punct("(")) ++ left ++
-          Vector[Tok](Punct(",")) ++ right ++ Vector[Tok](Punct(")"))) ++
-        toks.drop(re + 1)
+      toks = join(toks.take(ls), tk"bitXor(${squeeze(toks.slice(ls, xorPos))},${
+        squeeze(toks.slice(xorPos + 1, re + 1))})") ++ toks.drop(re + 1)
       xorPos = toks.indexWhere(_ == Punct("^"))
     }
     toks
   }
 
-  /** Transpile one statement's ClickHouse syntax to Spark-parseable SQL. */
   /** `PREWHERE a WHERE b` (both clauses in one SELECT) merges into
     * `WHERE (a) AND (b)` — PREWHERE is only a storage-pushdown hint
     * around the same filter semantics (reference
@@ -773,7 +828,7 @@ object ChTranspiler {
     while (found && guard < 16) {
       guard += 1
       found = false
-      var d = 0
+      val depth = depths(toks, brackets = true)
       var pw = -1
       var pwD = 0
       var wh = -1
@@ -781,10 +836,9 @@ object ChTranspiler {
       var k = 0
       var lastSig: Option[Tok] = None
       while (k < toks.length && (wh < 0 || end == toks.length)) {
+        val d = depth(k)
         toks(k) match {
-          case Punct("(") | Punct("[") => d += 1
           case Punct(")") | Punct("]") =>
-            d -= 1
             if (pw >= 0 && wh >= 0 && d < pwD && end == toks.length) end = k
             else if (pw >= 0 && wh < 0 && d < pwD) { pw = -1 } // no pair here
           case Word(w) if pw < 0 && w.equalsIgnoreCase("PREWHERE") &&
@@ -821,7 +875,6 @@ object ChTranspiler {
     }
     toks
   }
-
   /** CH resolves an unqualified column that exists on BOTH sides of a
     * join to the LEFT table (reference TranslateQualifiedNamesMatcher /
     * the pre-analyzer's first-match column resolution — the 08000
@@ -977,7 +1030,7 @@ object ChTranspiler {
               if (sig.length >= 2 && isWordI(toks(sig(sig.length - 2)), "AS"))
                 sig(sig.length - 2)
               else sig.last
-            val exprText = (s0 until cut).map(toks(_).text).mkString.trim
+            val exprText = render(toks.slice(s0, cut)).trim
             if (exprText.nonEmpty && exprText != col) {
               // left relation = FROM+1 .. first join keyword at depth d
               val relStart = nextSig(toks, fi + 1)
@@ -987,10 +1040,10 @@ object ChTranspiler {
                   case _ => false
                 }))
               joinStart.foreach { js =>
-                val relText = (relStart until js).map(toks(_).text).mkString.trim
+                val relText = render(toks.slice(relStart, js)).trim
                 if (relText.nonEmpty) {
-                  val pre = toks.take(relStart).map(_.text).mkString
-                  val post = toks.drop(js).map(_.text).mkString
+                  val pre = render(toks.take(relStart))
+                  val post = render(toks.drop(js))
                   return Some(
                     s"$pre(SELECT *, $exprText AS `$col` FROM $relText) $post")
                 }
@@ -1047,8 +1100,9 @@ object ChTranspiler {
         case other => out += other
       }
     }
-    if (changed) Some(out.result().map(_.text).mkString) else None
+    if (changed) Some(render(out.result())) else None
   }
+
 
   /** ClickHouse lets a SELECT-list alias be referenced from WHERE /
     * GROUP BY / HAVING / ORDER BY (aliases resolve query-wide, reference
@@ -1061,24 +1115,15 @@ object ChTranspiler {
   def inlineSelectAliases(stmt: String): String = {
     val toks = tokenize(stmt)
     // top-level select list boundaries
-    var d = 0
-    var selStart = -1
-    var listEnd = toks.length
-    for (k <- toks.indices) {
-      toks(k) match {
-        case Punct("(") | Punct("[") => d += 1
-        case Punct(")") | Punct("]") => d -= 1
-        case Word(w) if d == 0 && selStart < 0 &&
-            w.equalsIgnoreCase("SELECT") => selStart = k
-        case Word(w) if d == 0 && selStart >= 0 && listEnd == toks.length &&
-            Set("FROM", "WHERE", "PREWHERE", "GROUP", "HAVING", "ORDER",
-              "LIMIT", "SETTINGS", "UNION", "WINDOW").contains(w.toUpperCase) =>
-          listEnd = k
-        case _ => ()
-      }
-    }
-    if (selStart < 0) return stmt
-    val listText = toks.slice(selStart + 1, listEnd).map(_.text).mkString
+    val depth = depths(toks, brackets = true)
+    val selStart = toks.indices.find(k => depth(k) == 0 && isWordI(toks(k), "SELECT"))
+      .getOrElse(return stmt)
+    val listEnd = (selStart until toks.length).find(k => depth(k) == 0 && (toks(k) match {
+      case Word(w) => Set("FROM", "WHERE", "PREWHERE", "GROUP", "HAVING", "ORDER",
+        "LIMIT", "SETTINGS", "UNION", "WINDOW").contains(w.toUpperCase)
+      case _ => false
+    })).getOrElse(toks.length)
+    val listText = render(toks.slice(selStart + 1, listEnd))
     val aliasRe = """(?is)^(.*\S)\s+AS\s+(`[^`]+`|[A-Za-z_]\w*)\s*$""".r
     val pairs = ChLex.splitTop(listText).flatMap {
       case aliasRe(expr, alias) =>
@@ -1088,7 +1133,7 @@ object ChTranspiler {
       case _ => None
     }.toMap
     if (pairs.isEmpty || listEnd == toks.length) return stmt
-    val sb = new StringBuilder(toks.take(listEnd).map(_.text).mkString)
+    val sb = new StringBuilder(render(toks.take(listEnd)))
     var i = listEnd
     var last: Option[Tok] = None
     while (i < toks.length) {
@@ -1136,58 +1181,44 @@ object ChTranspiler {
     "row_number", "rownumber", "ntile", "lag", "lead", "leadinframe",
     "laginframe")
 
-  private def stripRankFrames(sql: String): String = {
-    val toks = tokenize(sql)
+  /** The `OVER (` … `)` after the call whose name is at `i`: the
+    * indices of its `(` and `)`.
+    */
+  private def overClause(toks: Vector[Tok], i: Int): Option[(Int, Int)] = {
+    val o = nextSig(toks, i + 1)
+    if (o >= toks.length || toks(o) != Punct("(")) return None
+    val ov = nextSig(toks, matchClose(toks, o) + 1)
+    val wo = nextSig(toks, ov + 1)
+    if (ov < toks.length && isWordI(toks(ov), "OVER") && wo < toks.length &&
+        toks(wo) == Punct("(")) Some((wo, matchClose(toks, wo)))
+    else None
+  }
+
+  private def stripRankFrames(toks: Vector[Tok]): Vector[Tok] = {
     val drop = scala.collection.mutable.BitSet.empty
-    // index → replacement text (a ROWS-framed rank() degrades to
-    // row_number(): with a ROWS frame each row is its own peer group,
-    // 34426/34427 golden outputs)
-    val swap = scala.collection.mutable.HashMap.empty[Int, String]
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case Word(w) if rankLikeFns(w.toLowerCase) =>
-          val o = nextSig(toks, i + 1)
-          if (o < toks.length && toks(o) == Punct("(")) {
-            val c = matchClose(toks, o)
-            val ov = nextSig(toks, c + 1)
-            val isOver = ov < toks.length && isWordI(toks(ov), "OVER")
-            val wo = if (isOver) nextSig(toks, ov + 1) else toks.length
-            if (isOver && wo < toks.length && toks(wo) == Punct("(")) {
-              val wc = matchClose(toks, wo)
-              // frame keyword at the OVER clause's own depth
-              var d = 0
-              var k = wo + 1
-              var frameStart = -1
-              var frameKw = ""
-              while (k < wc && frameStart < 0) {
-                toks(k) match {
-                  case Punct("(") => d += 1
-                  case Punct(")") => d -= 1
-                  case Word(x) if d == 0 &&
-                      Seq("ROWS", "RANGE", "GROUPS")
-                        .contains(x.toUpperCase) =>
-                    frameStart = k; frameKw = x.toUpperCase
-                  case _ => ()
-                }
-                k += 1
-              }
-              if (frameStart >= 0) {
-                (frameStart until wc).foreach(drop += _)
-                if (frameKw == "ROWS" &&
-                    Set("rank", "dense_rank", "denserank")(w.toLowerCase))
-                  swap(i) = "row_number"
-              }
-            }
+    // a ROWS-framed rank() degrades to row_number(): with a ROWS frame
+    // each row is its own peer group (34426/34427 golden outputs)
+    val swap = scala.collection.mutable.BitSet.empty
+    for (i <- toks.indices) toks(i) match {
+      case Word(w) if rankLikeFns(w.toLowerCase) =>
+        overClause(toks, i).foreach { case (wo, wc) =>
+          // frame keyword at the OVER clause's own depth
+          inside(toks, wo, wc).find(k => toks(k) match {
+            case Word(x) => Seq("ROWS", "RANGE", "GROUPS").contains(x.toUpperCase)
+            case _ => false
+          }).foreach { frameStart =>
+            (frameStart until wc).foreach(drop += _)
+            if (isWordI(toks(frameStart), "ROWS") &&
+                Set("rank", "dense_rank", "denserank")(w.toLowerCase))
+              swap += i
           }
-          i += 1
-        case _ => i += 1
-      }
+        }
+      case _ => ()
     }
-    if (drop.isEmpty && swap.isEmpty) sql
-    else toks.zipWithIndex.collect {
-      case (t, k) if !drop(k) => swap.getOrElse(k, t.text)
-    }.mkString
+    if (drop.isEmpty && swap.isEmpty) toks
+    else toks.indices.collect {
+      case k if !drop(k) => if (swap(k)) Word("row_number") else toks(k)
+    }.toVector
   }
 
   /** An OVER clause with a RANGE frame but NO ORDER BY: every row is a
@@ -1196,54 +1227,30 @@ object ChTranspiler {
     * Rewrite the frame to ROWS BETWEEN UNBOUNDED PRECEDING AND
     * UNBOUNDED FOLLOWING — the exact peer-set equivalent.
     */
-  private def fixOrderlessRange(sql: String): String = {
-    if (!sql.toUpperCase.contains("RANGE")) return sql
-    val toks = tokenize(sql)
-    var i = 0
-    // locate OVER ( … ) clauses
-    val replaceRanges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Int)] // [start, end) of frame tokens to replace
-    i = 0
-    while (i < toks.length) {
-      if (isWordI(toks(i), "OVER")) {
-        val j = nextSig(toks, i + 1)
-        if (j < toks.length && toks(j) == Punct("(")) {
-          val close = matchClose(toks, j)
-          var d = 0
-          var hasOrder = false
-          var rangeAt = -1
-          var k = j + 1
-          while (k < close) {
-            toks(k) match {
-              case Punct("(") => d += 1
-              case Punct(")") => d -= 1
-              case Word(x) if d == 0 && x.equalsIgnoreCase("ORDER") =>
-                hasOrder = true
-              case Word(x) if d == 0 && x.equalsIgnoreCase("RANGE") &&
-                  rangeAt < 0 => rangeAt = k
-              case _ => ()
-            }
-            k += 1
-          }
-          if (rangeAt >= 0 && !hasOrder) replaceRanges += ((rangeAt, close))
-        }
-      }
-      i += 1
+  private def fixOrderlessRange(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "RANGE"))) return toks
+    // [start, end) of the frame tokens to replace
+    val replaceRanges = toks.indices.flatMap { i =>
+      val j = nextSig(toks, i + 1)
+      if (isWordI(toks(i), "OVER") && j < toks.length && toks(j) == Punct("(")) {
+        val close = matchClose(toks, j)
+        val top = inside(toks, j, close)
+        val rangeAt = top.find(k => isWordI(toks(k), "RANGE"))
+        if (top.exists(k => isWordI(toks(k), "ORDER"))) None else rangeAt.map(r => (r, close))
+      } else None
     }
-    if (replaceRanges.isEmpty) return sql
-    val sb = new StringBuilder
-    i = 0
+    if (replaceRanges.isEmpty) return toks
+    val out = Vector.newBuilder[Tok]
+    var i = 0
     while (i < toks.length) {
       replaceRanges.find(_._1 == i) match {
         case Some((_, end)) =>
-          sb.append("ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING")
+          out ++= tk"ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
           i = end
-        case None =>
-          sb.append(toks(i).text)
-          i += 1
+        case None => out += toks(i); i += 1
       }
     }
-    sb.toString
+    out.result()
   }
 
   /** CH `sum(x) OVER (frame)` on an EMPTY frame yields 0 — sum in CH
@@ -1253,8 +1260,7 @@ object ChTranspiler {
     * coalesce(…, 0); window aggregates cannot be DISTINCT, so the
     * rewrite is always type-sound.
     */
-  private def wrapWindowSums(sql: String): String = {
-    val toks = tokenize(sql)
+  private def wrapWindowSums(toks: Vector[Tok]): Vector[Tok] = {
     val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
@@ -1264,10 +1270,7 @@ object ChTranspiler {
           val isCall = o < toks.length && toks(o) == Punct("(")
           val c = if (isCall) matchClose(toks, o) else -1
           val ov = if (isCall) nextSig(toks, c + 1) else -1
-          val isOver = ov > 0 && ov < toks.length && (toks(ov) match {
-            case Word(x) => x.equalsIgnoreCase("over")
-            case _ => false
-          })
+          val isOver = ov > 0 && ov < toks.length && isWordI(toks(ov), "over")
           if (isOver) {
             val wEnd = nextSig(toks, ov + 1)
             val end = toks(wEnd) match {
@@ -1276,14 +1279,7 @@ object ChTranspiler {
               case _ => -1
             }
             if (end > 0) {
-              out += Word("coalesce")
-              out += Punct("(")
-              var k = i
-              while (k <= end) { out += toks(k); k += 1 }
-              out += Punct(",")
-              out += Ws(" ")
-              out += Num("0")
-              out += Punct(")")
+              out ++= tk"coalesce(${toks.slice(i, end + 1)}, 0)"
               i = end + 1
             } else { out += toks(i); i += 1 }
           } else { out += toks(i); i += 1 }
@@ -1291,7 +1287,7 @@ object ChTranspiler {
         case t => out += t; i += 1
       }
     }
-    out.result().map(_.text).mkString
+    out.result()
   }
 
   /** CH evaluates bare integer literals as UInt64, so VALUES-tuple
@@ -1320,35 +1316,39 @@ object ChTranspiler {
     }
   }
 
-  def transpile(stmt: String): String = transpile(stmt, false)
-
-  def transpile(stmt: String, widenInts: Boolean): String = {
-    val toks0raw = tokenize(stripComments(rewriteRemote(stmt)))
-    val toks0 = if (widenInts) widenIntLiterals(toks0raw) else toks0raw
-    // Type-level pre-pass: strip Nullable(...) / LowCardinality(...)
-    // wrappers (keep the inner type), map scalar type names, expand
-    // DecimalNN(s), and rewrite Array(T) type syntax to ARRAY<T>.
-    val preTime = rewriteTimeType(toks0)
-    val preMy =
-      if (mysqlDialect) mysqlPasses(rewriteConvert(rewriteCastEnum(preTime)))
-      else rewriteConvert(rewriteCastEnum(preTime))
-    val toks = mergePrewhere(rewriteCastDecimal(rewriteTypes(
-      rewriteNullableCast(preMy))))
-    val out = new StringBuilder
+  /** The token-by-token rewrite: array literals and element access,
+    * ByteDance map access, the `f(p)(x)` merge, literal spellings,
+    * SETTINGS, join qualifiers and the other one-token renames.
+    */
+  private def mainLoop(toks: Vector[Tok]): Vector[Tok] = {
+    val out = ArrayBuffer[Tok]()
+    // a rewritten token, spaced off a word it would otherwise run into
+    def emit(ts: Seq[Tok]): Unit = {
+      if (ts.nonEmpty && out.nonEmpty && runsInto(out.last, ts.head)) out += Ws(" ")
+      out ++= ts
+    }
+    // element access: wrap the primary that ends the output so far
+    def elementAccess(): Unit = {
+      val start = primaryStart(out)
+      val primary = out.drop(start).toVector
+      out.remove(start, out.length - start)
+      emit(tk"arrayElement($primary, ")
+    }
+    lazy val parent = parents(toks)
+    lazy val depth = depths(toks)
     // Depth-indexed stack entry: true → this bracket became `array(`,
-    // false → element access (we rewrote `x[` to `element_at(x, `).
+    // false → element access (we rewrote `x[` to `arrayElement(x, `).
     var stack = List[Boolean]()
     var lastSig: Option[Tok] = None
-    var parens = 0
     var i = 0
     while (i < toks.length) {
       toks(i) match {
-        case Word(w) if parens == 0 && stack.isEmpty &&
+        case Word(w) if depth(i) == 0 && stack.isEmpty &&
             w.equalsIgnoreCase("settings") =>
           // CH query-level SETTINGS clause: session knobs, no Spark
           // equivalent — drop the remainder of the statement.
           i = toks.length - 1
-        case Word(w) if parens > 0 && stack.isEmpty &&
+        case Word(w) if depth(i) > 0 && stack.isEmpty &&
             w.equalsIgnoreCase("settings") && {
             // subquery-level `(SELECT … SETTINGS k = v, …)` (00266):
             // confirmed by the `name =` shape so a column named
@@ -1360,56 +1360,33 @@ object ChTranspiler {
           } =>
           // drop the settings list up to (not including) the paren that
           // closes this subquery
-          var j = i + 1
-          var d = 0
-          var stop = false
-          while (j < toks.length && !stop) {
-            toks(j) match {
-              case Punct("(") => d += 1
-              case Punct(")") if d == 0 => stop = true
-              case Punct(")") => d -= 1
-              case _ => ()
-            }
-            if (!stop) j += 1
-          }
-          i = j - 1
+          i = (if (parent(i) < 0) toks.length else closeOrEnd(toks, parent(i))) - 1
         case Punct("[") =>
           if (opensLiteral(lastSig)) {
-            out.append("array("); stack = true :: stack
+            emit(tk"array("); stack = true :: stack
           } else {
-            // element access: wrap the preceding primary in element_at.
-            // Find the start of the preceding primary expression in the
-            // OUTPUT: walk back over balanced parens/identifier chars.
-            val prefix = out.toString
-            val start = primaryStart(prefix)
-            val primary = prefix.substring(start)
-            out.setLength(start)
-            out.append("arrayElement(").append(primary).append(", ")
+            elementAccess()
             stack = false :: stack
           }
           lastSig = Some(Punct("["))
         case Punct("]") =>
-          out.append(")")
+          out += Punct(")")
           stack = stack.drop(1)
           lastSig = Some(Punct("]"))
         case Punct("{") =>
           // `m{'k'}` is the ByteDance Map element access; a brace in
           // LITERAL position opens a map literal `{'k': v}` (reference
           // ParserMapOfLiterals) — the literal's colons are handled by
-          // rewriteMapLiterals on the emitted `map(` form
+          // rewriteMapLiterals on the emitted `map{` form
           if (opensLiteral(lastSig)) {
-            out.append("map{"); lastSig = Some(Punct("{"))
+            emit(tk"map{"); lastSig = Some(Punct("{"))
           } else {
-            val prefix = out.toString
-            val start = primaryStart(prefix)
-            val primary = prefix.substring(start)
-            out.setLength(start)
-            out.append("arrayElement(").append(primary).append(", ")
+            elementAccess()
             stack = false :: stack
             lastSig = Some(Punct("["))
           }
         case Punct("}") if stack.nonEmpty && !stack.head =>
-          out.append(")")
+          out += Punct(")")
           stack = stack.drop(1)
           lastSig = Some(Punct("]"))
         case Word(w) if w.equalsIgnoreCase("prewhere") &&
@@ -1419,14 +1396,14 @@ object ChTranspiler {
           // (reference MergeTreeWhereOptimizer) — plain WHERE here,
           // Catalyst pushes predicates itself. Guarded so a TABLE named
           // `prewhere` (the corpus has one) survives in FROM position.
-          out.append("WHERE"); lastSig = Some(Word("WHERE"))
+          emit(Seq(Word("WHERE"))); lastSig = Some(Word("WHERE"))
         case Word(w) if (w.equalsIgnoreCase("YEAR_MONTH") ||
             w.equalsIgnoreCase("DAY_TIME") ||
             w.equalsIgnoreCase("DAY_SECOND")) &&
             lastSig.exists(_.isInstanceOf[Str]) =>
           // MySQL compound interval units → Spark's ANSI spellings
-          out.append(if (w.equalsIgnoreCase("YEAR_MONTH")) "YEAR TO MONTH"
-            else "DAY TO SECOND")
+          emit(if (w.equalsIgnoreCase("YEAR_MONTH")) tk"YEAR TO MONTH"
+            else tk"DAY TO SECOND")
           lastSig = Some(Word("MONTH"))
         case Word(w) if w.equalsIgnoreCase("dateDiff") ||
             w.equalsIgnoreCase("date_diff") =>
@@ -1434,27 +1411,25 @@ object ChTranspiler {
           // unit-argument syntax (unquoted units) BEFORE the function
           // registry — CH spells the unit as a string literal, so route
           // to the registry under a name the parser treats normally
-          out.append("chDateDiff"); lastSig = Some(Word("chDateDiff"))
+          emit(Seq(Word("chDateDiff"))); lastSig = Some(Word("chDateDiff"))
         case Word(w) if w.equalsIgnoreCase("dummy") =>
           // parenthesized so a `GROUP BY dummy` does not become a bare
           // integer literal that Spark's groupByOrdinal reinterprets
-          out.append("(0)"); lastSig = Some(Num("0"))
+          emit(tk"(0)"); lastSig = Some(Num("0"))
         case Word("inf") =>
-          out.append("CAST('Infinity' AS DOUBLE)"); lastSig = Some(Num("0"))
+          emit(tk"CAST('Infinity' AS DOUBLE)"); lastSig = Some(Num("0"))
         case Word("nan") =>
-          out.append("CAST('NaN' AS DOUBLE)"); lastSig = Some(Num("0"))
+          emit(tk"CAST('NaN' AS DOUBLE)"); lastSig = Some(Num("0"))
         case p @ Punct("(") if lastSig.contains(Punct(")")) =>
           // CH parameterized-aggregate syntax f(params)(args): merge into
           // the registry's single-call convention f(params, args) —
           // ClickHouseAliases expects exactly this shape (e.g.
           // quantileExact(level, x), sequenceMatch(pattern, ts, conds...)).
-          var j = out.length - 1
-          while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-          out.setLength(j) // drop the ")"
-          out.append(", ")
-          parens += 1 // the dropped ")" had decremented the counter
+          val close = out.lastIndexWhere(!_.isInstanceOf[Ws])
+          out.remove(close, out.length - close) // drop the ")"
+          out ++= tk", "
           lastSig = Some(p)
-        case n @ Num(t) if t.startsWith(".") &&
+        case Num(t) if t.startsWith(".") &&
             t.drop(1).split('.').forall(s => s.nonEmpty && s.forall(_.isDigit)) &&
             (lastSig.exists(_.isInstanceOf[Word]) ||
              lastSig.contains(Punct(")")) || lastSig.contains(Punct("]"))) =>
@@ -1465,13 +1440,13 @@ object ChTranspiler {
           // segment maps. lastSig becomes the emitted FIELD WORD so a
           // following separate `.N` keeps rewriting too.
           val segs = t.drop(1).split('.')
-          segs.foreach(s => out.append(".col").append(s))
+          segs.foreach(s => emit(Vector(Punct("."), Word("col" + s))))
           lastSig = Some(Word("col" + segs.last))
         case w0 @ Word(w) if w.equalsIgnoreCase("datetime") &&
             toks.lift(nextSig(toks, i + 1)).exists(_.isInstanceOf[Str]) =>
           // MySQL-dialect typed literal `DATETIME '2020-01-01 00:00:00'`
           // (corpus 015xx/13002): Spark's spelling is TIMESTAMP
-          out.append("TIMESTAMP")
+          emit(Seq(Word("TIMESTAMP")))
           lastSig = Some(w0)
         case w0 @ Word(w) if (w.equalsIgnoreCase("semi") ||
             w.equalsIgnoreCase("anti")) &&
@@ -1479,7 +1454,7 @@ object ChTranspiler {
           // CH `SEMI LEFT JOIN` = Spark `LEFT SEMI JOIN` (and ANTI):
           // swap the qualifier order; RIGHT SEMI/ANTI have no Spark
           // equivalent and keep failing loudly
-          out.append("LEFT ").append(w.toUpperCase)
+          emit(tk"LEFT ${Word(w.toUpperCase)}")
           i = nextSig(toks, i + 1) // skip the LEFT we just emitted in front
           lastSig = Some(w0)
         case w0 @ Word(w) if (w.equalsIgnoreCase("all") ||
@@ -1512,7 +1487,7 @@ object ChTranspiler {
                 Seq("INNER", "LEFT", "JOIN").contains(j.toUpperCase)
               case _ => false
             })
-          }) { out.append(w); lastSig = Some(w0) }
+          }) { out += w0; lastSig = Some(w0) }
         case n @ Num(t) if t.toLowerCase.startsWith("0x") &&
             t.drop(2).nonEmpty &&
             t.drop(2).forall(c => "0123456789abcdefABCDEF".contains(c)) =>
@@ -1520,8 +1495,7 @@ object ChTranspiler {
           // emit the decimal value (unsigned beyond Long range, the CH
           // UInt64 reading)
           val v = BigInt(t.drop(2), 16)
-          if (v.isValidLong) out.append(v.toString)
-          else out.append(v.toString).append("BD")
+          emit(Seq(Num(if (v.isValidLong) v.toString else v.toString + "BD")))
           lastSig = Some(n)
         case n @ Num(t) if (t.contains('.') || t.toLowerCase.contains('e')) &&
             !t.toLowerCase.startsWith("0x") && t.count(_ == '.') <= 1 &&
@@ -1531,36 +1505,16 @@ object ChTranspiler {
           // reference (0.1 + 0.2 → 0.30000000000000004, 1.0 prints "1").
           val base0 = if (t.endsWith(".")) t + "0" else t
           val base = if (base0.startsWith(".")) "0" + base0 else base0
-          out.append(base).append("D")
+          emit(Seq(Num(base + "D")))
           lastSig = Some(n)
         case s @ Str(_) =>
-          out.append(normalizeStringLiteral(s.text)); lastSig = Some(s)
-        case t @ Ws(_) => out.append(t.text)
-        case t =>
-          if (t == Punct("(")) parens += 1
-          else if (t == Punct(")")) parens -= 1
-          out.append(t.text); lastSig = Some(t)
+          emit(normalizeStringLiteral(s.text)); lastSig = Some(s)
+        case t @ Ws(_) => out += t
+        case t => emit(Seq(t)); lastSig = Some(t)
       }
       i += 1
     }
-    // a `)` that closes nothing: no pass below can make sense of the
-    // statement, so Spark's parser gets it as written and reports it
-    if (hasStrayClose(tokenize(out.toString))) return stmt
-    val sqlOut = rewriteBareSetOps(rewriteAnyJoin(rewriteLimitBy(guardSelectStringHead(
-    rewriteOrderNulls(rewriteCollate(rewriteNestedArrayJoinDeep(rewriteArrayJoin(rewriteInClauses(
-      rewriteNestedCols(rewriteTupleLiterals(rewriteUnionBranches(rewriteParenLambda(rewriteTernary(rewriteWhereAliases(rewriteInlineAliases(
-        rewriteScalarWithDeep(rewriteInfixMod(rewriteTwoArgCast(wrapWindowSums(
-          fixOrderlessRange(stripRankFrames(rewriteGroupsFrame(
-            postPass(rewritePositionIn(rewriteMapLiterals(
-              parenthesizeUsing(addImplicitFromOne(
-                rewriteDynamicInterval(
-                  rewriteValuesTable(out.toString))))))))))))))))))))))))))))))
-    // Late-bound combinator chains (sumForEachIf, quantilesTimingState…):
-    // register composed builders for any not-yet-registered aggregate
-    // name in this statement, so spark.sql resolves them like the
-    // reference's AggregateFunctionCombinatorFactory does on demand.
-    ChCombinators.registerMissing(sqlOut)
-    sqlOut
+    out.toVector
   }
 
   /** ClickHouse's default INTERSECT/EXCEPT mode is ALL
@@ -1570,16 +1524,16 @@ object ChTranspiler {
     * `SELECT * EXCEPT (cols)` is Spark column-exclusion — only an
     * EXCEPT/INTERSECT introducing a SELECT branch is a set operation.
     */
-  private def rewriteBareSetOps(sql: String): String = {
-    if (!"""(?i)\b(intersect|except)\b""".r.findFirstIn(sql).isDefined)
-      return sql
+  private def rewriteBareSetOps(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(t => isWordI(t, "INTERSECT") || isWordI(t, "EXCEPT")))
+      return toks
     // ANSI/MySQL dialect: a BARE set op keeps the SQL-standard DISTINCT
     // default (explicit ALL still lowers to the CH filter semantics)
     val chDialect =
       try org.apache.spark.sql.internal.SQLConf.get
         .getConfString("graft.ch.dialect", "CLICKHOUSE") == "CLICKHOUSE"
       catch { case _: Throwable => true }
-    if (!chDialect) return sql
+    if (!chDialect) return toks
     // bare-set-op mode follows the SESSION settings, not a hardcoded
     // ALL: SET intersect_default_mode / except_default_mode override it,
     // and the reference ERRORS on an empty mode (ADVICE r13;
@@ -1592,55 +1546,30 @@ object ChTranspiler {
         s"set operation mode is unspecified - set $conf (error 36 analog)")
       m.toUpperCase
     }
-
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    var i = 0
-    var depth = 0
-    var sawSetOp = false
-    // a depth-0 ORDER BY / LIMIT / FORMAT tail means the query already
-    // pins its own order
-    var hasTail = false
-    while (i < toks.length) {
-      out.append(toks(i).text)
-      toks(i) match {
-        case Punct("(") => depth += 1
-        case Punct(")") => depth -= 1
-        case Word(w) if depth == 0 && (w.equalsIgnoreCase("ORDER") ||
-            w.equalsIgnoreCase("LIMIT")) => hasTail = true
-        case Word(w) if w.equalsIgnoreCase("INTERSECT") ||
-            w.equalsIgnoreCase("EXCEPT") =>
-          val a = nextSig(toks, i + 1)
-          val branchy = toks.lift(a) match {
-            case Some(Word(x)) if x.equalsIgnoreCase("ALL") ||
-                x.equalsIgnoreCase("DISTINCT") =>
-              if (depth == 0) sawSetOp = true // explicit mode
-              false
-            case Some(Word(x)) if x.equalsIgnoreCase("SELECT") => true
-            case Some(Punct("(")) =>
-              val b = nextSig(toks, a + 1)
-              toks.lift(b) match {
-                case Some(Word(x)) if x.equalsIgnoreCase("SELECT") => true
-                case Some(Punct("(")) => true
-                case _ => false
-              }
-            case _ => false
-          }
-          if (branchy) {
-            out.append(" " + modeOf(
-              if (toks(i).text.equalsIgnoreCase("INTERSECT"))
-                "graft.ch.intersectMode"
-              else "graft.ch.exceptMode"))
-            if (depth == 0) sawSetOp = true
-          }
-        case _ => ()
+    val out = Vector.newBuilder[Tok]
+    for (i <- toks.indices) {
+      out += toks(i)
+      if (isWordI(toks(i), "INTERSECT") || isWordI(toks(i), "EXCEPT")) {
+        val a = nextSig(toks, i + 1)
+        val branchy = toks.lift(a) match {
+          case Some(Word(x)) if x.equalsIgnoreCase("SELECT") => true
+          case Some(Punct("(")) =>
+            val b = nextSig(toks, a + 1)
+            toks.lift(b) match {
+              case Some(Word(x)) if x.equalsIgnoreCase("SELECT") => true
+              case Some(Punct("(")) => true
+              case _ => false
+            }
+          case _ => false
+        }
+        if (branchy)
+          out ++= tk" ${Word(modeOf(
+            if (toks(i).text.equalsIgnoreCase("INTERSECT"))
+              "graft.ch.intersectMode"
+            else "graft.ch.exceptMode"))}"
       }
-      i += 1
     }
-    // left-stream order is preserved by the semi/anti lowering
-    // (under ChCoercions.CorpusFlag), no explicit sort needed
-    val _ = (sawSetOp, hasTail)
-    out.toString
+    out.result()
   }
 
   /** GROUPS window frames (reference WindowDescription.h FrameType::
@@ -1648,25 +1577,12 @@ object ChTranspiler {
     * rank is an exact rewrite: peer-group distance N <=> rank distance
     * N. The source is wrapped one level to precompute the rank.
     */
-  private def rewriteGroupsFrame(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 6) {
-      changed = false
-      guard += 1
-      rewriteOneGroupsFrame(out) match {
-        case Some(next) => out = next; changed = true
-        case None => ()
-      }
-    }
-    out
-  }
+  private def rewriteGroupsFrame(toks: Vector[Tok]): Vector[Tok] =
+    Iterator.iterate(Option(toks))(_.flatMap(rewriteOneGroupsFrame))
+      .take(7).takeWhile(_.isDefined).flatten.toSeq.last
 
-  private def rewriteOneGroupsFrame(sql: String): Option[String] = {
-    val toks = tokenize(sql)
+  private def rewriteOneGroupsFrame(toks: Vector[Tok]): Option[Vector[Tok]] = {
     val depthAt = depths(toks)
-    def text(a: Int, b: Int): String = toks.slice(a, b).map(_.text).mkString
     var i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "GROUPS") && {
@@ -1684,41 +1600,37 @@ object ChTranspiler {
           .find(k => toks(k) == Punct("(") && depthAt(k) == lvl - 1)
           .getOrElse(return None)
         if (!isWordI(toks(prevSig(toks, openIdx - 1)), "OVER")) return None
-        var closeIdx = i
-        while (closeIdx < toks.length &&
-          !(toks(closeIdx) == Punct(")") && depthAt(closeIdx) == lvl - 1))
-          closeIdx += 1
-        if (closeIdx >= toks.length) return None
+        val closeIdx = (i until toks.length)
+          .find(k => toks(k) == Punct(")") && depthAt(k) == lvl - 1)
+          .getOrElse(return None)
         // ORDER BY inside the OVER
         val orderIdx = (openIdx + 1 until i)
           .find(k => depthAt(k) == lvl && isWordI(toks(k), "ORDER"))
           .getOrElse(return None)
         val byIdx = nextSig(toks, orderIdx + 1)
-        val partText = text(openIdx + 1, orderIdx).trim // PARTITION BY … or ""
-        val orderText = text(byIdx + 1, i).trim
-        val frameText = text(nextSig(toks, i + 1), closeIdx).trim
+        val part = trimWs(toks.slice(openIdx + 1, orderIdx)) // PARTITION BY … or empty
+        val order = trimWs(toks.slice(byIdx + 1, i))
+        val frame = trimWs(toks.slice(nextSig(toks, i + 1), closeIdx))
         val outerLvl = depthAt(openIdx)
         // this level's FROM + source (through WHERE; bail on GROUP BY)
         val fromIdx = (closeIdx until toks.length)
           .find(k => depthAt(k) == outerLvl && isWordI(toks(k), "FROM"))
           .getOrElse(return None)
-        var srcEnd = fromIdx + 1
-        while (srcEnd < toks.length && !(depthAt(srcEnd) == outerLvl &&
-          (toks(srcEnd) match {
+        val srcEnd = (fromIdx + 1 until toks.length).find(k => depthAt(k) == outerLvl &&
+          (toks(k) match {
             case Word(w) => Seq("GROUP", "HAVING", "ORDER", "LIMIT",
               "UNION", "SETTINGS", "WINDOW").contains(w.toUpperCase)
             case Punct(";") => true
             case _ => false
-          }))) srcEnd += 1
-        val srcText = text(fromIdx + 1, srcEnd).trim
-        val n = sql.length
-        val inner = (if (partText.nonEmpty) partText + " " else "") +
-          s"ORDER BY __gdr$n RANGE $frameText"
-        val newFrom = s" FROM (SELECT *, dense_rank() OVER (" +
-          (if (partText.nonEmpty) partText + " " else "") +
-          s"ORDER BY $orderText) AS __gdr$n FROM $srcText) __gsub$n "
-        return Some(text(0, openIdx + 1) + inner +
-          text(closeIdx, fromIdx) + newFrom + text(srcEnd, toks.length))
+          })).getOrElse(toks.length)
+        val src = trimWs(toks.slice(fromIdx + 1, srcEnd))
+        val n = textLength(toks)
+        val (gdr, gsub) = (Word(s"__gdr$n"), Word(s"__gsub$n"))
+        val partBy = if (part.nonEmpty) part :+ Ws(" ") else part
+        return Some(toks.take(openIdx + 1) ++ tk"${partBy}ORDER BY $gdr RANGE $frame" ++
+          toks.slice(closeIdx, fromIdx) ++
+          tk" FROM (SELECT *, dense_rank() OVER (${partBy}ORDER BY $order) AS $gdr FROM $src) $gsub " ++
+          toks.drop(srcEnd))
       }
       i += 1
     }
@@ -1731,44 +1643,30 @@ object ChTranspiler {
     * would otherwise consume the IN form with its own locate lowering,
     * bypassing the dialect's empty-needle and byte conventions.
     */
-  private def rewritePositionIn(sql: String): String = {
-    if (!sql.toLowerCase.contains("position")) return sql
-    val toks = tokenize(sql)
-    val sb = new StringBuilder
+  private def rewritePositionIn(toks: Vector[Tok]): Vector[Tok] = {
+    def isPos(t: Tok) = t match {
+      case Word(w) => w.toLowerCase.startsWith("position")
+      case _ => false
+    }
+    if (!toks.exists(isPos)) return toks
+    val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
-      val isPos = toks(i) match {
-        case Word(w) => w.toLowerCase.startsWith("position")
-        case _ => false
-      }
       val p = nextSig(toks, i + 1)
-      if (isPos && p < toks.length && toks(p) == Punct("(")) {
-        // scan for a top-level IN inside these parens
-        var depth = 1
-        var j = p + 1
-        var inIdx = -1
-        var close = -1
-        while (close < 0 && j < toks.length) {
-          toks(j) match {
-            case Punct("(") | Punct("[") => depth += 1
-            case Punct(")") | Punct("]") =>
-              depth -= 1; if (depth == 0) close = j
-            case w: Word if depth == 1 && isWordI(w, "IN") => inIdx = j
-            case Punct(",") if depth == 1 => inIdx = -2 // already 2-arg
-            case _ => ()
-          }
-          j += 1
-        }
-        if (inIdx >= 0 && close > 0) {
-          val needle = toks.slice(p + 1, inIdx).map(_.text).mkString.trim
-          val hay = toks.slice(inIdx + 1, close).map(_.text).mkString.trim
-          sb.append(toks(i).text).append("(").append(hay).append(", ")
-            .append(needle).append(")")
-          i = close + 1
-        } else { sb.append(toks(i).text); i += 1 }
-      } else { sb.append(toks(i).text); i += 1 }
+      val close = if (isPos(toks(i)) && p < toks.length && toks(p) == Punct("("))
+        balancedClose(toks, p) else -1
+      // a top-level IN inside these parens, and no top-level comma
+      val top = if (close < 0) Nil else inside(toks, p, close)
+      val inIdx = top.filter(k => isWordI(toks(k), "IN")).lastOption
+      if (inIdx.isDefined && !top.exists(k => toks(k) == Punct(",") && k > inIdx.get)) {
+        val needle = trimWs(toks.slice(p + 1, inIdx.get))
+        val hay = trimWs(toks.slice(inIdx.get + 1, close))
+        out += toks(i)
+        out ++= tk"($hay, $needle)"
+        i = close + 1
+      } else { out += toks(i); i += 1 }
     }
-    sb.toString
+    out.result()
   }
 
   /** CH map literals `{'a': 1, 'b': 2}` → `map('a', 1, 'b', 2)`. The
@@ -1776,37 +1674,35 @@ object ChTranspiler {
     * braces are already rewritten there); this pass converts the marked
     * literals, turning the map level's colons into commas.
     */
-  private def rewriteMapLiterals(sql: String): String = {
-    if (!sql.contains('{')) return sql
-    val toks = tokenize(sql)
-    val sb = new StringBuilder
+  private def rewriteMapLiterals(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.contains(Punct("{"))) return toks
+    val out = ArrayBuffer[Tok]()
     var stack = List[String]() // "map" | "brace" | "paren"
     var lastSig: Option[Tok] = None
     for (t <- toks) t match {
       case Punct("{") =>
         if (lastSig.exists(s => isWordI(s, "map"))) {
           stack ::= "map"
-          // drop the just-emitted marker word (+ trailing whitespace)
-          while (sb.nonEmpty && sb.last.isWhitespace) sb.setLength(sb.length - 1)
-          sb.setLength(sb.length - 3)
-          sb.append("map(")
-        } else { stack ::= "brace"; sb.append("{") }
+          // replace the marker word, dropping the whitespace after it
+          val word = out.lastIndexWhere(!_.isInstanceOf[Ws])
+          out.remove(word, out.length - word)
+          out ++= tk"map("
+        } else { stack ::= "brace"; out += t }
         lastSig = Some(Punct("("))
       case Punct("}") =>
-        sb.append(if (stack.headOption.contains("map")) ")" else "}")
+        out += Punct(if (stack.headOption.contains("map")) ")" else "}")
         stack = stack.drop(1); lastSig = Some(Punct(")"))
       case Punct("(") =>
-        stack ::= "paren"; sb.append("("); lastSig = Some(t)
+        stack ::= "paren"; out += t; lastSig = Some(t)
       case Punct(")") =>
-        stack = stack.drop(1); sb.append(")"); lastSig = Some(t)
+        stack = stack.drop(1); out += t; lastSig = Some(t)
       case Punct(":") if stack.headOption.contains("map") =>
-        sb.append(","); lastSig = Some(Punct(","))
-      case Ws(w) => sb.append(w)
-      case other => sb.append(other.text); lastSig = Some(other)
+        out += Punct(","); lastSig = Some(Punct(","))
+      case w: Ws => out += w
+      case other => out += other; lastSig = Some(other)
     }
-    sb.toString
+    out.toVector
   }
-
   /** ClickHouse's scalar WITH items (`WITH expr AS name, … SELECT …`,
     * reference ParserWithElement): each non-CTE item defines a named
     * scalar usable anywhere in the statement. CTE items
@@ -1881,14 +1777,13 @@ object ChTranspiler {
     if (!ops.exists(hasTotals)) return None
     val stripTot = (s: String) =>
       """(?i)\bWITH\s+TOTALS\b""".r.replaceAllIn(s, " ")
-    val mainSql = stripTot(toks.map(_.text).mkString)
+    val mainSql = stripTot(render(toks))
     // companion: replace each operand's body
     val aggRe = ("""(?i)\b(count|sum|avg|min|max|any|anyLast|uniq\w*|""" +
       """quantile\w*|median\w*|groupArray\w*|argMin|argMax|topK\w*|""" +
       """corr|covar\w*|stddev\w*|var\w*)\s*\(""").r
     def totalsBody(o: Operand): Option[String] = {
-      val body = toks.slice(o.open + 1, o.close).map(_.text).mkString
-      val inner = tokenize(body)
+      val inner = toks.slice(o.open + 1, o.close)
       val dep = depths(inner)
       val sel = inner.indices.find(k2 => dep(k2) == 0 &&
         isWordI(inner(k2), "SELECT")).getOrElse(return None)
@@ -1899,9 +1794,9 @@ object ChTranspiler {
       var a = sel + 1
       for (k2 <- (sel + 1) until from)
         if (dep(k2) == 0 && inner(k2) == Punct(",")) {
-          items += inner.slice(a, k2).map(_.text).mkString; a = k2 + 1
+          items += render(inner.slice(a, k2)); a = k2 + 1
         }
-      items += inner.slice(a, from).map(_.text).mkString
+      items += render(inner.slice(a, from))
       if (items.exists(_.trim == "*")) return None
       var sawAgg = false
       val newItems = items.map(_.trim).filter(_.nonEmpty).map { it =>
@@ -1937,14 +1832,13 @@ object ChTranspiler {
       // the totals row exists even over EMPTY input: a global aggregate
       // guarantees one row; with no aggregates the row is fully constant
       // and needs no source at all
-      val src = stripTot(inner.slice(from, tailEnd).map(_.text).mkString)
+      val src = stripTot(render(inner.slice(from, tailEnd)))
       if (sawAgg) Some(s"SELECT ${newItems.mkString(", ")} $src")
       else Some(s"SELECT ${newItems.mkString(", ")}")
     }
     def defaultsRow(o: Operand): Option[String] = {
       // one all-defaults row with the operand's column names
-      val body = toks.slice(o.open + 1, o.close).map(_.text).mkString
-      val inner = tokenize(body)
+      val inner = toks.slice(o.open + 1, o.close)
       val dep = depths(inner)
       val sel = inner.indices.find(k2 => dep(k2) == 0 &&
         isWordI(inner(k2), "SELECT")).getOrElse(return None)
@@ -1954,9 +1848,9 @@ object ChTranspiler {
       var a = sel + 1
       for (k2 <- (sel + 1) until from)
         if (dep(k2) == 0 && inner(k2) == Punct(",")) {
-          items += inner.slice(a, k2).map(_.text).mkString; a = k2 + 1
+          items += render(inner.slice(a, k2)); a = k2 + 1
         }
-      items += inner.slice(a, from).map(_.text).mkString
+      items += render(inner.slice(a, from))
       val cols = items.map(_.trim).filter(_.nonEmpty).map { it =>
         val aliasM = """(?is)^(.*?)\s+AS\s+(`[^`]+`|\w+)\s*$""".r
           .findFirstMatchIn(it)
@@ -1968,7 +1862,7 @@ object ChTranspiler {
     val pieces = ArrayBuffer[String]()
     var pos = 0
     for (o <- ops) {
-      pieces += toks.slice(pos, o.open + 1).map(_.text).mkString
+      pieces += render(toks.slice(pos, o.open + 1))
       // ANY strictness drops the right stream's totals entirely (00150's
       // `0 45 \N`); a plain join default-constructs them (01107's `0 0`)
       val anyJoin = !o.isLeft && toks.slice(pos, o.open).exists(t =>
@@ -1977,7 +1871,7 @@ object ChTranspiler {
         if (hasTotals(o)) totalsBody(o)
         else if (o.isLeft || !anyJoin) defaultsRow(o)
         else {
-          val body = toks.slice(o.open + 1, o.close).map(_.text).mkString
+          val body = render(toks.slice(o.open + 1, o.close))
           Some(s"SELECT * FROM ( ${stripTot(body)} ) __tjr WHERE FALSE")
         }
       repl match {
@@ -1986,7 +1880,7 @@ object ChTranspiler {
       }
       pos = o.close
     }
-    pieces += toks.slice(pos, toks.length).map(_.text).mkString
+    pieces += render(toks.slice(pos, toks.length))
     Some((mainSql, pieces.mkString))
   }
 
@@ -2026,31 +1920,8 @@ object ChTranspiler {
       return None
     // enclosing paren range of the totals clause (whole statement at
     // top level)
-    var openIdx = -1; var closeIdx = toks.length
-    if (td > 0) {
-      var bal = 0
-      var k = withIdx - 1
-      while (openIdx < 0 && k >= 0) {
-        toks(k) match {
-          case Punct(")") => bal += 1
-          case Punct("(") => if (bal > 0) bal -= 1 else openIdx = k
-          case _ => ()
-        }
-        k -= 1
-      }
-      bal = 0
-      k = withIdx + 1
-      var cl = -1
-      while (cl < 0 && k < toks.length) {
-        toks(k) match {
-          case Punct("(") => bal += 1
-          case Punct(")") => if (bal > 0) bal -= 1 else cl = k
-          case _ => ()
-        }
-        k += 1
-      }
-      closeIdx = if (cl < 0) toks.length else cl
-    }
+    val openIdx = if (td > 0) parents(toks)(withIdx) else -1
+    val closeIdx = if (openIdx < 0) toks.length else closeOrEnd(toks, openIdx)
     // the owning GROUP BY (last same-level GROUP before WITH TOTALS)
     var groupIdx = -1
     for (j <- (math.max(openIdx, 0) until withIdx).reverse if groupIdx < 0)
@@ -2060,8 +1931,7 @@ object ChTranspiler {
     // NOT_IMPLEMENTED in the reference (error 48,
     // 01013_totals_without_aggregation)
     if (groupIdx < 0) {
-      val head = toks.slice(math.max(openIdx, 0), withIdx)
-        .map(_.text).mkString
+      val head = render(toks.slice(math.max(openIdx, 0), withIdx))
       val aggRe = ("""(?i)\b(count|sum|avg|min|max|any|anyLast|uniq\w*|""" +
         """quantile\w*|median\w*|groupArray\w*|argMin|argMax|topK\w*|""" +
         """corr|covar\w*|stddev\w*|var\w*|entropy)\s*\(""").r
@@ -2082,7 +1952,7 @@ object ChTranspiler {
     }
     def drop(ranges: Seq[(Int, Int)]): String = {
       val dead = ranges.flatMap { case (a, b) => a until b }.toSet
-      toks.indices.filterNot(dead).map(toks(_).text).mkString
+      render(toks.indices.filterNot(dead).map(toks))
     }
     val main = drop(Seq((withIdx, totalsIdx + 1)))
     // totals: drop GROUP BY …, WITH TOTALS, and any same-level ORDER BY
@@ -2105,7 +1975,7 @@ object ChTranspiler {
       if (groupIdx < 0) Nil
       else {
         val byIdx = nextSig(toks, groupIdx + 1)
-        var itemsText = toks.slice(byIdx + 1, withIdx).map(_.text).mkString
+        var itemsText = render(toks.slice(byIdx + 1, withIdx))
           .replaceAll("(?i)\\bWITH\\s+(ROLLUP|CUBE)\\b", "").trim
         val wrap = """(?is)^(?:ROLLUP|CUBE)\s*\((.*)\)\s*$""".r
         itemsText = wrap.findFirstMatchIn(itemsText)
@@ -2134,23 +2004,17 @@ object ChTranspiler {
       // (a WITH that ends the statement is no fill; it passes through)
       if (depthAt(i) == 0 && isWordI(toks(i), "WITH") &&
           toks.lift(nextSig(toks, i + 1)).exists(isWordI(_, "FILL"))) {
-        // walk back to the item start (comma / BY at depth 0)
+        // the item start: after the last comma / BY before it, a
+        // bracket group skipped whole (an opener it closes none of is
+        // no boundary)
         var s = i - 1
-        var itemStart = 0
-        var dd = 0
-        var found = false
-        while (!found && s >= 0) {
-          toks(s) match {
-            case Punct(")") | Punct("]") => dd += 1
-            case Punct("(") | Punct("[") if dd > 0 => dd -= 1
-            case Punct(",") if dd == 0 => itemStart = s + 1; found = true
-            case Word(w) if dd == 0 && w.equalsIgnoreCase("BY") =>
-              itemStart = s + 1; found = true
-            case _ => ()
+        while (s >= 0 && toks(s) != Punct(",") && !isWordI(toks(s), "BY"))
+          s = toks(s) match {
+            case Punct(")") | Punct("]") => balancedOpen(toks, s, brackets = true) - 1
+            case _ => s - 1
           }
-          if (!found) s -= 1
-        }
-        var itemText = toks.slice(itemStart, i).map(_.text).mkString.trim
+        val itemStart = math.max(s + 1, 0)
+        var itemText = render(toks.slice(itemStart, i)).trim
         val desc = """(?i)\s+DESC(ENDING)?$""".r.findFirstIn(itemText).isDefined
         itemText = itemText.replaceAll("(?i)\\s+(ASC|DESC)(ENDING)?$", "")
         // consume FROM/TO/STEP operands
@@ -2164,26 +2028,21 @@ object ChTranspiler {
             case w: Word if isWordI(w, "FROM") || isWordI(w, "TO") ||
                 isWordI(w, "STEP") =>
               val kw = w.text.toUpperCase
-              var e = nextSig(toks, j + 1)
-              val start = e
+              val start = nextSig(toks, j + 1)
               // operand: signed literal / function call until next kw
-              var dd2 = 0
-              var done = false
-              while (!done && e < toks.length) {
+              val e = (start until toks.length).find { e =>
+                val d = depthAt(e) - depthAt(start)
                 toks(e) match {
-                  case Punct("(") => dd2 += 1
-                  case Punct(")") if dd2 > 0 => dd2 -= 1
-                  case Punct(")") | Punct(",") | Punct(";") if dd2 == 0 => done = true
-                  case ww: Word if dd2 == 0 &&
-                      Seq("FROM", "TO", "STEP", "WITH", "LIMIT", "SETTINGS",
-                        "FORMAT", "INTERPOLATE", "UNION", "OFFSET")
-                        .contains(ww.text.toUpperCase) &&
-                      e != start => done = true
-                  case _ => ()
+                  case Punct(")") => e == start || d < 0
+                  case Punct(",") | Punct(";") => d == 0
+                  case ww: Word => d == 0 && e != start &&
+                    Seq("FROM", "TO", "STEP", "WITH", "LIMIT", "SETTINGS",
+                      "FORMAT", "INTERPOLATE", "UNION", "OFFSET")
+                      .contains(ww.text.toUpperCase)
+                  case _ => false
                 }
-                if (!done) e += 1
-              }
-              val v = toks.slice(nextSig(toks, j + 1), e).map(_.text).mkString.trim
+              }.getOrElse(toks.length)
+              val v = render(toks.slice(start, e)).trim
               kw match {
                 case "FROM" => from = Some(v)
                 case "TO" => to = Some(v)
@@ -2201,7 +2060,7 @@ object ChTranspiler {
     if (specs.isEmpty) None
     else {
       val dead = drop.flatMap { case (a, b) => a until b }.toSet
-      Some((toks.indices.filterNot(dead).map(toks(_).text).mkString,
+      Some((render(toks.indices.filterNot(dead).map(toks)),
         specs.toSeq))
     }
   }
@@ -2211,156 +2070,69 @@ object ChTranspiler {
     * ParserWithElement applies at any query depth), innermost first,
     * then to the whole statement.
     */
-  private def rewriteScalarWithDeep(sql: String): String = {
-    val toks = tokenize(sql)
+  private def rewriteScalarWithDeep(toks: Vector[Tok]): Vector[Tok] = {
     var i = 0
     while (i < toks.length) {
       if (toks(i) == Punct("(") &&
           toks.lift(nextSig(toks, i + 1)).exists(isWordI(_, "WITH"))) {
         val j = balancedClose(toks, i)
         if (j >= 0) {
-          val inner = toks.slice(i + 1, j).map(_.text).mkString
+          val inner = toks.slice(i + 1, j)
           val rewritten = rewriteScalarWith(rewriteScalarWithDeep(inner))
-          if (rewritten != inner) {
-            val pre = toks.take(i + 1).map(_.text).mkString
-            val post = toks.drop(j).map(_.text).mkString
-            return rewriteScalarWithDeep(pre + rewritten + post)
-          }
+          if (!sameText(rewritten, inner))
+            return rewriteScalarWithDeep(toks.take(i + 1) ++ rewritten ++ toks.drop(j))
         }
       }
       i += 1
     }
-    rewriteScalarWith(sql)
+    rewriteScalarWith(toks)
   }
 
-  private def rewriteScalarWith(sql: String): String = {
-    val toks = tokenize(sql)
+  /** ClickHouse's scalar WITH items (`WITH expr AS name, … SELECT …`,
+    * reference ParserWithElement): each non-CTE item defines a named
+    * scalar usable anywhere in the statement. CTE items
+    * (`name AS (SELECT …)`) pass through to Spark's WITH.
+    */
+  private def rewriteScalarWith(toks: Vector[Tok]): Vector[Tok] = {
     val w0 = nextSig(toks, 0)
-    if (w0 >= toks.length || !isWordI(toks(w0), "WITH")) return sql
-    // parse items up to the depth-0 SELECT
-    case class Item(tokens: Vector[Tok])
-    val items = ArrayBuffer[Item]()
-    var cur = ArrayBuffer[Tok]()
-    var depth = 0
-    var i = w0 + 1
-    var selIdx = -1
-    while (selIdx < 0 && i < toks.length) {
-      toks(i) match {
-        case Punct("(") | Punct("[") => depth += 1; cur += toks(i)
-        case Punct(")") | Punct("]") => depth -= 1; cur += toks(i)
-        case Punct(",") if depth == 0 =>
-          items += Item(cur.toVector); cur = ArrayBuffer[Tok]()
-        case Word(w) if depth == 0 && w.equalsIgnoreCase("SELECT") => selIdx = i
-        case t => cur += t
-      }
-      if (selIdx < 0) i += 1
-    }
-    if (selIdx < 0) return sql
-    items += Item(cur.toVector)
+    if (w0 >= toks.length || !isWordI(toks(w0), "WITH")) return toks
+    // items up to the depth-0 SELECT
+    val depth = depths(toks.drop(w0 + 1))
+    def d(k: Int) = depth(k - w0 - 1)
+    val selIdx = (w0 + 1 until toks.length)
+      .find(k => d(k) == 0 && isWordI(toks(k), "SELECT")).getOrElse(return toks)
+    val cuts = (w0 + 1 until selIdx).filter(k => d(k) == 0 && toks(k) == Punct(","))
+    val items = (w0 +: cuts).zip(cuts :+ selIdx).map { case (a, b) => toks.slice(a + 1, b) }
     // classify: CTE = `name AS ( SELECT`, scalar = `expr AS name`
-    val ctes = ArrayBuffer[String]()
-    val scalars = ArrayBuffer[(String, String)]()
+    val ctes = ArrayBuffer[Vector[Tok]]()
+    val scalars = ArrayBuffer[(String, Vector[Tok])]()
     for (it <- items) {
-      val sig = it.tokens.zipWithIndex.filterNot(_._1.isInstanceOf[Ws])
+      val sig = it.zipWithIndex.filterNot(_._1.isInstanceOf[Ws])
       val isCte = sig.length >= 3 && sig.head._1.isInstanceOf[Word] &&
         isWordI(sig(1)._1, "AS") && sig(2)._1 == Punct("(")
-      if (isCte) ctes += it.tokens.map(_.text).mkString.trim
+      if (isCte) ctes += trimWs(it)
       else {
         // top-level `AS name` at the END of the item
         val asPos = sig.dropRight(1).lastIndexWhere(p => isWordI(p._1, "AS"))
         if (asPos >= 0 && asPos == sig.length - 2) {
-          (sig.last._1: @unchecked) match {
-            case Word(name) =>
-              val expr = it.tokens.take(sig(asPos)._2).map(_.text).mkString.trim
-              scalars += name -> expr
-            case _ => return sql // unsupported shape — leave untouched
+          sig.last._1 match {
+            case Word(name) => scalars += name -> trimWs(it.take(sig(asPos)._2))
+            case _ => return toks // unsupported shape — leave untouched
           }
-        } else return sql
+        } else return toks
       }
     }
-    if (scalars.isEmpty) return sql
+    if (scalars.isEmpty) return toks
     val defs = scalars.toMap
-    def resolve(t: String, d: Int): String =
+    def resolve(t: Vector[Tok], d: Int): Vector[Tok] =
       if (d > 4) t
-      else tokenize(t).map {
-        case Word(w) if defs.contains(w) => "(" + resolve(defs(w), d + 1) + ")"
-        case tok => tok.text
-      }.mkString
+      else t.flatMap {
+        case Word(w) if defs.contains(w) => Punct("(") +: resolve(defs(w), d + 1) :+ Punct(")")
+        case tok => Vector(tok)
+      }
     val resolved = defs.map { case (k, v) => k -> resolve(v, 0) }
-    val body = substIdents(toks.drop(selIdx).map(_.text).mkString, resolved)
-    (if (ctes.nonEmpty) "WITH " + ctes.mkString(", ") + " " else "") + body
-  }
-
-  /** Infix `a MOD b` → `a % b` (the function form mod(a, b) is a Spark
-    * builtin and passes through).
-    */
-  /** A FROM-less ClickHouse SELECT reads the one-row `system.one`
-    * table, so `SELECT dummy, sum(dummy) GROUP BY dummy` is valid
-    * (reference InterpreterSelectQuery: missing FROM = system.one).
-    * Spark's OneRowRelation has no `dummy` column — insert `FROM one`
-    * (the registered one-row view) into any SELECT block that
-    * references `dummy` at its own level and has no FROM.
-    */
-  private def addImplicitFromOne(sql: String): String = {
-    if (!"""(?i)\bdummy\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
-    val depthAt = depths(toks)
-    val clauseKw = Set("WHERE", "PREWHERE", "GROUP", "HAVING", "ORDER",
-      "LIMIT", "OFFSET", "SETTINGS", "UNION", "INTERSECT", "EXCEPT",
-      "FORMAT", "INTO")
-    // one insertion per transpile call is enough for the corpus shapes;
-    // recurse for multiples
-    var i = 0
-    while (i < toks.length) {
-      if (isWordI(toks(i), "SELECT")) {
-        val ds = depthAt(i)
-        var j = i + 1
-        var hasFrom = false
-        var hasDummy = false
-        var insertAt = -1 // first same-level clause keyword
-        var blockEnd = -1
-        while (blockEnd < 0 && j < toks.length) {
-          val t = toks(j)
-          if (depthAt(j) < ds || (depthAt(j) == ds && (t == Punct(";") ||
-              (t match {
-                case Word(w) => Seq("UNION", "INTERSECT", "EXCEPT")
-                  .contains(w.toUpperCase)
-                case _ => false
-              })))) blockEnd = j
-          else {
-            if (depthAt(j) == ds) t match {
-              case Word(w) if w.equalsIgnoreCase("FROM") => hasFrom = true
-              case Word(w) if clauseKw.contains(w.toUpperCase) &&
-                  insertAt < 0 => insertAt = j
-              case _ => ()
-            }
-            // a nested `( SELECT …` resolves its own dummy — skip it
-            if (t == Punct("(") && isWordI(toks(nextSig(toks, j + 1)), "SELECT")) {
-              var bal = 1
-              j += 1
-              while (bal > 0 && j < toks.length) {
-                toks(j) match {
-                  case Punct("(") => bal += 1
-                  case Punct(")") => bal -= 1
-                  case _ => ()
-                }
-                if (bal > 0) j += 1
-              }
-            } else if (!hasFrom && isWordI(t, "dummy")) hasDummy = true
-            j += 1
-          }
-        }
-        if (blockEnd < 0) blockEnd = toks.length
-        if (!hasFrom && hasDummy) {
-          val at = if (insertAt >= 0) insertAt else blockEnd
-          val pre = toks.take(at).map(_.text).mkString
-          val post = toks.drop(at).map(_.text).mkString
-          return addImplicitFromOne(pre + " FROM one " + post)
-        }
-        i = if (blockEnd > i) blockEnd else i + 1
-      } else i += 1
-    }
-    sql
+    val body = substIdents(toks.drop(selIdx), resolved)
+    (if (ctes.nonEmpty) tk"WITH ${commaList(ctes.toSeq)} " else Vector.empty) ++ body
   }
 
   /** ClickHouse's typed VALUES table function
@@ -2372,23 +2144,25 @@ object ChTranspiler {
     * computed, not fed by the tuples. The plain Spark `VALUES` form
     * (no spec string) passes through untouched.
     */
-  private def rewriteValuesTable(sql: String): String = {
-    if (!"""(?i)\bvalues\s*\(\s*'""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+  private def rewriteValuesTable(toks: Vector[Tok]): Vector[Tok] = {
+    def specAt(i: Int): Int = {
+      val op = nextSig(toks, i + 1)
+      val firstArg = nextSig(toks, op + 1)
+      if (isWordI(toks(i), "VALUES") && firstArg < toks.length &&
+        toks(op) == Punct("(") && toks(firstArg).isInstanceOf[Str]) firstArg else -1
+    }
+    if (!toks.indices.exists(i => specAt(i) >= 0 && toks(specAt(i)).text.startsWith("'")))
+      return toks
     var i = 0
     while (i < toks.length) {
-      val op = nextSig(toks, i + 1)
-      lazy val firstArg = nextSig(toks, op + 1)
-      if (isWordI(toks(i), "VALUES") && op < toks.length &&
-          toks(op) == Punct("(") && firstArg < toks.length &&
-          toks(firstArg).isInstanceOf[Str]) {
+      val firstArg = specAt(i)
+      if (firstArg >= 0) {
+        val op = nextSig(toks, i + 1)
         val j = balancedClose(toks, op) // balanced call range
         if (j >= 0) {
-          val specLit = toks(firstArg).text
-          val spec = unquote(specLit)
+          val spec = unquote(toks(firstArg).text)
           val restArgs = toks.slice(nextSig(toks, firstArg + 1), j)
-          val tuples = restArgs.map(_.text).mkString
-            .replaceAll("^\\s*,", "").trim
+          val tuples = trimWs(if (restArgs.headOption.contains(Punct(","))) restArgs.tail else restArgs)
           val defs = ChLex.splitTop(spec).map(_.trim).filter(_.nonEmpty)
           val computedRe =
             """(?is)^(`[^`]+`|\w+)\s+(?:ALIAS|MATERIALIZED|DEFAULT)\s+(.*)$""".r
@@ -2415,22 +2189,21 @@ object ChTranspiler {
             // table whose first value happens to contain whitespace
             // must stay untouched (ADVICE r11)
             if (parsedTypes.forall(_._2.isDefined)) {
+              // the column list comes from inside the spec literal
               val casts = parsedTypes.map { case (n, dt) =>
                 s"CAST($n AS ${dt.get.sql}) AS $n"
               }
               val comps = computed.map { case (n, e) => s"$e AS $n" }
-              val inner = s"(SELECT ${(casts ++ comps).mkString(", ")} " +
-                s"FROM VALUES $tuples AS __chv(${plain.map(_._1).mkString(", ")}))"
-              val pre = toks.take(i).map(_.text).mkString
-              val post = toks.drop(j + 1).map(_.text).mkString
-              return rewriteValuesTable(pre + inner + post)
+              val inner = frag(s"(SELECT ${(casts ++ comps).mkString(", ")} FROM VALUES ") ++
+                tuples ++ frag(s" AS __chv(${plain.map(_._1).mkString(", ")}))")
+              return rewriteValuesTable(toks.take(i) ++ inner ++ toks.drop(j + 1))
             }
           }
         }
       }
       i += 1
     }
-    sql
+    toks
   }
 
   /** ClickHouse `LIMIT n BY expr[, …]` (reference LimitByTransform:
@@ -2439,9 +2212,8 @@ object ChTranspiler {
     * the wrapper it emits is plain Spark SQL. An optional trailing
     * `LIMIT m` stays the final limit.
     */
-  private def rewriteLimitBy(sql: String): String = {
-    if (!"""(?i)\blimit\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+  private def rewriteLimitBy(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "LIMIT"))) return toks
     val depthAt = depths(toks)
     for (i <- toks.indices) {
       if (isWordI(toks(i), "LIMIT")) {
@@ -2451,63 +2223,37 @@ object ChTranspiler {
         val isLimitBy = nIdx < toks.length && toks(nIdx).isInstanceOf[Num] &&
           byIdx < toks.length && isWordI(toks(byIdx), "BY")
         if (isLimitBy) {
-          val n = toks(nIdx).text
           // enclosing group bounds (whole statement at depth 0)
-          var openIdx = -1
-          if (td > 0) {
-            var bal = 0
-            var k = i - 1
-            while (openIdx < 0 && k >= 0) {
-              toks(k) match {
-                case Punct(")") => bal += 1
-                case Punct("(") => if (bal > 0) bal -= 1 else openIdx = k
-                case _ => ()
-              }
-              k -= 1
-            }
-          }
+          val openIdx = if (td > 0) parents(toks)(i) else -1
           // BY items: up to the next same-level clause keyword or the
           // enclosing close paren
-          var j = byIdx + 1
-          var end = -1
-          while (end < 0 && j < toks.length) {
+          val end = (byIdx + 1 until toks.length).find { j =>
             toks(j) match {
-              case Word(w) if depthAt(j) == td && Seq("LIMIT", "UNION",
-                "SETTINGS", "FORMAT", "INTO", "OFFSET")
-                .contains(w.toUpperCase) => end = j
-              case Punct(";") if depthAt(j) == td => end = j
-              case Punct(")") if depthAt(j) < td => end = j
-              case _ => j += 1
+              case Word(w) => depthAt(j) == td && Seq("LIMIT", "UNION",
+                "SETTINGS", "FORMAT", "INTO", "OFFSET").contains(w.toUpperCase)
+              case Punct(";") => depthAt(j) == td
+              case Punct(")") => depthAt(j) < td
+              case _ => false
             }
-          }
-          if (end < 0) end = toks.length
-          val items = toks.slice(byIdx + 1, end).map(_.text).mkString.trim
-          val body = toks.slice(openIdx + 1, i).map(_.text).mkString.trim
-          val postStart = if (td > 0) { // the enclosing close paren
-            var bal = 0; var k = end
-            while (k < toks.length && (toks(k) match {
-              case Punct("(") => bal += 1; true
-              case Punct(")") => bal -= 1; bal >= 0
-              case _ => true
-            })) k += 1
-            k
-          } else toks.length
-          val tail = toks.slice(end, postStart).map(_.text).mkString.trim
-          val pre = toks.take(openIdx + 1).map(_.text).mkString
-          val post = toks.drop(postStart).map(_.text).mkString
+          }.getOrElse(toks.length)
+          val items = trimWs(toks.slice(byIdx + 1, end))
+          val body = trimWs(toks.slice(openIdx + 1, i))
+          // the enclosing close paren
+          val postStart = if (openIdx >= 0) closeOrEnd(toks, openIdx) else toks.length
+          val tail = trimWs(toks.slice(end, postStart))
           val rewritten =
-            s"SELECT * EXCEPT (__lby_rn, __lby_id) FROM (" +
-              s"SELECT *, row_number() OVER (PARTITION BY $items " +
-              s"ORDER BY __lby_id) AS __lby_rn FROM (" +
-              s"SELECT *, monotonically_increasing_id() AS __lby_id " +
-              s"FROM ($body))) " +
-              s"WHERE __lby_rn <= $n ORDER BY __lby_id" +
-              (if (tail.nonEmpty) " " + tail else "")
-          return rewriteLimitBy(pre + rewritten + post)
+            tk"SELECT * EXCEPT (__lby_rn, __lby_id) FROM (" ++
+              tk"SELECT *, row_number() OVER (PARTITION BY $items " ++
+              tk"ORDER BY __lby_id) AS __lby_rn FROM (" ++
+              tk"SELECT *, monotonically_increasing_id() AS __lby_id " ++
+              tk"FROM ($body))) " ++
+              tk"WHERE __lby_rn <= ${toks(nIdx)} ORDER BY __lby_id" ++
+              (if (tail.nonEmpty) Ws(" ") +: tail else Vector.empty)
+          return rewriteLimitBy(toks.take(openIdx + 1) ++ rewritten ++ toks.drop(postStart))
         }
       }
     }
-    sql
+    toks
   }
 
   /** Spark's expression parser reads `(SELECT 'str' …)` as the typed
@@ -2518,20 +2264,16 @@ object ChTranspiler {
     * value, type, or the subquery's row semantics (an extra paren level
     * would instead turn `IN (subquery)` into a scalar subquery).
     */
-  private def guardSelectStringHead(sql: String): String = {
-    val toks = tokenize(sql)
-    val wrapAt = scala.collection.mutable.Set[Int]()
-    for (k <- toks.indices if toks(k) == Punct("(")) {
+  private def guardSelectStringHead(toks: Vector[Tok]): Vector[Tok] = {
+    val wrapAt = toks.indices.filter(k => toks(k) == Punct("(")).flatMap { k =>
       val s = nextSig(toks, k + 1)
-      if (s < toks.length && isWordI(toks(s), "SELECT")) {
-        val lit = nextSig(toks, s + 1)
-        if (lit < toks.length && toks(lit).isInstanceOf[Str]) wrapAt += lit
-      }
-    }
-    if (wrapAt.isEmpty) sql
-    else toks.zipWithIndex.map { case (t, k) =>
-      if (wrapAt(k)) "CAST(" + t.text + " AS STRING)" else t.text
-    }.mkString
+      val lit = nextSig(toks, s + 1)
+      if (s < toks.length && isWordI(toks(s), "SELECT") && lit < toks.length &&
+        toks(lit).isInstanceOf[Str]) Some(lit) else None
+    }.toSet
+    if (wrapAt.isEmpty) toks
+    else toks.indices.flatMap(k =>
+      if (wrapAt(k)) tk"CAST(${toks(k)} AS STRING)" else Vector(toks(k))).toVector
   }
 
   /** Strip one level of SQL single-quoting (after the literal
@@ -2547,61 +2289,48 @@ object ChTranspiler {
     * allows any expression; Spark's INTERVAL literal is constant-only)
     * → `((expr) * INTERVAL '1' UNIT)`.
     */
-  private def rewriteDynamicInterval(sql: String): String = {
-    if (!"""(?i)\binterval\b""".r.findFirstIn(sql).isDefined) return sql
+  private def rewriteDynamicInterval(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "INTERVAL"))) return toks
     val units = Set("SECOND", "MINUTE", "HOUR", "DAY", "WEEK", "MONTH",
       "QUARTER", "YEAR", "SECONDS", "MINUTES", "HOURS", "DAYS", "WEEKS",
       "MONTHS", "QUARTERS", "YEARS")
-    val toks = tokenize(sql)
-    def sigs(from: Int, to: Int): Seq[Tok] =
-      toks.slice(from, to).filterNot(_.isInstanceOf[Ws])
+    val depthAt = depths(toks)
     var i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "INTERVAL")) {
-        // scan forward for the unit word at depth 0 relative to here
-        var d = 0
-        var j = i + 1
-        var unitAt = -1
-        var stop = false
-        while (unitAt < 0 && !stop && j < toks.length) {
+        // the unit word at this depth, before any clause boundary
+        val stop = (i + 1 until toks.length).find { j =>
+          val d = depthAt(j) - depthAt(i)
           toks(j) match {
-            case Punct("(") | Punct("[") => d += 1
-            case Punct(")") | Punct("]") =>
-              if (d == 0) stop = true else d -= 1
-            case Punct(",") | Punct(";") if d == 0 => stop = true
-            case Word(w) if d == 0 && units.contains(w.toUpperCase) =>
-              unitAt = j
-            case Word(w) if d == 0 && Seq("SELECT", "FROM", "WHERE",
-              "GROUP", "ORDER", "LIMIT", "AND", "OR", "AS")
-              .contains(w.toUpperCase) => stop = true
-            case _ => ()
+            case Punct(")") => d < 0
+            case Punct(",") | Punct(";") => d == 0
+            case Word(w) => d == 0 && (units.contains(w.toUpperCase) ||
+              Seq("SELECT", "FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "AND",
+                "OR", "AS").contains(w.toUpperCase))
+            case _ => false
           }
-          if (unitAt < 0 && !stop) j += 1
         }
+        val unitAt = stop.filter(j => toks(j) match {
+          case Word(w) => units.contains(w.toUpperCase)
+          case _ => false
+        }).getOrElse(-1)
         if (unitAt > 0) {
-          val exprToks = sigs(i + 1, unitAt)
+          val exprToks = sigToks(toks.slice(i + 1, unitAt))
           val literalForm = exprToks.size == 1 && (exprToks.head match {
             case _: Num | _: Str => true
-            case Punct("-") => false
             case _ => false
           })
           if (!literalForm && exprToks.nonEmpty) {
-            val exprText = toks.slice(i + 1, unitAt).map(_.text).mkString.trim
-            val unit = toks(unitAt).text.toUpperCase.stripSuffix("S") match {
-              case u @ ("SECOND" | "MINUTE" | "HOUR" | "DAY" | "WEEK" |
-                        "MONTH" | "QUARTER" | "YEAR") => u
-              case u => u
-            }
-            val pre = toks.take(i).map(_.text).mkString
-            val post = toks.drop(unitAt + 1).map(_.text).mkString
-            return rewriteDynamicInterval(
-              pre + s"(($exprText) * INTERVAL '1' $unit)" + post)
+            val unit = Word(toks(unitAt).text.toUpperCase.stripSuffix("S"))
+            return rewriteDynamicInterval(toks.take(i) ++
+              tk"((${trimWs(toks.slice(i + 1, unitAt))}) * INTERVAL '1' $unit)" ++
+              toks.drop(unitAt + 1))
           }
         }
       }
       i += 1
     }
-    sql
+    toks
   }
 
   /** `JOIN … USING a, b` (ClickHouse allows the list bare, reference
@@ -2610,9 +2339,8 @@ object ChTranspiler {
     * already-parenthesized list or anything non-identifier passes
     * through untouched.
     */
-  private def parenthesizeUsing(sql: String): String = {
-    if (!"""(?i)\busing\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+  private def parenthesizeUsing(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "USING"))) return toks
     val stop = Set("SELECT", "FROM", "WHERE", "GROUP", "ORDER", "HAVING",
       "LIMIT", "SETTINGS", "UNION", "FORMAT", "INTO", "JOIN", "INNER",
       "LEFT", "RIGHT", "FULL", "CROSS", "ANY", "ALL", "ASOF", "SEMI",
@@ -2621,11 +2349,11 @@ object ChTranspiler {
       case Word(w) => !stop.contains(w.toUpperCase)
       case _ => false
     })
-    val out = new StringBuilder
+    val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
-      out.append(t.text)
+      out += t
       i += 1
       if (isWordI(t, "USING")) {
         val first = nextSig(toks, i)
@@ -2642,14 +2370,12 @@ object ChTranspiler {
               j = nextSig(toks, c + 1) + 1
             } else cont = false
           }
-          out.append(" (")
-          out.append(names.map(toks(_).text).mkString(", "))
-          out.append(")")
+          out ++= tk" (${commaList(names.map(k => Vector(toks(k))).toSeq)})"
           i = j
         }
       }
     }
-    out.toString
+    out.result()
   }
 
   /** CH `ANY [LEFT|INNER] JOIN` (also the `LEFT ANY JOIN` spelling) —
@@ -2666,15 +2392,21 @@ object ChTranspiler {
     * identified by the relation's alias / table name). Shapes whose
     * keys cannot be identified fall back to dropping the qualifier —
     * the pre-r12 behavior, guarded by the sweep gate's goldens. */
-  private def rewriteAnyJoin(sql: String): String = {
-    if (!"""(?i)\bany\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+  private def rewriteAnyJoin(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "any"))) return toks
     def wordAt(k: Int): String = if (k >= 0 && k < toks.length) (toks(k) match {
       case Word(x) => x.toUpperCase
       case _ => ""
     }) else ""
-    def text(a: Int, b: Int): String =
-      toks.slice(a, b + 1).map(_.text).mkString
+    // the text of a `[`]name[.name][`]` operand, when `ts` is one
+    def identText(ts: Seq[Tok]): Option[String] = {
+      val t = render(ts) // at most a few tokens, matched but never lexed
+      val core = t.stripPrefix("`").stripSuffix("`")
+      if (ts.nonEmpty && !ts.exists(_.isInstanceOf[Ws]) && core.nonEmpty &&
+          core.forall(c => c < 128 && (c.isLetterOrDigit || c == '_' || c == '.')))
+        Some(t) else None
+    }
+    def keyTok(k: String): Tok = if (k.nonEmpty && k.head.isDigit) Num(k) else Word(k)
     var i = 0
     while (i < toks.length) {
       toks(i) match {
@@ -2694,10 +2426,7 @@ object ChTranspiler {
               if (wordAt(j2) == "JOIN") j2 else -1
             } else if (nw == "RIGHT" || nw == "FULL") -2
             else -1
-          def dropAny(): String = {
-            val rest = toks.patch(i, Nil, 1).map(_.text).mkString
-            rewriteAnyJoin(rest)
-          }
+          def dropAny(): Vector[Tok] = rewriteAnyJoin(toks.patch(i, Nil, 1))
           if (joinIdx == -2) return dropAny()
           else if (joinIdx < 0) { i += 1 }
           else {
@@ -2721,139 +2450,104 @@ object ChTranspiler {
               "LEFT", "RIGHT", "FULL", "CROSS", "SEMI", "ANTI", "ASOF",
               "ANY", "GLOBAL", "PREWHERE", "FORMAT")
             var aliasEnd = relEnd
-            var alias = ""
+            var alias: Option[Tok] = None
             val a0 = nextSig(toks, relEnd + 1)
             if (wordAt(a0) == "AS") {
               val a1 = nextSig(toks, a0 + 1)
               toks.lift(a1) match {
-                case Some(Word(x)) => alias = x; aliasEnd = a1
+                case Some(x: Word) => alias = Some(x); aliasEnd = a1
                 case _ => ()
               }
             } else toks.lift(a0) match {
-              case Some(Word(x)) if !stopW.contains(x.toUpperCase) =>
-                alias = x; aliasEnd = a0
+              case Some(x @ Word(w)) if !stopW.contains(w.toUpperCase) =>
+                alias = Some(x); aliasEnd = a0
               case _ => ()
             }
             val cIdx = nextSig(toks, aliasEnd + 1)
-            val relName = if (isSub) "" else (toks(relEnd) match {
-              case Word(x) => x
-              case _ => ""
-            })
-            val qualifier = if (alias.nonEmpty) alias else relName
+            val relName = if (isSub) None else toks.lift(relEnd).collect { case x: Word => x }
+            val qualifier = alias.orElse(relName).fold("")(_.text)
             // join keys
-            var keys = Seq.empty[String]
+            var keys = Seq.empty[Vector[Tok]]
             if (wordAt(cIdx) == "USING") {
               val p0 = nextSig(toks, cIdx + 1)
               if (toks.lift(p0).contains(Punct("("))) {
                 val pc = balancedClose(toks, p0)
                 if (pc > p0) {
-                  val parts = ChLex.splitTop(text(p0 + 1, pc - 1))
-                    .map(_.trim).filter(_.nonEmpty)
-                  val ident = """^`?[\w.]+`?$""".r
-                  if (parts.forall(p => ident.findFirstIn(p).isDefined))
-                    keys = parts
+                  val parts = splitTop(toks.slice(p0 + 1, pc)).map(trimWs).filter(_.nonEmpty)
+                  if (parts.forall(identText(_).isDefined)) keys = parts
                 }
               }
             } else if (wordAt(cIdx) == "ON") {
               // conjuncts of simple equalities; right-side column =
               // the side qualified by this relation's alias/name
-              var e = cIdx + 1
-              var d = 0
               val termW = Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
                 "UNION", "SETTINGS", "JOIN", "INNER", "LEFT", "RIGHT",
                 "FULL", "CROSS", "SEMI", "ANTI", "ASOF", "ANY", "GLOBAL",
                 "PREWHERE", "FORMAT")
-              var end = toks.length - 1
-              var done = false
-              while (e < toks.length && !done) {
+              val depthAt = depths(toks)
+              val end = (cIdx + 1 until toks.length).find { e =>
+                val d = depthAt(e) - depthAt(cIdx)
                 toks(e) match {
-                  case Punct("(") => d += 1
-                  case Punct(")") if d == 0 => end = e - 1; done = true
-                  case Punct(")") => d -= 1
-                  case Punct(",") | Punct(";") if d == 0 =>
-                    end = e - 1; done = true
-                  case Word(x) if d == 0 && termW.contains(x.toUpperCase) =>
-                    end = e - 1; done = true
-                  case _ => ()
+                  case Punct(")") => d < 0
+                  case Punct(",") | Punct(";") => d == 0
+                  case Word(x) => d == 0 && termW.contains(x.toUpperCase)
+                  case _ => false
                 }
-                if (!done) e += 1
-              }
-              val condTxt = text(nextSig(toks, cIdx + 1), end)
-              val eqRe = """^\s*(`?[\w.]+`?)\s*=\s*(`?[\w.]+`?)\s*$""".r
-              val conj = condTxt.split("""(?i)\bAND\b""").map(_.trim)
-              val picked = conj.map {
-                case eqRe(l, r) =>
-                  def strip(x: String) = x.replaceAll("`", "")
-                  val ls = strip(l); val rs = strip(r)
-                  if (qualifier.nonEmpty &&
-                      rs.startsWith(qualifier + "."))
-                    Some(rs.drop(qualifier.length + 1))
-                  else if (qualifier.nonEmpty &&
-                      ls.startsWith(qualifier + "."))
-                    Some(ls.drop(qualifier.length + 1))
-                  else None
-                case _ => None
+              }.getOrElse(toks.length)
+              val cond = toks.slice(nextSig(toks, cIdx + 1), end)
+              val ands = cond.indices.filter(k => isWordI(cond(k), "AND"))
+              val conj = (-1 +: ands).zip(ands :+ cond.length)
+                .map { case (a, b) => cond.slice(a + 1, b) }
+                .reverse.dropWhile(_.isEmpty).reverse
+              val picked = conj.map { c =>
+                val eq = c.indexOf(Punct("="))
+                if (eq < 0) None
+                else (identText(trimWs(c.take(eq))), identText(trimWs(c.drop(eq + 1)))) match {
+                  case (Some(l), Some(r)) =>
+                    val ls = l.replace("`", ""); val rs = r.replace("`", "")
+                    if (qualifier.nonEmpty && rs.startsWith(qualifier + "."))
+                      Some(rs.drop(qualifier.length + 1))
+                    else if (qualifier.nonEmpty && ls.startsWith(qualifier + "."))
+                      Some(ls.drop(qualifier.length + 1))
+                    else None
+                  case _ => None
+                }
               }
               if (picked.forall(_.isDefined) && picked.nonEmpty)
-                keys = picked.flatten.toSeq
+                keys = picked.flatten.map(k => Vector(keyTok(k)))
             }
-            if (keys.isEmpty || keys.exists(_.contains(".")))
+            if (keys.isEmpty || keys.exists(_.exists(_.text.contains("."))))
               return dropAny()
-            val relTxt = text(r0, relEnd)
-            val aliasOut =
-              if (alias.nonEmpty) alias
-              else if (relName.nonEmpty) relName
-              else "__graft_any_r"
-            val keysTxt = keys.mkString(", ")
+            val rel = toks.slice(r0, relEnd + 1)
+            val aliasOut = alias.orElse(relName).getOrElse(Word("__graft_any_r"))
             val newRel =
-              s"(SELECT * EXCEPT (__graft_any_rid, __graft_any_rn) FROM " +
-              s"(SELECT *, row_number() OVER (PARTITION BY $keysTxt " +
-              s"ORDER BY __graft_any_rid) AS __graft_any_rn FROM " +
-              s"(SELECT *, monotonically_increasing_id() AS " +
-              s"__graft_any_rid FROM $relTxt) __graft_any_s) __graft_any_w " +
-              s"WHERE __graft_any_rn = 1) $aliasOut"
-            val pre = toks.take(i).map(_.text).mkString
-            val mid = toks.slice(i + 1, r0).map(_.text).mkString
-            val post = toks.drop(aliasEnd + 1).map(_.text).mkString
-            return rewriteAnyJoin(pre + mid + newRel + post)
+              tk"(SELECT * EXCEPT (__graft_any_rid, __graft_any_rn) FROM " ++
+              tk"(SELECT *, row_number() OVER (PARTITION BY ${commaList(keys)} " ++
+              tk"ORDER BY __graft_any_rid) AS __graft_any_rn FROM " ++
+              tk"(SELECT *, monotonically_increasing_id() AS " ++
+              tk"__graft_any_rid FROM $rel) __graft_any_s) __graft_any_w " ++
+              tk"WHERE __graft_any_rn = 1) $aliasOut"
+            return rewriteAnyJoin(toks.take(i) ++ toks.slice(i + 1, r0) ++ newRel ++
+              toks.drop(aliasEnd + 1))
           }
         case _ => i += 1
       }
     }
-    sql
-  }
-
-  /** `remote('addr', table)` / `remoteSecure(...)` — a distribution
-    * wrapper around the named table (reference TableFunctionRemote); a
-    * single engine reads the table directly. Handles the two-argument
-    * address+table form (the corpus shape); the db-expression form
-    * `remote(addr, currentDatabase(), 't')` reduces to the table name.
-    */
-  private def rewriteRemote(sql: String): String = {
-    if (!"""(?i)\bremote(secure)?\s*\(""".r.findFirstIn(sql).isDefined)
-      return sql
-    val two =
-      """(?is)\bremote(?:Secure)?\s*\(\s*'[^']*'\s*,\s*([`\w.]+)\s*\)""".r
-    val three =
-      """(?is)\bremote(?:Secure)?\s*\(\s*'[^']*'\s*,\s*currentDatabase\s*\([^)]*\)\s*,\s*'?([`\w.]+?)'?\s*\)""".r
-    three.replaceAllIn(two.replaceAllIn(sql,
-        m => java.util.regex.Matcher.quoteReplacement(m.group(1))),
-      m => java.util.regex.Matcher.quoteReplacement(m.group(1)))
+    toks
   }
 
   /** `expr COLLATE 'locale'` → `chCollateKey(expr, 'locale')`: the sort
     * happens on the locale's collation key (reference Collator.cpp —
     * 01532/01533/01542/01543). The preceding primary is the identifier/
     * call/paren group right before COLLATE. */
-  private def rewriteCollate(sql: String): String = {
-    if (!"""(?i)\bcollate\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+  private def rewriteCollate(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "COLLATE"))) return toks
     var i = 0
     while (i < toks.length) {
       if (isWordI(toks(i), "COLLATE")) {
         val locIdx = nextSig(toks, i + 1)
         toks.lift(locIdx) match {
-          case Some(Str(loc)) =>
+          case Some(loc: Str) =>
             // walk back over the primary: ident chains a.b / calls f(…)
             var start = prevSig(toks, i - 1)
             toks.lift(start) match {
@@ -2874,19 +2568,16 @@ object ChTranspiler {
               case _ => start = -1
             }
             if (start >= 0) {
-              val pre = toks.take(start).map(_.text).mkString
               val primary = toks.slice(start, prevSig(toks, i - 1) + 1)
-                .map(_.text).mkString
-              val post = toks.drop(locIdx + 1).map(_.text).mkString
-              return rewriteCollate(
-                s"$pre chCollateKey($primary, $loc) $post")
+              return rewriteCollate(toks.take(start) ++
+                tk" chCollateKey($primary, $loc) " ++ toks.drop(locIdx + 1))
             }
           case _ => ()
         }
       }
       i += 1
     }
-    sql
+    toks
   }
 
   /** ClickHouse applies ORDER BY / LIMIT to each UNION branch
@@ -2895,34 +2586,22 @@ object ChTranspiler {
     * syntax error. Wrap every branch of a union whose region carries a
     * branch-level LIMIT/ORDER in parentheses — same semantics in both
     * readings. */
-  private def rewriteUnionBranches(sql: String): String =
-    if (!"""(?i)\bunion\b""".r.findFirstIn(sql).isDefined) sql
-    else wrapUnionBranches(sql, unionRegions(sql))
+  private def rewriteUnionBranches(toks: Vector[Tok]): Vector[Tok] =
+    if (!toks.exists(isWordI(_, "UNION"))) toks
+    else wrapUnionBranches(toks, unionRegions(toks))
 
   /** One wrap of [[rewriteUnionBranches]]: the first pending region of
-    * `regions` (`sql`'s [[unionRegions]]), then the next.
+    * `regions` (`toks`'s [[unionRegions]]), then the next.
     */
-  private def wrapUnionBranches(sql: String,
-      regions: (Vector[Tok], scala.collection.Map[Int, Vector[Int]], Seq[Int])): String = {
-    val (toks, unions, pending) = regions
+  private def wrapUnionBranches(toks: Vector[Tok],
+      regions: (scala.collection.Map[Int, Vector[Int]], Seq[Int])): Vector[Tok] = {
+    val (unions, pending) = regions
     pending.headOption match {
-      case None => sql
+      case None => toks
       case Some(r) =>
         val us = unions(r)
         val regionStart = firstBranchStart(toks, r, us)
-        val regionEnd = if (r < 0) toks.length else {
-          // matching close of r
-          var d = 0; var j = r; var e = toks.length
-          while (j < toks.length && e == toks.length) {
-            toks(j) match {
-              case Punct("(") => d += 1
-              case Punct(")") => d -= 1; if (d == 0) e = j
-              case _ => ()
-            }
-            j += 1
-          }
-          e
-        }
+        val regionEnd = if (r < 0) toks.length else closeOrEnd(toks, r)
         // branch boundaries: [regionStart, u1), [afterKw(u1), u2), …
         def afterKw(u: Int): Int = {
           val a = nextSig(toks, u + 1)
@@ -2936,32 +2615,31 @@ object ChTranspiler {
           .zip(us :+ regionEnd)
         val opens = bounds.map(_._1).toSet
         val closes = bounds.map(_._2).toSet
-        val sb = new StringBuilder
+        val out = Vector.newBuilder[Tok]
         for (k <- 0 to toks.length) {
-          if (closes.contains(k)) sb.append(" ) ")
+          if (closes.contains(k)) out ++= tk" ) "
           if (k < toks.length) {
-            if (opens.contains(k)) sb.append(" ( ")
-            sb.append(toks(k).text)
+            if (opens.contains(k)) out ++= tk" ( "
+            out += toks(k)
           }
         }
-        val wrapped = sb.toString
+        val wrapped = out.result()
         val next = unionRegions(wrapped)
         // a re-wrap that leaves as many regions to wrap made no progress
         // (an empty branch, as in `( UNION ALL …`, re-wraps forever):
         // hand the statement on unchanged for Spark's parser to reject
-        if (next._3.size < pending.size) wrapUnionBranches(wrapped, next)
-        else sql
+        if (next._2.size < pending.size) wrapUnionBranches(wrapped, next)
+        else toks
     }
   }
 
-  /** The tokens of `sql`, the UNIONs of each region (region id = index
-    * of the enclosing '(', -1 = top level) and, in the regions' map
-    * order, the regions whose branches [[rewriteUnionBranches]] still
-    * wraps in parentheses.
+  /** The UNIONs of each region of `toks` (region id = index of the
+    * enclosing '(', -1 = top level) and, in the regions' map order, the
+    * regions whose branches [[rewriteUnionBranches]] still wraps in
+    * parentheses.
     */
-  private def unionRegions(sql: String)
-      : (Vector[Tok], scala.collection.Map[Int, Vector[Int]], Seq[Int]) = {
-    val toks = tokenize(sql)
+  private def unionRegions(toks: Vector[Tok])
+      : (scala.collection.Map[Int, Vector[Int]], Seq[Int]) = {
     val parent = parents(toks)
     val unions = scala.collection.mutable.Map[Int, Vector[Int]]()
     for (k <- toks.indices) toks(k) match {
@@ -2995,7 +2673,7 @@ object ChTranspiler {
       }
       !mixed && !starts.forall(s0 => toks.lift(s0).contains(Punct("(")))
     }.toSeq
-    (toks, unions, pending)
+    (unions, pending)
   }
 
   /** Where the first branch of union region `r` (UNIONs at `us`)
@@ -3005,37 +2683,26 @@ object ChTranspiler {
     */
   private def firstBranchStart(toks: Vector[Tok], r: Int, us: Vector[Int]): Int = {
     val s0 = nextSig(toks, if (r < 0) 0 else r + 1)
-    if (toks.lift(s0).exists(isWordI(_, "WITH"))) {
-      // the branch is the first depth-0 SELECT, or a depth-0 '('
-      // not preceded by AS (CTE bodies are `name AS ( … )`; an
-      // already-wrapped branch is a bare '(' — recursion pass 2)
-      var k = s0 + 1
-      var d = 0
-      var sel = -1
-      var lastSig: Tok = Word("WITH")
-      while (k < us.head && sel < 0) {
-        toks(k) match {
-          case Punct("(") =>
-            if (d == 0 && !isWordI(lastSig, "AS")) sel = k
-            d += 1; lastSig = Punct("(")
-          case Punct(")") => d -= 1; lastSig = Punct(")")
-          case Word(w) if d == 0 && w.equalsIgnoreCase("SELECT") =>
-            sel = k
-          case _: Ws => ()
-          case t => lastSig = t
-        }
-        k += 1
-      }
-      if (sel >= 0) sel else s0
-    } else s0
+    if (!toks.lift(s0).exists(isWordI(_, "WITH"))) return s0
+    // the branch is the first depth-0 SELECT, or a depth-0 '(' not
+    // preceded by AS (CTE bodies are `name AS ( … )`; an already-wrapped
+    // branch is a bare '(' — recursion pass 2)
+    val d = depths(toks.slice(s0 + 1, us.head))
+    (s0 + 1 until us.head).find { k =>
+      d(k - s0 - 1) == 0 && (toks(k) match {
+        case Punct("(") => !isWordI(toks(prevSig(toks, k - 1)), "AS")
+        case Word(w) => w.equalsIgnoreCase("SELECT")
+        case _ => false
+      })
+    }.getOrElse(s0)
   }
 
   /** `(x) -> body` → `x -> body`: ClickHouse allows a parenthesized
     * single lambda parameter (01246/01273 use `(x) -> length(x)`);
     * Spark's grammar only parses `x ->` or `(x, y) ->`. */
-  private def rewriteParenLambda(sql: String): String = {
-    if (!sql.contains("->")) return sql
-    val toks = tokenize(sql)
+  private def rewriteParenLambda(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.indices.exists(k => toks(k) == Punct("-") &&
+        toks.lift(k + 1).contains(Punct(">")))) return toks
     var i = 0
     while (i < toks.length) {
       if (toks(i) == Punct("(")) {
@@ -3045,20 +2712,20 @@ object ChTranspiler {
         if (close > 0 && close < toks.length && toks(close) == Punct(")")) {
           val dash = nextSig(toks, close + 1)
           if (dash + 1 < toks.length && toks(dash) == Punct("-") &&
-              toks(dash + 1) == Punct(">")) {
-            val rewritten =
-              toks.take(i) ++ Vector(toks(w), Ws(" ")) ++ toks.drop(close + 1)
-            return rewriteParenLambda(rewritten.map(_.text).mkString)
-          }
+              toks(dash + 1) == Punct(">"))
+            return rewriteParenLambda(
+              join(toks.take(i), Vector(toks(w), Ws(" "))) ++ toks.drop(close + 1))
         }
       }
       i += 1
     }
-    sql
+    toks
   }
 
-  private def rewriteInfixMod(sql: String): String = {
-    val toks = tokenize(sql)
+  /** Infix `a MOD b` → `a % b` (the function form mod(a, b) is a Spark
+    * builtin and passes through).
+    */
+  private def rewriteInfixMod(toks: Vector[Tok]): Vector[Tok] =
     toks.zipWithIndex.map {
       case (Word(w), k) if w.equalsIgnoreCase("MOD") &&
           (toks.lift(prevSig(toks, k - 1)) match {
@@ -3068,10 +2735,9 @@ object ChTranspiler {
         case Some(_: Num) | Some(_: Str) => true
         case Some(Punct(")")) | Some(Punct("]")) => true
         case _ => false
-      }) => "%"
-      case (t, _) => t.text
-    }.mkString
-  }
+      }) => Punct("%")
+      case (t, _) => t
+    }
 
   private val ternaryCondBoundary: Tok => Boolean = {
     case Punct("(") | Punct("[") | Punct(",") | Punct(";") | Punct("?") |
@@ -3083,147 +2749,95 @@ object ChTranspiler {
 
   /** C-style ternary `cond ? a : b` → `if(cond, a, b)` (reference
     * ParserTernaryOperatorExpression; lowest precedence bar AS/comma,
-    * right-associative). `::` casts are never split.
+    * right-associative). `::` casts are never split. Each round
+    * rewrites the first `?`; the branches it wraps hold the rest.
     */
-  private def rewriteTernary(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 30) {
-      changed = false
-      guard += 1
-      val toks = tokenize(out)
+  private def rewriteTernary(toks0: Vector[Tok]): Vector[Tok] = {
+    def once(toks: Vector[Tok]): Option[Vector[Tok]] = {
+      val q = toks.indexOf(Punct("?"))
+      if (q < 0) return None
       def isColonAt(k: Int): Boolean = toks(k) == Punct(":") &&
         !(k + 1 < toks.length && toks(k + 1) == Punct(":")) &&
         !(k > 0 && toks(k - 1) == Punct(":"))
-      var q = -1
-      var k = 0
-      while (q < 0 && k < toks.length) {
-        if (toks(k) == Punct("?")) q = k
-        k += 1
-      }
-      if (q >= 0) {
-        // condition: walk left to a boundary at the same depth
-        var depth = 0
-        var s = q - 1
-        var condStart = -1
-        while (condStart < 0 && s >= 0) {
-          toks(s) match {
-            case Punct(")") | Punct("]") => depth += 1
-            case Punct("(") | Punct("[") if depth > 0 => depth -= 1
-            // a lambda arrow `x ->` bounds the condition: the ternary
-            // is the lambda BODY (`arrayMap(x -> c ? a : b, …)`)
-            case Punct(">") if depth == 0 && s > 0 &&
-                toks(s - 1) == Punct("-") => condStart = s + 1
-            case t if depth == 0 && ternaryCondBoundary(t) => condStart = s + 1
-            case _ => ()
-          }
-          if (condStart < 0) s -= 1
+      val depth = depths(toks)
+      val dq = depth(q)
+      // condition: walk left to a boundary at the same depth; a lambda
+      // arrow `x ->` bounds it too (the ternary is the lambda BODY,
+      // `arrayMap(x -> c ? a : b, …)`)
+      val condStart = (q - 1 to 0 by -1).find { s =>
+        toks(s) match {
+          case Punct("(") => depth(s) < dq
+          case Punct(">") if depth(s) == dq && s > 0 && toks(s - 1) == Punct("-") => true
+          case t => depth(s) == dq && ternaryCondBoundary(t)
         }
-        if (condStart < 0) condStart = 0
-        // then-branch: to the matching ':' (skip nested ?:, :: casts)
-        depth = 0
-        var pend = 0
-        var c = q + 1
-        var colon = -1
-        while (colon < 0 && c < toks.length) {
-          toks(c) match {
-            case Punct("(") | Punct("[") => depth += 1
-            case Punct(")") | Punct("]") => depth -= 1
-            case Punct("?") if depth == 0 => pend += 1
-            case Punct(":") if depth == 0 && isColonAt(c) =>
-              if (pend == 0) colon = c else pend -= 1
-            case _ => ()
-          }
-          if (colon < 0) c += 1
+      }.fold(0)(_ + 1)
+      // then-branch: to the matching ':' (skip nested ?:, :: casts)
+      var pend = 0
+      val colon = (q + 1 until toks.length).find { c =>
+        depth(c) == dq && (toks(c) match {
+          case Punct("?") => pend += 1; false
+          case Punct(":") if isColonAt(c) => if (pend == 0) true else { pend -= 1; false }
+          case _ => false
+        })
+      }.getOrElse(return None)
+      // else-branch: to a boundary at the same depth
+      val elseEnd = (colon + 1 until toks.length).find { e =>
+        toks(e) match {
+          case Punct(")") => depth(e) < dq
+          case Punct(",") | Punct(";") => depth(e) == dq
+          case w: Word => depth(e) == dq && Set("AS", "FROM", "WHERE",
+            "GROUP", "HAVING", "ORDER", "LIMIT", "UNION", "SETTINGS",
+            "THEN", "ELSE", "WHEN", "END", "FORMAT", "INTO")
+            .contains(w.text.toUpperCase)
+          case _ => false
         }
-        if (colon > 0) {
-          // else-branch: to a boundary at the same depth
-          depth = 0
-          var e = colon + 1
-          var elseEnd = -1
-          while (elseEnd < 0 && e < toks.length) {
-            toks(e) match {
-              case Punct("(") | Punct("[") => depth += 1
-              case Punct(")") | Punct("]") if depth == 0 => elseEnd = e
-              case Punct(")") | Punct("]") => depth -= 1
-              case Punct(",") | Punct(";") if depth == 0 => elseEnd = e
-              case w: Word if depth == 0 && Set("AS", "FROM", "WHERE",
-                  "GROUP", "HAVING", "ORDER", "LIMIT", "UNION", "SETTINGS",
-                  "THEN", "ELSE", "WHEN", "END", "FORMAT", "INTO")
-                  .contains(w.text.toUpperCase) => elseEnd = e
-              case _ => ()
-            }
-            if (elseEnd < 0) e += 1
-          }
-          if (elseEnd < 0) elseEnd = toks.length
-          val cond = toks.slice(condStart, q).map(_.text).mkString.trim
-          val thenB = toks.slice(q + 1, colon).map(_.text).mkString.trim
-          val elseB = toks.slice(colon + 1, elseEnd).map(_.text).mkString.trim
-          if (cond.nonEmpty && thenB.nonEmpty && elseB.nonEmpty) {
-            // leading space: condStart can sit right after a keyword
-            // whose trailing whitespace lives inside the cond slice
-            // (`SELECT number % 2 ? …` would otherwise glue to `SELECTif`)
-            out = toks.take(condStart).map(_.text).mkString +
-              s" if($cond, $thenB, $elseB)" +
-              toks.drop(elseEnd).map(_.text).mkString
-            changed = true
-          }
-        }
-      }
+      }.getOrElse(toks.length)
+      val cond = trimWs(toks.slice(condStart, q))
+      val thenB = trimWs(toks.slice(q + 1, colon))
+      val elseB = trimWs(toks.slice(colon + 1, elseEnd))
+      // leading space: condStart can sit right after a keyword whose
+      // trailing whitespace lives inside the cond slice (`SELECT
+      // number % 2 ? …` would otherwise glue to `SELECTif`)
+      if (cond.isEmpty || thenB.isEmpty || elseB.isEmpty) None
+      else Some(toks.take(condStart) ++ tk" if($cond, $thenB, $elseB)" ++ toks.drop(elseEnd))
     }
-    out
+    Iterator.iterate(Option(toks0))(_.flatMap(once))
+      .take(31).takeWhile(_.isDefined).flatten.toSeq.last
   }
 
-  /** `CAST(expr, 'Type')` with an arbitrarily nested first argument →
-    * `CAST(expr AS <mapped>)` (the postPass regex only handles simple
-    * exprs; this token pass balances parens).
+  /** `CAST(expr, 'Type')` → `CAST(expr AS <mapped>)`, the type string
+    * mapped by [[transpileTypeString]]'s rewriter, whatever the first
+    * argument; a `Decimal(p, s)` target lowers to `chDecimal(expr, p,
+    * s)`, the truncating conversion the AS form gets from
+    * rewriteCastDecimal. A cast inside the first argument is rewritten
+    * with it, so one left-to-right pass does them all.
     */
-  private def rewriteTwoArgCast(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 20) {
-      changed = false
-      guard += 1
-      val toks = tokenize(out)
-      var i = 0
-      while (i < toks.length && !changed) {
-        val p = nextSig(toks, i + 1)
-        if (isWordI(toks(i), "CAST") && p < toks.length && toks(p) == Punct("(")) {
-          // split the argument list at top level
-          var depth = 0
-          var k = p + 1
-          var comma = -1
-          var close = -1
-          while (close < 0 && k < toks.length) {
-            toks(k) match {
-              case Punct("(") | Punct("[") => depth += 1
-              case Punct(")") if depth == 0 => close = k
-              case Punct(")") | Punct("]") => depth -= 1
-              case Punct(",") if depth == 0 && comma < 0 => comma = k
-              case _ => ()
-            }
-            k += 1
-          }
-          if (close > 0 && comma > 0) {
-            val second = toks.slice(comma + 1, close).filterNot(_.isInstanceOf[Ws])
-            second match {
-              case Vector(Str(lit)) =>
-                val argText = toks.slice(p + 1, comma).map(_.text).mkString.trim
-                val mapped = transpileTypeString(lit.substring(1, lit.length - 1))
-                out = toks.take(i).map(_.text).mkString +
-                  s"CAST($argText AS $mapped)" +
-                  toks.drop(close + 1).map(_.text).mkString
-                changed = true
-              case _ => ()
-            }
-          }
-        }
-        i += 1
+  private def rewriteTwoArgCast(toks: Vector[Tok]): Vector[Tok] = {
+    val out = Vector.newBuilder[Tok]
+    var i = 0
+    while (i < toks.length) {
+      val p = nextSig(toks, i + 1)
+      val close = if (isWordI(toks(i), "CAST") && p < toks.length && toks(p) == Punct("("))
+        balancedClose(toks, p) else -1
+      (if (close < 0) Nil else splitTop(toks.slice(p + 1, close))) match {
+        case Seq(arg, second) if (sigToks(second) match {
+            case Vector(Str(lit)) => lit.length >= 2
+            case _ => false
+          }) =>
+          val lit = sigToks(second).head.text
+          val a = rewriteTwoArgCast(trimWs(arg))
+          val mapped = rewriteTypes(frag(lit.substring(1, lit.length - 1)))
+          out ++= (sigToks(mapped) match {
+            case Vector(Word(d), Punct("("), pp @ Num(ps), Punct(","), ss @ Num(sc), Punct(")"))
+                if d.equalsIgnoreCase("DECIMAL") && ps.forall(_.isDigit) && sc.forall(_.isDigit) =>
+              tk"chDecimal($a, $pp, $ss)"
+            case _ => tk"CAST($a AS $mapped)"
+          })
+          i = close + 1
+        case _ => out += toks(i); i += 1
       }
     }
-    out
+    out.result()
   }
 
   /** ClickHouse `arrayJoin(expr)` used INSIDE a larger expression (or in
@@ -3232,17 +2846,13 @@ object ChTranspiler {
     * a LATERAL VIEW (one per distinct argument text, so repeated
     * arrayJoin(x) stays a single flattening like the reference's common
     * subexpression rule — ArrayJoinAction.cpp) and substitute the
-    * exploded column. Calls inside subqueries are left for the explode
-    * mapping or a later statement-level pass over that subquery.
+    * exploded column. Applied inside every `( SELECT … )` subquery too
+    * (innermost first): `(SELECT f(arrayJoin([…])) AS x)` needs its
+    * LATERAL VIEW at the subquery level (reference arrayJoin expands
+    * rows before the enclosing expression evaluates).
     */
-  /** Apply the nested-arrayJoin hoist inside every `( SELECT … )`
-    * subquery too (innermost first): `(SELECT f(arrayJoin([…])) AS x)`
-    * needs its LATERAL VIEW at the subquery level (reference arrayJoin
-    * expands rows before the enclosing expression evaluates).
-    */
-  private def rewriteNestedArrayJoinDeep(sql: String): String = {
-    if (!"""(?i)\barrayJoin\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+  private def rewriteNestedArrayJoinDeep(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "arrayJoin"))) return toks
     var i = 0
     while (i < toks.length) {
       if (toks(i) == Punct("(") && {
@@ -3252,22 +2862,18 @@ object ChTranspiler {
       }) {
         val j = balancedClose(toks, i)
         if (j >= 0) {
-          val inner = toks.slice(i + 1, j).map(_.text).mkString
+          val inner = toks.slice(i + 1, j)
           val rewritten = rewriteNestedArrayJoin(rewriteNestedArrayJoinDeep(inner))
-          if (rewritten != inner) {
-            val pre = toks.take(i + 1).map(_.text).mkString
-            val post = toks.drop(j).map(_.text).mkString
-            return rewriteNestedArrayJoinDeep(pre + rewritten + post)
-          }
+          if (!sameText(rewritten, inner))
+            return rewriteNestedArrayJoinDeep(toks.take(i + 1) ++ rewritten ++ toks.drop(j))
         }
       }
       i += 1
     }
-    rewriteNestedArrayJoin(sql)
+    rewriteNestedArrayJoin(toks)
   }
 
-  private def rewriteNestedArrayJoin(sql: String): String = {
-    val toks = tokenize(sql)
+  private def rewriteNestedArrayJoin(toks: Vector[Tok]): Vector[Tok] = {
     // whether a token sits inside a (SELECT …) group
     val parent = parents(toks)
     def isSub(open: Int) = {
@@ -3277,43 +2883,32 @@ object ChTranspiler {
     }
     def inSubquery(k: Int) =
       Iterator.iterate(parent(k))(parent(_)).takeWhile(_ >= 0).exists(isSub)
-    // collect top-scope arrayJoin(...) calls
-    case class Call(start: Int, end: Int, argText: String) // token range incl ')'
+    // top-scope arrayJoin(...) calls: token range incl ')', argument
+    case class Call(start: Int, end: Int, arg: Vector[Tok])
     val calls = ArrayBuffer[Call]()
     var i = 0
     while (i < toks.length) {
       val p = nextSig(toks, i + 1)
       if (isWordI(toks(i), "arrayJoin") && !inSubquery(i) &&
           p < toks.length && toks(p) == Punct("(")) {
-        var depth = 0
-        var k = p + 1
-        var close = -1
-        while (close < 0 && k < toks.length) {
-          toks(k) match {
-            case Punct("(") | Punct("[") => depth += 1
-            case Punct(")") if depth == 0 => close = k
-            case Punct(")") | Punct("]") => depth -= 1
-            case _ => ()
-          }
-          k += 1
-        }
+        val close = balancedClose(toks, p)
         if (close > 0) {
-          calls += Call(i, close, toks.slice(p + 1, close).map(_.text).mkString.trim)
+          calls += Call(i, close, trimWs(toks.slice(p + 1, close)))
           i = close
         }
       }
       i += 1
     }
-    if (calls.isEmpty) return sql
+    if (calls.isEmpty) return toks
     // Leave a LONE top-level call to the plain explode mapping: a single
     // `SELECT arrayJoin(x) [AS a] FROM …` analyzes fine as a generator.
     // Hoist whenever any call is nested or there are several.
     val lone = calls.size == 1 && {
       val c = calls.head
-      val before = toks.take(c.start).filterNot(_.isInstanceOf[Ws])
+      val before = prevSig(toks, c.start - 1)
       val afterIdx = nextSig(toks, c.end + 1)
-      val beforeOk = before.lastOption.forall(t =>
-        isWordI(t, "SELECT") || isWordI(t, "DISTINCT") || t == Punct(","))
+      val beforeOk = before < 0 || isWordI(toks(before), "SELECT") ||
+        isWordI(toks(before), "DISTINCT") || toks(before) == Punct(",")
       val afterOk = afterIdx >= toks.length || (toks(afterIdx) match {
         case Word(w) => Seq("AS", "FROM").exists(w.equalsIgnoreCase) ||
           arrayJoinBoundary(w.toUpperCase)
@@ -3322,34 +2917,27 @@ object ChTranspiler {
       })
       beforeOk && afterOk
     }
-    if (lone) return sql
-    val distinctArgs = calls.map(_.argText).distinct
-    val n = sql.length
-    val varOf = distinctArgs.zipWithIndex.map { case (a, k) => a -> s"__ajg${n}_$k" }.toMap
+    if (lone) return toks
+    // one explode per distinct argument text
+    val distinctArgs = calls.map(_.arg).distinctBy(render)
+    val n = textLength(toks)
+    val varOf = distinctArgs.zipWithIndex
+      .map { case (a, k) => render(a) -> Word(s"__ajg${n}_$k") }.toMap
     // rebuild with calls replaced
-    val sb = new StringBuilder
+    val out = Vector.newBuilder[Tok]
     var idx = 0
     for (c <- calls) {
-      sb.append(toks.slice(idx, c.start).map(_.text).mkString)
-      sb.append(varOf(c.argText))
+      out ++= toks.slice(idx, c.start)
+      out += varOf(render(c.arg))
       idx = c.end + 1
     }
-    sb.append(toks.slice(idx, toks.length).map(_.text).mkString)
-    val laterals = distinctArgs.zipWithIndex.map { case (a, k) =>
-      s" LATERAL VIEW explode($a) __ajgv${n}_$k AS __ajg${n}_$k"
-    }.mkString
-    // place after the top-level FROM source (or synthesize one)
-    val toks2 = tokenize(sb.toString)
-    var depth2 = 0
-    val depthAt2 = toks2.map { t =>
-      val d = depth2
-      t match {
-        case Punct("(") => depth2 += 1
-        case Punct(")") => depth2 -= 1
-        case _ => ()
-      }
-      d
+    out ++= toks.drop(idx)
+    val toks2 = out.result()
+    val laterals = distinctArgs.zipWithIndex.flatMap { case (a, k) =>
+      tk" LATERAL VIEW explode($a) ${Word(s"__ajgv${n}_$k")} AS ${varOf(render(a))}"
     }
+    // place after the top-level FROM source (or synthesize one)
+    val depthAt2 = depths(toks2)
     val fromIdx = toks2.indices.find(k => depthAt2(k) == 0 && isWordI(toks2(k), "FROM"))
     // a clause keyword right after AS is an ALIAS (`… AS rows`), not a
     // boundary — 01700's deltaSumState(arrayJoin(…)) AS rows
@@ -3370,85 +2958,53 @@ object ChTranspiler {
       case None =>
         // skip the leading SELECT itself — the synthesized FROM goes
         // after the select list (before WHERE/GROUP/ORDER/…)
-        val first = toks2.indexWhere(!_.isInstanceOf[Ws])
-        boundaryAfter(first + 1)
+        boundaryAfter(toks2.indexWhere(!_.isInstanceOf[Ws]) + 1)
     }
-    val insertText =
-      (if (fromIdx.isEmpty) s" FROM (SELECT 1 AS __ajg_one$n)" else "") + laterals + " "
-    toks2.take(insertAt).map(_.text).mkString + insertText +
-      toks2.drop(insertAt).map(_.text).mkString
+    val from = if (fromIdx.isEmpty) tk" FROM (SELECT 1 AS ${Word(s"__ajg_one$n")})" else Vector.empty
+    toks2.take(insertAt) ++ from ++ laterals ++ Vector(Ws(" ")) ++ toks2.drop(insertAt)
   }
 
-  private val twoArgCast =
-    """(?i)(?<![A-Za-z0-9_])CAST\(([^,()']+|'[^']*'),\s*'([A-Za-z0-9(), ]+)'\)""".r
-  private val countEmpty = """(?i)\bcount\(\s*\)""".r
-
-  /** String-level cleanups after the token pass. String literals are
-    * opaque: a regex applied to the raw SQL would rewrite
-    * `'select count()'` (a LITERAL) to `'select count(*)'` — observed on
-    * the corpus's echo-style tests — so every regex here runs through
-    * [[ChLex.mapOutsideStrings]].
-    */
-  private def postPass(sql: String): String = {
-    // CAST(x, 'Type') two-arg form → CAST(x AS <mapped>); the type string
-    // goes back through the token-level type rewriter.
-    // twoArgCast's pattern itself spans a quoted type ('UInt8'), so it
-    // runs on the raw text; only count() needs literal protection
-    val decTarget = """(?i)^\s*DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)\s*$""".r
-    val c = twoArgCast.replaceAllIn(sql, m => {
-      val mapped = transpileTypeString(m.group(2))
-      java.util.regex.Matcher.quoteReplacement(mapped match {
-        // decimal targets keep CH truncation semantics (the AS-form's
-        // rewriteCastDecimal ran before this pass — route the two-arg
-        // spelling through the same chDecimal lowering)
-        case decTarget(p, s) => s"chDecimal(${m.group(1)}, $p, $s)"
-        case _ => s"CAST(${m.group(1)} AS $mapped)"
-      })
-    })
-    rewriteLimitOffset(
-      mapOutsideStrings(c)(countEmpty.replaceAllIn(_, "count(*)")))
+  /** `count()` → `count(*)`. */
+  private def rewriteCountStar(toks: Vector[Tok]): Vector[Tok] = {
+    val out = Vector.newBuilder[Tok]
+    var i = 0
+    while (i < toks.length) {
+      val close = if (isWordI(toks(i), "count") && toks.lift(i + 1).contains(Punct("(")))
+        nextSig(toks, i + 2) else -1
+      if (close > 0 && toks.lift(close).contains(Punct(")"))) {
+        out ++= tk"count(*)"; i = close + 1
+      } else { out += toks(i); i += 1 }
+    }
+    out.result()
   }
 
-  /** MySQL-style `LIMIT offset, count` → `LIMIT count OFFSET offset` —
-    * token-based so string literals stay untouched.
-    */
-  private def rewriteLimitOffset(sql: String): String = {
-    if (!sql.toUpperCase.contains("LIMIT")) return sql
-    val toks = tokenize(sql)
-    val sb = new StringBuilder
+  /** MySQL-style `LIMIT offset, count` → `LIMIT count OFFSET offset`. */
+  private def rewriteLimitOffset(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "LIMIT"))) return toks
+    val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
       val a = nextSig(toks, i + 1)
       lazy val comma = nextSig(toks, a + 1)
       lazy val b = nextSig(toks, comma + 1)
-      (toks(i), if (a < toks.length) toks(a) else Ws(""),
-        if (comma < toks.length) toks(comma) else Ws(""),
-        if (b < toks.length) toks(b) else Ws("")) match {
-        case (w: Word, Num(o), Punct(","), Num(n))
-            if isWordI(w, "LIMIT") && o.forall(_.isDigit) && n.forall(_.isDigit) =>
-          sb.append(s"LIMIT $n OFFSET $o")
+      (toks(i), toks.lift(a), toks.lift(comma), toks.lift(b)) match {
+        case (w: Word, Some(o @ Num(ot)), Some(Punct(",")), Some(n @ Num(nt)))
+            if isWordI(w, "LIMIT") && ot.forall(_.isDigit) && nt.forall(_.isDigit) =>
+          out ++= tk"LIMIT $n OFFSET $o"
           i = b + 1
-        case _ =>
-          sb.append(toks(i).text); i += 1
+        case _ => out += toks(i); i += 1
       }
     }
-    sb.toString
+    out.result()
   }
-
-  /** Map a bare CH type string (e.g. "Nullable(UInt8)") via the token
-    * rewriter used for inline type syntax.
-    */
-  private[sql] def transpileTypeString(t: String): String =
-    rewriteTypes(tokenize(t)).map(_.text).mkString
-
   /** Decode a ClickHouse string literal's escapes (notably `\xHH`,
     * which Spark's lexer does not know) and re-encode as a
     * Spark-parseable literal. The decode follows the reference's
     * parseComplexEscapeSequence (src/IO/ReadHelpers.cpp): C escapes,
     * hex pairs, and backslash-anything-else = that char.
     */
-  private def normalizeStringLiteral(lit: String): String = {
-    if (lit.length < 2) return lit
+  private def normalizeStringLiteral(lit: String): Vector[Tok] = {
+    if (lit.length < 2) return Vector(Str(lit))
     val body = lit.substring(1, lit.length - 1)
     val decoded = new StringBuilder
     var rawHighByte = false // a \xHH escape above 0x7F = raw byte, not a char
@@ -3494,8 +3050,8 @@ object ChTranspiler {
         if (ch < 0x100) Seq(ch.toByte)
         else ch.toString.getBytes("UTF-8").toSeq
       }
-      return "CAST(unhex('" +
-        bytes.map(b => f"${b & 0xff}%02X").mkString + "') AS STRING)"
+      val hex = Str("'" + bytes.map(b => f"${b & 0xff}%02X").mkString + "'")
+      return tk"CAST(unhex($hex) AS STRING)"
     }
     // Re-encode for Spark's lexer: backslash + quote escaped, control
     // chars as recognized escapes, everything else raw.
@@ -3508,8 +3064,13 @@ object ChTranspiler {
       case c if c < ' ' => f"\\u${c.toInt}%04X"
       case c => c.toString
     }
-    "'" + enc + "'"
+    Vector(Str("'" + enc + "'"))
   }
+
+  /** Map a bare CH type string (e.g. "Nullable(UInt8)") via the token
+    * rewriter used for inline type syntax.
+    */
+  private[sql] def transpileTypeString(t: String): String = render(rewriteTypes(frag(t)))
 
   private def isWordI(t: Tok, s: String): Boolean = t match {
     case Word(w) => w.equalsIgnoreCase(s); case _ => false
@@ -3526,72 +3087,58 @@ object ChTranspiler {
     * NULLS direction to every ORDER BY key that does not already state
     * one, at every nesting depth (window OVER clauses included).
     */
-  private def rewriteOrderNulls(sql: String): String = {
-    val toks = tokenize(sql)
-    val inserts = ArrayBuffer[(Int, String)]() // insert text BEFORE token idx
-    var i = 0
-    while (i < toks.length) {
+  private def rewriteOrderNulls(toks: Vector[Tok]): Vector[Tok] = {
+    lazy val depth = depths(toks)
+    val inserts = ArrayBuffer[(Int, Vector[Tok])]() // insert BEFORE token idx
+    for (i <- toks.indices) {
       val byIdx = nextSig(toks, i + 1)
       if (isWordI(toks(i), "ORDER") && byIdx < toks.length &&
           isWordI(toks(byIdx), "BY")) {
+        val base = depth(byIdx)
         var j = nextSig(toks, byIdx + 1)
         var done = j >= toks.length
         while (!done) {
-          var depth = 0
           var hasNulls = false
           var lastDesc = false
           var lastSigIdx = -1
-          var itemEnd = -1
-          var k = j
-          while (itemEnd < 0 && k < toks.length) {
+          // the item ends at a comma at this depth; the clause at a
+          // closing paren, a `;` or a clause keyword (a direction after
+          // COLLATE 'x' still belongs to the item)
+          val itemEnd = (j until toks.length).find { k =>
+            val top = depth(k) == base
             toks(k) match {
-              case Punct("(") | Punct("[") => depth += 1; lastSigIdx = k
-              case Punct(")") | Punct("]") =>
-                if (depth == 0) { itemEnd = k; done = true }
-                else { depth -= 1; lastSigIdx = k }
-              case Punct(",") if depth == 0 => itemEnd = k
-              case Punct(";") if depth == 0 => itemEnd = k; done = true
-              case Word(w) if depth == 0 && orderBoundary(w.toUpperCase) =>
-                itemEnd = k; done = true
-              case Word(w) if depth == 0 && w.equalsIgnoreCase("NULLS") =>
-                hasNulls = true; lastSigIdx = k
-              case Word(w) if depth == 0 && w.equalsIgnoreCase("COLLATE") =>
-                // direction keywords may follow COLLATE 'x'; keep scanning
-                lastSigIdx = k
-              case Word(w) if depth == 0 &&
-                  (w.equalsIgnoreCase("DESC") || w.equalsIgnoreCase("DESCENDING")) =>
-                lastDesc = true; lastSigIdx = k
-              case Word(w) if depth == 0 &&
-                  (w.equalsIgnoreCase("ASC") || w.equalsIgnoreCase("ASCENDING")) =>
-                lastDesc = false; lastSigIdx = k
-              case _: Ws => ()
-              case _ => lastSigIdx = k
+              case Punct(")") if depth(k) < base => done = true; true
+              case Punct(",") if top => true
+              case Punct(";") if top => done = true; true
+              case Word(w) if top && orderBoundary(w.toUpperCase) => done = true; true
+              case Word(w) if top && w.equalsIgnoreCase("NULLS") =>
+                hasNulls = true; lastSigIdx = k; false
+              case Word(w) if top && (w.equalsIgnoreCase("DESC") ||
+                  w.equalsIgnoreCase("DESCENDING")) =>
+                lastDesc = true; lastSigIdx = k; false
+              case Word(w) if top && (w.equalsIgnoreCase("ASC") ||
+                  w.equalsIgnoreCase("ASCENDING")) =>
+                lastDesc = false; lastSigIdx = k; false
+              case _: Ws => false
+              case _ => lastSigIdx = k; false
             }
-            if (itemEnd < 0) k += 1
-          }
-          if (itemEnd < 0) { itemEnd = toks.length; done = true }
+          }.getOrElse { done = true; toks.length }
           if (lastSigIdx >= 0 && !hasNulls)
             inserts += ((lastSigIdx + 1,
-              if (lastDesc) " NULLS FIRST" else " NULLS LAST"))
+              if (lastDesc) tk" NULLS FIRST" else tk" NULLS LAST"))
           if (!done) {
             j = nextSig(toks, itemEnd + 1) // past the comma
             if (j >= toks.length) done = true
           }
         }
       }
-      i += 1
     }
-    if (inserts.isEmpty) sql
+    if (inserts.isEmpty) toks
     else {
       val byPos = inserts.groupBy(_._1)
-      val sb = new StringBuilder
-      var idx = 0
-      while (idx <= toks.length) {
-        byPos.get(idx).foreach(_.foreach(p => sb.append(p._2)))
-        if (idx < toks.length) sb.append(toks(idx).text)
-        idx += 1
+      (0 to toks.length).foldLeft(Vector.empty[Tok]) { (out, idx) =>
+        join(byPos.get(idx).fold(out)(_.foldLeft(out)(_ ++ _._2)), toks.lift(idx).toSeq)
       }
-      sb.toString
     }
   }
 
@@ -3599,15 +3146,14 @@ object ChTranspiler {
     * SELECT list's aliases first (reference ActionsVisitor scope map:
     * `SELECT f(x) AS a … WHERE a > 0` filters on f(x), and the alias
     * SHADOWS a real column of the same name). Spark's WHERE only sees
-    * input columns — substitute the alias expression textually, scoped
-    * per SELECT block at its own paren depth. */
-  private def rewriteWhereAliases(sql: String): String = {
-    if (!"""(?i)\bas\b""".r.findFirstIn(sql).isDefined) return sql
-    val toks = tokenize(sql)
+    * input columns — substitute the alias expression, scoped per SELECT
+    * block at its own paren depth. */
+  private def rewriteWhereAliases(toks: Vector[Tok]): Vector[Tok] = {
+    if (!toks.exists(isWordI(_, "AS"))) return toks
     val depth = depths(toks)
     val clauseEnd = Set("GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
       "SETTINGS", "FORMAT", "WINDOW", "INTERSECT", "EXCEPT")
-    val replacements = scala.collection.mutable.Map[Int, String]()
+    val replacements = scala.collection.mutable.Map[Int, Vector[Tok]]()
     for (s <- toks.indices if isWordI(toks(s), "SELECT")) {
       val dS = depth(s)
       var k = s + 1
@@ -3645,82 +3191,63 @@ object ChTranspiler {
       if (whereStart >= 0 && whereEnd < 0) whereEnd = k
       if (fromIdx > s) {
         // select-list aliases at this SELECT's own depth:
-        // name -> (expr text, expr start token, AS token)
-        val aliases = scala.collection.mutable.Map[String, (String, Int, Int)]()
-        var a = s + 1
-        while (a < fromIdx) {
-          if (isWordI(toks(a), "AS") && depth(a) == dS) {
-            val nIdx = nextSig(toks, a + 1)
-            toks.lift(nIdx) match {
-              case Some(Word(name)) =>
-                var st = s + 1; var b = a - 1; var dd = 0; var brk = false
-                while (b > s && !brk) {
-                  toks(b) match {
-                    case Punct(")") | Punct("]") => dd += 1
-                    case Punct("(") | Punct("[") => dd -= 1
-                    case Punct(",") if dd == 0 => st = b + 1; brk = true
-                    case Word(w) if dd == 0 &&
-                        (w.equalsIgnoreCase("DISTINCT") ||
-                         w.equalsIgnoreCase("SELECT")) =>
-                      st = b + 1; brk = true
-                    case _ => ()
-                  }
-                  b -= 1
-                }
-                val expr = toks.slice(st, a).map(_.text).mkString.trim
-                if (expr.nonEmpty && !expr.equalsIgnoreCase(name) &&
-                    name.forall(c => c.isLetterOrDigit || c == '_') &&
-                    !aliases.contains(name))
-                  aliases(name) = (expr, st, a)
-              case _ => ()
-            }
+        // name -> (expr, expr start token, AS token)
+        val aliases = scala.collection.mutable.Map[String, (Vector[Tok], Int, Int)]()
+        for (a <- s + 1 until fromIdx if isWordI(toks(a), "AS") && depth(a) == dS) {
+          toks.lift(nextSig(toks, a + 1)) match {
+            case Some(Word(name)) =>
+              // the item starts after the last comma / DISTINCT / SELECT
+              // at this depth
+              val st = (a - 1 until s by -1).find(b => depth(b) == dS && (toks(b) match {
+                case Punct(",") => true
+                case Word(w) => w.equalsIgnoreCase("DISTINCT") || w.equalsIgnoreCase("SELECT")
+                case _ => false
+              })).fold(s + 1)(_ + 1)
+              val expr = trimWs(toks.slice(st, a))
+              if (expr.nonEmpty && !render(expr).equalsIgnoreCase(name) &&
+                  name.forall(c => c.isLetterOrDigit || c == '_') &&
+                  !aliases.contains(name))
+                aliases(name) = (expr, st, a)
+            case _ => ()
           }
-          a += 1
         }
         if (aliases.nonEmpty) {
           // alias-in-alias references resolve with a seen-set: inside
           // its own expansion a name refers to the SOURCE column
           // (`CAST(x AS BIGINT) AS x` must not recurse)
-          def resolve(t: String, seen: Set[String]): String =
-            tokenize(t).map {
-              case Word(w) if aliases.contains(w) && !seen.contains(w) =>
-                "(" + resolve(aliases(w)._1, seen + w) + ")"
-              case tok => tok.text
-            }.mkString
+          def resolve(t: Vector[Tok], seen: Set[String]): Vector[Tok] = t.flatMap {
+            case Word(w) if aliases.contains(w) && !seen.contains(w) =>
+              Punct("(") +: resolve(aliases(w)._1, seen + w) :+ Punct(")")
+            case tok => Vector(tok)
+          }
           // substitute in the WHERE range, and FORWARD references in
           // the select list itself (`SELECT a = b, x AS a, y AS b` —
           // Spark's lateral column alias only resolves backward)
-          def substRange(from: Int, until: Int, fwdOnly: Boolean): Unit = {
-            var w = from
-            while (w < until) {
-              toks(w) match {
-                case Word(x) if aliases.contains(x) &&
-                    !replacements.contains(w) &&
-                    // inside x's own definition the name is the source
-                    // column, never the alias
-                    !(w >= aliases(x)._2 && w <= aliases(x)._3) &&
-                    (!fwdOnly || aliases(x)._3 > w) =>
-                  val pv = toks.lift(prevSig(toks, w - 1))
-                  val nx = toks.lift(nextSig(toks, w + 1))
-                  val qualified = pv.contains(Punct(".")) ||
-                    nx.contains(Punct("."))
-                  val isCall = nx.contains(Punct("("))
-                  val isDef = pv.exists(isWordI(_, "AS"))
-                  if (!qualified && !isCall && !isDef)
-                    replacements(w) = "(" + resolve(aliases(x)._1, Set(x)) + ")"
-                case _ => ()
-              }
-              w += 1
+          def substRange(from: Int, until: Int, fwdOnly: Boolean): Unit =
+            for (w <- from until until) toks(w) match {
+              case Word(x) if aliases.contains(x) &&
+                  !replacements.contains(w) &&
+                  // inside x's own definition the name is the source
+                  // column, never the alias
+                  !(w >= aliases(x)._2 && w <= aliases(x)._3) &&
+                  (!fwdOnly || aliases(x)._3 > w) =>
+                val pv = toks.lift(prevSig(toks, w - 1))
+                val nx = toks.lift(nextSig(toks, w + 1))
+                val qualified = pv.contains(Punct(".")) ||
+                  nx.contains(Punct("."))
+                val isCall = nx.contains(Punct("("))
+                val isDef = pv.exists(isWordI(_, "AS"))
+                if (!qualified && !isCall && !isDef)
+                  replacements(w) = Punct("(") +: resolve(aliases(x)._1, Set(x)) :+ Punct(")")
+              case _ => ()
             }
-          }
           if (whereStart >= 0) substRange(whereStart, whereEnd, fwdOnly = false)
           substRange(s + 1, fromIdx, fwdOnly = true)
         }
       }
     }
-    if (replacements.isEmpty) sql
-    else toks.indices.map(k => replacements.getOrElse(k, toks(k).text))
-      .mkString
+    if (replacements.isEmpty) toks
+    else toks.indices.flatMap(k => replacements.getOrElse(k, Vector(toks(k)))).toVector
   }
 
   /** ClickHouse lets `expr AS name` appear ANYWHERE inside an
@@ -3728,54 +3255,40 @@ object ChTranspiler {
     * (reference ParserAlias / ActionsVisitor scope map). Spark only
     * accepts AS at select-list top level, so: strip each inline alias
     * (one nested in parens that are not a subquery and not a CAST) and
-    * substitute its expression text for later bare references.
+    * substitute its expression for later bare references.
     */
-  private def rewriteInlineAliases(sql: String): String = {
-    val toks = tokenize(sql)
+  private def rewriteInlineAliases(toks: Vector[Tok]): Vector[Tok] = {
     val parent = parents(toks)
-    // paren kind: true = expression parens (eligible), false = subquery/CAST
-    val eligible = scala.collection.mutable.Map[Int, Boolean]()
-    for (k <- toks.indices if toks(k) == Punct("(")) {
+    lazy val depth = depths(toks)
+    // expression parens (eligible): not a subquery and not a CAST
+    def eligible(k: Int): Boolean = {
       val prev = prevSig(toks, k - 1)
-      val prevIsCast = prev >= 0 && isWordI(toks(prev), "CAST")
       val first = nextSig(toks, k + 1)
-      val isSubquery = first < toks.length &&
-        (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH"))
-      eligible(k) = !prevIsCast && !isSubquery
+      !(prev >= 0 && isWordI(toks(prev), "CAST")) &&
+        !(first < toks.length &&
+          (isWordI(toks(first), "SELECT") || isWordI(toks(first), "WITH")))
     }
-    // collect inline aliases: Word(AS) whose enclosing paren is eligible
-    case class Inline(name: String, exprText: String, asIdx: Int, nameIdx: Int,
-      exprStart: Int)
-    val found = ArrayBuffer[Inline]()
-    for (k <- toks.indices) {
-      if (isWordI(toks(k), "AS") && parent(k) >= 0 &&
-          eligible.getOrElse(parent(k), false)) {
+    // inline aliases: Word(AS) whose enclosing paren is eligible
+    case class Inline(name: String, asIdx: Int, nameIdx: Int, exprStart: Int)
+    val found = toks.indices.flatMap { k =>
+      if (isWordI(toks(k), "AS") && parent(k) >= 0 && eligible(parent(k))) {
         val nIdx = nextSig(toks, k + 1)
         toks.lift(nIdx) match {
           case Some(Word(name)) =>
             // expr = tokens since the last same-depth comma (or the paren
             // open) up to the AS
-            var s = k - 1
-            var depth = 0
-            var start = parent(k) + 1
-            var found0 = false
-            while (s > parent(k) && !found0) {
-              toks(s) match {
-                case Punct(")") | Punct("]") => depth += 1
-                case Punct("(") | Punct("[") => depth -= 1
-                case Punct(",") if depth == 0 => start = s + 1; found0 = true
-                case _ => ()
-              }
-              s -= 1
-            }
-            val exprText = toks.slice(start, k).map(_.text).mkString.trim
-            if (exprText.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'))
-              found += Inline(name, exprText, k, nIdx, start)
-          case _ => ()
+            val start = (k - 1 until parent(k) by -1)
+              .find(s => depth(s) == depth(k) && toks(s) == Punct(","))
+              .fold(parent(k) + 1)(_ + 1)
+            if (trimWs(toks.slice(start, k)).nonEmpty &&
+                name.forall(c => c.isLetterOrDigit || c == '_'))
+              Some(Inline(name, k, nIdx, start))
+            else None
+          case _ => None
         }
-      }
+      } else None
     }
-    if (found.isEmpty) return sql
+    if (found.isEmpty) return toks
     // drop the whitespace run BEFORE the AS too — `g('x' AS a)` strips
     // to `g('x')`, not `g('x' )`
     val dropIdx = found.flatMap { f =>
@@ -3785,23 +3298,20 @@ object ChTranspiler {
     }.toSet
     // an alias expr may CONTAIN other inline aliases (00396:
     // `toFixedString(unhex('…' AS hex) AS bytes, 16)`): substitute the
-    // STRIPPED text, not the raw span — the nested `AS name` would be
-    // invalid Spark in expression position
+    // STRIPPED expression, not the raw span — the nested `AS name` would
+    // be invalid Spark in expression position
     val defs = found.map(f => f.name ->
-      toks.slice(f.exprStart, f.asIdx).zipWithIndex.collect {
-        case (t, off) if !dropIdx.contains(f.exprStart + off) => t.text
-      }.mkString.trim).toMap
+      trimWs((f.exprStart until f.asIdx).filterNot(dropIdx).map(toks))).toMap
     // resolve alias-in-alias references (bounded)
-    def resolve(t: String, depth: Int): String =
-      if (depth > 4) t
-      else tokenize(t).map {
-        case Word(w) if defs.contains(w) => "(" + resolve(defs(w), depth + 1) + ")"
-        case tok => tok.text
-      }.mkString
+    def resolve(t: Vector[Tok], d: Int): Vector[Tok] =
+      if (d > 4) t
+      else t.flatMap {
+        case Word(w) if defs.contains(w) => Punct("(") +: resolve(defs(w), d + 1) :+ Punct(")")
+        case tok => Vector(tok)
+      }
     val defSites = found.flatMap(f => f.exprStart until f.asIdx).toSet
-    val sb = new StringBuilder
-    for (k <- toks.indices) {
-      if (dropIdx(k)) ()
+    toks.indices.flatMap { k =>
+      if (dropIdx(k)) Vector.empty
       else toks(k) match {
         case Word(w) if defs.contains(w) && !defSites(k) && {
             val nxt = nextSig(toks, k + 1)
@@ -3811,11 +3321,10 @@ object ChTranspiler {
             val prevIsDot = prv >= 0 && toks(prv) == Punct(".")
             val prevIsAs = prv >= 0 && isWordI(toks(prv), "AS")
             !nextIsParenOrDot && !prevIsDot && !prevIsAs } =>
-          sb.append("(").append(resolve(defs(w), 0)).append(")")
-        case t => sb.append(t.text)
+          Punct("(") +: resolve(defs(w), 0) :+ Punct(")")
+        case t => Vector(t)
       }
-    }
-    sb.toString
+    }.toVector
   }
 
   /** ClickHouse tuple literals `(a, b)` → Spark `struct(a, b)` (struct
@@ -3823,9 +3332,7 @@ object ChTranspiler {
     * A paren group is a tuple when it holds a top-level comma and is
     * neither a call-argument list nor a subquery nor an IN list.
     */
-  private def rewriteTupleLiterals(sql: String): String = {
-    val toks = tokenize(sql)
-    val prefix = ArrayBuffer[(Int, String)]() // "(" indexes to prefix with struct
+  private def rewriteTupleLiterals(toks: Vector[Tok]): Vector[Tok] = {
     var stack = List[(Int, Boolean)]() // (openIdx, sawTopComma)
     val tupleAt = scala.collection.mutable.Set[Int]()
     // paren depths currently inside a VALUES row sequence: every
@@ -3902,41 +3409,20 @@ object ChTranspiler {
         case _ => ()
       }
     }
-    if (tupleAt.isEmpty) return sql
-    val sb = new StringBuilder
-    for (k <- toks.indices) {
-      if (tupleAt(k)) sb.append("struct(")
-      else sb.append(toks(k).text)
-    }
-    sb.toString
+    if (tupleAt.isEmpty) toks
+    else toks.indices.foldLeft(Vector.empty[Tok])((out, k) =>
+      if (tupleAt(k)) join(out, tk"struct(") else out :+ toks(k))
   }
 
   /** CH `x IN [a, b]` (array literal list) and `x IN tuple(…)` →
     * standard paren lists. Runs after the array-literal pass, so the
     * forms here are `IN array(…)` / `IN tuple(…)`.
     */
-  private def rewriteInClauses(sql: String): String = {
-    val toks = tokenize(sql)
+  private def rewriteInClauses(toks: Vector[Tok]): Vector[Tok] = {
     val dropWord = scala.collection.mutable.Set[Int]()
     // `x IN <literal>` (scalar right side = equality in CH,
     // FunctionsComparison in-with-scalar) needs Spark's parens
     val parenAt = scala.collection.mutable.Set[Int]()
-    for (k <- toks.indices) {
-      if (isWordI(toks(k), "IN")) {
-        val f = nextSig(toks, k + 1)
-        if (f < toks.length && (toks(f) match {
-          case Word(w) => (w == "array" || w == "tuple") && {
-            val p = nextSig(toks, f + 1)
-            p < toks.length && toks(p) == Punct("(")
-          }
-          case _ => false
-        })) dropWord += f
-        else if (f < toks.length && (toks(f) match {
-          case _: Str | _: Num => true
-          case _ => false
-        })) parenAt += f
-      }
-    }
     // CH ignores NULL items in an IN list — they can never match
     // (reference Set build skips nulls; 01629's `NOT IN ('…', NULL)` is
     // 1, not SQL's three-valued NULL). Drop bare NULL items from
@@ -3944,64 +3430,48 @@ object ChTranspiler {
     // becomes an empty subquery, which never matches (01457's
     // `IN (NULL)` is 0).
     val dropRange = scala.collection.mutable.Set[Int]()
-    val overrideTok = scala.collection.mutable.Map[Int, String]()
-    for (k <- toks.indices) {
-      if (isWordI(toks(k), "IN")) {
-        val f = nextSig(toks, k + 1)
-        if (f < toks.length && toks(f) == Punct("(") && {
-          val h = nextSig(toks, f + 1)
-          h < toks.length && !isWordI(toks(h), "SELECT") &&
-            !isWordI(toks(h), "WITH")
-        }) {
-          val pendingDrop = scala.collection.mutable.Set[Int]()
-          var items = 0
-          var nullItems = 0
-          var depth = 1
-          var itemStart = f + 1
-          var itemSig = List.empty[Int]
-          var j = f + 1
-          var closeAt = -1
-          def flushItem(endEx: Int, commaAt: Int): Unit = {
-            items += 1
-            if (itemSig.size == 1 && isWordI(toks(itemSig.head), "NULL")) {
-              nullItems += 1
-              (itemStart until endEx).foreach(pendingDrop += _)
-              if (commaAt >= 0) pendingDrop += commaAt
-            }
+    val emptyList = scala.collection.mutable.Set[Int]()
+    for (k <- toks.indices if isWordI(toks(k), "IN")) {
+      val f = nextSig(toks, k + 1)
+      if (f < toks.length) toks(f) match {
+        case Word(w) if (w == "array" || w == "tuple") &&
+            toks.lift(nextSig(toks, f + 1)).contains(Punct("(")) => dropWord += f
+        case _: Str | _: Num => parenAt += f
+        case Punct("(") if {
+            val h = nextSig(toks, f + 1)
+            h < toks.length && !isWordI(toks(h), "SELECT") && !isWordI(toks(h), "WITH")
+          } =>
+          // the items: [start, end) between the commas directly inside
+          val close = balancedClose(toks, f)
+          val end = if (close < 0) toks.length else close
+          val commas = inside(toks, f, end).filter(toks(_) == Punct(","))
+          val items = (f +: commas).zip(commas ++ (if (close < 0) Nil else Seq(close)))
+          val isNull = items.map { case (a, b) =>
+            (toks.slice(a + 1, b).filter(t => !t.isInstanceOf[Ws] && t != Punct(")")) match {
+              case Vector(n) => isWordI(n, "NULL")
+              case _ => false
+            })
           }
-          var prevComma = -1
-          while (j < toks.length && depth > 0) {
-            toks(j) match {
-              case Punct("(") => depth += 1; itemSig ::= j
-              case Punct(")") =>
-                depth -= 1
-                if (depth == 0) { flushItem(j, prevComma); closeAt = j }
-              case Punct(",") if depth == 1 =>
-                flushItem(j, if (itemSig.size == 1 &&
-                  isWordI(toks(itemSig.head), "NULL")) j else -1)
-                prevComma = j
-                itemStart = j + 1
-                itemSig = Nil
-              case t if !t.isInstanceOf[Ws] => itemSig ::= j
-              case _ => ()
-            }
-            j += 1
+          if (close > 0 && isNull.nonEmpty && isNull.forall(identity)) {
+            emptyList += f
+            dropRange ++= (f + 1 until close)
+          } else items.zip(isNull).foreach { case ((a, b), nul) =>
+            // a NULL item goes with the comma after it, the last one
+            // with the comma before it
+            if (nul) dropRange ++= (a + 1 until b) ++
+              (if (b < end) Seq(b) else if (a > f) Seq(a) else Nil)
           }
-          if (nullItems > 0 && nullItems == items && closeAt > 0) {
-            overrideTok(f) = "(SELECT NULL WHERE FALSE"
-            dropRange ++= (f + 1 until closeAt)
-          } else dropRange ++= pendingDrop
-        }
+        case _ => ()
       }
     }
     if (dropWord.isEmpty && parenAt.isEmpty && dropRange.isEmpty &&
-        overrideTok.isEmpty) return sql
-    toks.zipWithIndex.map { case (t, k) =>
-      if (overrideTok.contains(k)) overrideTok(k)
-      else if (dropWord(k) || dropRange(k)) ""
-      else if (parenAt(k)) "(" + t.text + ")"
-      else t.text
-    }.mkString
+        emptyList.isEmpty) return toks
+    toks.indices.flatMap { k =>
+      if (emptyList(k)) tk"(SELECT NULL WHERE FALSE"
+      else if (dropWord(k) || dropRange(k)) Vector.empty
+      else if (parenAt(k)) Vector(Punct("("), toks(k), Punct(")"))
+      else Vector(toks(k))
+    }.toVector
   }
 
   private val arrayJoinBoundary = Set("WHERE", "GROUP", "HAVING", "ORDER",
@@ -4009,22 +3479,28 @@ object ChTranspiler {
     "INTO", "PREWHERE", "LEFT", "RIGHT", "INNER", "FULL", "CROSS", "JOIN",
     "ASOF", "ANY", "GLOBAL", "SEMI", "ANTI", "WINDOW")
 
-  /** One parsed `ARRAY JOIN` item: expression text plus optional alias. */
-  private case class AjItem(expr: String, alias: Option[String])
-
-  /** Rewrite ClickHouse `[LEFT] ARRAY JOIN expr [AS alias], …`
-    * (reference src/Interpreters/ArrayJoinAction.cpp semantics) onto
-    * Spark `LATERAL VIEW explode[_outer]`:
-    *  - `expr AS a`            → LATERAL VIEW explode(expr) v AS a
-    *  - bare column `arr`      → the element REPLACES the array column
-    *    (CH semantics), so the source is wrapped to rename the array
-    *    away and the lateral column takes its name;
-    *  - multiple items zip positionally (NOT a cross product) → one
-    *    explode over an index sequence with per-item element_at, alias
-    *    references rewritten to struct fields.
-    * Statements with shapes outside these (Nested `n.x` columns without
-    * aliases, unaligned arrays) pass through untouched and fail loudly.
+  /** The items of the ARRAY JOIN clause whose JOIN is at `jIdx`: the
+    * comma-separated token runs after it, up to a closing paren, a `;`
+    * or a clause keyword at its depth, and the index where it ends.
     */
+  private def arrayJoinItems(toks: Vector[Tok], depth: Array[Int], jIdx: Int)
+      : (Seq[Vector[Tok]], Int) = {
+    val base = depth(jIdx)
+    val end = (jIdx + 1 until toks.length).find { j =>
+      toks(j) match {
+        case Punct(")") => depth(j) < base
+        case Punct(";") => depth(j) == base
+        case Word(w) => depth(j) == base && arrayJoinBoundary(w.toUpperCase)
+        case _ => false
+      }
+    }.getOrElse(toks.length)
+    val commas = (jIdx + 1 until end).filter(j => depth(j) == base && toks(j) == Punct(","))
+    ((jIdx +: commas).zip(commas :+ end).map { case (a, b) => toks.slice(a + 1, b) }, end)
+  }
+
+  /** One parsed `ARRAY JOIN` item: expression plus optional alias. */
+  private case class AjItem(expr: Vector[Tok], alias: Option[Tok])
+
   /** Flattened-Nested column support (reference NestedUtils.cpp): a
     * `CREATE TABLE … (nest Nested(x T, y U))` stores parallel arrays
     * named `nest.x`/`nest.y` (ChSession.expandColDef registers the group
@@ -4040,65 +3516,44 @@ object ChTranspiler {
   private[graft] def registerNestedGroup(outer: String, subs: Seq[String]): Unit =
     nestedGroups(outer) = subs
 
-  private def rewriteNestedCols(sql: String): String = {
+  private def rewriteNestedCols(toks0: Vector[Tok]): Vector[Tok] = {
     if (nestedGroups.isEmpty ||
-        !nestedGroups.keys.exists(g => sql.contains(g))) return sql
-    var toks = tokenize(sql)
+        !toks0.exists(t => nestedGroups.keys.exists(g => t.text.contains(g)))) return toks0
     // ---- (a) ARRAY JOIN bare-group expansion -------------------------
     val aliasMap = scala.collection.mutable.Map[String, String]()
-    val sb = new StringBuilder
+    lazy val depth = depths(toks0)
+    val a = Vector.newBuilder[Tok]
     var i = 0
-    while (i < toks.length) {
-      val jIdx = nextSig(toks, i + 1)
-      if (isWordI(toks(i), "ARRAY") && jIdx < toks.length &&
-          isWordI(toks(jIdx), "JOIN")) {
-        sb.append(toks.slice(i, jIdx + 1).map(_.text).mkString)
-        var j = jIdx + 1
-        // per comma-separated item at depth 0, until a boundary keyword
-        var depth = 0
-        var item = Vector.newBuilder[Tok]
-        def flush(): Unit = {
-          val ts = item.result()
-          item = Vector.newBuilder[Tok]
-          val sig = ts.filterNot(_.isInstanceOf[Ws])
-          val expanded = sig match {
+    while (i < toks0.length) {
+      val jIdx = nextSig(toks0, i + 1)
+      if (isWordI(toks0(i), "ARRAY") && jIdx < toks0.length &&
+          isWordI(toks0(jIdx), "JOIN")) {
+        a ++= toks0.slice(i, jIdx + 1)
+        val (items, end) = arrayJoinItems(toks0, depth, jIdx)
+        val expanded = items.map { ts =>
+          sigToks(ts) match {
             case Vector(Word(g)) if nestedGroups.contains(g) =>
-              Some(nestedGroups(g).map(s => s"`$g.$s`").mkString(" ", ", ", ""))
-            case Vector(Word(g), as, Word(a))
+              Ws(" ") +: commaList(nestedGroups(g).map(s => Vector(Word(s"`$g.$s`"))))
+            case Vector(Word(g), as, al @ Word(n))
                 if isWordI(as, "AS") && nestedGroups.contains(g) =>
-              aliasMap(a) = g
-              Some(nestedGroups(g)
-                .map(s => s"`$g.$s` AS `$a.$s`").mkString(" ", ", ", ""))
-            case _ => None
+              aliasMap(n) = g
+              Ws(" ") +: commaList(nestedGroups(g).map(s =>
+                tk"${Word(s"`$g.$s`")} AS ${Word(s"`$n.$s`")}"))
+            case _ => ts
           }
-          sb.append(expanded.getOrElse(ts.map(_.text).mkString))
         }
-        var stop = false
-        while (j < toks.length && !stop) {
-          toks(j) match {
-            case Punct("(") => depth += 1; item += toks(j)
-            case Punct(")") if depth == 0 => stop = true
-            case Punct(")") => depth -= 1; item += toks(j)
-            case Punct(",") if depth == 0 => flush(); sb.append(",")
-            case Punct(";") if depth == 0 => stop = true
-            case Word(w) if depth == 0 &&
-                arrayJoinBoundary(w.toUpperCase) => stop = true
-            case t => item += t
-          }
-          if (!stop) j += 1
-        }
-        flush()
-        i = j
+        a ++= expanded.reduce((l, r) => (l :+ Punct(",")) ++ r)
+        i = end
       } else {
-        sb.append(toks(i).text)
+        a += toks0(i)
         i += 1
       }
     }
     // ---- (b) dotted-reference backticking ----------------------------
-    toks = tokenize(sb.toString)
+    val toks = a.result()
     def subsOf(p: String): Option[Seq[String]] =
       nestedGroups.get(p).orElse(aliasMap.get(p).flatMap(nestedGroups.get))
-    val out = new StringBuilder
+    val out = Vector.newBuilder[Tok]
     i = 0
     while (i < toks.length) {
       toks(i) match {
@@ -4111,32 +3566,33 @@ object ChTranspiler {
               case _ => false
             })
         } =>
-          val Word(s) = toks(i + 2): @unchecked
-          out.append(s"`$p.$s`")
+          out += Word(s"`$p.${toks(i + 2).text}`")
           i += 3
-        case t => out.append(t.text); i += 1
+        case t => out += t; i += 1
       }
     }
-    out.toString
+    out.result()
   }
 
-  private def rewriteArrayJoin(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 8) {
-      changed = false
-      guard += 1
-      rewriteOneArrayJoin(out) match {
-        case Some(next) => out = next; changed = true
-        case None => ()
-      }
-    }
-    out
-  }
+  /** Rewrite ClickHouse `[LEFT] ARRAY JOIN expr [AS alias], …`
+    * (reference src/Interpreters/ArrayJoinAction.cpp semantics) onto
+    * Spark `LATERAL VIEW explode[_outer]`:
+    *  - `expr AS a`            → LATERAL VIEW explode(expr) v AS a
+    *  - bare column `arr`      → the element REPLACES the array column
+    *    (CH semantics), so the source is wrapped to rename the array
+    *    away and the lateral column takes its name;
+    *  - multiple items zip positionally (NOT a cross product) → one
+    *    explode over an index sequence with per-item element_at, alias
+    *    references rewritten to struct fields.
+    * Statements with shapes outside these (Nested `n.x` columns without
+    * aliases, unaligned arrays) pass through untouched and fail loudly.
+    * Each round rewrites the first clause.
+    */
+  private def rewriteArrayJoin(toks: Vector[Tok]): Vector[Tok] =
+    Iterator.iterate(Option(toks))(_.flatMap(rewriteOneArrayJoin))
+      .take(9).takeWhile(_.isDefined).flatten.toSeq.last
 
-  private def rewriteOneArrayJoin(sql: String): Option[String] = {
-    val toks = tokenize(sql)
+  private def rewriteOneArrayJoin(toks: Vector[Tok]): Option[Vector[Tok]] = {
     // depth of every token, for locating the owning FROM
     val depthAt = depths(toks)
     var i = 0
@@ -4149,40 +3605,18 @@ object ChTranspiler {
         val startIdx = if (leftOuter) pIdx else i
         val myDepth = depthAt(i)
         // ---- parse items ----
-        val items = ArrayBuffer[AjItem]()
-        var j = nextSig(toks, jIdx + 1)
-        var endIdx = -1
-        var cur = ArrayBuffer[Tok]()
-        var depth = 0
-        var bad = false
-        while (endIdx < 0 && j < toks.length) {
-          toks(j) match {
-            case Punct("(") => depth += 1; cur += toks(j)
-            case Punct(")") if depth == 0 => endIdx = j
-            case Punct(")") => depth -= 1; cur += toks(j)
-            case Punct(",") if depth == 0 =>
-              parseAjItem(cur.toVector).fold { bad = true } { items += _ }
-              cur = ArrayBuffer[Tok]()
-            case Punct(";") if depth == 0 => endIdx = j
-            case Word(w) if depth == 0 && arrayJoinBoundary(w.toUpperCase) =>
-              endIdx = j
-            case t => cur += t
-          }
-          if (endIdx < 0) j += 1
-        }
-        if (endIdx < 0) endIdx = toks.length
-        parseAjItem(cur.toVector).fold { bad = true } { items += _ }
-        if (bad || items.isEmpty) return None
-        val fn = if (leftOuter) "explode_outer" else "explode"
+        val (itemToks, endIdx) = arrayJoinItems(toks, depthAt, jIdx)
+        val items = itemToks.map(t => parseAjItem(t).getOrElse(return None))
+        val fn = Word(if (leftOuter) "explode_outer" else "explode")
         // CH LEFT ARRAY JOIN pads an EMPTY array with one element of
         // the array's element-type DEFAULT (ArrayJoinAction.cpp with
         // array_join_is_left — 0/''/NULL-for-Nullable), not SQL NULL:
         // pad first, then plain explode (single-item forms only; the
         // positional-zip form pads per element via try_element_at)
-        def fnOf(arg: String): String =
-          if (leftOuter) s"explode(chLeftArrayPad($arg))"
-          else s"explode($arg)"
-        val n = sql.length // cheap unique suffix within the statement
+        def fnOf(arg: Seq[Tok]): Vector[Tok] =
+          if (leftOuter) tk"explode(chLeftArrayPad($arg))" else tk"explode($arg)"
+        val n = textLength(toks) // cheap unique suffix within the statement
+        def id(prefix: String) = Word(s"$prefix$n")
         // locate this level's FROM (last FROM token before ARRAY at myDepth)
         val fromIdx = (0 until startIdx).reverse
           .find(k => depthAt(k) == myDepth && isWordI(toks(k), "FROM"))
@@ -4191,102 +3625,98 @@ object ChTranspiler {
         // but CH's `*` never includes ARRAY JOIN aliases (nor our
         // internal columns) — rewrite this level's `SELECT *` to
         // `* EXCEPT (…)` when the clause generates hidden names.
-        var overrides = Map[Int, String]()
-        def hideFromStar(hidden: Seq[String]): Unit = if (hidden.nonEmpty) {
-          val limit = {
-            val f = (0 until startIdx).reverse.find(k =>
-              depthAt(k) == myDepth && isWordI(toks(k), "FROM"))
-            f.getOrElse(startIdx)
-          }
-          (0 until limit).reverse
+        var overrides = Map[Int, Vector[Tok]]()
+        def hideFromStar(hidden: Tok): Unit =
+          (0 until (if (fromIdx < 0) startIdx else fromIdx)).reverse
             .find(k => depthAt(k) == myDepth && isWordI(toks(k), "SELECT"))
             .foreach { si =>
               var j = nextSig(toks, si + 1)
               if (j < toks.length && isWordI(toks(j), "DISTINCT"))
                 j = nextSig(toks, j + 1)
               if (j < toks.length && toks(j) == Punct("*"))
-                overrides += j -> s"* EXCEPT (${hidden.mkString(", ")})"
+                overrides += j -> tk"* EXCEPT ($hidden)"
             }
+        def slice(a: Int, b: Int): Vector[Tok] =
+          (a until b).flatMap(k => overrides.getOrElse(k, Vector(toks(k)))).toVector
+        def isBareIdent(e: Vector[Tok]): Boolean = e match {
+          case Vector(t) => val id = t.text
+            id.forall(c => c.isLetterOrDigit || c == '_') ||
+              (id.length > 2 && id.head == '`' && id.last == '`' &&
+                !id.drop(1).dropRight(1).contains('`'))
+          case _ => false
         }
-        def text(a: Int, b: Int): String =
-          (a until b).map(k => overrides.getOrElse(k, toks(k).text)).mkString
-        def isBareIdent(id: String): Boolean =
-          id.forall(c => c.isLetterOrDigit || c == '_') ||
-            (id.length > 2 && id.head == '`' && id.last == '`' &&
-              !id.drop(1).dropRight(1).contains('`'))
-        val (replacement, replaceFrom) = items.toSeq match {
+        val (replacement, replaceFrom) = items match {
           case Seq(AjItem(expr, aliasOpt))
-              if aliasOpt.isEmpty || aliasOpt.contains(expr.trim) =>
+              if aliasOpt.forall(al => sameText(Seq(al), expr)) =>
             // bare column (or self-aliased): element replaces the array
-            val id = expr.trim
-            if (!isBareIdent(id) || fromIdx < 0)
+            if (!isBareIdent(expr) || fromIdx < 0)
               return None
-            hideFromStar(Seq(s"__aj_in$n"))
-            val src = text(nextSig(toks, fromIdx + 1), startIdx)
-            if (id.head == '`') {
+            val arr = expr.head
+            val (in, v) = (id("__aj_in"), id("__aj_v"))
+            hideFromStar(in)
+            val src = slice(nextSig(toks, fromIdx + 1), startIdx)
+            if (arr.text.head == '`') {
               // LATERAL VIEW column aliases keep backticks literally —
               // alias clean and rewrite the references instead
               // (flattened-Nested `nest.x` columns)
-              val clean = s"__aj_c$n"
-              val repl = s" FROM (SELECT * EXCEPT ($id), $id AS __aj_in$n " +
-                s"FROM $src) LATERAL VIEW ${fnOf(s"__aj_in$n")} " +
-                s"__aj_v$n AS $clean "
-              val mapped = Map(id -> clean)
-              return Some(substIdents(text(0, fromIdx), mapped) + repl +
-                substIdents(text(endIdx, toks.length), mapped))
+              val clean = id("__aj_c")
+              val repl = tk" FROM (SELECT * EXCEPT ($arr), $arr AS $in " ++
+                tk"FROM $src) LATERAL VIEW ${fnOf(Seq(in))} $v AS $clean "
+              val mapped = Map(arr.text -> Vector(clean))
+              return Some(substIdents(slice(0, fromIdx), mapped) ++ repl ++
+                substIdents(slice(endIdx, toks.length), mapped))
             }
-            (s" FROM (SELECT * EXCEPT ($id), $id AS __aj_in$n FROM $src) " +
-              s"LATERAL VIEW ${fnOf(s"__aj_in$n")} __aj_v$n AS $id ", fromIdx)
+            (tk" FROM (SELECT * EXCEPT ($arr), $arr AS $in FROM $src) " ++
+              tk"LATERAL VIEW ${fnOf(Seq(in))} $v AS $arr ", fromIdx)
           case Seq(AjItem(expr, Some(alias))) =>
-            hideFromStar(Seq(alias))
+            hideFromStar(alias)
+            val v = id("__aj_v")
             if (fromIdx < 0)
-              (s" FROM (SELECT 1 AS __aj_one$n) " +
-                s"LATERAL VIEW ${fnOf(expr)} __aj_v$n AS $alias ", startIdx)
+              (tk" FROM (SELECT 1 AS ${id("__aj_one")}) " ++
+                tk"LATERAL VIEW ${fnOf(expr)} $v AS $alias ", startIdx)
             else
-              (s" LATERAL VIEW ${fnOf(expr)} __aj_v$n AS $alias ", startIdx)
+              (tk" LATERAL VIEW ${fnOf(expr)} $v AS $alias ", startIdx)
           case multi0 if multi0.forall(_.alias.isDefined) ||
               multi0.forall(it => it.alias.isEmpty && isBareIdent(it.expr)) =>
             // all-aliased, or all-bare (flattened Nested subcolumns —
             // each element replaces its own array column, so the bare
             // name doubles as the alias for downstream references)
             val multi = multi0.map(it =>
-              if (it.alias.isDefined) it else it.copy(alias = Some(it.expr)))
+              if (it.alias.isDefined) it else it.copy(alias = Some(it.expr.head)))
             // positional zip: explode an index range, pull each element.
             // LEFT keeps the all-empty row and pads each slot with the
             // ELEMENT-TYPE default, not NULL (ArrayJoinAction.cpp
             // insertDefault — same contract as the single-item form's
             // chLeftArrayPad).
-            def src(e: String): String =
-              if (leftOuter) s"chLeftArrayPad($e)" else e
-            val fields = multi.zipWithIndex.map { case (it, k) =>
-              s"'c$k', try_element_at(${src(it.expr)}, CAST(__aj_i$n AS INT))"
-            }.mkString(", ")
+            def src(e: Vector[Tok]): Vector[Tok] =
+              if (leftOuter) tk"chLeftArrayPad($e)" else e
+            val (ai, s) = (id("__aj_i"), id("__aj_s"))
+            val fields = commaList(multi.zipWithIndex.map { case (it, k) =>
+              tk"${Str(s"'c$k'")}, try_element_at(${src(it.expr)}, CAST($ai AS INT))"
+            })
             // Guard the empty-array case: Spark's sequence(1, 0) DESCENDS
             // to [1,0] (it never yields an empty range), so build one
             // padded element and slice it away; try_element_at keeps the
             // padding row null-safe under ANSI.
-            val sz = s"size(${src(multi.head.expr)})"
-            val keepMin = if (leftOuter) 1 else 0
-            val zip = s"slice(transform(sequence(1, greatest($sz, 1)), " +
-              s"__aj_i$n -> named_struct($fields)), 1, greatest($sz, $keepMin))"
-            val lateral =
-              s" LATERAL VIEW $fn($zip) __aj_v$n AS __aj_s$n "
+            val sz = tk"size(${src(multi.head.expr)})"
+            val keepMin = Num(if (leftOuter) "1" else "0")
+            val zip = tk"slice(transform(sequence(1, greatest($sz, 1)), " ++
+              tk"$ai -> named_struct($fields)), 1, greatest($sz, $keepMin))"
+            val lateral = tk" LATERAL VIEW $fn($zip) ${id("__aj_v")} AS $s "
             val base =
-              if (fromIdx < 0) s" FROM (SELECT 1 AS __aj_one$n)" + lateral
+              if (fromIdx < 0) tk" FROM (SELECT 1 AS ${id("__aj_one")})" ++ lateral
               else lateral
             // rewrite alias references outside the clause to struct fields
             val aliasMap = multi.zipWithIndex.map { case (it, k) =>
-              it.alias.get -> s"__aj_s$n.c$k"
+              it.alias.get.text -> tk"$s.${Word(s"c$k")}"
             }.toMap
-            hideFromStar(Seq(s"__aj_s$n"))
-            val pre = substIdents(text(0, startIdx), aliasMap)
-            val post = substIdents(text(endIdx, toks.length), aliasMap)
-            return Some(pre + base + post)
+            hideFromStar(s)
+            val pre = substIdents(slice(0, startIdx), aliasMap)
+            val post = substIdents(slice(endIdx, toks.length), aliasMap)
+            return Some(pre ++ base ++ post)
           case _ => return None
         }
-        val pre = text(0, replaceFrom)
-        val post = text(endIdx, toks.length)
-        return Some(pre + replacement + post)
+        return Some(slice(0, replaceFrom) ++ replacement ++ slice(endIdx, toks.length))
       }
       i += 1
     }
@@ -4299,36 +3729,33 @@ object ChTranspiler {
     if (sig.isEmpty) return None
     val asPos = sig.dropRight(1).lastIndexWhere(p => isWordI(p._1, "AS"))
     if (asPos >= 0 && asPos == sig.length - 2) {
-      val aliasTok = sig.last._1
-      aliasTok match {
-        case Word(a) =>
-          val exprText = ts.take(sig(asPos)._2).map(_.text).mkString.trim
-          if (exprText.isEmpty) None else Some(AjItem(exprText, Some(a)))
+      sig.last._1 match {
+        case a: Word =>
+          val expr = trimWs(ts.take(sig(asPos)._2))
+          if (expr.isEmpty) None else Some(AjItem(expr, Some(a)))
         case _ => None
       }
-    } else Some(AjItem(ts.map(_.text).mkString.trim, None))
+    } else Some(AjItem(trimWs(ts), None))
   }
 
   /** Replace bare identifier tokens per `map` (skipping qualified refs
     * `x.y` on either side of the dot and string literals).
     */
-  private def substIdents(sql: String, map: Map[String, String]): String = {
-    val toks = tokenize(sql)
-    toks.zipWithIndex.map {
-      case (Word(w), idx) if map.contains(w) &&
-          !toks.lift(prevSig(toks, idx - 1)).contains(Punct(".")) &&
-          !toks.lift(nextSig(toks, idx + 1)).contains(Punct(".")) => map(w)
-      case (t, _) => t.text
-    }.mkString
-  }
+  private def substIdents(toks: Vector[Tok], map: Map[String, Vector[Tok]]): Vector[Tok] =
+    toks.indices.flatMap { idx =>
+      toks(idx) match {
+        case Word(w) if map.contains(w) &&
+            !toks.lift(prevSig(toks, idx - 1)).contains(Punct(".")) &&
+            !toks.lift(nextSig(toks, idx + 1)).contains(Punct(".")) => map(w)
+        case t => Vector(t)
+      }
+    }.toVector
 
-  /** Index in `s` where the trailing primary expression starts: an
+  /** Index in `ts` where the trailing primary expression starts: an
     * identifier, a string/number literal, or a balanced (...) / array(...)
     * call chain (a matched paren group plus the dotted name before it).
     */
-  private def primaryStart(s: String): Int = {
-    val ts = tokenize(s)
-    val off = offsets(ts)
+  private def primaryStart(ts: collection.Seq[Tok]): Int = {
     def dotted(t: Tok) = t match {
       case Word(w) => !w.startsWith("`") && !w.startsWith("\"")
       case Num(_) | Punct(".") => true
@@ -4337,7 +3764,7 @@ object ChTranspiler {
     def nameStart(end: Int) = {
       var k = end
       while (k >= 0 && dotted(ts(k))) k -= 1
-      off(k + 1)
+      k + 1
     }
     val last = prevSig(ts, ts.length - 1)
     if (last < 0) return 0
@@ -4345,9 +3772,9 @@ object ChTranspiler {
       case Punct(")") =>
         val open = balancedOpen(ts, last)
         if (open < 0) 0 else nameStart(open - 1)
-      case Str(_) | Word(_) if !dotted(ts(last)) => off(last)
+      case Str(_) | Word(_) if !dotted(ts(last)) => last
       case t if dotted(t) && t != Punct(".") => nameStart(last)
-      case _ => off(last + 1)
+      case _ => last + 1
     }
   }
 }

@@ -111,8 +111,9 @@ class ChTranspilerSpec extends AnyFunSuite {
   }
 
   test("two-arg CAST balances nested parens; Enum/FixedString → STRING") {
+    // a Decimal target truncates like the AS form, whatever the argument
     assert(t("select cast(materialize(2.0),'Decimal(9,3)')")
-      == "select CAST(materialize(2.0D) AS Decimal(9,3))")
+      == "select chDecimal(materialize(2.0D), 9, 3)")
     // Enum casts keep the member map (chEnum resolves values OR names
     // to the member name at analysis time)
     assert(t("SELECT CAST('a' AS Enum8('a' = 1, 'b' = 2))")
@@ -445,13 +446,30 @@ class ChTranspilerSpec extends AnyFunSuite {
       .map(p => p.getFileName.toString -> Files.readString(p)).toMap
   }
 
+  private val defName = """\bdef (\w+)""".r
+
+  /** The def whose block holds line i: the def on that line, else the
+    * nearest one above whose indentation no closing brace has met since.
+    */
+  private def owner(lines: Seq[String], i: Int): String =
+    defName.findFirstMatchIn(lines(i)).map(_.group(1)).getOrElse {
+      val closed = scala.collection.mutable.Set[Int]()
+      (i - 1 to 0 by -1).iterator.map(lines(_)).flatMap { l =>
+        val indent = l.takeWhile(_ == ' ').length
+        if (l.trim.startsWith("}")) { closed += indent; None }
+        else defName.findFirstMatchIn(l)
+          .filter(_ => (l.trim.endsWith("{") || l.trim.endsWith("=")) && !closed(indent))
+          .map(_.group(1))
+      }.nextOption().getOrElse("")
+    }
+
   test("ChLex holds the one copy of each lexical helper") {
     def defs(name: String) = dialectSources.toSeq.flatMap { case (f, src) =>
       Seq.fill(s"\\bdef $name\\(".r.findAllIn(src).size)(f) }
     val lexHelpers = Seq("tokenize", "stripComments", "nextSig", "prevSig",
       "matchClose", "balancedClose", "balancedOpen", "depths", "parents",
       "splitTop", "matchParen", "splitTuples", "topLevelEq", "maskStrings",
-      "normalizeSpace", "mapOutsideStrings")
+      "normalizeSpace", "runsInto")
     val misplaced = lexHelpers.map(n => n -> defs(n)).filter(_._2.distinct != Seq("ChLex.scala"))
     assert(misplaced.isEmpty, s"lexical helpers defined outside ChLex: $misplaced")
     assert(defs("tokenize").size == 1, "one tokenizer")
@@ -466,6 +484,99 @@ class ChTranspilerSpec extends AnyFunSuite {
     val walks = dialectSources.toSeq.flatMap { case (f, src) =>
       walk.findAllMatchIn(src).map(m => s"$f@${m.start}") }
     assert(walks.isEmpty, s"bracket-depth walks outside ChLex: $walks")
+    // a depth counter stepped on a bracket: `case Punct("(") => d += 1`,
+    // `if (t == Punct("(")) depth += 1`, `case '(' => … += 1`
+    val step = """(Punct\("[()\[\]{}]"\)|'[()\[\]{}]'|"[()\[\]{}]").*\b\w+ [+-]= 1\b""".r
+    val stepAllowed = Set(
+      "ClickHouseAliases.scala" -> "tsQueryToPredicate") // the tsquery grammar
+    val steps = for {
+      (f, src) <- dialectSources.toSeq if f != "ChLex.scala"
+      lines = src.split("\n").toSeq
+      (line, i) <- lines.zipWithIndex if step.findFirstIn(line).isDefined
+      if !stepAllowed(f -> owner(lines, i))
+    } yield s"$f:${i + 1} in ${owner(lines, i)}"
+    assert(steps.isEmpty, s"depth counters stepped by hand outside ChLex: $steps")
+  }
+
+  test("transpile lexes once: passes splice tokens and lex only constants") {
+    val lines = dialectSources("ChTranspiler.scala").split("\n").toSeq
+    // the statement is lexed at the public entry points; a pass lexes
+    // only constant SQL or a literal's text, through `frag`
+    val entryPoints = Set("transpile", "frag", "fixUsingAlias", "disambiguate",
+      "inlineSelectAliases", "splitJoinTotals", "splitTotals", "stripWithFill")
+    val lexers = lines.indices.filter(i => lines(i).contains("tokenize("))
+      .map(i => owner(lines, i)).filterNot(entryPoints)
+    assert(lexers.isEmpty, s"tokenize outside the entry points: $lexers")
+    val relexed = lines.filter(l => """\bfrag\([^)"]*render\(""".r.findFirstIn(l).isDefined)
+    assert(relexed.isEmpty, s"rendered tokens lexed again: $relexed")
+    // no regex over statement text inside a pass; the named ones read
+    // one literal's text (a datetime, the VALUES column spec)
+    val regex = """\.r\b|replaceAll\(|\.matches\(|\.split\("|findFirstIn|replaceAllIn""".r
+    val regexAllowed = Set("rewriteTimeType", "rewriteValuesTable")
+    val passNames = ChTranspiler.passes.map(_.name).toSet
+    val body = scala.collection.mutable.Map[String, Seq[String]]()
+    var cur = ""
+    for (l <- lines) {
+      defName.findFirstMatchIn(l).filter(_ => l.startsWith("  private def") || l.startsWith("  def"))
+        .foreach(m => cur = m.group(1))
+      if (l.startsWith("  private val") || l.startsWith("  /**")) cur = ""
+      body(cur) = body.getOrElse(cur, Nil) :+ l
+    }
+    val regexPasses = passNames.toSeq.filterNot(regexAllowed)
+      .filter(n => body.getOrElse(n, Nil).exists(regex.findFirstIn(_).isDefined))
+    assert(passNames.forall(body.contains), passNames.filterNot(body.contains))
+    assert(regexPasses.isEmpty, s"passes applying a regex to statement text: $regexPasses")
+  }
+
+  /** `ts` with each run of adjacent whitespace tokens merged into one. */
+  private def mergeWs(ts: Vector[ChLex.Tok]): Vector[ChLex.Tok] =
+    ts.foldLeft(Vector.empty[ChLex.Tok]) {
+      case (acc :+ ChLex.Ws(a), ChLex.Ws(b)) => acc :+ ChLex.Ws(a + b)
+      case (acc, t) => acc :+ t
+    }
+
+  test("every pass hands on tokens that lex back to themselves") {
+    // the next pass reading a pass's tokens equals it reading their
+    // rendered text only when that text lexes back to the same tokens
+    // (adjacent whitespace merged). An unclosed quote swallows whatever
+    // a pass appends after it, so every input keeps its quotes closed.
+    def closed(ts: Vector[ChLex.Tok]) = ts.forall(t =>
+      !"'\"`".contains(t.text.head) || ChLex.tokenize(t.text + " x").head == t)
+    def check(in: String, dialect: String): String = bounded(20)(withDialect(dialect) {
+      val toks = ChLex.tokenize(ChLex.stripComments(in))
+      if (!closed(toks)) "" else ChTranspiler.passes.flatMap { p =>
+        try {
+          val out = p.run(toks)
+          if (mergeWs(out) == ChLex.tokenize(ChLex.render(out))) None
+          else Some(s"${p.name}: ${ChLex.render(out).take(200)}")
+        } catch { case NonFatal(_) => None }
+      }.mkString("; ")
+    })
+    val dir = new File(getClass.getResource("/transpile").toURI)
+    val goldens = dir.listFiles.filter(_.getName.endsWith(".sql")).toSeq
+      .flatMap { f => val in = read(f); in +: in.linesIterator.toSeq }
+    val goldenFails = for {
+      in <- goldens; d <- Seq("CLICKHOUSE", "MYSQL")
+      res = check(in, d) if res.nonEmpty
+    } yield s"$d ${in.take(80)}: $res"
+    assert(goldenFails.isEmpty, goldenFails.mkString("\n"))
+    val fragment = Gen.oneOf(
+      "SELECT", "FROM", "WHERE", "GROUP BY", "ORDER BY", "LIMIT 2 BY a", "UNION ALL",
+      "WITH", "TOTALS", "FILL", "JOIN", "USING", "ARRAY JOIN", "ANY", "AS", "IN",
+      "SETTINGS", "CAST", "arrayJoin", "if", "count()", "t", "a", "x", "nest.x",
+      "(", ")", "[", "]", "{", "}", ",", ";", "'s'", "`b,c`", "\"d(e\"", "--",
+      "#", "/*", "*/", "\n", "1", "1.5e-3", ".5", "t.1", "0x1F", "$v", "->", "<=",
+      "::", "?", ":", "=", "-", "*", "^", "\u3000", "(x) -> x", "inf", "dummy",
+      "CAST(x, 'Decimal(10, 3)')", "remote('a', t)", "x::Time", "INTERVAL x DAY",
+      "position('a' IN 'b')", "OVER (ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW)")
+    val soup = Gen.listOf(Gen.zip(fragment, Gen.oneOf("", " ", "\n")))
+      .map(_.map { case (f, sep) => f + sep }.mkString)
+    val prop = Prop.forAll(soup, Gen.oneOf("CLICKHOUSE", "MYSQL")) { (in, dialect) =>
+      val res = check(in, dialect)
+      Prop(res.isEmpty) :| s"$dialect ${in.take(200)}: $res"
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("no character scanner for quotes or brackets outside ChLex") {
@@ -473,18 +584,6 @@ class ChTranspilerSpec extends AnyFunSuite {
     // within a dozen lines is a scanner, unless it works inside one
     // literal or on another language (named below)
     val quoteOrBracket = """'\\''|'"'|'`'|'[()\[\]{}]'""".r
-    val defName = """\bdef (\w+)""".r
-    // the def whose block holds line i: the nearest one above whose
-    // indentation no closing brace has met since
-    def owner(lines: Seq[String], i: Int): String = {
-      val closed = scala.collection.mutable.Set[Int]()
-      (i - 1 to 0 by -1).iterator.map(lines(_)).flatMap { l =>
-        val indent = l.takeWhile(_ == ' ').length
-        if (l.trim.startsWith("}")) { closed += indent; None }
-        else defName.findFirstMatchIn(l)
-          .filter(_ => l.trim.endsWith("{") && !closed(indent)).map(_.group(1))
-      }.nextOption().getOrElse("")
-    }
     val allowed = Set(
       "ChTranspiler.scala" -> "normalizeStringLiteral", // a literal's escapes
       "ChSyntaxFormat.scala" -> "canonStr",             // a literal's escapes
