@@ -45,18 +45,30 @@ private[graft] object ChLex {
   private def isIdentPart(c: Char): Boolean =
     c.isLetterOrDigit || c == '_' || c == '$'
 
-  /** End (exclusive) of the quoted token opening at `i`. */
-  private def quoteEnd(s: String, i: Int): Int = {
+  /** Index of the quote closing the quoted token opening at `i`, or -1
+    * when it runs to the end of `s` unclosed.
+    */
+  private def closingQuote(s: String, i: Int): Int = {
     val q = s.charAt(i)
     var j = i + 1
     while (j < s.length) {
       val c = s.charAt(j)
       if (c == '\\' && q != '`' && j + 1 < s.length) j += 2
-      else if (c == q) return j + 1
+      else if (c == q) return j
       else j += 1
     }
-    s.length
+    -1
   }
+
+  /** End (exclusive) of the quoted token opening at `i`. */
+  private def quoteEnd(s: String, i: Int): Int = {
+    val c = closingQuote(s, i)
+    if (c < 0) s.length else c + 1
+  }
+
+  /** True when the quoted token `q` ends with its own closing quote. */
+  def quoteClosed(q: String): Boolean =
+    q.nonEmpty && isQuote(q.head) && closingQuote(q, 0) == q.length - 1
 
   /** End (exclusive) of the comment starting at `i`, or -1 when none
     * does; a line comment ends before its newline.
@@ -175,7 +187,7 @@ private[graft] object ChLex {
     */
   def maskStrings(s: String): String = tokenize(s).map {
     case Str(t) =>
-      val closed = t.length >= 2 && quoteEnd(t + " ", 0) == t.length
+      val closed = quoteClosed(t)
       t.head + "_" * (t.length - (if (closed) 2 else 1)) + (if (closed) t.last.toString else "")
     case t => t.text
   }.mkString
@@ -279,10 +291,19 @@ private[graft] object ChLex {
     parent
   }
 
-  /** True when some `)` closes no `(`. */
-  def hasStrayClose(ts: Seq[Tok]): Boolean = {
-    val depth = depths(ts)
-    ts.indices.exists(k => depth(k) < 0 && ts(k) == Punct(")"))
+  /** True when `(…)`, `[…]` and `{…}` nest: every closer closes an
+    * opener of its own kind, and every opener closes.
+    */
+  def bracketsBalance(ts: Seq[Tok]): Boolean = {
+    var open = List.empty[Int]
+    val it = ts.iterator
+    while (it.hasNext) it.next() match {
+      case Punct(p) if "([{".contains(p) => open = "([{".indexOf(p) :: open
+      case Punct(p) if ")]}".contains(p) =>
+        if (open.headOption.contains(")]}".indexOf(p))) open = open.tail else return false
+      case _ =>
+    }
+    open.isEmpty
   }
 
   /** True when the parens of `s` balance. */

@@ -200,8 +200,8 @@ object ChTranspiler {
     Pass("mergePrewhere", mergePrewhere),
     Pass("mainLoop", mainLoop))
 
-  /** The rewrites after the main loop, on a statement whose parens
-    * close nothing they do not open.
+  /** The rewrites after the main loop, on a statement whose brackets
+    * balance ([[ChLex.bracketsBalance]]).
     */
   private[graft] val postPasses: Seq[Pass] = Seq(
     Pass("rewriteValuesTable", rewriteValuesTable),
@@ -248,9 +248,10 @@ object ChTranspiler {
     val lexed = tokenize(stripComments(stmt))
     val main = prePasses.foldLeft(if (widenInts) widenIntLiterals(lexed) else lexed)(
       (ts, p) => p.run(ts))
-    // a `)` that closes nothing: no pass below can make sense of the
-    // statement, so Spark's parser gets it as written and reports it
-    if (hasStrayClose(main)) return stmt
+    // a closer that closes nothing of its kind or an opener that never
+    // closes: no pass below can make sense of the statement (a `{`
+    // becomes `map(`), so Spark's parser gets it as written and reports it
+    if (!bracketsBalance(main)) return stmt
     val out = postPasses.foldLeft(main)((ts, p) => p.run(ts))
     // Late-bound combinator chains (sumForEachIf, quantilesTimingState…):
     // register composed builders for any not-yet-registered aggregate
@@ -2239,7 +2240,7 @@ object ChTranspiler {
           val items = trimWs(toks.slice(byIdx + 1, end))
           val body = trimWs(toks.slice(openIdx + 1, i))
           // the enclosing close paren
-          val postStart = if (openIdx >= 0) closeOrEnd(toks, openIdx) else toks.length
+          val postStart = if (openIdx >= 0) balancedClose(toks, openIdx) else toks.length
           val tail = trimWs(toks.slice(end, postStart))
           val rewritten =
             tk"SELECT * EXCEPT (__lby_rn, __lby_id) FROM (" ++
@@ -2601,7 +2602,7 @@ object ChTranspiler {
       case Some(r) =>
         val us = unions(r)
         val regionStart = firstBranchStart(toks, r, us)
-        val regionEnd = if (r < 0) toks.length else closeOrEnd(toks, r)
+        val regionEnd = if (r < 0) toks.length else balancedClose(toks, r)
         // branch boundaries: [regionStart, u1), [afterKw(u1), u2), …
         def afterKw(u: Int): Int = {
           val a = nextSig(toks, u + 1)
@@ -3004,7 +3005,8 @@ object ChTranspiler {
     * hex pairs, and backslash-anything-else = that char.
     */
   private def normalizeStringLiteral(lit: String): Vector[Tok] = {
-    if (lit.length < 2) return Vector(Str(lit))
+    // an unclosed literal passes as written, for Spark to report
+    if (!quoteClosed(lit)) return Vector(Str(lit))
     val body = lit.substring(1, lit.length - 1)
     val decoded = new StringBuilder
     var rawHighByte = false // a \xHH escape above 0x7F = raw byte, not a char

@@ -5,9 +5,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev-only profiler over the bench's own session and rep model: each
-  * query is planned once, warmed twice, then timed for N reps with
-  * [[Bench.rep]] (cache drop, shuffle reset, full consume of the prepared
-  * plan), so a number here is the number Bench would record.
+  * query is planned once, then warmed and timed for N reps by
+  * [[Bench.warmThenRep]] (cache drop, shuffle reset, full consume of the
+  * prepared plan), so a number here is the number Bench would record.
   *
   * Modes:
   *  - `time` (default): plan ms, then ms and rows per rep, then min/median;
@@ -69,12 +69,12 @@ object Prof {
       df.queryExecution.executedPlan
       println(f"[prof] $name plan=${(System.nanoTime() - t0) / 1e6}%.1f ms")
       if (mode == "plan") println(df.queryExecution.explainString(FormattedMode))
-      (1 to 2).foreach { _ => spark.catalog.clearCache(); Bench.consume(df) }
-      val times = (1 to reps).map { i =>
+      var i = 0
+      val times = Bench.warmThenRep(df, reps, { d =>
         stages.clear()
         record = true
-        val (secs, rows) = Bench.rep(df)
-        record = false
+        val (secs, rows) = try Bench.rep(d) finally record = false
+        i += 1
         println(f"[prof] $name rep $i: ${secs * 1e3}%.1f ms rows=$rows")
         stages.toSeq.sortBy(_._1).foreach { case (id, s) =>
           println(f"[prof]   stage $id%4d tasks=${s.tasks}%4d wall=${s.wallMs}%5d ms " +
@@ -82,9 +82,9 @@ object Prof {
             f"in=${s.inBytes / 1024}%8d KB sr=${s.srBytes / 1024}%7d KB " +
             f"sw=${s.swBytes / 1024}%7d KB  ${s.name}")
         }
-        secs
-      }.sorted
-      println(f"[prof] $name min=${times.head * 1e3}%.1f ms med=${times(times.length / 2) * 1e3}%.1f ms")
+        (secs, rows)
+      }).map(_._1).sorted
+      println(f"[prof] $name min=${times.head * 1e3}%.1f ms med=${Bench.median(times) * 1e3}%.1f ms")
       if (mode == "plan") {
         val finalPlan = df.queryExecution.executedPlan.toString
         val reused = finalPlan.linesIterator

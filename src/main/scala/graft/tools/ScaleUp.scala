@@ -1,8 +1,9 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Dev-only: deterministically scale an existing SF directory by K× for
   * SCALING MEASUREMENTS (8-core vs 32-core ratios). sf0.1's per-query
@@ -22,6 +23,10 @@ import org.apache.spark.sql.functions._
   *    "_cK" suffix), keeping copy vocabularies disjoint: near-dup pairs
   *    replicate per copy instead of exploding quadratically across
   *    copies (exact duplicates would pair with every other copy);
+  *  - embeddings' first dimension moves by K·1e-4 per copy, so no copy
+  *    holds an exact duplicate of another copy's vector: LSH/IVF bucket
+  *    sizes stay ∝ corpus instead of ×K identical collisions, and every
+  *    within-copy neighbourhood is undisturbed;
   *  - copy 0 is byte-identical to the source, so probe filters
   *    (vec_id < 10, centroid seeds < 16) keep their original rows and
   *    the probe side stays fixed-size while the corpus grows.
@@ -42,6 +47,7 @@ object ScaleUp {
     Seq("supplier" -> "s_suppkey", "lineitem" -> "l_suppkey"),
     Seq("part" -> "p_partkey", "lineitem" -> "l_partkey"),
     Seq("events" -> "user_id"),
+    Seq("events" -> "event_id"),
     Seq("documents" -> "doc_id"),
     Seq("embeddings" -> "vec_id"))
 
@@ -61,45 +67,52 @@ object ScaleUp {
       domain.map { case (t, c) => (t, c, p) }
     }.groupBy(_._1).map { case (t, cs) => t -> cs.map(x => x._2 -> x._3).toMap }
 
-  /** `copies` key-shifted copies of `df` (copy 0 is `df` itself); with
-    * `salt`, every token of that text column gets a per-copy suffix.
+  /** What copy i > 0 changes besides its keys, by table (see above). */
+  val copyRules: Map[String, (DataFrame, Int) => DataFrame] = Map(
+    "documents" -> ((df, i) => df.withColumn("text",
+      array_join(transform(split(col("text"), " "), t => concat(t, lit(s"_c$i"))), " "))),
+    "embeddings" -> { (df, i) =>
+      val elem = df.schema("embedding").dataType.asInstanceOf[ArrayType].elementType
+      df.withColumn("embedding", transform(col("embedding"),
+        (x, j) => when(j === 0, (x + lit(i * 1e-4)).cast(elem)).otherwise(x)))
+    })
+
+  private val unchanged: (DataFrame, Int) => DataFrame = (df, _) => df
+
+  /** `copies` key-shifted copies of `df` (copy 0 is `df` itself); copy
+    * i > 0 also goes through `rule`.
     */
   def replicate(df: DataFrame, offs: Map[String, Long], copies: Int,
-                salt: Option[String] = None): DataFrame =
+                rule: (DataFrame, Int) => DataFrame = unchanged): DataFrame =
     (0 until copies).map { i =>
       val withKeys = offs.foldLeft(df) { case (d, (k, off)) =>
         // cast back so the scaled table's schema is byte-identical
         d.withColumn(k, (col(k) + lit(off * i)).cast(df.schema(k).dataType))
       }
-      salt match {
-        case Some(textCol) if i > 0 =>
-          withKeys.withColumn(textCol,
-            array_join(transform(split(col(textCol), " "),
-              t => concat(t, lit(s"_c$i"))), " "))
-        case _ => withKeys
-      }
+      if (i > 0) rule(withKeys, i) else withKeys
     }.reduce(_ unionByName _)
 
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dst = args(1)
-    val copies = args(2).toInt
-    val spark = graft.Engine.session("local[32]", 32)
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** Write the `copies`× corpus of `src` to `dst`, 4 parquet files per
+    * table (nation/region once: shared dimensions, not replicated).
+    */
+  def build(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
     val load = (t: String) => Tables(spark, src, t)
     val offs = offsets(load, keyDomains)
-    // nation/region are shared dimensions, not replicated
     val plan = Seq("nation", "region").map(t => t -> load(t)) ++
       offs.toSeq.sortBy(_._1).map { case (t, o) =>
-        t -> replicate(load(t), o, copies, salt = if (t == "documents") Some("text") else None)
+        t -> replicate(load(t), o, copies, copyRules.getOrElse(t, unchanged))
       }
-
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     plan.foreach { case (name, df) =>
       df.coalesce(4).write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] wrote $name")
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = graft.Engine.session("local[32]", 32)
+    spark.sparkContext.setLogLevel("WARN")
+    build(spark, args(0), args(1), args(2).toInt)
     spark.stop()
   }
 }
