@@ -4,6 +4,8 @@ import java.util.Locale
 import org.apache.spark.graftbench.ShuffleReset
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec,
+  QueryStageExec, ResultQueryStageExec, ShuffleQueryStageExec}
 
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is planned once, warmed, then timed
@@ -110,6 +112,21 @@ object Bench {
     s(s.length / 2)
   }
 
+  private object Stages extends AdaptiveSparkPlanHelper
+
+  /** The query stages of `df`'s final adaptive plan, subqueries' plans
+    * included, by kind: (shuffle, broadcast, result). Read from the
+    * prepared plan once it has run, the plan `Prof … plan` prints.
+    */
+  def queryStages(df: DataFrame): Seq[(String, Int)] = {
+    val stages = Stages.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: QueryStageExec => s
+    }
+    Seq("shuffle" -> stages.count(_.isInstanceOf[ShuffleQueryStageExec]),
+      "broadcast" -> stages.count(_.isInstanceOf[BroadcastQueryStageExec]),
+      "result" -> stages.count(_.isInstanceOf[ResultQueryStageExec]))
+  }
+
   /** The machine's (steal, total) CPU jiffies from `/proc/stat`, or None
     * where it cannot be read.
     */
@@ -138,11 +155,12 @@ object Bench {
     * records -1). The driver keeps only the last ~2000 characters of
     * stdout, so the line carries the totals, the per-query medians and
     * the host steal; the detail adds each query's min/max, every rep's
-    * time and the planning seconds.
+    * time, the planning seconds and its [[queryStages]].
     */
   def report(sfDir: String, reps: Int, planSecs: Seq[(String, Double)],
              times: Seq[(String, Seq[Double])],
-             hostStealRatio: Option[Double]): (String, String) = {
+             hostStealRatio: Option[Double],
+             stages: Seq[(String, Seq[(String, Int)])] = Nil): (String, String) = {
     val medians = times.map { case (n, ts) => n -> (if (ts.isEmpty) -1.0 else median(ts)) }
     val execTotal = medians.map(_._2).filter(_ >= 0).sum
     val planTotal = planSecs.map(_._2).sum
@@ -160,7 +178,9 @@ object Bench {
       "spread_minmax" -> obj(times.map { case (n, ts) =>
         n -> (if (ts.isEmpty) "[-1.000,-1.000]" else s"[${sec(ts.min)},${sec(ts.max)}]") }),
       "rep_times" -> obj(times.map { case (n, ts) => n -> ts.map(sec).mkString("[", ",", "]") }),
-      "planning" -> obj(planSecs.map { case (n, s) => n -> sec(s) }))
+      "planning" -> obj(planSecs.map { case (n, s) => n -> sec(s) }),
+      "query_stages" -> obj(stages.map { case (n, kinds) =>
+        n -> obj(kinds.map { case (k, c) => k -> c.toString }) }))
     val sf = Seq("sf" -> str(sfDir))
     (obj(head ++ sf), obj(head ++ detail ++ sf))
   }
@@ -212,8 +232,9 @@ object Bench {
     // ran: a host-noise marker for reading the numbers, not a metric.
     val steal = for ((s0, t0) <- cpu0; (s1, t1) <- hostCpu())
       yield (s1 - s0).toDouble / math.max(1L, t1 - t0)
+    val stages = prepared.map { case (name, df, _) => name -> queryStages(df) }
     val (line, detail) =
-      report(sfDir, n, prepared.map { case (name, _, s) => name -> s }, times, steal)
+      report(sfDir, n, prepared.map { case (name, _, s) => name -> s }, times, steal, stages)
     try {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
       java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_last_detail.json"),

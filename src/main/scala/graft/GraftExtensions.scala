@@ -43,6 +43,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ROLLUP/CUBE sub-total keys as type defaults (flag-gated; off by
     // default)
     ext.injectOptimizerRule(_ => graft.sql.ChRollupDefaults)
+    // A file scan read as one split plans as one partition, so no
+    // exchange goes above it (plans/SingleSplitScan.scala).
+    ext.injectPlannerStrategy(_ => graft.plans.SingleSplitScan)
   }
 }
 

@@ -15,7 +15,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *    task/deserialize/GC ms, input and shuffle read/write KB) — the Spark
   *    UI stage table, headless;
   *  - `plan`: `time` plus the formatted plan before execution and the final
-  *    adaptive plan after it, with its reused-stage count.
+  *    adaptive plan after it, with its query stages by kind
+  *    ([[Bench.queryStages]]) and its reused-stage count.
   *
   * Usage: runMain graft.tools.Prof <sfDir> <name,…|headline> [reps] [time|stages|plan]
   */
@@ -89,7 +90,8 @@ object Prof {
         val finalPlan = df.queryExecution.executedPlan.toString
         val reused = finalPlan.linesIterator
           .count(l => l.contains("ReusedQueryStage") || l.contains("ReusedExchange"))
-        println(s"[prof] $name final plan, reused-stages=$reused")
+        val stages = Bench.queryStages(df).map { case (k, c) => s"$k=$c" }.mkString(" ")
+        println(s"[prof] $name final plan, query stages $stages, reused-stages=$reused")
         println(finalPlan)
       }
     }

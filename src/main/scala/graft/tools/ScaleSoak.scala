@@ -23,7 +23,9 @@ import org.apache.spark.sql.SparkSession
   * Each query runs on [[Bench.session]] under Bench's timing rule: built
   * and planned once, then [[Bench.warmThenRep]]; its time is the build
   * and planning seconds (where iterative and streaming queries do their
-  * eager work) plus the median rep.
+  * eager work) plus the median rep. Every query runs once untimed at
+  * both scales before any is timed, so neither scale is timed on a
+  * colder JVM.
   *
   * Usage: runMain graft.tools.ScaleSoak [baseSfDir] [factor] [scratchDir]
   * Prints one JSON line per scale plus a ratio line; exits nonzero if any
@@ -90,6 +92,9 @@ object ScaleSoak {
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     ScaleUp.build(spark, base, out, factor)
+    // One untimed pass over both scales before either is timed, so the 1×
+    // pass does not run on a colder JVM than the N× pass after it.
+    Seq(base, out).foreach(warm(spark, _))
     val t1 = timed(spark, base)
     val tN = timed(spark, out)
     def js(m: Map[String, Double]) =
@@ -104,6 +109,15 @@ object ScaleSoak {
       spark.stop(); sys.exit(1)
     }
     spark.stop()
+  }
+
+  /** Builds and runs every soak query once on the tables of `dir`. */
+  private def warm(spark: SparkSession, dir: String): Unit = {
+    val queries = SparkEntry.queries
+    soakQueries.foreach { n =>
+      spark.catalog.clearCache()
+      Bench.consume(queries(n)(spark, dir))
+    }
   }
 
   /** Every soak query's build and planning seconds plus its median

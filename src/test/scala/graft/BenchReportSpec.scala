@@ -22,8 +22,10 @@ class BenchReportSpec extends AnyFunSuite {
     // every query, rep and plan at 99999.999 s, full steal, a long path
     val worst = 99999.999
     val reps = 5
+    val stages = Seq("shuffle" -> 999, "broadcast" -> 999, "result" -> 999)
     val (line, detail) = Bench.report("/data/benchmarks/spark-graft/scale-factor-0.1/sf0.1", reps,
-      Bench.headline.map(_ -> worst), Bench.headline.map(_ -> Seq.fill(reps)(worst)), Some(1.0))
+      Bench.headline.map(_ -> worst), Bench.headline.map(_ -> Seq.fill(reps)(worst)), Some(1.0),
+      Bench.headline.map(_ -> stages))
     assert(Bench.headline.length == 26)
     assert(line.length < 2000, s"${line.length} characters")
     val l = parse(line)
@@ -34,6 +36,10 @@ class BenchReportSpec extends AnyFunSuite {
     val d = parse(detail)
     assert(d.get("rep_times").get("q1_pricing_summary").size == reps)
     assert(d.get("spread_minmax").size == 26)
+    assert(!l.has("query_stages"))
+    val q1 = d.get("query_stages").get("q1_pricing_summary")
+    assert(q1.fieldNames().asScala.toSeq == Seq("shuffle", "broadcast", "result"))
+    assert(q1.get("result").asInt == 999)
   }
 
   test("a query without reps records -1 and stays out of exec_total; steal may be unknown") {
