@@ -123,13 +123,9 @@ object GraftExtensions {
       if (xs != null) xs.foreach(bm.addLong)
       B.serialize(bm)
     }),
-    // geohash SQL spellings (reference GeoHash.cpp argument order is
-    // longitude FIRST; decode returns the (lon, lat) tuple — field
-    // names col1/col2 so CH `.1`/`.2` access resolves)
-    "geohashEncode" -> udf((lon: Double, lat: Double, p: Int) =>
-      // reference GeoHash.cpp geohashPrecision clamps BOTH directions:
-      // out-of-range precision (≤0 or >12) falls back to 12
-      GeoFunctions.encode(lat, lon, if (p <= 0 || p > 12) 12 else p)),
+    // geohash SQL spellings (geohashEncode is a ClickHouseAliases
+    // spelling): decode returns the (lon, lat) tuple — field names
+    // col1/col2 so CH `.1`/`.2` access resolves
     "geohashDecode" -> udf((h: String) => {
       val (lat, lon) = GeoFunctions.decode(h)
       GeoPoint(lon, lat)

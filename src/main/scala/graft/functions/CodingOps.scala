@@ -110,35 +110,6 @@ object CodingOps {
   def fqdn(): UTF8String =
     UTF8String.fromString(java.net.InetAddress.getLocalHost.getCanonicalHostName)
 
-  /** intHash64 (reference src/Common/HashTable/Hash.h:26-34): the
-    * MurmurHash3 finalizer. intHash64's bit ops are sign-agnostic, so
-    * Long stands in for UInt64 exactly.
-    */
-  def intHash64(x: Long): Long = {
-    var h = x
-    h ^= h >>> 33
-    h *= 0xff51afd7ed558ccdL
-    h ^= h >>> 33
-    h *= 0xc4ceb9fe1a85ec53L
-    h ^= h >>> 33
-    h
-  }
-
-  /** intHash32 (Hash.h:390-402 with the FunctionsHashing.h:164 salt):
-    * Thomas Wang-style mix truncated to the low 32 bits (returned
-    * zero-extended in a Long, the dialect's UInt32 carrier).
-    */
-  def intHash32(x: Long): Long = {
-    var k = x ^ 0x75d9543de018bf45L
-    k = (~k) + (k << 18)
-    k = k ^ ((k >>> 31) | (k << 33))
-    k = k * 21
-    k = k ^ ((k >>> 11) | (k << 53))
-    k = k + (k << 6)
-    k = k ^ ((k >>> 22) | (k << 42))
-    k & 0xffffffffL
-  }
-
   /** jumpConsistentHash(key, buckets) (reference
     * src/Functions/jumpConsistentHash.cpp — the published Lamping-Veach
     * algorithm, so this is bit-exact): maps a 64-bit key onto one of

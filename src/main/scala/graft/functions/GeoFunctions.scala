@@ -1,13 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 
 /** Geohash encode/decode (reference src/Functions/GeoHash.cpp,
   * geohashEncode/geohashDecode): standard base-32 bit-interleaved
-  * subdivision. Pure deterministic per-row scalar functions — Scala UDFs
-  * (not hot-path; the candidate-cell join key is the hash string, whose
-  * cost is dwarfed by the join it feeds).
+  * subdivision. Pure deterministic per-row scalar functions — encode a
+  * codegen StaticInvoke, decode Scala UDFs (not hot-path; the
+  * candidate-cell join key is the hash string, whose cost is dwarfed by
+  * the join it feeds).
   */
 object GeoFunctions {
 
@@ -129,6 +134,20 @@ object GeoFunctions {
     inside
   }
 
+  /** geohashEncode(lon, lat[, precision]), the SQL spelling's and the
+    * Column form's one lowering: the reference's argument order is
+    * longitude FIRST, and precision defaults to 12 when omitted
+    * (GeoHash.cpp).
+    */
+  def encodeExpr(cs: Seq[Expression]): Expression = {
+    require(cs.size == 2 || cs.size == 3,
+      s"geohashEncode expects (longitude, latitude[, precision]), got ${cs.size} arguments")
+    val p = if (cs.size > 2) Cast(cs(2), IntegerType) else Literal(12)
+    StaticInvoke(GeoFunctions.getClass, StringType, "encodeU",
+      Seq(Cast(cs.head, DoubleType), Cast(cs(1), DoubleType), p),
+      Seq(DoubleType, DoubleType, IntegerType))
+  }
+
   /** Codegen entry (StaticInvoke): reference argument order lon-first,
     * precision clamped to 12 outside 1..12 (GeoHash.cpp
     * geohashPrecision).
@@ -224,12 +243,11 @@ object GeoFunctions {
     if (out.isEmpty) Seq(encode(latMin, lonMin, p)) else out
   }
 
-  private val encodeUdf = udf(encode _)
   private val decodeLatUdf = udf((h: String) => decode(h)._1)
   private val decodeLonUdf = udf((h: String) => decode(h)._2)
 
   def geohashEncode(lat: Column, lon: Column, precision: Column): Column =
-    encodeUdf(lat, lon, precision)
+    ColumnBridge.column(encodeExpr(Seq(lon, lat, precision).map(ColumnBridge.expression)))
   def geohashDecodeLat(h: Column): Column = decodeLatUdf(h)
   def geohashDecodeLon(h: Column): Column = decodeLonUdf(h)
 }

@@ -385,6 +385,9 @@ object HashOps {
 
   // ---- finalizers / combiners ----------------------------------------
 
+  /** intHash64 (Hash.h:26-34): the MurmurHash3 finalizer; its bit ops
+    * are sign-agnostic, so Long stands in for UInt64 exactly.
+    */
   def intHash64(x0: Long): Long = {
     var x = x0
     x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
@@ -396,16 +399,24 @@ object HashOps {
   private def intHash64Impl(x: Long): Long =
     intHash64(x ^ 0x4cf2d2baae6da887L)
 
-  /** intHash32: Thomas Wang 64→32 with the reference's salt. */
-  def intHash32(key0: Long): Int = {
-    var key = key0 ^ 0x75d9543de018bf45L
+  /** The SQL intHash32's salt (FunctionsHashing.h:164). */
+  final val IntHash32Salt = 0x75d9543de018bf45L
+
+  /** intHash32 (Hash.h:390-402): Thomas Wang 64→32 over `key0 ^ salt`,
+    * truncated to the low 32 bits and returned zero-extended in a Long,
+    * the dialect's UInt32 carrier. The SQL spelling and the hash
+    * combiners use [[IntHash32Salt]]; QuantileTiming's large-level
+    * jitter uses salt 0.
+    */
+  def intHash32(key0: Long, salt: Long = IntHash32Salt): Long = {
+    var key = key0 ^ salt
     key = (~key) + (key << 18)
     key = key ^ ((key >>> 31) | (key << 33))
     key = key * 21
     key = key ^ ((key >>> 11) | (key << 53))
     key = key + (key << 6)
     key = key ^ ((key >>> 22) | (key << 42))
-    key.toInt
+    key & 0xffffffffL
   }
 
   // ---- CityHash64 v1.0.2 (the reference vendors exactly this version;
@@ -574,13 +585,13 @@ object HashOps {
 
   def murmur2_32Multi(a: ArrayData): Long = {
     if (isEmpty(a)) return EmptyArgs32
-    val h = args(a).map(murmur2_32).reduceLeft((p, c) => intHash32(p & 0xffffffffL) ^ c)
+    val h = args(a).map(murmur2_32).reduceLeft((p, c) => intHash32(p & 0xffffffffL).toInt ^ c)
     h.toLong & 0xffffffffL
   }
 
   def murmur3_32Multi(a: ArrayData): Long = {
     if (isEmpty(a)) return EmptyArgs32
-    val h = args(a).map(murmur3_32).reduceLeft((p, c) => intHash32(p & 0xffffffffL) ^ c)
+    val h = args(a).map(murmur3_32).reduceLeft((p, c) => intHash32(p & 0xffffffffL).toInt ^ c)
     h.toLong & 0xffffffffL
   }
 
@@ -592,7 +603,7 @@ object HashOps {
 
   def xxh32Multi(a: ArrayData): Long = {
     if (isEmpty(a)) return EmptyArgs32
-    val h = args(a).map(xxh32).reduceLeft((p, c) => intHash32(p & 0xffffffffL) ^ c)
+    val h = args(a).map(xxh32).reduceLeft((p, c) => intHash32(p & 0xffffffffL).toInt ^ c)
     h.toLong & 0xffffffffL
   }
 

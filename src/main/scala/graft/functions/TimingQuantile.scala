@@ -31,20 +31,6 @@ object TimingQuantile {
   private final val TinyMax = 31
   private final val MediumMax = 5672
 
-  /** reference /root/reference/src/Common/HashTable/Hash.h:390 intHash32
-    * with salt 0 — 64-bit mixing, truncated to UInt32.
-    */
-  private def intHash32(key0: Long): Long = {
-    var key = key0
-    key = (~key) + (key << 18)
-    key = key ^ ((key >>> 31) | (key << 33))
-    key = key * 21
-    key = key ^ ((key >>> 11) | (key << 53))
-    key = key + (key << 6)
-    key = key ^ ((key >>> 22) | (key << 42))
-    key & 0xFFFFFFFFL
-  }
-
   private def clamp(x: Long): Int =
     if (x < 0) 0 else if (x > BigThreshold) BigThreshold else x.toInt
 
@@ -91,7 +77,7 @@ object TimingQuantile {
         acc += big(b)
         if (acc >= pos)
           return (b * BigPrecision + SmallThreshold +
-            (intHash32(b) % BigPrecision - BigPrecision / 2)).toFloat
+            (HashOps.intHash32(b, salt = 0) % BigPrecision - BigPrecision / 2)).toFloat
       }
       b += 1
     }

@@ -526,8 +526,7 @@ object Behavioral {
     QueryDef(
       "funnel_path_split",
       (s, dir) => {
-        val fps = graft.aggregates.FunnelPathSplitAgg
-          .funnelPathSplit(2 * DayUs, 8, 3) _
+        val fps = graft.aggregates.PathSplitAgg.funnelPathSplit(2 * DayUs, 8, 3) _
         Tables(s, dir, "events")
           .withColumn("idx",
             when(col("event_type") === "signup", 1)
@@ -538,7 +537,7 @@ object Behavioral {
             .as("path"))
           .select(col("user_id"), posexplode(col("path")).as(Seq("node_pos", "node")))
           .select(col("user_id"), col("node_pos"),
-            col("node.ev").as("ev"), col("node.param").as("param"))
+            col("node.col1").as("ev"), col("node.col2").as("param"))
           .orderBy(col("user_id"), col("node_pos"))
       },
       // Oracle linearization: anchors are ALL signup events in stream
@@ -1782,7 +1781,7 @@ object Behavioral {
     QueryDef(
       "funnel_path_split_by_times",
       (s, dir) => {
-        import graft.aggregates.FunnelPathSplitByTimesAgg.funnelPathSplitByTimes
+        import graft.aggregates.PathSplitAgg.funnelPathSplitByTimes
         val f = funnelPathSplitByTimes(2L * 86400 * 1000000, 8, 3) _
         Tables(s, dir, "events")
           .withColumn("idx",
@@ -1796,7 +1795,7 @@ object Behavioral {
           .select(col("user_id"), col("run_pos"),
             posexplode(col("path")).as(Seq("node_pos", "node")))
           .select(col("user_id"), col("run_pos"), col("node_pos"),
-            col("node.ev").as("ev"))
+            col("node.col1").as("ev"))
           .groupBy(col("user_id"))
           .agg(countDistinct(col("run_pos")).as("n_runs"),
                sum(when(col("node_pos") === 0 && col("ev") === 1, 1L)

@@ -479,7 +479,7 @@ object ClickHouseAliases {
       wave1 ++ wave2 ++ arrayWave ++ combinatorWave ++ combinatorWave2 ++ wave3 ++
         wave4 ++ wave5 ++ wave6 ++ wave7 ++ wave8 ++ wave9 ++ wave10 ++ wave11 ++
         wave14 ++ wave15 ++ wave16 ++ wave17 ++ stateMergeWave ++ quantileWave ++
-        wave18 ++ wave19
+        wave18 ++ wave19 ++ pathSplitWave
     // pure spelling aliases of already-registered builders
     val byName = base.toMap
     val spellings = Seq(
@@ -2320,6 +2320,8 @@ object ClickHouseAliases {
       CaseWhen(branches, Some(FormatString(Literal("%.2f quadrillion"),
         Divide(x, Literal(1e15)))))
     }),
+    // geohashEncode(lon, lat[, precision]) (GeoHash.cpp)
+    "geohashEncode" -> (cs => graft.functions.GeoFunctions.encodeExpr(cs)),
     // greatCircleDistance(lon1, lat1, lon2, lat2) → meters, the
     // reference's haversine with R = 6371007.180918475
     // (greatCircleDistance.cpp:56,342: 2R·asin(√(u² + cos·cos·v²))).
@@ -2763,7 +2765,7 @@ object ClickHouseAliases {
     // alphabetic-run tokens; character n-grams via a substring ladder.
     // (concat_ws/str_to_map/locate/split_part shadow Spark builtins
     // with DIFFERENT semantics — registered corpus-session only, in
-    // strictShadowAliases below, so library sessions keep the builtin.)
+    // strictAliases below, so library sessions keep the builtin.)
     // splitByRegexp('', '') = [] in CH (empty pattern over empty input
     // yields no tokens, FunctionsStringArray.h)
     "splitByRegexp" -> (cs => If(
@@ -3327,8 +3329,8 @@ object ClickHouseAliases {
       "toValidUTF8" -> (cs => StaticInvoke(codingOps, StringType, "toValidUtf8",
         Seq(Cast(cs.head, StringType)), Seq(StringType))),
       "reverseUTF8" -> (cs => Reverse(Cast(cs.head, StringType))),
-      "intHash64" -> (cs => StaticInvoke(codingOps, LongType, "intHash64",
-        Seq(Cast(cs.head, LongType)), Seq(LongType), returnNullable = false)),
+      "intHash64" -> (cs => StaticInvoke(graft.functions.HashOps.getClass, LongType,
+        "intHash64", Seq(Cast(cs.head, LongType)), Seq(LongType), returnNullable = false)),
       "jumpConsistentHash" -> (cs => StaticInvoke(codingOps, IntegerType,
         "jumpConsistentHash",
         Seq(Cast(cs.head, LongType), Cast(cs(1), IntegerType)),
@@ -3380,8 +3382,10 @@ object ClickHouseAliases {
         require(scale >= 0 && scale <= 38, s"toDecimalString: scale $scale out of range")
         Cast(Cast(cs.head, DecimalType(38, scale)), StringType)
       }),
-      "intHash32" -> (cs => StaticInvoke(codingOps, LongType, "intHash32",
-        Seq(Cast(cs.head, LongType)), Seq(LongType), returnNullable = false)),
+      "intHash32" -> (cs => StaticInvoke(graft.functions.HashOps.getClass, LongType,
+        "intHash32",
+        Seq(Cast(cs.head, LongType), Literal(graft.functions.HashOps.IntHash32Salt)),
+        Seq(LongType, LongType), returnNullable = false)),
       // roundDown(x, arr): largest element <= x, else the array minimum
       "roundDown" -> (cs => {
         val x = cs.head
@@ -5593,11 +5597,7 @@ object ClickHouseAliases {
   private def sessionSplitAgg(cs: Seq[Expression], which: String): Expression = {
       import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
       val c = cs
-      def longParam(i: Int): Long = c(i) match {
-        case Literal(v, _) if v != null => v.toString.toDouble.toLong
-        case other => throw new IllegalArgumentException(
-          s"$which: parameter ${i + 1} must be a literal, got $other")
-      }
+      def longParam(i: Int): Long = graft.aggregates.PathSplitAgg.longParam(which, c, i)
       // pageTime's optional 4th parameter is a string LITERAL refer
       // filter — a literal there cannot be the server_time column
       val referUrl: Option[Expression] = which match {
@@ -5680,101 +5680,6 @@ object ClickHouseAliases {
             returnNullable = false)
       }
     }
-
-  /** pathSplit/R/D/RD (reference AggregateFunctionPathSplit.cpp:30-50:
-    * params (max_session_size, max_session_depth), args
-    * (time, event_index, param)) — CollectList → StaticInvoke of the
-    * sorted session walk (functions/PathSplitOps.pathSplit).
-    */
-  private def pathSplitAgg(cs: Seq[Expression], rev: Boolean,
-      dedup: Boolean): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    def longParam(i: Int): Long = cs(i) match {
-      case Literal(v, _) if v != null => v.toString.toDouble.toLong
-      case other => throw new IllegalArgumentException(
-        s"pathSplit: parameter ${i + 1} must be a literal, got $other")
-    }
-    require(cs.size == 5,
-      s"pathSplit requires 2 parameters and 3 arguments, got ${cs.size}")
-    val (size, depth) = (longParam(0), longParam(1))
-    require(size > 0 && depth > 0, "pathSplit(>0, >0)(...)")
-    val lst = CollectList(CreateNamedStruct(Seq(
-      Literal("f1"), Cast(cs(2), LongType),
-      Literal("f2"), Cast(cs(3), IntegerType),
-      Literal("f3"), Cast(cs(4), StringType)))).toAggregateExpression()
-    val inType = ArrayType(StructType(Seq(
-      StructField("f1", LongType), StructField("f2", IntegerType),
-      StructField("f3", StringType))))
-    StaticInvoke(graft.functions.PathSplitOps.getClass,
-      ArrayType(ArrayType(StructType(Seq(
-        StructField("col1", IntegerType), StructField("col2", StringType))))),
-      "pathSplit",
-      Seq(lst, Literal(size), Literal(depth), Literal(rev), Literal(dedup)),
-      Seq(inType, LongType, LongType, BooleanType, BooleanType),
-      returnNullable = false)
-  }
-
-  /** funnelPathSplit[ByTimes]/R/D/RD (reference
-    * AggregateFunctionFunnelPathSplit.cpp:25-70: params (window,
-    * max_session_depth, level_flag, [prop_flags…]), args
-    * (time, event_index, param[, extra_props…]); popcount(prop_flags)
-    * must not exceed the extra-prop count — the corpus's
-    * expected-error 36 case).
-    */
-  private def funnelPathSplitAgg(cs: Seq[Expression], byTimes: Boolean,
-      rev: Boolean, dedup: Boolean): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    val name = if (byTimes) "funnelPathSplitByTimes" else "funnelPathSplit"
-    def longParam(i: Int): Long = cs(i) match {
-      case Literal(v, _) if v != null => v.toString.toDouble.toLong
-      case other => throw new IllegalArgumentException(
-        s"$name: parameter ${i + 1} must be a literal, got $other")
-    }
-    require(cs.size >= 7,
-      s"$name requires 4 parameters and at least 3 arguments")
-    val (window, depth, levelFlag) =
-      (longParam(0), longParam(1), longParam(2))
-    require(window > 0 && depth > 0 && levelFlag > 0, s"$name(>0, >0, >0)(...)")
-    val flags: Seq[Long] = cs(3) match {
-      case CreateArray(children, _) => children.map {
-        case Literal(v, _) if v != null => v.toString.toDouble.toLong
-        case other => throw new IllegalArgumentException(
-          s"$name: prop_flags must be literal integers, got $other")
-      }
-      case Literal(null, _) | Literal(_, NullType) => Seq.empty
-      case other => throw new IllegalArgumentException(
-        s"$name: parameter 4 must be an array literal, got $other")
-    }
-    val args = cs.drop(4)
-    val nExtras = args.size - 3
-    val totalFlagged = flags.map(java.lang.Long.bitCount(_).toLong).sum
-    if (totalFlagged > nExtras) throw new IllegalArgumentException(
-      s"$name: extra prop amount $nExtras is less than the $totalFlagged " +
-        "specified in prop_flag")
-    val fields =
-      Seq(Cast(args(0), LongType), Cast(args(1), IntegerType),
-        Cast(args(2), StringType)) ++
-        args.drop(3).map(Cast(_, StringType))
-    val lst = CollectList(CreateNamedStruct(
-      fields.zipWithIndex.flatMap { case (f, i) =>
-        Seq(Literal(s"f${i + 1}"), f)
-      })).toAggregateExpression()
-    val inType = ArrayType(StructType(
-      (Seq(LongType, IntegerType, StringType) ++
-        Seq.fill(nExtras)(StringType)).zipWithIndex.map { case (t, i) =>
-        StructField(s"f${i + 1}", t)
-      }))
-    StaticInvoke(graft.functions.PathSplitOps.getClass,
-      ArrayType(ArrayType(StructType(Seq(
-        StructField("col1", IntegerType), StructField("col2", StringType))))),
-      if (byTimes) "funnelPathSplitByTimes" else "funnelPathSplit",
-      Seq(lst, Literal(window), Literal(depth), Literal(levelFlag),
-        Literal.create(flags.toArray, ArrayType(LongType)),
-        Literal(nExtras), Literal(rev), Literal(dedup)),
-      Seq(inType, LongType, LongType, LongType, ArrayType(LongType),
-        IntegerType, BooleanType, BooleanType),
-      returnNullable = false)
-  }
 
   private def wave18: Seq[(String, Seq[Expression] => Expression)] = {
     def xv(e: Expression, n: String): Expression =
@@ -5957,38 +5862,6 @@ object ClickHouseAliases {
       "sessionSplitR2" -> (cs => sessionSplitAgg(cs, "sessionSplitR2")),
       "pageTime" -> (cs => sessionSplitAgg(cs, "pageTime")),
       "pageTime2" -> (cs => sessionSplitAgg(cs, "pageTime2")),
-      // pathSplit family (reference AggregateFunctionPathSplit.cpp:58:
-      // R=terminating-event reverse walk): params (max_session_size,
-      // max_session_depth) merge ahead of (time, event_index, param) by
-      // the parametric-call rewrite. The D variants register but do NOT
-      // dedup: the reference's own golden output
-      // (01003_aggregation_pathsplit.reference rows 3-4) shows
-      // pathSplitD/RD emitting consecutive equal (1,'') nodes — the
-      // shipped binary's observable behavior, which we match.
-      "pathSplit" -> (cs => pathSplitAgg(cs, rev = false, dedup = false)),
-      "pathSplitR" -> (cs => pathSplitAgg(cs, rev = true, dedup = false)),
-      "pathSplitD" -> (cs => pathSplitAgg(cs, rev = false, dedup = false)),
-      "pathSplitRD" -> (cs => pathSplitAgg(cs, rev = true, dedup = false)),
-      // funnelPathSplit family (reference
-      // AggregateFunctionFunnelPathSplit.cpp:82-90): params (window,
-      // max_session_depth, level_flag, [prop_flags…]) then
-      // (time, event_index, param[, extra_props…])
-      "funnelPathSplit" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = false, rev = false, dedup = false)),
-      "funnelPathSplitR" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = false, rev = true, dedup = false)),
-      "funnelPathSplitD" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = false, rev = false, dedup = true)),
-      "funnelPathSplitRD" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = false, rev = true, dedup = true)),
-      "funnelPathSplitByTimes" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = true, rev = false, dedup = false)),
-      "funnelPathSplitByTimesR" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = true, rev = true, dedup = false)),
-      "funnelPathSplitByTimesD" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = true, rev = false, dedup = true)),
-      "funnelPathSplitByTimesRD" ->
-        (cs => funnelPathSplitAgg(cs, byTimes = true, rev = true, dedup = true)),
       "timeZone" -> (_ => CurrentTimeZone()),
       // truncate(x[, n]): toward zero at 10^n (reference
       // FunctionsRound.h TruncateImpl; n may be negative)
@@ -6123,6 +5996,15 @@ object ClickHouseAliases {
           Seq(StringType, IntegerType))))
     }
   }
+
+  /** pathSplit / funnelPathSplit / funnelPathSplitByTimes and their
+    * R/D/RD variants: params merge ahead of (time, event_index,
+    * param[, extra_props…]) by the parametric-call rewrite; the Column
+    * forms build the same lowering (aggregates/PathSplitAgg).
+    */
+  private def pathSplitWave: Seq[(String, Seq[Expression] => Expression)] =
+    graft.aggregates.PathSplitAgg.spellings.map(n =>
+      n -> ((cs: Seq[Expression]) => graft.aggregates.PathSplitAgg.lower(n, cs)))
 
   private def wave19: Seq[(String, Seq[Expression] => Expression)] = {
     def pLong(e: Expression, fn: String): Long = e match {
@@ -6389,7 +6271,20 @@ object ClickHouseAliases {
     * GraftExtensions: `length` is BYTES in ClickHouse (lengthUTF8 is
     * the char count) and counts elements on arrays/maps.
     */
-  def injectStrict(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def injectStrict(spark: org.apache.spark.sql.SparkSession): Unit =
+    strictFunctions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+
+  /** Every corpus-only function [[injectStrict]] registers, one entry
+    * per name (`FunctionRegistrySpec` checks the names are unique): CH
+    * spellings that SHADOW Spark builtins of the same name with
+    * different semantics. Library sessions keep the Spark builtin, which
+    * engine operators (e.g. shingles' concat_ws) and user code rely on.
+    */
+  def strictFunctions: Seq[graft.GraftExtensions.FunctionDescription] = describe(strictAliases)
+
+  private def strictAliases: Seq[(String, Seq[Expression] => Expression)] = {
     val lengthBuilder: Seq[Expression] => Expression = cs =>
       ChDispatch("length", cs.take(1)) { c =>
         c.head.dataType match {
@@ -6401,22 +6296,6 @@ object ClickHouseAliases {
           case _ => OctetLength(Cast(c.head, StringType))
         }
       }
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("length"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "length"),
-      lengthBuilder)
-    // CH flatten is recursive; Spark's builtin is one-level — override
-    // only here for the same reason as `length`
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("flatten"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "flatten"),
-      (cs: Seq[Expression]) => deepFlatten(cs))
-    // CH rand() is a UInt32, shadowing Spark's [0,1) builtin — corpus
-    // session only, same policy as `length` (randU32 doc)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("rand"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "rand"),
-      (cs: Seq[Expression]) => randU32(cs))
     // CH dateDiff counts unit-BOUNDARY crossings (relative-number
     // difference, reference dateDiff.cpp), not elapsed full units —
     // dateDiff('year', '2017-12-31', '2018-01-01') = 1. Shadows Spark's
@@ -6480,12 +6359,6 @@ object ClickHouseAliases {
         val (from, to) = if (hiveForm) (c(0), c(1)) else (c(1), c(2))
         Subtract(rel(to), rel(from))
       }
-    Seq("dateDiff", "date_diff", "chDateDiff").foreach { n =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(n),
-        new ExpressionInfo("graft.sql.ClickHouseAliases", n),
-        dateDiffBuilder)
-    }
     // CH position(haystack, needle[, start]) — argument order REVERSED
     // from Spark's builtin, and the result is a 1-based BYTE offset
     // (reference src/Functions/position.cpp); corpus-session only for
@@ -6504,10 +6377,6 @@ object ClickHouseAliases {
           Cast(Add(OctetLength(Substring(hay, Literal(1),
             Subtract(charPos, Literal(1)))), Literal(1)), IntegerType)))
     }
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("position"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "position"),
-      positionBuilder)
     // CH repeat errors upfront on >1 GiB results (repeat.cpp:36-39);
     // Spark's builtin allocates first, so an adversarial count OOMs
     // instead of erroring — shadow it with the guarded form
@@ -6521,215 +6390,187 @@ object ClickHouseAliases {
         // inserts into Array(String) columns cast cleanly
         Seq(StringType, LongType), returnNullable = false)
     }
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("repeat"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "repeat"),
-      repeatBuilder)
-    strictShadowAliases.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.sql.ClickHouseAliases", name),
-        builder)
-    }
-    // geohashEncode defaults precision to 12 when the 3rd argument is
-    // omitted (GeoHash.cpp) — the Engine UDF spelling is fixed-arity,
-    // so the corpus session gets an arity-flexible codegen form
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("geohashEncode"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "geohashEncode"),
-      (cs: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-        val p = if (cs.size > 2) Cast(cs(2), IntegerType) else Literal(12)
-        StaticInvoke(graft.functions.GeoFunctions.getClass, StringType,
-          "encodeU",
-          Seq(Cast(cs.head, DoubleType), Cast(cs(1), DoubleType), p),
-          Seq(DoubleType, DoubleType, IntegerType))
-      })
-    // CH char(n1, n2, …) is one BYTE per argument (char.cpp); Spark's
-    // builtin is single-codepoint — shadow for the corpus session
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("char"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "char"),
-      (cs: Seq[Expression]) => {
+    // CH date_add/date_sub keep the DateTime type (+N = days); Spark's
+    // builtins always return DATE — shadow with a type-preserving form
+    // (the 3-arg unit spelling passes through to the builtin)
+    def dateAddBuilder(nm: String, sign: Int): Seq[Expression] => Expression = cs =>
+      if (cs.size != 2) throw new IllegalArgumentException(s"$nm expects (date, days)")
+      else ChDispatch(nm, cs.take(2)) { c =>
+        val days = if (sign > 0) c(1) else UnaryMinus(Cast(c(1), IntegerType))
+        c.head.dataType match {
+          case TimestampType | TimestampNTZType =>
+            TimestampAdd("DAY", Cast(days, LongType), c.head)
+          case _ => DateAdd(Cast(c.head, DateType), Cast(days, IntegerType))
+        }
+      }
+    Seq(
+      "length" -> lengthBuilder,
+      // CH flatten is recursive; Spark's builtin is one-level — override
+      // only here for the same reason as `length`
+      "flatten" -> deepFlatten,
+      // CH rand() is a UInt32, shadowing Spark's [0,1) builtin — corpus
+      // session only, same policy as `length` (randU32 doc)
+      "rand" -> randU32,
+      "dateDiff" -> dateDiffBuilder,
+      "date_diff" -> dateDiffBuilder,
+      "chDateDiff" -> dateDiffBuilder,
+      "position" -> positionBuilder,
+      "repeat" -> repeatBuilder,
+      // CH char(n1, n2, …) is one BYTE per argument (char.cpp); Spark's
+      // builtin is single-codepoint — shadow for the corpus session
+      "char" -> (cs => {
         import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
         StaticInvoke(graft.functions.StringOps.getClass, StringType,
           "chChar",
           Seq(CreateArray(cs.map(Cast(_, IntegerType)))),
           Seq(ArrayType(IntegerType)), returnNullable = false)
-      })
-    // CH transform(x, from, to[, default]): value mapping through two
-    // arrays (reference src/Functions/transform.cpp); the 2-arg spelling
-    // stays Spark's higher-order transform
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("transform"),
-      new ExpressionInfo("graft.sql.ClickHouseAliases", "transform"),
-      (cs: Seq[Expression]) =>
+      }),
+      // CH transform(x, from, to[, default]): value mapping through two
+      // arrays (reference src/Functions/transform.cpp); the 2-arg
+      // spelling stays Spark's higher-order transform
+      "transform" -> (cs =>
         if (cs.size <= 2) ArrayTransform(cs.head, cs(1))
         else {
           val pos = ArrayPosition(cs(1), cs.head)
           val hit = ElementAt(cs(2), Cast(pos, IntegerType), None, false)
           val miss = if (cs.size > 3) cs(3) else cs.head
           If(And(IsNotNull(pos), GreaterThan(pos, Literal(0L))), hit, miss)
-        })
-    // CH date_add/date_sub keep the DateTime type (+N = days); Spark's
-    // builtins always return DATE — shadow with a type-preserving form
-    // (the 3-arg unit spelling passes through to the builtin)
-    Seq("date_add" -> 1, "date_sub" -> -1).foreach { case (nm, sign) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(nm),
-        new ExpressionInfo("graft.sql.ClickHouseAliases", nm),
-        (cs: Seq[Expression]) =>
-          if (cs.size != 2) throw new IllegalArgumentException(
-            s"$nm expects (date, days)")
-          else ChDispatch(nm, cs.take(2)) { c =>
-            val days = if (sign > 0) c(1)
-              else UnaryMinus(Cast(c(1), IntegerType))
-            c.head.dataType match {
-              case TimestampType | TimestampNTZType =>
-                TimestampAdd("DAY", Cast(days, LongType), c.head)
-              case _ => DateAdd(Cast(c.head, DateType),
-                Cast(days, IntegerType))
+        }),
+      "date_add" -> dateAddBuilder("date_add", 1),
+      "date_sub" -> dateAddBuilder("date_sub", -1),
+      // CH any(x) = first encountered value (AggregateFunctionAny);
+      // Spark's builtin `any` is bool_or — corpus-session shadow only
+      "any" -> ((cs: Seq[Expression]) =>
+        new First(cs.head, ignoreNulls = false)),
+      // CH sum over an empty set = 0 for non-Nullable input (ChSum)
+      "sum" -> ((cs: Seq[Expression]) => ChSum(cs.head)),
+      // MySQL TIME(x): number = compact seconds on the 100h clock;
+      // anything else parses as time text (shadows Spark's time())
+      "time" -> ((cs: Seq[Expression]) => {
+        import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+        ChDispatch("time", cs.take(1)) { c =>
+          c.head.dataType match {
+            case ByteType | ShortType | IntegerType | LongType =>
+              CreateNamedStruct(Seq(Literal("__time"),
+                StaticInvoke(graft.functions.TimeOps.getClass, StringType,
+                  "fromNumber", Seq(Cast(c.head, LongType), Literal(3)),
+                  Seq(LongType, IntegerType))))
+            case _ => chTimeBuilder(Seq(c.head))
+          }
+        }
+      }),
+      // builtin hour/minute/second gain the CH Time-struct dispatch
+      // (identical to Spark's behavior on every other input type)
+      "hour" -> ((cs: Seq[Expression]) =>
+        timeComponent(cs.head, "hourOf", Hour(_))),
+      "minute" -> ((cs: Seq[Expression]) =>
+        timeComponent(cs.head, "minuteOf", Minute(_))),
+      "second" -> ((cs: Seq[Expression]) =>
+        timeComponent(cs.head, "secondOf", Second(_))),
+      // CH lower/upper are ASCII-ONLY (lowerUTF8/upperUTF8 do unicode —
+      // reference src/Functions/LowerUpperImpl.h; 00170)
+      "lower" -> ((cs: Seq[Expression]) => StringTranslate(cs.head,
+        Literal("ABCDEFGHIJKLMNOPQRSTUVWXYZ"),
+        Literal("abcdefghijklmnopqrstuvwxyz"))),
+      "upper" -> ((cs: Seq[Expression]) => StringTranslate(cs.head,
+        Literal("abcdefghijklmnopqrstuvwxyz"),
+        Literal("ABCDEFGHIJKLMNOPQRSTUVWXYZ"))),
+      // CH trunc(x[, s]) truncates toward zero and KEEPS the decimal type
+      // (FunctionsRound.h TruncateImpl; 00700_decimal_round's 1-arg form).
+      // A string second argument stays Spark's date trunc.
+      "trunc" -> ((cs: Seq[Expression]) => {
+        val scale: Option[Expression] = cs.lift(1) match {
+          case None => Some(Literal(0))
+          case Some(Literal(v, StringType)) => None // date trunc
+          case Some(e) => Some(Cast(e, IntegerType))
+        }
+        scale match {
+          case None => new TruncDate(cs.head, cs(1))
+          case Some(sc) =>
+            ChDispatch("trunc", Seq(cs.head)) { c =>
+              c.head.dataType match {
+                case _: DecimalType =>
+                  If(GreaterThanOrEqual(c.head,
+                      Cast(Literal(0), c.head.dataType)),
+                    RoundFloor(c.head, sc), RoundCeil(c.head, sc))
+                case _ =>
+                  val x = Cast(c.head, DoubleType)
+                  val p = Pow(Literal(10.0), Cast(sc, DoubleType))
+                  val scaled = Multiply(x, p)
+                  Divide(If(GreaterThanOrEqual(scaled, Literal(0.0)),
+                    Floor(scaled), Ceil(scaled)), p)
+              }
             }
-          })
-    }
+        }
+      }),
+      // concat_ws in CH is NULL if ANY argument is NULL (standard
+      // Nullable propagation); Spark's builtin skips NULL arguments
+      "concat_ws" -> ((cs: Seq[Expression]) => {
+        val anyNull = cs.map(IsNull(_): Expression).reduce(Or(_, _))
+        If(anyNull, Literal(null, StringType),
+          ConcatWs(cs.map(Cast(_, StringType))))
+      }),
+      // str_to_map (reference map.cpp FunctionStrToMap): literal
+      // single-char delimiters + the exact skip-space parse loop —
+      // Spark's builtin is regex-based with NULL values. A const NULL
+      // input is a type error in CH (the corpus's serverError 43 case);
+      // empty delimiters are rejected as in getDelimiter.
+      "str_to_map" -> ((cs: Seq[Expression]) => {
+        import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+        cs.head match {
+          case Literal(null, _) => throw new IllegalArgumentException(
+            "str_to_map: first argument must be String, got NULL")
+          case _ => ()
+        }
+        cs.drop(1).foreach {
+          case Literal(d, StringType) if d == null || d.toString.isEmpty =>
+            throw new IllegalArgumentException(
+              "Delimiter of function str_to_map should be non-empty string")
+          case _ => ()
+        }
+        StaticInvoke(graft.functions.StringMapOps.getClass,
+          MapType(StringType, StringType), "strToMap",
+          cs.map(Cast(_, StringType)),
+          Seq(StringType, StringType, StringType),
+          propagateNull = false, returnNullable = false)
+      }),
+      // locate: CH argument order is (haystack, needle[, pos]) like
+      // position; under SET dialect_type='MYSQL' it flips to MySQL's
+      // (substr, str[, pos]) — the session records the dialect in
+      // graft.ch.dialect and the builder reads it at analysis time
+      "locate" -> ((cs: Seq[Expression]) => {
+        val mysql = try {
+          org.apache.spark.sql.internal.SQLConf.get
+            .getConfString("graft.ch.dialect", "CLICKHOUSE") == "MYSQL"
+        } catch { case _: Throwable => false }
+        val (sub, str) = if (mysql) (cs.head, cs(1)) else (cs(1), cs.head)
+        // CH clamps a start position below 1 to 1 (LOCATE(…, 0) still
+        // searches from the start), unlike MySQL where pos 0 finds nothing
+        val pos = if (cs.size > 2)
+          Greatest(Seq(Cast(cs(2), IntegerType), Literal(1))) else Literal(1)
+        StringLocate(sub, str, pos)
+      }),
+      // split_part (MySQL-dialect corpus 13000): NULL for an index out
+      // of range or < 1 — Spark's builtin returns '' / counts negatives
+      // from the end, different semantics
+      "split_part" -> ((cs: Seq[Expression]) => {
+        val arr = StringSplit(cs.head,
+          Concat(Seq(Literal("\\Q"), cs(1), Literal("\\E"))), Literal(-1))
+        val n = Cast(cs(2), IntegerType)
+        If(LessThan(n, Literal(1)), Literal(null, StringType),
+          ElementAt(arr, n, None, failOnError = false))
+      }))
   }
 
-  /** CH spellings that SHADOW Spark builtins of the same name with
-    * different semantics — corpus sessions only (same shadowing rule as
-    * `length`/`position`/`repeat` above): library sessions must keep
-    * the Spark builtin, which engine operators (e.g. shingles'
-    * concat_ws) and user code rely on.
-    */
-  private def strictShadowAliases: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    // CH any(x) = first encountered value (AggregateFunctionAny);
-    // Spark's builtin `any` is bool_or — corpus-session shadow only
-    "any" -> ((cs: Seq[Expression]) =>
-      new First(cs.head, ignoreNulls = false)),
-    // CH sum over an empty set = 0 for non-Nullable input (ChSum)
-    "sum" -> ((cs: Seq[Expression]) => ChSum(cs.head)),
-    // MySQL TIME(x): number = compact seconds on the 100h clock;
-    // anything else parses as time text (shadows Spark's time())
-    "time" -> ((cs: Seq[Expression]) => {
-      import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-      ChDispatch("time", cs.take(1)) { c =>
-        c.head.dataType match {
-          case ByteType | ShortType | IntegerType | LongType =>
-            CreateNamedStruct(Seq(Literal("__time"),
-              StaticInvoke(graft.functions.TimeOps.getClass, StringType,
-                "fromNumber", Seq(Cast(c.head, LongType), Literal(3)),
-                Seq(LongType, IntegerType))))
-          case _ => chTimeBuilder(Seq(c.head))
-        }
-      }
-    }),
-    // builtin hour/minute/second gain the CH Time-struct dispatch
-    // (identical to Spark's behavior on every other input type)
-    "hour" -> ((cs: Seq[Expression]) =>
-      timeComponent(cs.head, "hourOf", Hour(_))),
-    "minute" -> ((cs: Seq[Expression]) =>
-      timeComponent(cs.head, "minuteOf", Minute(_))),
-    "second" -> ((cs: Seq[Expression]) =>
-      timeComponent(cs.head, "secondOf", Second(_))),
-    // CH lower/upper are ASCII-ONLY (lowerUTF8/upperUTF8 do unicode —
-    // reference src/Functions/LowerUpperImpl.h; 00170)
-    "lower" -> ((cs: Seq[Expression]) => StringTranslate(cs.head,
-      Literal("ABCDEFGHIJKLMNOPQRSTUVWXYZ"),
-      Literal("abcdefghijklmnopqrstuvwxyz"))),
-    "upper" -> ((cs: Seq[Expression]) => StringTranslate(cs.head,
-      Literal("abcdefghijklmnopqrstuvwxyz"),
-      Literal("ABCDEFGHIJKLMNOPQRSTUVWXYZ"))),
-    // CH trunc(x[, s]) truncates toward zero and KEEPS the decimal type
-    // (FunctionsRound.h TruncateImpl; 00700_decimal_round's 1-arg form).
-    // A string second argument stays Spark's date trunc.
-    "trunc" -> ((cs: Seq[Expression]) => {
-      val scale: Option[Expression] = cs.lift(1) match {
-        case None => Some(Literal(0))
-        case Some(Literal(v, StringType)) => None // date trunc
-        case Some(e) => Some(Cast(e, IntegerType))
-      }
-      scale match {
-        case None => new TruncDate(cs.head, cs(1))
-        case Some(sc) =>
-          ChDispatch("trunc", Seq(cs.head)) { c =>
-            c.head.dataType match {
-              case _: DecimalType =>
-                If(GreaterThanOrEqual(c.head,
-                    Cast(Literal(0), c.head.dataType)),
-                  RoundFloor(c.head, sc), RoundCeil(c.head, sc))
-              case _ =>
-                val x = Cast(c.head, DoubleType)
-                val p = Pow(Literal(10.0), Cast(sc, DoubleType))
-                val scaled = Multiply(x, p)
-                Divide(If(GreaterThanOrEqual(scaled, Literal(0.0)),
-                  Floor(scaled), Ceil(scaled)), p)
-            }
-          }
-      }
-    }),
-    // concat_ws in CH is NULL if ANY argument is NULL (standard
-    // Nullable propagation); Spark's builtin skips NULL arguments
-    "concat_ws" -> ((cs: Seq[Expression]) => {
-      val anyNull = cs.map(IsNull(_): Expression).reduce(Or(_, _))
-      If(anyNull, Literal(null, StringType),
-        ConcatWs(cs.map(Cast(_, StringType))))
-    }),
-    // str_to_map (reference map.cpp FunctionStrToMap): literal
-    // single-char delimiters + the exact skip-space parse loop —
-    // Spark's builtin is regex-based with NULL values. A const NULL
-    // input is a type error in CH (the corpus's serverError 43 case);
-    // empty delimiters are rejected as in getDelimiter.
-    "str_to_map" -> ((cs: Seq[Expression]) => {
-      import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-      cs.head match {
-        case Literal(null, _) => throw new IllegalArgumentException(
-          "str_to_map: first argument must be String, got NULL")
-        case _ => ()
-      }
-      cs.drop(1).foreach {
-        case Literal(d, StringType) if d == null || d.toString.isEmpty =>
-          throw new IllegalArgumentException(
-            "Delimiter of function str_to_map should be non-empty string")
-        case _ => ()
-      }
-      StaticInvoke(graft.functions.StringMapOps.getClass,
-        MapType(StringType, StringType), "strToMap",
-        cs.map(Cast(_, StringType)),
-        Seq(StringType, StringType, StringType),
-        propagateNull = false, returnNullable = false)
-    }),
-    // locate: CH argument order is (haystack, needle[, pos]) like
-    // position; under SET dialect_type='MYSQL' it flips to MySQL's
-    // (substr, str[, pos]) — the session records the dialect in
-    // graft.ch.dialect and the builder reads it at analysis time
-    "locate" -> ((cs: Seq[Expression]) => {
-      val mysql = try {
-        org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("graft.ch.dialect", "CLICKHOUSE") == "MYSQL"
-      } catch { case _: Throwable => false }
-      val (sub, str) = if (mysql) (cs.head, cs(1)) else (cs(1), cs.head)
-      // CH clamps a start position below 1 to 1 (LOCATE(…, 0) still
-      // searches from the start), unlike MySQL where pos 0 finds nothing
-      val pos = if (cs.size > 2)
-        Greatest(Seq(Cast(cs(2), IntegerType), Literal(1))) else Literal(1)
-      StringLocate(sub, str, pos)
-    }),
-    // split_part (MySQL-dialect corpus 13000): NULL for an index out
-    // of range or < 1 — Spark's builtin returns '' / counts negatives
-    // from the end, different semantics
-    "split_part" -> ((cs: Seq[Expression]) => {
-      val arr = StringSplit(cs.head,
-        Concat(Seq(Literal("\\Q"), cs(1), Literal("\\E"))), Literal(-1))
-      val n = Cast(cs(2), IntegerType)
-      If(LessThan(n, Literal(1)), Literal(null, StringType),
-        ElementAt(arr, n, None, failOnError = false))
-    }))
-
-  /** The dialect spellings as injectable functions ([[graft.GraftExtensions]]). */
-  def functions: Seq[graft.GraftExtensions.FunctionDescription] =
-    aliases.map { case (name, builder) =>
+  private def describe(table: Seq[(String, Seq[Expression] => Expression)])
+      : Seq[graft.GraftExtensions.FunctionDescription] =
+    table.map { case (name, builder) =>
       (FunctionIdentifier(name), new ExpressionInfo("graft.sql.ClickHouseAliases", name),
         builder)
     }
+
+  /** The dialect spellings as injectable functions ([[graft.GraftExtensions]]). */
+  def functions: Seq[graft.GraftExtensions.FunctionDescription] = describe(aliases)
 
   def injectTableFunctions(ext: SparkSessionExtensions): Unit = {
     // numbers(N) / numbers(lo, hi) table function (reference

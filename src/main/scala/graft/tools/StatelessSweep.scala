@@ -719,9 +719,9 @@ object StatelessSweep {
     "spark.sql.ansi.doubleQuotedIdentifiers" -> "true")
 
   /** Give `spark` the corpus semantics: [[corpusConfs]], session zone
-    * `tz` and the strict dialect registry, whose overrides replace the
-    * same-named functions [[graft.GraftExtensions]] injected (e.g. the
-    * strict `geohashEncode`).
+    * `tz` and the strict dialect registry
+    * ([[graft.sql.ClickHouseAliases.strictFunctions]]), whose entries
+    * replace same-named Spark builtins (e.g. `length` counts bytes).
     */
   def configure(spark: SparkSession, tz: String): SparkSession = {
     corpusConfs.foreach { case (k, v) => spark.conf.set(k, v) }

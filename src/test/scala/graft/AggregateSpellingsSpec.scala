@@ -1,8 +1,8 @@
 package graft
 
-import graft.aggregates.{BitmapAggregates, BitmapExprCalcAgg, BitmapMaxLevelAgg, RetentionAgg,
-  WindowFunnelAgg}
-import org.apache.spark.sql.DataFrame
+import graft.aggregates.{BitmapAggregates, BitmapExprCalcAgg, BitmapMaxLevelAgg, PathSplitAgg,
+  RetentionAgg, WindowFunnelAgg}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Each aggregate has one implementation: its DataFrame Column form and
@@ -84,5 +84,62 @@ class AggregateSpellingsSpec extends SparkSpec {
     assert(column.getSeq[Long](1) === Seq(4L))
     assert(sql.getSeq[Long](0) === column.getSeq[Long](0))
     assert(sql.getSeq[Long](1) === column.getSeq[Long](1))
+  }
+
+  // (user, ts, index, param): user 1 runs past a depth-2 cap; user 2
+  // carries an index above the 3 levels; user 3 a negative ts and a
+  // negative index. All of them are nodes of the walk.
+  private lazy val pathEvents: DataFrame = {
+    val df = Seq(
+      (1L, 0L, 1, "a"), (1L, 5L, 0, "c"), (1L, 10L, 2, "d"),
+      (2L, 0L, 1, "a"), (2L, 5L, 4, "z"), (2L, 7L, 2, "b"), (2L, 12L, 3, "p"),
+      (3L, -10L, 1, "a"), (3L, -5L, -1, "n"), (3L, 0L, 2, "b"),
+      (4L, 0L, 0, "c"), (4L, 3L, 2, "b"))
+      .toDF("u", "ts", "idx", "param")
+      .repartition(3)
+    df.createOrReplaceTempView("spellings_paths")
+    df
+  }
+
+  private def nodes(path: scala.collection.Seq[Row]): Seq[(Int, String)] =
+    path.map(r => (r.getInt(0), r.getString(1))).toSeq
+
+  test("funnelPathSplit / funnelPathSplitByTimes: Column form == SQL spelling") {
+    for (depth <- Seq(2, 8)) {
+      val single = byUser(pathEvents.groupBy($"u").agg(PathSplitAgg
+        .funnelPathSplit(100, depth, 3)($"ts", $"idx", $"param")))
+        .map { case (u, p) => u -> nodes(p.asInstanceOf[scala.collection.Seq[Row]]) }
+      val singleSql = byUser(spark.sql(s"""
+        SELECT u, flatten(funnelPathSplit(100, $depth, 3, array(), ts, idx, param))
+        FROM spellings_paths GROUP BY u"""))
+        .map { case (u, p) => u -> nodes(p.asInstanceOf[scala.collection.Seq[Row]]) }
+      val byTimes = byUser(pathEvents.groupBy($"u").agg(PathSplitAgg
+        .funnelPathSplitByTimes(100, depth, 3)($"ts", $"idx", $"param")))
+        .map { case (u, p) =>
+          u -> p.asInstanceOf[scala.collection.Seq[scala.collection.Seq[Row]]].map(nodes).toSeq
+        }
+      val byTimesSql = byUser(spark.sql(s"""
+        SELECT u, funnelPathSplitByTimes(100, $depth, 3, array(), ts, idx, param)
+        FROM spellings_paths GROUP BY u"""))
+        .map { case (u, p) =>
+          u -> p.asInstanceOf[scala.collection.Seq[scala.collection.Seq[Row]]].map(nodes).toSeq
+        }
+      val neg = Seq((1, "a"), (-1, "n"), (2, "b"))
+      if (depth == 2) {
+        // paths end at the depth cap; the index-4 node takes a place
+        assert(single === Map(1L -> Seq((1, "a"), (0, "c")), 2L -> Seq((1, "a"), (4, "z")),
+          3L -> neg.take(2), 4L -> Seq()))
+        assert(byTimes === Map(1L -> Seq(Seq((1, "a"), (0, "c"))),
+          2L -> Seq(Seq((1, "a"), (4, "z"))), 3L -> Seq(neg.take(2)), 4L -> Seq()))
+      } else {
+        val deep = Seq((1, "a"), (4, "z"), (2, "b"), (3, "p"))
+        assert(single === Map(1L -> Seq((1, "a"), (0, "c"), (2, "d")), 2L -> deep,
+          3L -> neg, 4L -> Seq()))
+        assert(byTimes === Map(1L -> Seq(Seq((1, "a"), (0, "c"), (2, "d"))),
+          2L -> Seq(deep), 3L -> Seq(neg), 4L -> Seq()))
+      }
+      assert(singleSql === single, s"depth $depth")
+      assert(byTimesSql === byTimes, s"depth $depth")
+    }
   }
 }

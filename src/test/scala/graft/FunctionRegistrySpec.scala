@@ -25,6 +25,28 @@ class FunctionRegistrySpec extends SparkSpec {
     assert(dupes.isEmpty, s"names injected more than once: ${dupes.toSeq.sorted}")
   }
 
+  test("corpus-only function names are unique, case-insensitively") {
+    val dupes = graft.sql.ClickHouseAliases.strictFunctions.map(_._1.funcName.toLowerCase)
+      .groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
+    assert(dupes.isEmpty, s"corpus-only names registered more than once: ${dupes.toSeq.sorted}")
+  }
+
+  test("2-argument geohashEncode resolves in an Engine.session child") {
+    // Engine.session returns the suite's running session with its runtime
+    // settings applied; put the session's settings back afterwards
+    val conf = spark.sessionState.conf
+    val before = conf.getAllConfs
+    val child = try Engine.session("local[4]", 4).newSession()
+    finally {
+      conf.getAllConfs.keys.filterNot(before.contains).foreach(conf.unsetConf)
+      before.foreach { case (k, v) => if (conf.getConfString(k, null) != v) conf.setConfString(k, v) }
+    }
+    val r = child.sql(
+      "SELECT geohashEncode(-5.6, 42.6) AS h, geohashEncode(-5.6, 42.6, 12) AS h12").head
+    assert(r.getString(0).startsWith("ezs42"))
+    assert(r.getString(0) === r.getString(1))
+  }
+
   test("no session registers functions itself") {
     val udfRegister = "udf\\.register".r
     val registerCall = """(?<!def )registerFunctions\(""".r

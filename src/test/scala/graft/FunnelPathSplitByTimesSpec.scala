@@ -1,6 +1,6 @@
 package graft
 
-import graft.aggregates.FunnelPathSplitByTimesAgg.funnelPathSplitByTimes
+import graft.aggregates.PathSplitAgg.funnelPathSplitByTimes
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * (AggregateFunctionFunnelPathSplitByTimes.h insertResultInto): every
   * step-1 event opens a bucket, level events go to exactly one eligible
   * bucket in creation order, common events replicate to every
-  * window-reachable bucket, and depth exhaustion stops level-ups but
-  * not appends (the reference's size check runs AFTER the append).
+  * window-reachable bucket, and depth exhaustion stops level-ups while
+  * each path renders at most max-depth nodes.
   */
 class FunnelPathSplitByTimesSpec extends SparkSpec {
   import spark.implicits._
@@ -48,9 +48,10 @@ class FunnelPathSplitByTimesSpec extends SparkSpec {
       (0L, 1, "a"), (5L, 0, "c"), (10L, 2, "d")),
       windowUs = 100, depth = 2, levels = 3)
     // bucket is depth-retired after 'c'; 'd' finds no level candidate and
-    // falls through to a common append — exactly the reference's order of
-    // append-then-size-check
-    assert(paths === Seq(Seq((1, "a"), (0, "c"), (2, "d"))))
+    // falls through to a common append (the reference appends, then
+    // checks the size), which insertResultInto leaves out: a path renders
+    // at most max-depth nodes
+    assert(paths === Seq(Seq((1, "a"), (0, "c"))))
   }
 
   test("level events before any bucket are dropped; empty input is empty") {

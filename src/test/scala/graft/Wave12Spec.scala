@@ -150,12 +150,32 @@ class Wave12Spec extends SparkSpec {
   }
 
   test("intHash64 / intHash32 are the reference mixers") {
-    // intHash64 is the murmur3 finalizer: fixed point of 0 is 0
-    assert(one("intHash64(0)") === 0L)
-    assert(one("intHash64(42)") !== 42L)
-    assert(one("intHash64(42)") === one("intHash64(42)"))
-    val h32 = one("intHash32(42)").asInstanceOf[Long]
-    assert(h32 >= 0L && h32 <= 0xffffffffL)
+    // (x, intHash64, intHash32 with the FunctionsHashing.h salt, intHash32
+    // with salt 0): outputs of the three former copies of each mixer
+    // (CodingOps, HashOps and TimingQuantile's salt-0 one), pinned before
+    // they were folded into HashOps
+    val pins = Seq(
+      (0L, 0L, 4249604106L, 0L),
+      (1L, -5451962507482445012L, 1343103100L, 3788511810L),
+      (2L, 4233148493373801447L, 1996614413L, 3207942677L),
+      (42L, -9148929187392628276L, 1228623923L, 3458605522L),
+      (255L, 1297215527019907880L, 4243176437L, 904347725L),
+      (65535L, 6444452806975366496L, 2814166736L, 1561316083L),
+      (4294967295L, -3714927795841221434L, 3983947013L, 3846827201L),
+      (4294967296L, -5027532216505265127L, 3518258701L, 2863260693L),
+      (1234567890123L, 5768311928185057474L, 919319764L, 346014885L),
+      (-1L, 7256831767414464289L, 3545659993L, 2504521962L),
+      (-42L, 3002600660025181396L, 1693538026L, 80861774L),
+      (Long.MaxValue, -6072754518692401686L, 2112611299L, 15731644L),
+      (Long.MinValue, -8108722261328812909L, 3930999127L, 3937752746L))
+    pins.foreach { case (x, h64, h32, h32Salt0) =>
+      val lit = if (x == Long.MinValue) s"CAST('$x' AS BIGINT)" else s"${x}L"
+      assert(one(s"intHash64($lit)") === h64, s"intHash64($x)")
+      assert(one(s"intHash32($lit)") === h32, s"intHash32($x)")
+      assert(graft.functions.HashOps.intHash64(x) === h64)
+      assert(graft.functions.HashOps.intHash32(x) === h32)
+      assert(graft.functions.HashOps.intHash32(x, salt = 0) === h32Salt0)
+    }
   }
 
   test("retention SQL spelling: bitmask of ever-fired conditions") {
